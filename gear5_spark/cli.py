@@ -284,7 +284,6 @@ def cmd_read(args) -> int:
             replay_batch(
                 spark, cfg.changelog_dir, tbl, ckpt,
                 app_id=cfg.app_id, salt_buckets=cfg.salt_buckets,
-                normalize_mode=cfg.normalize_mode,
                 delete_mode=cfg.delete_mode,
                 sink_mode=cfg.resolved_sink_mode,
                 compact_every=cfg.compact_every,
@@ -304,7 +303,6 @@ def cmd_read(args) -> int:
                 exclude_columns=cfg.exclude_columns,
                 rollup=rollup if last else None,
                 partition_lineage=cfg.partition_lineage,
-                dedup_plan=cfg.dedup_plan,
                 auto_widen=cfg.auto_widen,
             )
             runs_sec.append(round(time.perf_counter() - r0, 3))
@@ -326,13 +324,12 @@ def cmd_read(args) -> int:
             }))
         applier = make_applier(
             table, cfg.checkpoint_dir, app_id=cfg.app_id,
-            delete_mode=cfg.delete_mode, normalize_mode=cfg.normalize_mode,
+            delete_mode=cfg.delete_mode,
             salt_buckets=cfg.salt_buckets, sink_mode=cfg.resolved_sink_mode,
             compact_every=cfg.compact_every, quarantine_dir=cfg.quarantine_dir,
             exclude_columns=cfg.exclude_columns,
             rollup=rollup,
             partition_lineage=cfg.partition_lineage,
-            dedup_plan=cfg.dedup_plan,
             auto_widen=cfg.auto_widen,
         )
         run_stream(

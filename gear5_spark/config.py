@@ -31,10 +31,6 @@ class PipelineConfig:
         default="hard",
         metadata={"jsonschema": {"enum": ["hard", "soft"]}},
     )
-    normalize_mode: str = field(
-        default="sql",
-        metadata={"jsonschema": {"enum": ["sql", "pandas"]}},
-    )
     salt_buckets: int = 1
     # None = per-mode default: stream -> mor (delta append + periodic
     # compaction; per-batch CoW rewrite amplification is the wrong shape
@@ -43,14 +39,6 @@ class PipelineConfig:
     sink_mode: str | None = field(
         default=None,
         metadata={"jsonschema": {"enum": ["cow", "mor", None]}},
-    )
-    # physical dedup plan: fused (one placement-keyed shuffle of the raw
-    # payload) | partial (map-side-combined, cheapest on high-update
-    # feeds) | auto (per batch by the previous batch's measured
-    # events-per-key ratio) — regime rationale in pipeline/apply.py
-    dedup_plan: str = field(
-        default="auto",
-        metadata={"jsonschema": {"enum": ["auto", "fused", "partial"]}},
     )
     compact_every: int = 8
     max_files_per_trigger: int = 4
@@ -95,10 +83,6 @@ class PipelineConfig:
             problems.append(
                 f"delete_mode must be hard|soft, got {self.delete_mode}"
             )
-        if self.normalize_mode not in ("sql", "pandas"):
-            problems.append(
-                f"normalize_mode must be sql|pandas, got {self.normalize_mode}"
-            )
         if self.n_buckets < 1:
             problems.append("n_buckets must be >= 1")
         if self.salt_buckets < 1:
@@ -107,21 +91,10 @@ class PipelineConfig:
             problems.append(
                 f"sink_mode must be cow|mor|None(auto), got {self.sink_mode}"
             )
-        if self.dedup_plan not in ("auto", "fused", "partial"):
-            problems.append(
-                f"dedup_plan must be auto|fused|partial, got {self.dedup_plan}"
-            )
         if self.auto_widen not in (True, False, "numeric", "full"):
             problems.append(
                 "auto_widen must be true|false|numeric|full, got "
                 f"{self.auto_widen}"
-            )
-        if self.dedup_plan == "fused" and self.salt_buckets > 1:
-            # fused co-locates dedup with bucket placement; salting is
-            # incompatible with co-location — reject rather than
-            # silently run the salted two-shuffle plan
-            problems.append(
-                "dedup_plan='fused' is incompatible with salt_buckets > 1"
             )
         # sink_mode=mor + delete_mode=soft is legal: `read` bootstraps
         # the table with the soft property, and MoR reconstruct keeps

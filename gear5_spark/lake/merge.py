@@ -34,8 +34,8 @@ Scale properties:
   rewritten — copy-on-write amplification is O(affected buckets), not
   O(table); file-level pruning comes from manifest bucket metadata;
 - the join shuffles on the MERGE key; the batch side is one row per key
-  post-dedup, so AQE broadcasts it when it fits (`broadcast_batch=True`
-  forces it); AQE skew-join splits oversized partitions.
+  post-dedup, so AQE broadcasts it when it fits; AQE skew-join splits
+  oversized partitions.
 """
 
 from __future__ import annotations
@@ -91,7 +91,6 @@ def merge_into(
     op_col: str = "op",
     delete_mode: str = "hard",
     order_guard: bool = True,
-    broadcast_batch: bool = False,
     txn_app_id: str | None = None,
     txn_batch_id: int | None = None,
     lineage: dict[str, Any] | None = None,
@@ -123,8 +122,8 @@ def merge_into(
     its dedup placement) and the write's repartition (the join output
     is already placed). Measured on the 4x1M-event CoW stream: the
     merge+write stage shuffled 2.7 GB before, ~0.8 GB after.
-    Ignored (legacy two-shuffle plan) when the batch lacks ``_pslot``,
-    the bucket layout drifted, or ``broadcast_batch`` is set.
+    Ignored (legacy two-shuffle plan) when the batch lacks ``_pslot`` or
+    the bucket layout drifted.
     """
     if delete_mode not in ("hard", "soft"):
         raise ValueError(f"delete_mode must be hard|soft, got {delete_mode}")
@@ -134,7 +133,6 @@ def merge_into(
         slots_per_bucket is not None
         and pre_placed == snap.properties["n_buckets"]
         and SLOT_COL in batch.columns
-        and not broadcast_batch
     )
     if SLOT_COL in batch.columns and not co_partition:
         batch = batch.drop(SLOT_COL)
@@ -243,12 +241,10 @@ def merge_into(
     if order_guard:
         new_data = _guarded_merge(
             target, keyed, join_cols, key_cols, op_col, delete_mode,
-            write_schema, broadcast_batch, hash_build=co_partition,
+            write_schema, hash_build=co_partition,
         )
     else:
         batch_keys = keyed.select(*join_cols).distinct()
-        if broadcast_batch:
-            batch_keys = F.broadcast(batch_keys)
         survivors = target.join(batch_keys, on=join_cols, how="left_anti")
         upserts = (
             keyed if delete_mode == "soft"
@@ -291,7 +287,6 @@ def _guarded_merge(
     op_col: str,
     delete_mode: str,
     write_schema: T.StructType,
-    broadcast_batch: bool,
     hash_build: bool = False,
 ) -> DataFrame:
     """Full-outer merge with LSN guard; one shuffle on the join columns
@@ -311,9 +306,7 @@ def _guarded_merge(
     b = keyed_batch.select(
         *join_cols, F.struct(*[F.col(c) for c in b_payload]).alias("_b")
     )
-    if broadcast_batch:
-        b = F.broadcast(b)
-    elif hash_build:
+    if hash_build:
         b = b.hint("shuffle_hash")
     j = t.join(b, on=join_cols, how="full_outer")
 

@@ -689,8 +689,7 @@ class LakeTable:
             # dictionary encoding. Per-write option — other parquet
             # writes in the engine keep the default.
             writer = part.write.mode("errorifexists").option(
-                "parquet.enable.dictionary",
-                os.environ.get("SPARK_GRAFT_PARQUET_DICT", "false"),
+                "parquet.enable.dictionary", "false"
             )
             writer.parquet(out_dir)
         with span("table.footer_scan"):
@@ -1443,8 +1442,9 @@ class LakeTable:
                 T.StructField("event_count", T.LongType()),
                 T.StructField("txn_ids_hash", T.StringType()),
                 T.StructField("malformed_count", T.LongType()),
-                # physical dedup plan the batch ran (fused | partial |
-                # salted; NULL on pre-plan-audit commits and data-less
+                # physical dedup plan the batch ran (fused | salted;
+                # "partial" on commits written before that plan was
+                # removed; NULL on pre-plan-audit commits and data-less
                 # quarantine-only commits)
                 T.StructField("dedup_plan", T.StringType()),
                 T.StructField("snapshot_id", T.StringType()),

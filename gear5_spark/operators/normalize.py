@@ -7,23 +7,16 @@ clamp ``reformat.go:164-170``) and the ``_cdc_*`` metadata stamping
 (``/root/reference/drivers/postgres/internal/cdc.go:70-78``,
 ``pkg/jdbc/jdbc.go:11-19``) — but columnar, never per-row Go-map/Python-dict.
 
-Two interchangeable physical paths:
-
-- **sql** (default): ``from_json`` + built-in casts — whole-stage codegen,
-  zero Python in the hot loop. Use when the payload schema is known.
-- **pandas**: one ``mapInPandas`` Arrow transform for messy feeds (mixed
-  timestamp layouts, stringly-typed bools) — the only sanctioned per-value
-  code path (SURVEY.md §2.10), batched through Arrow.
+One physical path: ``from_json`` + built-in casts — whole-stage codegen,
+zero Python in the hot loop. Messy values (mixed timestamp layouts,
+stringly-typed bools, numeric strings, junk) go through the same
+JVM-side coercers and degrade to NULL per value.
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
 from dataclasses import dataclass
-from typing import Any
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -76,10 +69,13 @@ def coerce_long(col: Column) -> Column:
     """F2: int64 from any width / numeric string / float truncation;
     try_cast throughout so malformed input degrades to NULL instead of
     failing the task under ANSI mode (reference errors per value,
-    reformat.go:190-219 — NULL is our columnar equivalent)."""
+    reformat.go:190-219 — NULL is our columnar equivalent). The double
+    fallback is range-guarded to [-2^63, 2^63): a double→long cast
+    saturates to ``Long.MAX_VALUE`` past it instead of yielding NULL."""
+    d = col.cast("string").try_cast("double")
     return F.coalesce(
         col.try_cast("long"),
-        col.cast("string").try_cast("double").try_cast("long"),
+        F.when((d >= -(2.0**63)) & (d < 2.0**63), d.try_cast("long")),
     )
 
 
@@ -96,7 +92,7 @@ _EPOCH_S_MAX = 253_402_300_799
 def coerce_timestamp(col: Column) -> Column:
     """F5: multi-layout timestamp parse + unix-seconds ints
     (reformat.go:108-173) + the reference's year clamp [0, 9999]
-    (reformat.go:164-170 — matching the pandas path's ``_clamp_year``).
+    (reformat.go:164-170).
     Entirely JVM-side: a coalesce over ``try_to_timestamp`` patterns,
     then a RANGE-GUARDED epoch-seconds fallback — an unguarded
     ``timestamp_seconds`` throws 'long overflow' on large numeric
@@ -177,19 +173,6 @@ def _parse_type(token: str) -> T.DataType:
     return T._parse_datatype_string(token)
 
 
-def output_type(token: str) -> T.DataType:
-    if token in ("timestamp_iso", "epoch_seconds"):
-        return T.TimestampType()
-    if token in ("string", "boolean", "long", "double"):
-        return {
-            "string": T.StringType(),
-            "boolean": T.BooleanType(),
-            "long": T.LongType(),
-            "double": T.DoubleType(),
-        }[token]
-    return T._parse_datatype_string(token)
-
-
 def _coerce_sql(raw: Column, token: str) -> Column:
     if token == "boolean":
         return coerce_bool(raw)
@@ -203,7 +186,7 @@ def _coerce_sql(raw: Column, token: str) -> Column:
         # same range guard + year clamp as coerce_timestamp: an
         # unguarded timestamp_seconds saturates (or throws) on corrupt
         # magnitudes (millis-for-seconds, 1e30) instead of degrading to
-        # NULL like the pandas path and the reference's [0,9999] clamp
+        # NULL like the reference's [0,9999] clamp
         n = coerce_double(raw)
         ts = F.timestamp_seconds(
             F.when(n.between(_EPOCH_S_MIN, _EPOCH_S_MAX), n)
@@ -215,7 +198,6 @@ def _coerce_sql(raw: Column, token: str) -> Column:
 def normalize_changes(
     df: DataFrame,
     payload_schema,
-    mode: str = "sql",
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Raw change feed -> typed change DataFrame.
@@ -234,8 +216,6 @@ def normalize_changes(
     """
     specs = _to_specs(payload_schema)
     carried = [c for c in carry_cols if c in df.columns]
-    if mode == "pandas":
-        return _normalize_pandas(df, specs, carried)
     parse_schema = T.StructType(
         [T.StructField(s.source, _parse_type(s.token), True) for s in specs]
     )
@@ -255,138 +235,6 @@ def normalize_changes(
         ],
     )
     return stamp_cdc_columns(out)
-
-
-# ---------------------------------------------------------------- pandas path
-
-
-def _clamp_year(ts: pd.Series) -> pd.Series:
-    # year clamp [0, 9999] — reformat.go:164-170. KNOWN LIMITATION of
-    # the pandas mode: datetime64[ns] only spans years 1677-2262, so
-    # valid timestamps outside that window coerce to NULL here while
-    # the sql mode keeps them (its clamp is the full [0, 9999]). Feeds
-    # carrying far-future/past timestamps should use normalize_mode=
-    # "sql" (the default and the reference-parity path).
-    return ts.where((ts.dt.year >= 0) & (ts.dt.year <= 9999))
-
-
-def _coerce_pd(series: pd.Series, token: str) -> pd.Series:
-    if token == "boolean":
-        s = series.astype("string").str.strip().str.lower()
-        out = pd.Series(pd.NA, index=series.index, dtype="boolean")
-        out[s.isin(_TRUE_SET)] = True
-        out[s.isin(_FALSE_SET)] = False
-        return out
-    if token == "long":
-        # ELEMENT-WISE, not pd.to_numeric: a whole-series float coercion
-        # (forced by any None/str in the batch) silently rounds huge
-        # in-range ints (2**63-1 -> 2**63) and then crashes or nulls
-        # them. Per-value conversion mirrors the sql path exactly:
-        # ints pass when in int64 range, floats/float-strings truncate
-        # (then range-check), bools and junk degrade to NULL
-        # (reformat.go:190-219; try_cast semantics).
-        def _to_long(v):
-            if v is None or isinstance(v, bool):
-                return None
-            if isinstance(v, int):
-                return v if -(2**63) <= v < 2**63 else None
-            if isinstance(v, float):
-                if v != v or not (-(2.0**63) <= v < 2.0**63):
-                    return None
-                return int(v)
-            if isinstance(v, str):
-                s_ = v.strip()
-                try:
-                    n_ = int(s_)
-                    return n_ if -(2**63) <= n_ < 2**63 else None
-                except ValueError:
-                    try:
-                        f_ = float(s_)
-                    except ValueError:
-                        return None
-                    if f_ != f_ or not (-(2.0**63) <= f_ < 2.0**63):
-                        return None
-                    return int(f_)
-            return None
-
-        # build the nullable array from the PYTHON ints directly —
-        # Series.map would infer float64 for int+None mixes and round
-        # int64-max on the way through
-        return pd.Series(
-            pd.array([_to_long(v) for v in series], dtype="Int64"),
-            index=series.index,
-        )
-    if token == "double":
-        return pd.to_numeric(series, errors="coerce").astype("Float64")
-    if token == "epoch_seconds":
-        num = pd.to_numeric(series, errors="coerce")
-        return _clamp_year(
-            pd.to_datetime(num, unit="s", errors="coerce", utc=True)
-            .dt.tz_localize(None)
-        )
-    if token == "timestamp_iso":
-        # numbers still accepted as epoch seconds (the sql path's
-        # coerce_timestamp has the same fallback)
-        num = pd.to_numeric(series, errors="coerce")
-        from_num = pd.to_datetime(num, unit="s", errors="coerce", utc=True)
-        from_str = pd.to_datetime(
-            series.where(num.isna()), errors="coerce", utc=True, format="mixed"
-        )
-        return _clamp_year(from_num.fillna(from_str).dt.tz_localize(None))
-    if token == "string":
-        # complex parsed values must serialize as JSON text (the sql
-        # path keeps the raw JSON), not the Python repr — "{'a': 1}"
-        # is not re-parseable downstream
-        return series.map(
-            lambda v: (
-                json.dumps(v)
-                if isinstance(v, (dict, list))
-                # pd.isna catches None, float NaN (a MISSING key in the
-                # batch frame), and pd.NA — str() would store 'nan'
-                else (None if pd.isna(v) else str(v))
-            )
-        ).astype("string")
-    return series  # complex (array/struct): python objects pass through
-
-
-def _normalize_pandas(
-    df: DataFrame, specs: list[PayloadField], carried: list[str] | None = None
-) -> DataFrame:
-    meta_cols = list(carried or []) + [
-        "lsn", "txn_id", "txn_seq", "op", "ts_ms", "conv_id", "turn_idx",
-    ]
-    out_fields = [df.schema[c] for c in meta_cols] + [
-        T.StructField(s.col, output_type(s.token), True) for s in specs
-    ]
-    out_schema = T.StructType(out_fields)
-
-    def _loads(s) -> dict:
-        # malformed JSON degrades to an empty payload (null columns), the
-        # same contract as from_json's null-on-error — never a task failure
-        if not isinstance(s, str) or not s:
-            return {}
-        try:
-            out = json.loads(s)
-            return out if isinstance(out, dict) else {}
-        except ValueError:
-            return {}
-
-    def transform(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed: list[dict[str, Any]] = [_loads(s) for s in pdf["after_json"]]
-            payload = pd.DataFrame.from_records(parsed, index=pdf.index)
-            out = pdf[meta_cols].copy()
-            for s in specs:
-                col = (
-                    payload[s.source]
-                    if s.source in payload.columns
-                    else pd.Series(pd.NA, index=pdf.index)
-                )
-                out[s.col] = _coerce_pd(col, s.token)
-            yield out[[f.name for f in out_fields]]
-
-    typed = df.mapInPandas(transform, schema=out_schema)
-    return stamp_cdc_columns(typed)
 
 
 # -------------------------------------------------------- widening detection

@@ -14,7 +14,8 @@ micro-batch:
    mid-stream becomes a real typed column with null backfill.
 3. **normalize**: typed columns + ``_cdc_*`` stamps (operators.normalize).
 4. **dedup** (A5): latest event per ``(conv_id, turn_idx)`` by
-   ``(lsn, txn_seq)``, map-side-combined, optional salting for skew.
+   ``(lsn, txn_seq)`` in one shuffle keyed by the table's placement
+   slot, or a salted two-stage plan for skewed keys.
 5. **MERGE** with LSN order-guard + lineage row embedded in the same
    atomic commit (lsn range, event count, txn-ids hash — FIXTURES.md §4).
 """
@@ -54,62 +55,6 @@ RESERVED_COLS = {
     "_cdc_lsn", "_cdc_updated_at", "_cdc_deleted_at", "_bucket",
     "_src_file",
 }
-
-# the per-batch winner cache is read exactly twice (discovery agg +
-# normalize/write) then dropped; for batches that fit comfortably in
-# storage memory, columnar cache compression costs more CPU to build
-# than it ever saves on those two reads (interleaved A/B at 4M events /
-# 1.2 GB source: dedup-phase 99 -> 71 CPU-s uncompressed), but past a
-# few GB the extra uncompressed bytes through the memory hierarchy lose
-# (16M events / 4.9 GB source: compressed won every interleaved pair,
-# 21.5-29 s vs 26-72 s at local[32]). The choice is therefore adaptive
-# on the batch's OWN scan-size estimate (driver-side stats, no job),
-# with the crossover threshold env-tunable and an explicit override.
-# Long-lived caches are unaffected (the conf is restored right after
-# persist()).
-_CACHE_COMPRESS_ENV = "SPARK_GRAFT_BATCH_CACHE_COMPRESS"
-_CACHE_NOCOMP_MAX_ENV = "SPARK_GRAFT_BATCH_CACHE_NOCOMP_MAX_BYTES"
-_CACHE_NOCOMP_MAX_DEFAULT = 2_500_000_000  # ~measured crossover midpoint
-_CACHE_COMPRESS_CONF = "spark.sql.inMemoryColumnarStorage.compressed"
-
-
-def _persist_batch_cache(
-    df: DataFrame, source_bytes: int | None = None
-) -> DataFrame:
-    forced = os.environ.get(_CACHE_COMPRESS_ENV)
-    if forced is not None:
-        compress = forced.lower() == "true"
-    else:
-        limit = int(
-            os.environ.get(_CACHE_NOCOMP_MAX_ENV, _CACHE_NOCOMP_MAX_DEFAULT)
-        )
-        # unknown size -> uncompressed: the only unknown-stats producer
-        # in the engine is a streaming micro-batch (LogicalRDD), and
-        # those are maxFilesPerTrigger-bounded; bulk replays read file
-        # scans with real estimates. MEMORY_AND_DISK spill bounds the
-        # downside if a caller feeds an unbounded statless batch.
-        compress = source_bytes is not None and source_bytes > limit
-    conf = df.sparkSession.conf
-    prev = conf.get(_CACHE_COMPRESS_CONF, "true")
-    try:
-        conf.set(_CACHE_COMPRESS_CONF, "true" if compress else "false")
-        return df.persist()
-    finally:
-        conf.set(_CACHE_COMPRESS_CONF, prev)
-
-
-def _scan_size_estimate(df: DataFrame) -> int | None:
-    """Optimizer sizeInBytes for ``df`` — a driver-side metadata read
-    (file-scan based for batches, so it is a real figure, unlike
-    post-aggregate estimates). None when unavailable."""
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return None
-    # Catalyst's "unknown" default is Long.Max-ish — treat as unknown
-    return est if 0 < est < (1 << 60) else None
 
 _SAMPLE_PER_KEY = 100  # reference samples 100 records (protocol/discover.go:46)
 
@@ -167,10 +112,8 @@ class TranscriptsApplier:
     app_id: str
     registry_path: str
     delete_mode: str = "hard"
-    normalize_mode: str = "sql"
     salt_buckets: int = 1
     order_guard: bool = True
-    broadcast_batch: bool = False
     sink_mode: str = "cow"  # cow | mor (delta files + periodic compaction)
     compact_every: int = 8
     # buckets with fewer resident delta files than this are skipped at
@@ -197,52 +140,16 @@ class TranscriptsApplier:
     # contract (F1-F3) NULLs junk per value instead of degrading the
     # column. False → the legacy pin-at-first-observation behavior.
     auto_widen: bool | str = True  # True=="numeric" | "full" | False
-    # physical plan for the per-batch dedup (regime tradeoff):
-    #   "fused"   — one shuffle of the raw payload keyed by the table's
-    #               placement slot; the groupBy then runs exchange-free
-    #               inside it and the write skips ITS repartition.
-    #               Cheapest when duplication per key is low: total
-    #               shuffle ≈ |events| once instead of twice.
-    #   "partial" — classic map-side-combined max_by: Catalyst partial-
-    #               aggregates BEFORE the shuffle, so a high-update feed
-    #               (many events per key inside each input split)
-    #               shuffles only pre-reduced rows, and the write then
-    #               repartitions the (already small) winner set.
-    #               Cheapest when duplication is high — the fused plan
-    #               would move every losing event's full payload across
-    #               the exchange unreduced.
-    #   "auto"    — fused for the first batch, then per batch by the
-    #               PREVIOUS batch's measured events-per-key ratio
-    #               (> partial_plan_dup_ratio → partial; steady feeds
-    #               have sticky ratios). Both plans are result-identical
-    #               (tested), so switching between batches is safe.
-    dedup_plan: str = "auto"
-    partial_plan_dup_ratio: float = 3.0
     # optional incrementally-maintained derived table
     # (gear5_spark.pipeline.rollup.ConversationRollup); refreshed with
     # the batch's touched conversations after every base commit
     rollup: Any = None
     applied: list[MergeStats] = field(default_factory=list)
     skipped_batches: list[int] = field(default_factory=list)
-    # events-per-key measured in the previous batch (drives "auto")
+    # valid events per surviving key in the last applied batch
     _last_dup_ratio: float | None = field(default=None, repr=False)
 
     def __post_init__(self) -> None:
-        if self.dedup_plan not in ("auto", "fused", "partial"):
-            raise ValueError(
-                f"dedup_plan must be auto|fused|partial, got {self.dedup_plan!r}"
-            )
-        if self.dedup_plan == "fused" and self.salt_buckets > 1:
-            # the fused plan co-locates dedup with bucket placement —
-            # salting is incompatible with co-location, so honoring the
-            # request is impossible; a silent downgrade to the salted
-            # two-shuffle plan would hide the perf contract the caller
-            # explicitly asked for (auto/partial + salting stay legal)
-            raise ValueError(
-                "dedup_plan='fused' is incompatible with salt_buckets > 1 "
-                f"(got {self.salt_buckets}); use dedup_plan='auto' or "
-                "'partial' with salted dedup"
-            )
         if self.sink_mode == "mor" and self.delete_mode == "soft":
             # MoR deletes survive as tombstones only when the TABLE was
             # created soft (reconstruct/compact read the property); a
@@ -296,13 +203,6 @@ class TranscriptsApplier:
                 sort_keys=True,
             ).encode(),
         )
-
-    def discover_new_fields(
-        self, batch: DataFrame, registry: dict[str, dict]
-    ) -> dict[str, dict]:
-        """Additive payload-key discovery + typing (delegates to the
-        one-pass :meth:`extend_registry`)."""
-        return self.extend_registry(batch, registry)
 
     def extend_registry(
         self, sample_src: DataFrame, registry: dict[str, dict]
@@ -525,28 +425,20 @@ class TranscriptsApplier:
         # Persisting the (smaller) deduped set means the merge never
         # re-scans raw input.
         #
-        # Default path FUSES the dedup shuffle with the table's bucket
-        # placement: the one unavoidable shuffle of the raw payload is
-        # keyed by the table's identity placement slot, the groupBy then
-        # runs exchange-free inside those partitions (slot is in the
-        # grouping key and is the partitioning column), and the
-        # downstream write skips ITS repartition (pre_placed) — one
-        # shuffle total per batch instead of two (measured: the write
-        # re-shuffle moved ~1.2 GB both ways per 4M events). Salted
-        # dedup (pathological per-key skew) keeps the classic two-
-        # shuffle plan — salting is incompatible with co-location.
+        # The dedup shuffle is FUSED with the table's bucket placement:
+        # the one unavoidable shuffle of the raw payload is keyed by the
+        # table's identity placement slot, the groupBy then runs
+        # exchange-free inside those partitions (slot is in the grouping
+        # key and is the partitioning column), and the downstream write
+        # skips ITS repartition (pre_placed) — one shuffle total per
+        # batch instead of two (measured: the write re-shuffle moved
+        # ~1.2 GB both ways per 4M events). Salted dedup (pathological
+        # per-key skew) keeps the classic two-shuffle plan — salting is
+        # incompatible with co-location. The winner cache is built
+        # uncompressed (session conf, see session.get_spark).
         pre_placed: int | None = None
         pre_slots: int | None = None
-        if self.dedup_plan == "fused":
-            use_fused = True
-        elif self.dedup_plan == "partial":
-            use_fused = False
-        else:  # auto: previous batch's measured duplication decides
-            use_fused = (
-                self._last_dup_ratio is None
-                or self._last_dup_ratio <= self.partial_plan_dup_ratio
-            )
-        if self.salt_buckets == 1 and use_fused:
+        if self.salt_buckets == 1:
             from gear5_spark.lake.table import BUCKET_COL
 
             # slots_per_bucket lifts dedup/parse parallelism above the
@@ -571,23 +463,20 @@ class TranscriptsApplier:
             # keep _pslot through the cache: the merge join co-partitions
             # on it (lake/merge.py slots_per_bucket), so the batch is
             # never re-shuffled after this one placement exchange
-            deduped_raw = _persist_batch_cache(
+            deduped_raw = (
                 latest_per_key(placed, KEY_COLS, co_group_cols=["_pslot"])
-                .drop(BUCKET_COL),
-                source_bytes=_scan_size_estimate(batch),
+                .drop(BUCKET_COL)
+                .persist()
             )
             pre_placed = n_b
             pre_slots = q
         else:
-            # partial (map-side-combined) or salted plan: the dedup
-            # shuffle carries pre-reduced rows; the write repartitions
-            # the winner set by placement slot (pre_placed stays None)
-            deduped_raw = _persist_batch_cache(
-                latest_per_key(
-                    valid, KEY_COLS, salt_buckets=self.salt_buckets
-                ),
-                source_bytes=_scan_size_estimate(batch),
-            )
+            # salted plan: the dedup shuffle carries pre-reduced rows;
+            # the write repartitions the winner set by placement slot
+            # (pre_placed stays None)
+            deduped_raw = latest_per_key(
+                valid, KEY_COLS, salt_buckets=self.salt_buckets
+            ).persist()
         from gear5_spark.perf import span
 
         try:
@@ -666,9 +555,6 @@ class TranscriptsApplier:
                     )
                 return None
 
-            # feed duplication measured from THIS batch steers the NEXT
-            # batch's dedup plan under dedup_plan="auto" (ratios are
-            # sticky on steady feeds; both plans are result-identical)
             valid_events = int(stats["event_count"]) - int(
                 stats.get("malformed_count") or 0
             )
@@ -714,8 +600,7 @@ class TranscriptsApplier:
                         for s in specs
                     ]
             deduped = normalize_changes(
-                deduped_raw, specs, mode=self.normalize_mode,
-                carry_cols=("_pslot",),
+                deduped_raw, specs, carry_cols=("_pslot",)
             )
             lineage = {
                 "batch_id": int(batch_id),
@@ -736,13 +621,7 @@ class TranscriptsApplier:
                 "event_count": int(stats["event_count"]),
                 "txn_ids_hash": format(stats["txn_hash"] & ((1 << 64) - 1), "x"),
                 "malformed_count": int(stats.get("malformed_count") or 0),
-                # which physical dedup plan this batch actually ran —
-                # the audit trail for dedup_plan="auto" decisions
-                "dedup_plan": (
-                    "salted"
-                    if self.salt_buckets > 1
-                    else ("fused" if use_fused else "partial")
-                ),
+                "dedup_plan": "salted" if self.salt_buckets > 1 else "fused",
                 # snapshot_version is stamped by commit itself (the only
                 # value that survives an OCC rebase)
             }
@@ -798,7 +677,6 @@ class TranscriptsApplier:
                     deduped,
                     delete_mode=self.delete_mode,
                     order_guard=self.order_guard,
-                    broadcast_batch=self.broadcast_batch,
                     txn_app_id=self.app_id,
                     txn_batch_id=int(batch_id),
                     lineage=lineage,

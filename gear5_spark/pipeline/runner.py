@@ -122,7 +122,6 @@ def replay_batch(
     min_lsn: int | None = None,
     max_lsn: int | None = None,
     salt_buckets: int = 1,
-    normalize_mode: str = "sql",
     order_guard: bool | None = None,
     delete_mode: str = "hard",
     sink_mode: str = "cow",
@@ -131,7 +130,6 @@ def replay_batch(
     exclude_columns: list[str] | None = None,
     rollup=None,
     partition_lineage: bool = True,
-    dedup_plan: str = "auto",
     auto_widen: bool | str = True,
 ) -> LakeTable:
     """Bulk replay: whole (or cursor-bounded) change log in one merge.
@@ -155,7 +153,6 @@ def replay_batch(
         checkpoint_dir,
         app_id=app_id,
         salt_buckets=salt_buckets,
-        normalize_mode=normalize_mode,
         order_guard=order_guard,
         delete_mode=delete_mode,
         sink_mode=sink_mode,
@@ -164,7 +161,6 @@ def replay_batch(
         exclude_columns=exclude_columns or [],
         rollup=rollup,
         partition_lineage=partition_lineage,
-        dedup_plan=dedup_plan,
         auto_widen=auto_widen,
     )
     changes = read_changelog(spark, changelog_dir, min_lsn=min_lsn, max_lsn=max_lsn)

@@ -28,20 +28,21 @@ def _rows(table):
 
 def test_copartitioned_merge_matches_legacy_plan(spark, log_dir, tmp_path):
     # phase 1 fills the target; phase 2 exercises the guarded merge
-    # against a NON-empty target — fused plan carries _pslot and merges
-    # co-partitioned, partial plan drops it and takes the legacy path.
+    # against a NON-empty target — the fused plan carries _pslot and
+    # merges co-partitioned, the salted plan drops it and takes the
+    # legacy path.
     outs = {}
-    for plan in ("fused", "partial"):
+    for plan, salt in (("fused", 1), ("salted", 2)):
         t = bootstrap_table(spark, str(tmp_path / plan), n_buckets=8)
         for lo, hi in ((None, 2999), (2999, None)):
             replay_batch(
                 spark, log_dir, t,
                 checkpoint_dir=str(tmp_path / f"{plan}-ck{hi}"),
-                min_lsn=lo, max_lsn=hi, dedup_plan=plan,
+                min_lsn=lo, max_lsn=hi, salt_buckets=salt,
                 order_guard=True,
             )
         outs[plan] = _rows(t)
-    assert outs["fused"] == outs["partial"]
+    assert outs["fused"] == outs["salted"]
     assert len(outs["fused"]) > 0
 
 

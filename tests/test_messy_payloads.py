@@ -1,6 +1,7 @@
-"""Messy-feed normalization through the pandas/Arrow path: mixed timestamp
-layouts, stringly bools, numeric strings — the reference's ReformatValue
-behavior (typeutils/reformat.go:44-173) exercised end-to-end."""
+"""Messy-feed normalization through the applier's SQL normalizer: mixed
+timestamp layouts, stringly bools, numeric strings — the reference's
+ReformatValue behavior (typeutils/reformat.go:44-173) exercised
+end-to-end."""
 
 from __future__ import annotations
 
@@ -66,7 +67,7 @@ def test_pandas_normalizer_coerces_messy_fields(spark, tmp_path):
             fh,
         )
     table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=4)
-    applier = make_applier(table, ckpt, normalize_mode="pandas")
+    applier = make_applier(table, ckpt)
     applier(read_changelog(spark, log), 0)
 
     rows = {

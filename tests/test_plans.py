@@ -78,7 +78,7 @@ def test_merge_plans_exactly_one_join(spark, log_dir, tmp_path):
     )
     merged = _guarded_merge(
         target, batch, ["conv_id", "turn_idx"], ["conv_id", "turn_idx"],
-        "op", "hard", write_schema, broadcast_batch=False,
+        "op", "hard", write_schema,
     )
     plan = _plan(merged, mode="simple")
     joins = sum(plan.count(j) for j in ("SortMergeJoin", "ShuffledHashJoin",

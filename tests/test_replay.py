@@ -7,8 +7,6 @@ table must equal the serial in-memory fold on every column, under stable
 
 from __future__ import annotations
 
-import pytest
-
 from gear5_spark.pipeline.runner import bootstrap_table, replay_batch, run_stream
 from tests.oracle import oracle_rows
 
@@ -39,19 +37,6 @@ def test_bulk_replay_matches_oracle(spark, tiny_changelog, tmp_path):
         spark, changelog_dir, table, checkpoint_dir=str(tmp_path / "ckpt")
     )
     assert table.read().count() == manifest["final_live_keys"]
-    _assert_matches_oracle(table, changelog_dir)
-
-
-def test_bulk_replay_pandas_normalizer(spark, tiny_changelog, tmp_path):
-    changelog_dir, _ = tiny_changelog
-    table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8)
-    replay_batch(
-        spark,
-        changelog_dir,
-        table,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        normalize_mode="pandas",
-    )
     _assert_matches_oracle(table, changelog_dir)
 
 
@@ -113,82 +98,28 @@ def test_lineage_covers_all_events(spark, tiny_changelog, tmp_path):
         assert cur["lsn_min"] > prev["lsn_max"]
     for r in lineage:
         assert r["snapshot_id"] is not None and r["committed_at_ms"] > 0
+        assert r["dedup_plan"] == "fused"
 
 
-def test_dedup_plan_partial_matches_fused(spark, tiny_changelog, tmp_path):
-    """The fused (placement-keyed, one raw shuffle) and partial
-    (map-side-combined max_by) dedup plans are result-identical — the
-    contract that makes dedup_plan="auto" safe to switch per batch."""
-    changelog_dir, _ = tiny_changelog
-    results = {}
-    for plan in ("fused", "partial"):
-        table = bootstrap_table(spark, str(tmp_path / plan), n_buckets=8)
-        replay_batch(
-            spark,
-            changelog_dir,
-            table,
-            checkpoint_dir=str(tmp_path / f"ckpt-{plan}"),
-            dedup_plan=plan,
-        )
-        _assert_matches_oracle(table, changelog_dir)
-        results[plan] = _table_rows(table)
-    assert results["fused"] == results["partial"]
-
-
-def test_dedup_plan_auto_switches_on_high_duplication(
-    spark, tiny_changelog, tmp_path
+def test_applier_sets_no_session_conf(
+    spark, tiny_changelog, tmp_path, monkeypatch
 ):
-    """auto plan: batch 0 runs fused (no history), records the measured
-    events-per-key ratio, and a high-duplication feed flips batch 1 to
-    the partial (map-side-combined) plan — with the final table still
-    matching the serial oracle."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from gear5_spark.pipeline.runner import make_applier
-    from gear5_spark.sources.changelog import read_changelog
+    """An applier call never writes the session-wide conf: two streams
+    sharing one session would otherwise race on it."""
+    from pyspark.sql.conf import RuntimeConfig
 
     changelog_dir, _ = tiny_changelog
-    changes = read_changelog(spark, changelog_dir)
-    mid = changes.agg(F.max("lsn")).first()[0] // 2
-    b0 = changes.filter(F.col("lsn") <= mid)
-    b1 = changes.filter(F.col("lsn") > mid)
-    n0 = b0.count()
-    k0 = b0.select("conv_id", "turn_idx").distinct().count()
-    ratio0 = n0 / k0
-    assert ratio0 > 1.0, "fixture half-log must contain updates"
-
     table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8)
-    applier = make_applier(
-        table,
-        str(tmp_path / "ckpt"),
-        app_id="auto-plan-test",
-        dedup_plan="auto",
-        # threshold strictly below the measured batch-0 ratio so the
-        # auto plan must flip to partial for batch 1
-        partial_plan_dup_ratio=ratio0 * 0.9,
-        # phased out-of-order safety is not under test; keep the guard
-        order_guard=True,
+    calls = []
+    orig = RuntimeConfig.set
+
+    def spy(self, key, value):
+        calls.append(key)
+        return orig(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    replay_batch(
+        spark, changelog_dir, table, checkpoint_dir=str(tmp_path / "ckpt")
     )
-    applier(b0, 0)
-    assert applier._last_dup_ratio == _pytest.approx(ratio0)
-    applier(b1, 1)  # partial plan (ratio0 > threshold)
-    _assert_matches_oracle(table, changelog_dir)
-    # the per-batch plan decision lands in the lineage audit trail
-    plans = {
-        r["batch_id"]: r["dedup_plan"] for r in table.lineage_df().collect()
-    }
-    assert plans == {0: "fused", 1: "partial"}
-
-
-def test_fused_plan_with_salting_is_rejected():
-    # honoring dedup_plan="fused" is impossible with salting (co-location
-    # vs salt are contradictory); the applier must refuse, not silently
-    # run the salted two-shuffle plan (review r4)
-    from gear5_spark.pipeline.apply import TranscriptsApplier
-
-    with pytest.raises(ValueError, match="incompatible"):
-        TranscriptsApplier(
-            table=None, app_id="x", registry_path="/tmp/never-used",
-            dedup_plan="fused", salt_buckets=4,
-        )
+    assert table.current_version() >= 1
+    assert calls == []
