@@ -11,8 +11,9 @@ Plan shape (scales to 100 TB):
    are given (no footers opened), else the full file set;
 2. ONE job finds the distinct buckets actually containing matches
    (bucket ids ride the data, so this is a scan + tiny distinct);
-3. only those buckets rewrite: their rows re-filtered and written as
-   fresh base files (MoR deltas of the bucket fold in — reconstruct
+3. only those buckets rewrite (widened to the whole range of every MoR
+   delta file they touch): their rows re-filtered and written as fresh
+   base files (MoR deltas of the bucket fold in — reconstruct
    semantics, same as compaction), every other file is carried into the
    new snapshot untouched;
 4. one atomic commit, lineage records the logical delete count.
@@ -41,7 +42,14 @@ from typing import Any
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from gear5_spark.lake.table import BUCKET_COL, LakeTable, Snapshot
+from gear5_spark.lake.table import (
+    BUCKET_COL,
+    LakeTable,
+    Snapshot,
+    entry_buckets,
+    touches,
+    whole_file_scope,
+)
 
 
 def delete_where(
@@ -73,10 +81,12 @@ def delete_where(
         return snap, 0
     # MoR correctness: operate on whole buckets (a delta row may satisfy
     # the predicate while its base row does not, and vice versa)
-    cand_buckets = sorted({f["bucket"] for f in cand_files})
-    cand = [f for f in snap.files if f["bucket"] in cand_buckets]
+    cand_buckets = {b for f in cand_files for b in entry_buckets(f)}
+    cand = [f for f in snap.files if touches(f, cand_buckets)]
 
-    scoped = table._read_files(snap, cand, with_internal=True)
+    scoped = table._read_files(
+        snap, cand, with_internal=True, buckets=cand_buckets
+    )
     is_hit = condition.isNotNull() & condition
     hits = (
         scoped.filter(is_hit)
@@ -87,10 +97,11 @@ def delete_where(
     if not hits:
         return snap, 0
     n_deleted = int(sum(r["n"] for r in hits))
-    hit_buckets = {r[BUCKET_COL] for r in hits}
+    # rewrite whole files only: a range delta drags its other buckets in
+    scope = whole_file_scope(snap.files, {r[BUCKET_COL] for r in hits})
 
-    in_scope = [f for f in snap.files if f["bucket"] in hit_buckets]
-    out_scope = [f for f in snap.files if f["bucket"] not in hit_buckets]
+    in_scope = [f for f in snap.files if touches(f, scope)]
+    out_scope = [f for f in snap.files if not touches(f, scope)]
     remaining = table._read_files(snap, in_scope, with_internal=True).filter(
         ~is_hit
     )

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gear5_spark.lake.table import CDC_LSN, LakeTable
+from gear5_spark.lake.table import CDC_LSN, LakeTable, entry_buckets
 
 
 def _changed_buckets(table: LakeTable, v_from: int, v_to: int) -> list[int] | None:
@@ -32,7 +32,8 @@ def _changed_buckets(table: LakeTable, v_from: int, v_to: int) -> list[int] | No
     def by_bucket(files):
         m: dict[int, set] = {}
         for f in files:
-            m.setdefault(f["bucket"], set()).add(f["path"])
+            for bucket in entry_buckets(f):
+                m.setdefault(bucket, set()).add(f["path"])
         return m
 
     ma, mb = by_bucket(a.files), by_bucket(b.files)

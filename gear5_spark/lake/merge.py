@@ -53,7 +53,11 @@ from gear5_spark.lake.table import (
     CDC_LSN,
     ConcurrentCommitError,
     LakeTable,
+    Placement,
     Snapshot,
+    entry_buckets,
+    touches,
+    whole_file_scope,
 )
 from gear5_spark.operators.typing import merge_schemas
 
@@ -95,8 +99,7 @@ def merge_into(
     txn_batch_id: int | None = None,
     lineage: dict[str, Any] | None = None,
     affected_buckets: list[int] | None = None,
-    pre_placed: int | None = None,
-    slots_per_bucket: int | None = None,
+    pre_placed: Placement | None = None,
 ) -> tuple[Snapshot, MergeStats]:
     """Apply a deduped change batch (one row per key) to the table.
 
@@ -105,14 +108,12 @@ def merge_into(
     widening lattice). In ``soft`` delete mode, deletes survive as
     tombstones with ``_cdc_deleted_at`` set; ``hard`` removes the row.
 
-    ``pre_placed``: the batch is already identity-placed by bucket (see
-    ``LakeTable.placement_expr``) under a snapshot with that bucket
-    count — the empty-target bypass then writes it without a second
-    shuffle.
+    ``pre_placed``: the batch is already identity-placed (see
+    ``LakeTable.placement_expr``) with this placement — the empty-target
+    bypass then writes it without a second shuffle.
 
-    ``slots_per_bucket``: additionally, the batch still CARRIES its
-    placement slot (``_pslot``, built with this sub-split factor). The
-    join paths then run CO-PARTITIONED on the slot: the target side is
+    When the batch also still CARRIES its placement slot (``_pslot``)
+    the join paths run CO-PARTITIONED on the slot: the target side is
     repartitioned to the identical slot layout, ``_pslot`` leads the
     equi-join keys (it is functionally dependent on the key columns, so
     the join result is unchanged), and the join's output partitions —
@@ -123,15 +124,20 @@ def merge_into(
     is already placed). Measured on the 4x1M-event CoW stream: the
     merge+write stage shuffled 2.7 GB before, ~0.8 GB after.
     Ignored (legacy two-shuffle plan) when the batch lacks ``_pslot`` or
-    the bucket layout drifted.
+    the placement no longer matches the table's layout (bucket count,
+    bucket columns or slot count).
+
+    On a table with resident merge-on-read deltas the rewritten bucket
+    set widens to the whole range of every delta file it touches, so
+    range files are always dropped whole.
     """
     if delete_mode not in ("hard", "soft"):
         raise ValueError(f"delete_mode must be hard|soft, got {delete_mode}")
     snap = table.snapshot()
     key_cols = snap.properties["key_columns"]
     co_partition = (
-        slots_per_bucket is not None
-        and pre_placed == snap.properties["n_buckets"]
+        pre_placed is not None
+        and pre_placed == table.placement(snap, pre_placed.n_slots)
         and SLOT_COL in batch.columns
     )
     if SLOT_COL in batch.columns and not co_partition:
@@ -169,7 +175,7 @@ def merge_into(
         # loudly instead.
         if affected_buckets is None:
             return
-        stray = {f["bucket"] for f in new_entries} - affected_set
+        stray = {b for f in new_entries for b in entry_buckets(f)} - affected_set
         if stray:
             raise ConcurrentCommitError(
                 f"batch rows landed in buckets {sorted(stray)} outside "
@@ -188,8 +194,11 @@ def merge_into(
         affected = sorted(
             r[0] for r in keyed.select(BUCKET_COL).distinct().collect()
         )
-    affected_set = set(affected)
-    target_files = [f for f in snap.files if f["bucket"] in affected_set]
+    # rewrite whole files only: a delta holding a bucket range drags
+    # its other buckets into the rewrite
+    affected_set = whole_file_scope(snap.files, affected)
+    affected = sorted(affected_set)
+    target_files = [f for f in snap.files if touches(f, affected_set)]
     if not target_files:
         # nothing to merge against (bootstrap load / untouched buckets):
         # skip the join entirely — dedup output IS the new bucket content
@@ -226,14 +235,12 @@ def merge_into(
     join_cols = list(key_cols)
     write_pre_placed = None
     if co_partition:
-        n_slots, slot_expr = table.placement_expr(
-            snap, slots_per_bucket=slots_per_bucket
-        )
+        _, slot_expr = table.placement_expr(snap, pre_placed.n_slots)
         # one explicit shuffle of the target to the batch's slot layout;
         # leading the equi-join with the (key-dependent) slot makes the
         # join exchange-free on both sides and its output write-placed
         target = target.withColumn(SLOT_COL, slot_expr).repartition(
-            n_slots, SLOT_COL
+            pre_placed.n_slots, SLOT_COL
         )
         join_cols = [SLOT_COL, *key_cols]
         write_pre_placed = pre_placed
@@ -262,7 +269,7 @@ def merge_into(
         if affected_buckets is None:
             keyed.unpersist()
     _check_declared_buckets(new_entries)
-    kept = [f for f in snap.files if f["bucket"] not in affected_set]
+    kept = [f for f in snap.files if not touches(f, affected_set)]
     new_snap = table.commit(
         files=kept + new_entries,
         schema=evolved,
@@ -291,7 +298,7 @@ def _guarded_merge(
 ) -> DataFrame:
     """Full-outer merge with LSN guard; one shuffle on the join columns
     (zero when both sides arrive co-partitioned on a leading slot
-    column — see ``merge_into`` ``slots_per_bucket``).
+    column — see ``merge_into``'s ``_pslot`` co-partitioning).
 
     ``hash_build``: hint a shuffled-hash build on the (one-row-per-key,
     post-dedup) batch side instead of sort-merge — per-partition hash

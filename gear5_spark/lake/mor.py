@@ -5,15 +5,21 @@ micro-batch — with uniformly distributed keys that approaches a full-table
 rewrite per batch, the classic CoW write-amplification wall. MoR is the
 Iceberg/Hudi answer, built here on the same manifest format:
 
-- ``merge_delta``  — write the deduped batch AS-IS as per-bucket *delta*
-  files (manifest entries carry ``kind: delta``); base files untouched.
-  Write cost per batch: O(batch), not O(table).
+- ``merge_delta``  — write the deduped batch AS-IS as *delta* files
+  (manifest entries carry ``kind: delta``); base files untouched.
+  Write cost per batch: O(batch), not O(table). The applier places the
+  batch by contiguous bucket range, at most one slot per shuffle
+  partition, so a delta file holds several whole buckets when the table
+  has more buckets than the session has shuffle partitions (its entry
+  records the inclusive ``bucket_range``); base files stay one per
+  bucket.
 - ``LakeTable.read`` — when a snapshot holds deltas, reconstruct: union
   base + deltas, latest-per-key by ``(_cdc_lsn, file kind)``, drop rows
   whose winning op is delete. Read cost grows with resident deltas.
 - ``compact``      — fold deltas into base per bucket (the CoW merge path
   reused), bounding read amplification; the applier auto-compacts every
-  ``compact_every`` batches.
+  ``compact_every`` batches. Like every rewrite, it widens its bucket
+  scope to whole range files.
 
 Exactly-once carries over unchanged: delta commits go through the same
 atomic manifest publish + txn ledger.
@@ -28,7 +34,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gear5_spark.lake.merge import _FEED_META, SLOT_COL
-from gear5_spark.lake.table import BUCKET_COL, CDC_LSN, LakeTable, Snapshot
+from gear5_spark.lake.table import (
+    BUCKET_COL,
+    CDC_LSN,
+    LakeTable,
+    Placement,
+    Snapshot,
+    entry_buckets,
+    touches,
+    whole_file_scope,
+)
 from gear5_spark.operators.typing import merge_schemas
 
 OP_COL = "_op"
@@ -41,7 +56,7 @@ def merge_delta(
     txn_app_id: str | None = None,
     txn_batch_id: int | None = None,
     lineage: dict[str, Any] | None = None,
-    pre_placed: int | None = None,
+    pre_placed: Placement | None = None,
 ) -> Snapshot:
     """Append the deduped batch as delta files; no base rewrite.
 
@@ -96,11 +111,15 @@ def reconstruct(
     snap: Snapshot,
     files: list[dict[str, Any]],
     with_internal: bool = False,
+    buckets: set[int] | None = None,
 ) -> DataFrame:
     """Merge base + delta files into the logical current state.
 
     One keyed shuffle (max_by over ``(_cdc_lsn, delta-wins-ties)``) —
-    identical machinery to the micro-batch dedup, applied at read time."""
+    identical machinery to the micro-batch dedup, applied at read time.
+    ``buckets``: reconstruct only these buckets' rows (the caller read
+    range files for some of their buckets); ``files`` must hold every
+    file of each of them."""
     key_cols = snap.properties["key_columns"]
     read_schema = T.StructType(
         list(snap.schema.fields)
@@ -114,7 +133,9 @@ def reconstruct(
     # era-aware read (in-place widening): base/delta files written
     # before a widen commit carry narrower physical types — group by
     # era, cast up, union (see table.read_file_entries)
-    df = read_file_entries(table.spark, table.table_dir, files, read_schema)
+    df = read_file_entries(
+        table.spark, table.table_dir, files, read_schema, buckets
+    )
     # ordering mirrors the CoW guard (merge.py): a NULL or unparseable
     # LSN on a DELTA row wins (CoW: coalesce(b>=t, True) makes the
     # batch win whenever either LSN is NULL/unparseable), a NULL or
@@ -168,7 +189,10 @@ def compact(
     the cold long tail holds one small delta each — folding those cold
     buckets rewrites their (large) base files for no read-amplification
     gain. Skipping a bucket is always safe: reconstruct() keeps merging
-    its base+deltas until a later compaction clears the threshold.
+    its base+deltas until a later compaction clears the threshold. A
+    delta holding a bucket range counts once for each bucket in it, and
+    the chosen buckets then widen to the whole range of every file they
+    touch, so no file is ever half-compacted.
 
     Runs as its own atomic commit — a crash mid-compaction leaves only
     orphan files; readers keep seeing base+delta until the swap."""
@@ -176,17 +200,16 @@ def compact(
     per_bucket: dict[int, int] = {}
     for f in snap.files:
         if f.get("kind") == "delta":
-            per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
-    delta_buckets = sorted(
-        b for b, n in per_bucket.items() if n >= max(1, min_deltas)
-    )
+            for b in entry_buckets(f):
+                per_bucket[b] = per_bucket.get(b, 0) + 1
+    chosen = {b for b, n in per_bucket.items() if n >= max(1, min_deltas)}
     if buckets is not None:
-        delta_buckets = sorted(set(delta_buckets) & set(buckets))
-    if not delta_buckets:
+        chosen &= set(buckets)
+    if not chosen:
         return None
-    target = set(delta_buckets)
-    in_scope = [f for f in snap.files if f["bucket"] in target]
-    out_scope = [f for f in snap.files if f["bucket"] not in target]
+    target = whole_file_scope(snap.files, chosen)
+    in_scope = [f for f in snap.files if touches(f, target)]
+    out_scope = [f for f in snap.files if not touches(f, target)]
     merged = reconstruct(table, snap, in_scope, with_internal=True)
     _, entries = table.write_data_files(merged, snap=snap)
     return table.commit(

@@ -29,7 +29,12 @@ data-file entries into an immutable per-commit manifest file
 (``_lake/m-<version>-<uuid>.json``); the snapshot JSON carries only a
 *manifest list* — ``[{path, buckets}]`` — naming each live manifest and
 which of its buckets are still current (all pruning/rewriting in this
-engine is bucket-granular, so bucket sets are exact liveness). Commit
+engine is bucket-granular and keeps or drops whole files, so bucket sets
+are exact liveness). A data-file entry holds one bucket (``bucket``) or,
+for a merge-on-read delta placed by slot, an inclusive bucket range
+(``bucket_range: [lo, hi]``); :func:`entry_buckets` is the one reader of
+both. Engines that predate range entries must not read a table holding
+them (they would fail on the missing ``bucket`` key). Commit
 cost is O(new files + number of manifests), NOT O(total files): at 100 TB
 with millions of data files the snapshot write stays KB-sized, and reads
 resolve manifests through an immutable cache. Lineage is one entry per
@@ -80,7 +85,8 @@ class Snapshot:
     parent_version: int | None
     schema: T.StructType
     properties: dict[str, Any]
-    files: list[dict[str, Any]]  # {"path": rel, "bucket": int, "rows": int|None}
+    # {"path": rel, "bucket": int | "bucket_range": [lo, hi], "rows": int|None}
+    files: list[dict[str, Any]]
     txn: dict[str, int]  # app_id -> last committed batch id
     lineage: list[dict[str, Any]] = field(default_factory=list)
     committed_at_ms: int = 0
@@ -123,20 +129,83 @@ class Snapshot:
         )
 
 
-# session-wide cache: bucket-count -> identity partition map (pure function
+def entry_buckets(f: dict[str, Any]) -> range:
+    """The buckets a manifest entry holds: its ``bucket``, or every
+    bucket of its inclusive ``bucket_range``. Every bucket-granular
+    selection goes through here, so a file holding several buckets is
+    never mistaken for one (tests/test_bucket_entry_guard.py)."""
+    r = f.get("bucket_range")
+    if r is not None:
+        return range(r[0], r[1] + 1)
+    return range(f["bucket"], f["bucket"] + 1)
+
+
+def touches(f: dict[str, Any], buckets: set[int]) -> bool:
+    """True when the entry holds at least one of ``buckets``."""
+    return not buckets.isdisjoint(entry_buckets(f))
+
+
+def _buckets_of(files: list[dict[str, Any]]) -> list[int]:
+    return sorted({b for f in files for b in entry_buckets(f)})
+
+
+def whole_file_scope(files: list[dict[str, Any]], buckets) -> set[int]:
+    """Widen ``buckets`` until no file straddles its edge: every file
+    holding one of the buckets holds only buckets in the result.
+
+    Rewrite paths (compaction, ``delete_where``, copy-on-write MERGE)
+    drop and rewrite whole buckets; widening their scope this way keeps
+    liveness whole-file, so a range file is never half-dropped."""
+    scope = set(buckets)
+    grew = True
+    while grew:
+        grew = False
+        for f in files:
+            bs = entry_buckets(f)
+            if not scope.isdisjoint(bs) and not scope.issuperset(bs):
+                scope.update(bs)
+                grew = True
+    return scope
+
+
+@dataclass(frozen=True)
+class Placement:
+    """Fingerprint of an identity placement (:meth:`LakeTable.placement_expr`).
+
+    A write may skip its own repartition only when the placement the
+    caller partitioned by still equals the one its snapshot implies; any
+    drift (bucket count, bucket columns, slot count) falls back to the
+    write's own repartition."""
+
+    n_buckets: int
+    bucket_columns: tuple[str, ...]
+    n_slots: int
+
+    def slot_of(self, bucket: int) -> int:
+        """The slot that holds ``bucket`` when slots group whole buckets
+        (``n_slots < n_buckets``); the bucket itself otherwise (each
+        slot then holds part of one bucket)."""
+        return bucket * min(self.n_slots, self.n_buckets) // self.n_buckets
+
+
+# session-wide cache: slot-count -> identity partition map (pure function
 # of Murmur3, independent of table)
 _IDENT_MAP_CACHE: dict[int, list[int]] = {}
 
 
-def identity_slot_expr(n_slots: int, slot_expr):
+def identity_slot_expr(n_slots: int, slot_expr, n_fine: int | None = None):
     """Int expression whose ``repartition(n_slots, ...)`` hash-partition
-    slot equals ``slot_expr`` (an int column in [0, n_slots)).
+    slot equals ``slot_expr * n_slots // n_fine`` (``slot_expr`` an int
+    column in [0, n_fine); ``n_fine`` defaults to ``n_slots``, i.e. the
+    slot is ``slot_expr`` itself).
 
     ``repartition(n, col)`` places a row in ``pmod(murmur3(col), n)``;
     we precompute, per slot s, an integer x_s with
     ``pmod(hash(x_s), n) == s`` (driver-side Murmur3 probe, no Spark
     job — ``murmur3_int32`` matches ``F.hash`` exactly, pinned by
-    tests/test_lake_table.py) and partition on ``x_[slot]``."""
+    tests/test_lake_table.py) and partition on ``x_[slot]``. The
+    ``n_fine → n_slots`` grouping is folded into the same literal array,
+    so the row-side cost is one array lookup either way."""
     cache = _IDENT_MAP_CACHE.get(n_slots)
     if cache is None:
         from gear5_spark.lake.xxh64 import murmur3_int32
@@ -148,7 +217,8 @@ def identity_slot_expr(n_slots: int, slot_expr):
             x += 1
         cache = [mapping[s] for s in range(n_slots)]
         _IDENT_MAP_CACHE[n_slots] = cache
-    arr = F.array(*[F.lit(x) for x in cache])
+    n_fine = n_fine or n_slots
+    arr = F.array(*[F.lit(cache[i * n_slots // n_fine]) for i in range(n_fine)])
     return F.element_at(arr, slot_expr + 1)
 
 # manifest files are immutable once written — cache their entries
@@ -255,7 +325,9 @@ def _resolve_files(
         live = set(m["buckets"])
         phys = m.get("physical") or {}
         for f in _load_manifest(table_dir, m["path"]):
-            if f["bucket"] not in live:
+            # liveness is whole-file (_build_manifest_list refuses a
+            # partial drop), so any live bucket means the whole file
+            if not touches(f, live):
                 continue
             # in-place widening era markers: every file of this manifest
             # was written BEFORE the widen commit(s) that stamped the
@@ -281,10 +353,15 @@ def read_file_entries(
     table_dir: str,
     files: list[dict[str, Any]],
     read_schema: T.StructType,
+    buckets: set[int] | None = None,
 ) -> DataFrame:
     """Read manifest entries as ``read_schema``, casting through their
     ``physical`` era annotations (in-place column widening,
     :meth:`LakeTable.widen_column` / ``merge_schemas(allow_widen=True)``).
+
+    ``buckets``: keep only rows of these buckets. Needed when a read
+    wants some of a range file's buckets; the ``_bucket`` filter sits on
+    the scan itself, so parquet pushdown skips row groups.
 
     Entries are grouped by physical-type signature — one parquet scan
     per WRITE ERA, each opened with the types its files actually hold,
@@ -318,6 +395,8 @@ def read_file_entries(
         )
         paths = [os.path.join(table_dir, e["path"]) for e in groups[key]]
         df = spark.read.schema(era_schema).parquet(*paths)
+        if buckets is not None:
+            df = df.filter(F.col(BUCKET_COL).isin(sorted(buckets)))
         if over:
             df = df.select(
                 *[
@@ -464,29 +543,43 @@ class LakeTable:
         """Current (or given) snapshot as a DataFrame.
 
         ``buckets`` prunes at the file level using manifest metadata — the
-        scan never opens a file of a non-matching bucket (the moral
-        equivalent of Iceberg partition pruning on ``bucket(conv_id)``).
+        scan never opens a file holding none of the buckets (the moral
+        equivalent of Iceberg partition pruning on ``bucket(conv_id)``);
+        rows of a range file's other buckets are filtered on ``_bucket``.
         """
         snap = snapshot or self.snapshot()
         files = snap.files
+        want = None
         if buckets is not None:
             want = set(buckets)
-            files = [f for f in files if f["bucket"] in want]
-        return self._read_files(snap, files, with_internal)
+            files = [f for f in files if touches(f, want)]
+        return self._read_files(snap, files, with_internal, buckets=want)
 
     def _read_files(
         self,
         snap: Snapshot,
         files: list[dict[str, Any]],
         with_internal: bool = False,
+        buckets: set[int] | None = None,
     ) -> DataFrame:
+        """Read ``files``; ``buckets`` (when given) is the set of buckets
+        the caller selected them for — the rows of any other bucket a
+        range file holds are filtered out."""
+        if buckets is not None and all(
+            buckets.issuperset(entry_buckets(f)) for f in files
+        ):
+            buckets = None  # every file lies inside the selection
         if any(f.get("kind") == "delta" for f in files):
             # MoR snapshot: merge base + deltas at read time
             from gear5_spark.lake.mor import reconstruct
 
-            return reconstruct(self, snap, files, with_internal=with_internal)
+            return reconstruct(
+                self, snap, files, with_internal=with_internal, buckets=buckets
+            )
         read_schema = self._read_schema(snap)
-        df = read_file_entries(self.spark, self.table_dir, files, read_schema)
+        df = read_file_entries(
+            self.spark, self.table_dir, files, read_schema, buckets
+        )
         if not with_internal:
             df = df.select(*[f.name for f in snap.schema.fields])
         return df
@@ -508,8 +601,20 @@ class LakeTable:
         On a MoR snapshot pruning degrades to bucket granularity: a
         bucket is skipped only when NONE of its base or delta files may
         match — pruning a base file whose rows were updated by a kept
-        delta (or vice versa) would corrupt reconstruction.
+        delta (or vice versa) would corrupt reconstruction. A kept delta
+        may hold several buckets (range placement); :meth:`scan` then
+        reads only the rows of the kept buckets.
         """
+        keep, skipped, _buckets = self._plan_scan(filters, snapshot)
+        return keep, skipped
+
+    def _plan_scan(
+        self,
+        filters: list[tuple[str, str, Any]],
+        snapshot: Snapshot | None = None,
+    ) -> tuple[list[dict[str, Any]], int, set[int] | None]:
+        """:meth:`plan_scan` plus the bucket set a MoR read must keep
+        rows of (None when every kept file is read whole)."""
         for _c, op, _v in filters:
             if op not in self._SCAN_OPS:
                 raise ValueError(f"unsupported scan op {op!r}")
@@ -521,10 +626,11 @@ class LakeTable:
             for f in files
             if all(_file_may_match(f, c, o, v) for c, o, v in norm)
         ]
+        live_buckets = None
         if any(f.get("kind") == "delta" for f in files):
-            live_buckets = {f["bucket"] for f in keep}
-            keep = [f for f in files if f["bucket"] in live_buckets]
-        return keep, len(files) - len(keep)
+            live_buckets = {b for f in keep for b in entry_buckets(f)}
+            keep = [f for f in files if touches(f, live_buckets)]
+        return keep, len(files) - len(keep), live_buckets
 
     def scan(
         self,
@@ -537,8 +643,8 @@ class LakeTable:
         as Spark predicates (which also push down into the parquet scan
         for row-group skipping)."""
         snap = snapshot or self.snapshot()
-        keep, _skipped = self.plan_scan(filters, snap)
-        df = self._read_files(snap, keep, with_internal)
+        keep, _skipped, buckets = self._plan_scan(filters, snap)
+        df = self._read_files(snap, keep, with_internal, buckets=buckets)
         for c, op, v in filters:
             col = F.col(c)
             df = df.filter(
@@ -582,48 +688,54 @@ class LakeTable:
                 f"version {snap.version} already committed"
             ) from e
 
-    def _identity_partition_expr(self, n_buckets: int):
-        """An int expression whose hash-partition slot == the bucket id.
+    def placement(self, snap: Snapshot, n_slots: int | None = None) -> Placement:
+        """The :class:`Placement` that :meth:`placement_expr` builds for
+        ``n_slots`` requested slots under ``snap`` (metadata only).
 
-        ``repartition(n, col)`` places a row in ``pmod(murmur3(col), n)``;
-        we precompute, per bucket b, an integer x_b with
-        ``pmod(hash(x_b), n) == b`` and partition on ``x_[bucket]``. Each
-        output partition then holds EXACTLY one bucket — one file per
-        bucket with a plain parquet write, no dynamic-partition writer
-        (measured 2.4x slower) and no hash collisions mixing buckets."""
-        return identity_slot_expr(n_buckets, F.col(BUCKET_COL))
-
-    def placement_expr(
-        self, snap: Snapshot | None = None, slots_per_bucket: int = 1
-    ):
-        """(n_slots, column expr) that an UPSTREAM operator can
-        ``repartition(n_slots, ...)`` on so every resulting partition
-        holds exactly one bucket — letting :meth:`write_data_files`
-        (via ``pre_placed``) skip its own repartition and write the
-        batch WITHOUT a second shuffle of the parsed payload.
-
-        ``slots_per_bucket`` sub-splits each bucket into that many
-        slots by a per-key hash, so upstream parallelism is
-        ``n_buckets * slots_per_bucket`` instead of being capped at the
-        bucket count (each slot still holds rows of exactly one bucket
-        — ``slot // slots_per_bucket == bucket`` — at the cost of up to
-        ``slots_per_bucket`` files per bucket per commit). The sub-key
-        hashes the full bucket columns, so all events of one key share
-        a slot — a co-located groupBy on (slot, key) is shuffle-free."""
-        snap = snap or self.snapshot()
+        ``n_slots`` at or above the bucket count sub-splits each bucket
+        into ``q = n_slots // n_buckets`` slots (``n_buckets * q`` in
+        all; each slot holds part of one bucket). Below it, slots group
+        contiguous whole buckets: ``slot = bucket * n_slots // n_buckets``.
+        Default: one slot per bucket."""
         n = snap.properties["n_buckets"]
-        q = max(1, int(slots_per_bucket))
-        slot = F.col(BUCKET_COL) * q
+        cols = snap.properties.get("bucket_columns") or [
+            snap.properties.get("bucket_column")
+        ]
+        want = n if n_slots is None else max(1, int(n_slots))
+        q = max(1, want // n)
+        return Placement(n, tuple(cols), min(want, n * q))
+
+    def placement_expr(self, snap: Snapshot | None = None, n_slots: int | None = None):
+        """(placement, column expr) that an UPSTREAM operator can
+        ``repartition(placement.n_slots, ...)`` on so every resulting
+        partition holds the rows of one slot (see :meth:`placement`) —
+        letting :meth:`write_data_files` (via ``pre_placed``) skip its
+        own repartition and write the batch WITHOUT a second shuffle of
+        the parsed payload.
+
+        One formula covers both regimes: a fine slot
+        ``bucket * q + sub`` in ``[0, n_buckets * q)`` maps to
+        ``fine * n_slots // (n_buckets * q)``. With ``q > 1`` (copy-on-
+        write: upstream parallelism above the bucket count, up to ``q``
+        files per bucket per commit) that is the fine slot itself; the
+        sub-key hashes the full bucket columns, so all events of one key
+        share a slot — a co-located groupBy on (slot, key) is
+        shuffle-free. With fewer slots than buckets (merge-on-read sized
+        to the shuffle width) each slot holds contiguous whole buckets
+        and writes one file covering that bucket range."""
+        snap = snap or self.snapshot()
+        p = self.placement(snap, n_slots)
+        q = max(1, p.n_slots // p.n_buckets)
+        fine = F.col(BUCKET_COL) * q
         if q > 1:
-            cols = snap.properties.get("bucket_columns") or [
-                snap.properties.get("bucket_column")
-            ]
             sub = F.pmod(
-                F.xxhash64(*[F.col(c).cast("string") for c in cols], F.lit(q)),
+                F.xxhash64(
+                    *[F.col(c).cast("string") for c in p.bucket_columns], F.lit(q)
+                ),
                 F.lit(q),
             ).cast("int")
-            slot = slot + sub
-        return n * q, identity_slot_expr(n * q, slot)
+            fine = fine + sub
+        return p, identity_slot_expr(p.n_slots, fine, p.n_buckets * q)
 
     def write_data_files(
         self,
@@ -631,27 +743,30 @@ class LakeTable:
         commit_token: str | None = None,
         n_buckets: int | None = None,
         snap: Snapshot | None = None,
-        pre_placed: int | None = None,
+        pre_placed: Placement | None = None,
     ) -> tuple[str, list[dict[str, Any]]]:
         """Write ``df`` (must carry ``_bucket``) as immutable data files.
 
-        One plain-parquet file per non-empty bucket under
-        ``data/<commit>/`` via identity hash placement; each file's bucket
-        id is recovered from its parquet footer statistics (min==max of
-        ``_bucket``) — on object stores this footer scan would be gathered
-        from task-side write stats instead. Uncommitted directories are
-        orphans (cleaned by :meth:`vacuum`), never visible to readers —
-        abort safety.
+        By default one plain-parquet file per non-empty bucket under
+        ``data/<commit>/`` via identity hash placement (no dynamic-
+        partition writer, measured 2.4x slower, and no hash collisions
+        mixing buckets); each file's bucket (or bucket range) is
+        recovered from its parquet footer statistics (min/max of
+        ``_bucket``) — on object stores this footer scan would be
+        gathered from task-side write stats instead. Uncommitted
+        directories are orphans (cleaned by :meth:`vacuum`), never
+        visible to readers — abort safety.
 
         ``pre_placed``: the caller already partitioned ``df`` upstream
-        with :meth:`placement_expr` under a snapshot whose bucket count
-        was ``pre_placed`` — when it matches this write's ``n_buckets``
-        the repartition (a full shuffle of the parsed batch) is skipped
-        and partitions are written as-is (possibly several files per
-        bucket, one per placement slot). A stale count (concurrent
-        rebucket) falls back to the normal repartition, and
-        ``_scan_written``'s min==max bucket assertion remains the hard
-        safety net against any partition mixing buckets.
+        with :meth:`placement_expr`. When that placement still equals
+        the one this write's snapshot implies, the repartition (a full
+        shuffle of the parsed batch) is skipped and partitions are
+        written as-is: several files per bucket when slots sub-split
+        buckets, one file per contiguous bucket range when slots group
+        them. Any drift (concurrent rebucket or bucket-column change)
+        falls back to the normal repartition, and ``_scan_written``'s
+        one-slot-per-file check remains the hard safety net against any
+        partition mixing slots.
         """
         import pyarrow.parquet as pq
 
@@ -665,11 +780,16 @@ class LakeTable:
         snap = snap or self.snapshot()
         props = snap.properties
         n_buckets = n_buckets or props.get("n_buckets", 16)
-        if pre_placed is not None and pre_placed == n_buckets:
-            part = df
+        if (
+            pre_placed is not None
+            and pre_placed.n_buckets == n_buckets
+            and pre_placed == self.placement(snap, pre_placed.n_slots)
+        ):
+            part, placed = df, pre_placed
         else:
+            placed = None  # one bucket per partition
             part = df.repartition(
-                n_buckets, self._identity_partition_expr(n_buckets)
+                n_buckets, identity_slot_expr(n_buckets, F.col(BUCKET_COL))
             )
         # opt-in clustering (sort_columns table property): rows sorted
         # within each bucket file — parquet row-group/page stats on the
@@ -693,7 +813,7 @@ class LakeTable:
             )
             writer.parquet(out_dir)
         with span("table.footer_scan"):
-            entries = self._scan_written(out_dir, pq, snap)
+            entries = self._scan_written(out_dir, pq, snap, placed)
         return commit, entries
 
     def _stats_columns(self, meta, snap: Snapshot) -> dict[str, int]:
@@ -717,8 +837,18 @@ class LakeTable:
         return {c: names[c] for c in want if c in names}
 
     def _scan_written(
-        self, out_dir: str, pq, snap: Snapshot | None = None
+        self,
+        out_dir: str,
+        pq,
+        snap: Snapshot | None = None,
+        placed: Placement | None = None,
     ) -> list[dict[str, Any]]:
+        """Manifest entries for the files a write just produced, with the
+        bucket or inclusive bucket range read from each footer's
+        ``_bucket`` min/max. ``placed`` is the placement the write
+        partitioned by (None: one bucket per partition); a file whose
+        range leaves one of its slots was mis-placed and fails the
+        write."""
         snap = snap or self.snapshot()
         entries: list[dict[str, Any]] = []
         bucket_idx = None
@@ -742,16 +872,20 @@ class LakeTable:
                     st = meta.row_group(rg).column(bucket_idx).statistics
                     bmin = st.min if bmin is None else min(bmin, st.min)
                     bmax = st.max if bmax is None else max(bmax, st.max)
-                if bmin != bmax:  # pragma: no cover - identity map guarantees
+                if bmin != bmax and (
+                    placed is None or placed.slot_of(bmin) != placed.slot_of(bmax)
+                ):  # pragma: no cover - identity map guarantees
                     raise AssertionError(
-                        f"file {name} spans buckets {bmin}..{bmax}"
+                        f"file {name} spans buckets {bmin}..{bmax} "
+                        "across placement slots"
                     )
                 rel = os.path.relpath(full, self.table_dir)
-                entry = {
-                    "path": rel,
-                    "bucket": int(bmin),
-                    "rows": meta.num_rows,
-                }
+                entry: dict[str, Any] = {"path": rel}
+                if bmin == bmax:
+                    entry["bucket"] = int(bmin)
+                else:
+                    entry["bucket_range"] = [int(bmin), int(bmax)]
+                entry["rows"] = meta.num_rows
                 stats = _collect_file_stats(meta, stat_idx)
                 if stats:
                     entry["stats"] = stats
@@ -769,8 +903,10 @@ class LakeTable:
         entries the parent already tracked stay attributed to their
         original manifests (liveness updated at bucket granularity —
         every rewrite path in this engine keeps or drops whole buckets
-        per manifest); genuinely new entries land in ONE new per-commit
-        manifest file. O(new files + manifests), never O(table files).
+        per manifest, widened so a range file is kept or dropped whole:
+        a bucket some of whose files survive raises); genuinely new
+        entries land in ONE new per-commit manifest file. O(new files +
+        manifests), never O(table files).
 
         ``widened`` ({column: parent physical type}) marks an in-place
         widening commit: every KEPT parent manifest inherits the era map
@@ -811,7 +947,7 @@ class LakeTable:
                     m_list.append(
                         {
                             "path": rel,
-                            "buckets": sorted({f["bucket"] for f in kept}),
+                            "buckets": _buckets_of(kept),
                             "physical": dict(widened),
                         }
                     )
@@ -822,8 +958,9 @@ class LakeTable:
                 live = set(m["buckets"])
                 by_bucket: dict[int, list[str]] = {}
                 for f in _load_manifest(self.table_dir, m["path"]):
-                    if f["bucket"] in live:
-                        by_bucket.setdefault(f["bucket"], []).append(f["path"])
+                    for b in entry_buckets(f):
+                        if b in live:
+                            by_bucket.setdefault(b, []).append(f["path"])
                 keep = []
                 for b, paths in by_bucket.items():
                     present = sum(p in want_paths for p in paths)
@@ -856,7 +993,7 @@ class LakeTable:
             m_list.append(
                 {
                     "path": rel,
-                    "buckets": sorted({f["bucket"] for f in new_entries}),
+                    "buckets": _buckets_of(new_entries),
                 }
             )
         return m_list
@@ -1101,10 +1238,10 @@ class LakeTable:
         ``since`` are never opened, so steady-state consumers read
         O(recent churn), not O(table)."""
         snap = snapshot or self.snapshot()
-        keep, _skipped = self.plan_scan(
+        keep, _skipped, buckets = self._plan_scan(
             [(CDC_UPDATED_AT, ">=", since)], snap
         )
-        df = self._read_files(snap, keep)
+        df = self._read_files(snap, keep, buckets=buckets)
         return df.filter(F.col(CDC_UPDATED_AT) >= F.lit(since))
 
     def register_view(
@@ -1372,9 +1509,7 @@ class LakeTable:
                 m_list = [
                     {
                         "path": rel,
-                        "buckets": sorted(
-                            {f["bucket"] for f in parent.files}
-                        ),
+                        "buckets": _buckets_of(parent.files),
                     }
                 ]
             snap = Snapshot(

@@ -116,11 +116,6 @@ class TranscriptsApplier:
     order_guard: bool = True
     sink_mode: str = "cow"  # cow | mor (delta files + periodic compaction)
     compact_every: int = 8
-    # buckets with fewer resident delta files than this are skipped at
-    # compaction time (lake/mor.compact min_deltas) — under key skew the
-    # cold long tail keeps its single small delta instead of paying a
-    # full base rewrite; 1 = fold everything (uniform-key behavior)
-    compact_min_deltas: int = 1
     quarantine_dir: str | None = None  # dead-letter sink for unkeyable events
     # per-source-partition lineage (north-star metric): per input file,
     # its lsn range + row count from parquet FOOTER stats — driver-side
@@ -436,40 +431,36 @@ class TranscriptsApplier:
         # per-key skew) keeps the classic two-shuffle plan — salting is
         # incompatible with co-location. The winner cache is built
         # uncompressed (session conf, see session.get_spark).
-        pre_placed: int | None = None
-        pre_slots: int | None = None
+        pre_placed = None
         if self.salt_buckets == 1:
             from gear5_spark.lake.table import BUCKET_COL
 
-            # slots_per_bucket lifts dedup/parse parallelism above the
-            # bucket count (q files per bucket per commit is the cost);
-            # sized so the fused plan keeps the session's configured
-            # shuffle width. MoR pins q=1: every delta file written is
-            # read back by EVERY reconstruct until compaction, so q
-            # files per bucket per micro-batch multiplies read
-            # amplification across the whole compact_every window —
-            # while its batches are small enough that bucket-count
-            # parallelism already covers the dedup stage.
+            # the placement is sized to the session's shuffle width.
+            # CoW sub-splits each bucket when the width exceeds the
+            # bucket count (lifting dedup/parse parallelism; up to
+            # width // n_buckets files per bucket per commit). MoR
+            # never does: every delta file is read back by EVERY
+            # reconstruct until compaction. Instead, when the table has
+            # more buckets than the width, MoR groups contiguous whole
+            # buckets into `width` slots — every stage after this
+            # exchange, and the delta write, then runs `width` tasks
+            # and writes `width` files, not one per bucket.
             parts = shuffle_width(batch.sparkSession)
             n_b = snap0.properties["n_buckets"]
-            q = 1 if self.sink_mode == "mor" else max(1, parts // n_b)
-            n_slots, slot_expr = self.table.placement_expr(
-                snap0, slots_per_bucket=q
-            )
+            want = min(parts, n_b) if self.sink_mode == "mor" else max(parts, n_b)
+            pre_placed, slot_expr = self.table.placement_expr(snap0, want)
             placed = valid.withColumn(
                 BUCKET_COL, self.table.bucket_expr(snap0)
             ).withColumn("_pslot", slot_expr)
-            placed = placed.repartition(n_slots, "_pslot")
+            placed = placed.repartition(pre_placed.n_slots, "_pslot")
             # keep _pslot through the cache: the merge join co-partitions
-            # on it (lake/merge.py slots_per_bucket), so the batch is
-            # never re-shuffled after this one placement exchange
+            # on it (lake/merge.py), so the batch is never re-shuffled
+            # after this one placement exchange
             deduped_raw = (
                 latest_per_key(placed, KEY_COLS, co_group_cols=["_pslot"])
                 .drop(BUCKET_COL)
                 .persist()
             )
-            pre_placed = n_b
-            pre_slots = q
         else:
             # salted plan: the dedup shuffle carries pre-reduced rows;
             # the write repartitions the winner set by placement slot
@@ -665,9 +656,7 @@ class TranscriptsApplier:
                 # state, safe to redo after a crash)
                 if self.compact_every and (batch_id + 1) % self.compact_every == 0:
                     with span("apply.compact"):
-                        compact(
-                            self.table, min_deltas=self.compact_min_deltas
-                        )
+                        compact(self.table)
                 if self.rollup is not None:
                     self.rollup.refresh(deduped_raw, int(batch_id))
                 return snap
@@ -682,7 +671,6 @@ class TranscriptsApplier:
                     lineage=lineage,
                     affected_buckets=affected,
                     pre_placed=pre_placed,
-                    slots_per_bucket=pre_slots,
                 )
             self.applied.append(mstats)
             if self.rollup is not None:

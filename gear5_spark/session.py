@@ -12,8 +12,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def host_cpus() -> int:
     """CPUs this process may run on (cgroup/affinity-aware where the OS
@@ -57,17 +55,21 @@ def get_spark(
     - Arrow on: every pandas UDF crosses the JVM/Python boundary in
       columnar batches (the reference moves rows one Go map at a time;
       we never move rows one Python object at a time).
-    - shuffle partitions sized to cores locally; on a 1000-executor
-      cluster this is overridden (AQE coalesces anyway).
+    - shuffle partitions: 2 x the local CPUs; on a 1000-executor
+      cluster this is overridden (AQE coalesces anyway). The width also
+      sizes the merge-on-read applier's placement (at most this many
+      delta files per micro-batch), so it follows the host rather than
+      a fixed count.
     - ``local[<host CPUs>]`` with half the host's MemTotal as heap, unless
       the ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_MASTER`` /
-      ``SPARK_GRAFT_DRIVER_MEM`` deployment overrides are set.
+      ``SPARK_GRAFT_DRIVER_MEM`` / ``SPARK_GRAFT_SHUFFLE`` deployment
+      overrides are set.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus())
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE", str(DEFAULT_SHUFFLE_PARTITIONS))
+            os.environ.get("SPARK_GRAFT_SHUFFLE") or 2 * int(cpus)
         )
     builder = (
         SparkSession.builder.master(master)
@@ -80,7 +82,7 @@ def get_spark(
         # of the join keys to run without a new exchange (rows with
         # equal join keys share the subset hash, so co-location is
         # guaranteed). The co-partitioned MERGE (lake/merge.py
-        # slots_per_bucket) leads its equi-join with the placement slot
+        # _pslot) leads its equi-join with the placement slot
         # both sides are already partitioned on; with the default
         # (true) Spark re-shuffles both sides by the full key anyway.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")

@@ -1,6 +1,7 @@
-"""Focused tests for the r6 co-partitioned MERGE (lake/merge.py
-slots_per_bucket): result-identical to the legacy two-shuffle plan, and
-physically a single full-outer join with no batch-side re-shuffle."""
+"""Focused tests for the r6 co-partitioned MERGE (lake/merge.py, the
+batch's ``_pslot`` placement): result-identical to the legacy two-shuffle
+plan, physically a single full-outer join with no batch-side re-shuffle,
+and a placement that no longer matches the table falls back."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -85,3 +86,51 @@ def test_copartitioned_merge_plan_shape(spark, log_dir, tmp_path):
     # re-shuffled BOTH join sides by key via ENSURE_REQUIREMENTS —
     # plans/r06/cow_merge_before.txt)
     assert "ENSURE_REQUIREMENTS" not in plan, plan
+
+
+@pytest.mark.parametrize("sink_mode", ["cow", "mor"])
+def test_bucket_column_change_falls_back(spark, log_dir, tmp_path, sink_mode):
+    # the applier places the batch under the snapshot it starts from; a
+    # layout change that keeps the bucket count but swaps the bucket
+    # columns lands before the write. The stale placement must not be
+    # trusted: the write repartitions under the new layout instead of
+    # tripping the footer scan's one-slot-per-file check.
+    import gear5_spark.lake.mor as mor
+    import gear5_spark.pipeline.apply as apply
+    from gear5_spark.pipeline.runner import make_applier
+    from gear5_spark.sources.changelog import read_changelog
+    from tests.oracle import oracle_rows
+
+    t = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8)
+    applier = make_applier(
+        t, str(tmp_path / "ck"), sink_mode=sink_mode, compact_every=0
+    )
+
+    def relayout():
+        snap = t.snapshot()
+        props = dict(snap.properties, bucket_columns=["conv_id"])
+        t.commit(files=snap.files, properties=props, basis=snap)
+
+    owner, name = (mor, "merge_delta") if sink_mode == "mor" else (apply, "merge_into")
+    orig = getattr(owner, name)
+
+    def racing(*a, **k):
+        relayout()
+        return orig(*a, **k)
+
+    setattr(owner, name, racing)
+    try:
+        applier(read_changelog(spark, log_dir), 0)
+    finally:
+        setattr(owner, name, orig)
+
+    assert t.snapshot().properties["bucket_columns"] == ["conv_id"]
+    df = t.read()
+    got = sorted(
+        (r["conv_id"], r["turn_idx"], r["text"])
+        for r in df.select("conv_id", "turn_idx", "text").collect()
+    )
+    want = sorted(
+        (w["conv_id"], w["turn_idx"], w["text"]) for w in oracle_rows(log_dir)
+    )
+    assert got == want

@@ -38,7 +38,7 @@ def _write_log(d: str, payloads: list[dict | None]) -> None:
     pq.write_table(tbl, os.path.join(d, "chunk-000000.parquet"))
 
 
-def test_pandas_normalizer_coerces_messy_fields(spark, tmp_path):
+def test_sql_normalizer_coerces_messy_fields(spark, tmp_path):
     log = str(tmp_path / "log")
     _write_log(
         log,

@@ -22,8 +22,25 @@ class CrashingMorApplier(TranscriptsApplier):
 
 
 def test_mor_restart_from_checkpoint(spark, tiny_changelog, tmp_path):
+    _crash_and_resume(spark, tiny_changelog, tmp_path, n_buckets=8)
+
+
+def test_mor_restart_with_range_files(spark, tiny_changelog, tmp_path):
+    # 32 buckets on the width-8 test session: every delta file holds a
+    # bucket range, and the inline compactions widen to whole files
+    table = _crash_and_resume(spark, tiny_changelog, tmp_path, n_buckets=32)
+    ranges = [
+        f
+        for s in table.history()
+        for f in s.files
+        if f.get("kind") == "delta" and "bucket_range" in f
+    ]
+    assert ranges
+
+
+def _crash_and_resume(spark, tiny_changelog, tmp_path, n_buckets):
     changelog_dir, manifest = tiny_changelog
-    table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8)
+    table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=n_buckets)
     ckpt = str(tmp_path / "ckpt")
 
     CrashingMorApplier.crashed = False
@@ -62,3 +79,4 @@ def test_mor_restart_from_checkpoint(spark, tiny_changelog, tmp_path):
     # lineage still covers every event exactly once
     lineage = table.lineage_df().collect()
     assert sum(r["event_count"] for r in lineage) == manifest["n_events"]
+    return table

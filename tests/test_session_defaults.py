@@ -77,6 +77,8 @@ def test_get_spark_defaults_follow_the_host(recorder, monkeypatch):
     assert recorder.conf["master"] == "local[4]"
     assert recorder.conf["spark.driver.memory"] == "7500m"
     assert recorder.conf["spark.sql.inMemoryColumnarStorage.compressed"] == "false"
+    # shuffle width is 2 x the host's CPUs, not a fixed count
+    assert recorder.conf["spark.sql.shuffle.partitions"] == "8"
 
 
 def test_env_overrides_win(recorder, monkeypatch):
@@ -85,6 +87,19 @@ def test_env_overrides_win(recorder, monkeypatch):
     session.get_spark()
     assert recorder.conf["master"] == "local[2]"
     assert recorder.conf["spark.driver.memory"] == "3g"
+    assert recorder.conf["spark.sql.shuffle.partitions"] == "4"
+
+
+def test_shuffle_width_overrides(recorder, monkeypatch):
+    monkeypatch.setattr(session, "host_cpus", lambda: 16)
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "6")
+    session.get_spark()
+    assert recorder.conf["spark.sql.shuffle.partitions"] == "6"
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE")
+    session.get_spark(shuffle_partitions=3)
+    assert recorder.conf["spark.sql.shuffle.partitions"] == "3"
+    session.get_spark()
+    assert recorder.conf["spark.sql.shuffle.partitions"] == "32"
 
 
 def test_host_cpus_matches_affinity():
