@@ -764,7 +764,6 @@ def _q_cdc_replay(spark, sf_dir):
         table = bootstrap_table(spark, os.path.join(work, "t"), n_buckets=8)
         applier = make_applier(
             table, os.path.join(work, "c"), app_id="oracle-replay",
-            order_guard=False,
         )
         applier(changes, 0)
         df = table.read().select(
@@ -798,7 +797,6 @@ def _q_cdc_replay_digest(spark, sf_dir):
         table = bootstrap_table(spark, os.path.join(work, "t"), n_buckets=8)
         applier = make_applier(
             table, os.path.join(work, "c"), app_id="oracle-digest",
-            order_guard=False,
         )
         applier(changes, 0)
         fp = F.conv(
@@ -872,7 +870,6 @@ def _q_widening_replay(spark, sf_dir):
         table = bootstrap_table(spark, os.path.join(work, "t"), n_buckets=8)
         applier = make_applier(
             table, os.path.join(work, "c"), app_id="oracle-widen",
-            order_guard=False,
         )
         applier(b0, 0)
         applier(b1, 1)
@@ -930,7 +927,6 @@ def _q_payload_inference(spark, sf_dir):
         table = bootstrap_table(spark, os.path.join(work, "t"), n_buckets=8)
         applier = make_applier(
             table, os.path.join(work, "c"), app_id="oracle-infer",
-            order_guard=False,
         )
         applier(changes, 0)
         df = table.read().select(
@@ -1212,7 +1208,7 @@ def _q_rollup_replay(spark, sf_dir):
         )
         applier = make_applier(
             base, os.path.join(work, "c"), app_id="oracle-rollup",
-            order_guard=False, rollup=rollup,
+            rollup=rollup,
         )
         applier(changes.filter(F.col("lsn") <= cut), 0)
         applier(changes.filter(F.col("lsn") > cut), 1)

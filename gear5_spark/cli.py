@@ -193,10 +193,15 @@ def cmd_read(args) -> int:
                           "message": "; ".join(problems)}))
         return 1
     spark = _spark()
-    table = bootstrap_table(
-        spark, cfg.table_dir, n_buckets=cfg.n_buckets,
-        delete_mode=cfg.delete_mode,
-    )
+    try:
+        table = bootstrap_table(
+            spark, cfg.table_dir, n_buckets=cfg.n_buckets,
+            delete_mode=cfg.delete_mode,
+        )
+    except ValueError as e:
+        print(json.dumps({"type": "LOG", "level": "ERROR",
+                          "message": f"table: {e}"}))
+        return 1
     rollup = None
     if cfg.rollup_dir:
         from gear5_spark.pipeline.rollup import (
@@ -284,7 +289,6 @@ def cmd_read(args) -> int:
             replay_batch(
                 spark, cfg.changelog_dir, tbl, ckpt,
                 app_id=cfg.app_id, salt_buckets=cfg.salt_buckets,
-                delete_mode=cfg.delete_mode,
                 sink_mode=cfg.resolved_sink_mode,
                 compact_every=cfg.compact_every,
                 # warm (throwaway) repeats must not churn the REAL
@@ -302,8 +306,6 @@ def cmd_read(args) -> int:
                 ),
                 exclude_columns=cfg.exclude_columns,
                 rollup=rollup if last else None,
-                partition_lineage=cfg.partition_lineage,
-                auto_widen=cfg.auto_widen,
             )
             runs_sec.append(round(time.perf_counter() - r0, 3))
             if not last:
@@ -324,13 +326,10 @@ def cmd_read(args) -> int:
             }))
         applier = make_applier(
             table, cfg.checkpoint_dir, app_id=cfg.app_id,
-            delete_mode=cfg.delete_mode,
             salt_buckets=cfg.salt_buckets, sink_mode=cfg.resolved_sink_mode,
             compact_every=cfg.compact_every, quarantine_dir=cfg.quarantine_dir,
             exclude_columns=cfg.exclude_columns,
             rollup=rollup,
-            partition_lineage=cfg.partition_lineage,
-            auto_widen=cfg.auto_widen,
         )
         run_stream(
             spark, cfg.changelog_dir, table, cfg.checkpoint_dir,

@@ -48,17 +48,6 @@ class PipelineConfig:
     rollup_dir: str | None = None
     app_id: str = "transcripts-cdc"
     exclude_columns: list[str] = field(default_factory=list)
-    # per-source-partition lineage (per input file: lsn range + rows from
-    # footer stats); driver-side metadata reads only
-    partition_lineage: bool = True
-    # mid-stream payload type flips (ST7 beyond-additive): true/"numeric"
-    # widens on numeric evidence (long→double, boolean→long), "full"
-    # additionally widens to string on unparseable values, false pins
-    # first-observed types (legacy) — see pipeline/apply.TranscriptsApplier
-    auto_widen: bool | str = field(
-        default=True,
-        metadata={"jsonschema": {"enum": [True, False, "numeric", "full"]}},
-    )
 
     @classmethod
     def from_file(cls, path: str) -> "PipelineConfig":
@@ -91,15 +80,9 @@ class PipelineConfig:
             problems.append(
                 f"sink_mode must be cow|mor|None(auto), got {self.sink_mode}"
             )
-        if self.auto_widen not in (True, False, "numeric", "full"):
-            problems.append(
-                "auto_widen must be true|false|numeric|full, got "
-                f"{self.auto_widen}"
-            )
-        # sink_mode=mor + delete_mode=soft is legal: `read` bootstraps
-        # the table with the soft property, and MoR reconstruct keeps
-        # delete winners as tombstones (lake/mor.py). A PRE-EXISTING
-        # hard table is still rejected at applier construction.
+        # delete_mode is the table's property: `read` bootstraps the
+        # table with it, and a PRE-EXISTING table created with the
+        # other mode is refused there (pipeline/runner.bootstrap_table)
         if self.max_files_per_trigger < 1:
             problems.append("max_files_per_trigger must be >= 1")
         if not os.path.isdir(self.changelog_dir):

@@ -12,22 +12,29 @@ the physical join strategy:
       WHEN MATCHED AND batch.lsn >= target.lsn THEN UPDATE SET *
       WHEN NOT MATCHED AND op != 'delete' THEN INSERT *
 
-Two physical paths over the same keyed join shuffle:
+One physical plan: a full-outer join on the key with a per-row CASE
+that picks the winning side, so the join executes once.
 
-- ``order_guard=True`` (default): full-outer join with an LSN guard —
-  a batch row only wins if its ``_cdc_lsn`` >= the stored row's. This
-  makes apply *order-insensitive across micro-batches* for live rows
-  (replays and reordered batches can never regress a row), strictly
-  stronger than the reference's reliance on serial WAL order
-  (``pkg/waljs/waljs.go:332-348``). Caveat: with ``delete_mode='hard'``
-  the delete also removes the key's LSN watermark, so a REORDERED older
-  update arriving after the delete re-inserts the row — full
-  order-insensitivity across deletes needs ``delete_mode='soft'``
-  (tombstones keep the watermark). The engine's own feeds deliver
-  batches in checkpoint order, where hard deletes are safe.
-- ``order_guard=False``: anti-join + union — cheapest plan for bulk
-  replay where the batch is known to contain the globally-latest event
-  per key.
+- ``order_guard=True`` (default, every applier batch): a batch row only
+  wins if its ``_cdc_lsn`` >= the stored row's. This makes apply
+  *order-insensitive across micro-batches* for live rows (replays,
+  reordered batches and a change log older than a loaded snapshot can
+  never regress a row), strictly stronger than the reference's reliance
+  on serial WAL order (``pkg/waljs/waljs.go:332-348``). Merge-on-read
+  ``reconstruct`` orders by the same rule. Caveat: on a ``hard`` delete
+  table the delete also removes the key's LSN watermark, so a REORDERED
+  older update arriving after the delete re-inserts the row — full
+  order-insensitivity across deletes needs a ``soft`` table (tombstones
+  keep the watermark). The engine's own feeds deliver batches in
+  checkpoint order, where hard deletes are safe.
+- ``order_guard=False``: the same plan with the guard set to true —
+  batch-wins. The conversation rollup uses it: its recompute is
+  authoritative and its ``_cdc_lsn`` is a per-applier batch id, not a
+  source LSN.
+
+The delete policy is the table's ``delete_mode`` property
+(``table.delete_mode_of``), never a per-call choice: ``hard`` drops
+delete winners, ``soft`` keeps them as tombstones.
 
 Scale properties:
 - only *affected buckets* (those containing a batched key) are read and
@@ -55,6 +62,7 @@ from gear5_spark.lake.table import (
     LakeTable,
     Placement,
     Snapshot,
+    delete_mode_of,
     entry_buckets,
     touches,
     whole_file_scope,
@@ -93,7 +101,6 @@ def merge_into(
     table: LakeTable,
     batch: DataFrame,
     op_col: str = "op",
-    delete_mode: str = "hard",
     order_guard: bool = True,
     txn_app_id: str | None = None,
     txn_batch_id: int | None = None,
@@ -105,15 +112,19 @@ def merge_into(
 
     ``batch`` columns: key columns + ``op`` + any subset of target columns
     (missing -> null-backfilled; new -> additive schema evolution via the
-    widening lattice). In ``soft`` delete mode, deletes survive as
-    tombstones with ``_cdc_deleted_at`` set; ``hard`` removes the row.
+    widening lattice). On a ``soft`` delete table (its ``delete_mode``
+    property), deletes survive as tombstones with ``_cdc_deleted_at``
+    set; on a ``hard`` one they remove the row.
+
+    ``order_guard=False`` makes every batch row win regardless of LSN
+    (the rollup's batch-wins policy); it runs the same plan.
 
     ``pre_placed``: the batch is already identity-placed (see
     ``LakeTable.placement_expr``) with this placement — the empty-target
     bypass then writes it without a second shuffle.
 
     When the batch also still CARRIES its placement slot (``_pslot``)
-    the join paths run CO-PARTITIONED on the slot: the target side is
+    the join runs CO-PARTITIONED on the slot: the target side is
     repartitioned to the identical slot layout, ``_pslot`` leads the
     equi-join keys (it is functionally dependent on the key columns, so
     the join result is unchanged), and the join's output partitions —
@@ -131,9 +142,8 @@ def merge_into(
     set widens to the whole range of every delta file it touches, so
     range files are always dropped whole.
     """
-    if delete_mode not in ("hard", "soft"):
-        raise ValueError(f"delete_mode must be hard|soft, got {delete_mode}")
     snap = table.snapshot()
+    soft = delete_mode_of(snap) == "soft"
     key_cols = snap.properties["key_columns"]
     co_partition = (
         pre_placed is not None
@@ -202,10 +212,7 @@ def merge_into(
     if not target_files:
         # nothing to merge against (bootstrap load / untouched buckets):
         # skip the join entirely — dedup output IS the new bucket content
-        upserts = (
-            keyed if delete_mode == "soft"
-            else keyed.filter(F.col(op_col) != "delete")
-        )
+        upserts = keyed if soft else keyed.filter(F.col(op_col) != "delete")
         new_data = _project(upserts, write_schema)
         try:
             _, new_entries = table.write_data_files(
@@ -245,21 +252,10 @@ def merge_into(
         join_cols = [SLOT_COL, *key_cols]
         write_pre_placed = pre_placed
 
-    if order_guard:
-        new_data = _guarded_merge(
-            target, keyed, join_cols, key_cols, op_col, delete_mode,
-            write_schema, hash_build=co_partition,
-        )
-    else:
-        batch_keys = keyed.select(*join_cols).distinct()
-        survivors = target.join(batch_keys, on=join_cols, how="left_anti")
-        upserts = (
-            keyed if delete_mode == "soft"
-            else keyed.filter(F.col(op_col) != "delete")
-        )
-        new_data = _project(survivors, write_schema).unionByName(
-            _project(upserts, write_schema)
-        )
+    new_data = _guarded_merge(
+        target, keyed, join_cols, key_cols, op_col, soft, order_guard,
+        write_schema, hash_build=co_partition,
+    )
 
     try:
         _, new_entries = table.write_data_files(
@@ -292,13 +288,16 @@ def _guarded_merge(
     join_cols: list[str],
     key_cols: list[str],
     op_col: str,
-    delete_mode: str,
+    soft: bool,
+    order_guard: bool,
     write_schema: T.StructType,
     hash_build: bool = False,
 ) -> DataFrame:
     """Full-outer merge with LSN guard; one shuffle on the join columns
     (zero when both sides arrive co-partitioned on a leading slot
     column — see ``merge_into``'s ``_pslot`` co-partitioning).
+    ``soft`` keeps delete winners as tombstones; ``order_guard=False``
+    sets the guard to true (batch-wins).
 
     ``hash_build``: hint a shuffled-hash build on the (one-row-per-key,
     post-dedup) batch side instead of sort-merge — per-partition hash
@@ -321,7 +320,7 @@ def _guarded_merge(
     # referencing a struct field neither side carries would fail at plan
     # time, so the guard degrades to batch-wins (same as the coalesce
     # fallback for NULL lsn) when either side lacks the ordering column
-    if CDC_LSN in t_payload and CDC_LSN in b_payload:
+    if order_guard and CDC_LSN in t_payload and CDC_LSN in b_payload:
         guard = F.coalesce(
             F.col(f"_b.{CDC_LSN}").try_cast("long")
             >= F.col(f"_t.{CDC_LSN}").try_cast("long"),
@@ -353,7 +352,7 @@ def _guarded_merge(
         _side("_t", t_payload)
     )
     out = j.withColumn("_r", row)
-    if delete_mode == "hard":
+    if not soft:
         out = out.filter(~(batch_wins & is_delete))
     non_key = [f.name for f in write_schema.fields if f.name not in key_cols]
     merged = out.select(

@@ -40,6 +40,7 @@ from gear5_spark.lake.table import (
     LakeTable,
     Placement,
     Snapshot,
+    delete_mode_of,
     entry_buckets,
     touches,
     whole_file_scope,
@@ -158,7 +159,7 @@ def reconstruct(
     flat = winner.select(
         *key_cols, *[F.col(f"_p.{c}").alias(c) for c in payload_cols]
     )
-    if snap.properties.get("delete_mode", "hard") == "soft":
+    if delete_mode_of(snap) == "soft":
         # soft-delete tables keep delete winners as tombstones — the
         # row's `_cdc_deleted_at` is already stamped by normalize;
         # readers filter with merge.active() (same contract as CoW soft)

@@ -129,6 +129,22 @@ class Snapshot:
         )
 
 
+DELETE_MODES = ("hard", "soft")
+
+
+def delete_mode_of(snap: Snapshot) -> str:
+    """The table's delete policy, a property fixed at create time:
+    ``hard`` drops delete winners, ``soft`` keeps them as tombstones
+    with ``_cdc_deleted_at`` set. Both sinks (copy-on-write MERGE and
+    merge-on-read reconstruct) read it here; absent means ``hard``."""
+    mode = snap.properties.get("delete_mode", "hard")
+    if mode not in DELETE_MODES:
+        raise ValueError(
+            f"table property delete_mode must be hard|soft, got {mode!r}"
+        )
+    return mode
+
+
 def entry_buckets(f: dict[str, Any]) -> range:
     """The buckets a manifest entry holds: its ``bucket``, or every
     bucket of its inclusive ``bucket_range``. Every bucket-granular

@@ -240,9 +240,7 @@ def normalize_changes(
 # -------------------------------------------------------- widening detection
 
 
-def detect_widening(
-    df: DataFrame, specs, include_string: bool = False
-) -> dict[str, str]:
+def detect_widening(df: DataFrame, specs) -> dict[str, str]:
     """Per-batch type-flip probe (ST7): find registered scalar keys
     whose CURRENT batch carries values the registered token would
     coerce LOSSILY — ``coerce_long`` truncating ``2.5`` — and return
@@ -256,27 +254,22 @@ def detect_widening(
     widened token — the flip batch itself lands lossless, and the lake
     widens its schema in place (metadata-only; lake/table.py
     ``read_file_entries``). Returns ``{}`` with NO Spark job when no
-    registered key is widenable: ``string`` is the lattice top, and
-    timestamp tokens' parse failures degrade to NULL by the documented
+    registered key is boolean or long: ``double`` could only widen to
+    ``string``, which this probe never does (below), and timestamp
+    tokens' parse failures degrade to NULL by the documented
     F5 contract (a flip away from timestamps is a broken feed, not a
     widening).
 
-    By default only NUMERIC targets fire (boolean→long/double,
-    long→double): a numeric value a narrower token can't hold is
-    unambiguous evidence of a type flip, while an unparseable string
-    is indistinguishable from feed junk — and the documented
-    configured-type contract (F1-F3, reference ReformatValue,
-    ``reformat.go:44-256``) NULLs junk per value rather than degrading
-    the whole column. ``include_string=True`` (applier
-    ``auto_widen="full"``) opts a genuinely text-bearing feed into the
-    full LCA behavior where any unparseable value widens the column to
-    string. Boolean-word tokens on a numeric key stay non-lossy in
-    both modes (the coercers deliberately NULL them), so a stray
-    ``"yes"`` never flips a column."""
-    widenable = ("boolean", "long", "double") if include_string else (
-        "boolean", "long",
-    )
-    watched = [s for s in specs if s.token in widenable]
+    Only NUMERIC targets fire (boolean→long/double, long→double): a
+    numeric value a narrower token can't hold is unambiguous evidence
+    of a type flip, while an unparseable string is indistinguishable
+    from feed junk — and the documented configured-type contract
+    (F1-F3, reference ReformatValue, ``reformat.go:44-256``) NULLs junk
+    per value rather than degrading the whole column. Boolean-word
+    tokens on a numeric key are not lossy either (the coercers
+    deliberately NULL them), so a stray ``"yes"`` never flips a
+    column."""
+    watched = [s for s in specs if s.token in ("boolean", "long")]
     if not watched:
         return {}
     parse_schema = T.StructType(
@@ -290,7 +283,6 @@ def detect_widening(
         d = raw.try_cast("double")
         lng = raw.try_cast("long")
         is_bool_word = F.lower(F.trim(raw)).isin(*_TRUE_SET, *_FALSE_SET)
-        to_string = raw.isNotNull() & d.isNull() & ~is_bool_word
         # a value only double can hold: fractional ("2.5"), or beyond
         # long range ("9e99") — huge integral longs are NOT flagged
         # (their decimal string and the long→double cast round to the
@@ -303,19 +295,15 @@ def detect_widening(
                 ("long", ~is_bool_word & lng.isNotNull()),
                 ("double", ~is_bool_word & to_double),
             ]
-        elif s.token == "long":
+        else:  # long
             checks = [("double", to_double)]
-        else:  # double
-            checks = []
-        if include_string:
-            checks.append(("string", to_string))
         for kind, cond in checks:
             aggs.append(
                 F.max(cond.cast("int")).alias(f"_w{len(aggs)}")
             )
             kinds.append((s.col, kind))
     row = df.agg(*aggs).first()
-    rank = {"long": 1, "double": 2, "string": 3}
+    rank = {"long": 1, "double": 2}
     out: dict[str, str] = {}
     for (col, kind), hit in zip(kinds, row):
         if hit:

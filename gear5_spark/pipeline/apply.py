@@ -30,12 +30,16 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gear5_spark.lake.merge import MergeStats, merge_into
+from gear5_spark.lake.merge import merge_into
 from gear5_spark.lake.table import LakeTable, Snapshot
 from gear5_spark.operators.dedup import latest_per_key
 from gear5_spark.operators.infer import infer_token
 from gear5_spark.operators.names import sanitize_unique
-from gear5_spark.operators.normalize import PayloadField, normalize_changes
+from gear5_spark.operators.normalize import (
+    PayloadField,
+    detect_widening,
+    normalize_changes,
+)
 from gear5_spark.parallel import shuffle_width
 
 # payload fields every transcripts feed starts with (BASELINE.json
@@ -91,19 +95,6 @@ def _registry_specs(registry: dict[str, dict]) -> list[PayloadField]:
     ]
 
 
-def _upgrade_v1(flat: dict[str, str]) -> dict[str, dict]:
-    """v1 registries were {name: spark-type}; `ts` double meant epoch."""
-    out: dict[str, dict] = {}
-    for name, dt in flat.items():
-        token = dt
-        if name == "ts" and dt == "double":
-            token = "epoch_seconds"
-        elif dt == "timestamp":
-            token = "timestamp_iso"
-        out[name] = {"type": token, "source": name}
-    return out
-
-
 @dataclass
 class TranscriptsApplier:
     """Stateful foreachBatch callable for the transcripts CDC pipeline."""
@@ -111,53 +102,27 @@ class TranscriptsApplier:
     table: LakeTable
     app_id: str
     registry_path: str
-    delete_mode: str = "hard"
     salt_buckets: int = 1
-    order_guard: bool = True
     sink_mode: str = "cow"  # cow | mor (delta files + periodic compaction)
     compact_every: int = 8
     quarantine_dir: str | None = None  # dead-letter sink for unkeyable events
     # per-source-partition lineage (north-star metric): per input file,
     # its lsn range + row count from parquet FOOTER stats — driver-side
-    # metadata reads only, never an extra Spark job over the batch
+    # metadata reads only, never an extra Spark job over the batch.
+    # MultiStreamApplier turns it off (per-stream slices never reconcile
+    # against whole-source footers)
     partition_lineage: bool = True
     exclude_columns: list[str] = field(default_factory=list)  # P2
-    # ST7 beyond-additive: when a registered scalar key's values flip
-    # to a wider NUMERIC type mid-stream (long→double, boolean→long),
-    # detect it BEFORE the parse (operators/normalize.detect_widening —
-    # one constant-width aggregate over the persisted winners, skipped
-    # with zero cost when no registered token is widenable),
-    # re-register the widened token, and let the merge widen the table
-    # schema in place (metadata-only, lake/table.read_file_entries).
-    # "full" additionally widens to STRING on unparseable values (the
-    # raw LCA behavior) — off by default because junk on a typed key is
-    # indistinguishable from a text flip and the configured-type
-    # contract (F1-F3) NULLs junk per value instead of degrading the
-    # column. False → the legacy pin-at-first-observation behavior.
-    auto_widen: bool | str = True  # True=="numeric" | "full" | False
     # optional incrementally-maintained derived table
     # (gear5_spark.pipeline.rollup.ConversationRollup); refreshed with
     # the batch's touched conversations after every base commit
     rollup: Any = None
-    applied: list[MergeStats] = field(default_factory=list)
     skipped_batches: list[int] = field(default_factory=list)
-    # valid events per surviving key in the last applied batch
-    _last_dup_ratio: float | None = field(default=None, repr=False)
+    # valid events per surviving key in the last applied batch; the
+    # benchmark's tracer reads it (perfbench operators.keys_per_event)
+    _last_dup_ratio: float | None = field(default=None, init=False, repr=False)
 
     def __post_init__(self) -> None:
-        if self.sink_mode == "mor" and self.delete_mode == "soft":
-            # MoR deletes survive as tombstones only when the TABLE was
-            # created soft (reconstruct/compact read the property); a
-            # mismatch would silently hard-delete — reject it
-            prop = self.table.snapshot().properties.get(
-                "delete_mode", "hard"
-            )
-            if prop != "soft":
-                raise ValueError(
-                    "sink_mode=mor with delete_mode=soft requires a "
-                    "table created with delete_mode='soft' "
-                    f"(table property is '{prop}')"
-                )
         if self.rollup is not None:
             # scope the rollup ledger to THIS applier: different base
             # app_ids (bulk vs stream, or two pipelines) have independent
@@ -182,9 +147,14 @@ class TranscriptsApplier:
         if os.path.exists(self.registry_path):
             with open(self.registry_path) as fh:
                 raw = json.load(fh)
-            if isinstance(raw, dict) and raw.get("version") == 2:
-                return raw["fields"]
-            return _upgrade_v1(raw)
+            if not (isinstance(raw, dict) and raw.get("version") == 2):
+                raise ValueError(
+                    f"payload registry {self.registry_path} is not a "
+                    'version-2 registry ({"version": 2, "fields": '
+                    '{column: {"type": token, "source": key}}}); '
+                    "rewrite it in that form"
+                )
+            return raw["fields"]
         return {k: dict(v) for k, v in BASE_PAYLOAD.items()}
 
     def save_registry(self, registry: dict[str, dict]) -> None:
@@ -518,28 +488,7 @@ class TranscriptsApplier:
                         txn_app_id=self.app_id,
                         txn_batch_id=int(batch_id),
                         lineage={
-                            "batch_id": int(batch_id),
-                            # all-malformed batches may carry NULL lsn on
-                            # every row (broken feeds are exactly what the
-                            # dead-letter path is for) — lineage lsn
-                            # columns are nullable longs
-                            "lsn_min": (
-                                int(stats["lsn_min"])
-                                if stats.get("lsn_min") is not None
-                                else None
-                            ),
-                            "lsn_max": (
-                                int(stats["lsn_max"])
-                                if stats.get("lsn_max") is not None
-                                else None
-                            ),
-                            "event_count": int(stats["event_count"]),
-                            "txn_ids_hash": format(
-                                stats["txn_hash"] & ((1 << 64) - 1), "x"
-                            ),
-                            "malformed_count": int(
-                                stats["malformed_count"]
-                            ),
+                            **_batch_lineage(batch_id, stats),
                             "quarantined_only": True,
                         },
                         basis=cur,
@@ -569,49 +518,31 @@ class TranscriptsApplier:
                 for s in _registry_specs(registry)
                 if s.col not in set(self.exclude_columns)
             ]
-            if self.auto_widen:
-                from gear5_spark.operators.normalize import detect_widening
-
-                with span("apply.widen_detect"):
-                    flips = detect_widening(
-                        deduped_raw,
-                        specs,
-                        include_string=self.auto_widen == "full",
+            # ST7 beyond-additive: a registered scalar key whose values
+            # flip to a wider NUMERIC type (long→double, boolean→long) is
+            # re-registered BEFORE the parse, and the merge widens the
+            # table schema in place (metadata-only,
+            # lake/table.read_file_entries). No job unless a registered
+            # token is boolean or long.
+            with span("apply.widen_detect"):
+                flips = detect_widening(deduped_raw, specs)
+            if flips:
+                for col, tok in flips.items():
+                    registry[col] = {**registry[col], "type": tok}
+                self.save_registry(registry)
+                specs = [
+                    PayloadField(
+                        col=s.col,
+                        token=flips.get(s.col, s.token),
+                        source=s.source,
                     )
-                if flips:
-                    for col, tok in flips.items():
-                        registry[col] = {**registry[col], "type": tok}
-                    self.save_registry(registry)
-                    specs = [
-                        PayloadField(
-                            col=s.col,
-                            token=flips.get(s.col, s.token),
-                            source=s.source,
-                        )
-                        for s in specs
-                    ]
+                    for s in specs
+                ]
             deduped = normalize_changes(
                 deduped_raw, specs, carry_cols=("_pslot",)
             )
             lineage = {
-                "batch_id": int(batch_id),
-                # a feed may carry NULL lsn on every valid-keyed row
-                # (lineage lsn columns are nullable longs; NULL-lsn
-                # ordering inside merge is defined separately) — same
-                # guard as the quarantined-only branch above
-                "lsn_min": (
-                    int(stats["lsn_min"])
-                    if stats.get("lsn_min") is not None
-                    else None
-                ),
-                "lsn_max": (
-                    int(stats["lsn_max"])
-                    if stats.get("lsn_max") is not None
-                    else None
-                ),
-                "event_count": int(stats["event_count"]),
-                "txn_ids_hash": format(stats["txn_hash"] & ((1 << 64) - 1), "x"),
-                "malformed_count": int(stats.get("malformed_count") or 0),
+                **_batch_lineage(batch_id, stats),
                 "dedup_plan": "salted" if self.salt_buckets > 1 else "fused",
                 # snapshot_version is stamped by commit itself (the only
                 # value that survives an OCC rebase)
@@ -661,18 +592,15 @@ class TranscriptsApplier:
                     self.rollup.refresh(deduped_raw, int(batch_id))
                 return snap
             with span("apply.merge"):
-                snap, mstats = merge_into(
+                snap, _ = merge_into(
                     self.table,
                     deduped,
-                    delete_mode=self.delete_mode,
-                    order_guard=self.order_guard,
                     txn_app_id=self.app_id,
                     txn_batch_id=int(batch_id),
                     lineage=lineage,
                     affected_buckets=affected,
                     pre_placed=pre_placed,
                 )
-            self.applied.append(mstats)
             if self.rollup is not None:
                 self.rollup.refresh(deduped_raw, int(batch_id))
             return snap
@@ -681,6 +609,25 @@ class TranscriptsApplier:
             # not race stale blocks for storage memory — async release
             # let evicted-block churn snowball across micro-batches
             deduped_raw.unpersist(blocking=True)
+
+
+def _batch_lineage(batch_id: int, stats: dict) -> dict:
+    """The lineage fields every committed batch records, from the stats
+    Observation. A feed may carry NULL lsn on every row (broken feeds
+    are what the dead-letter path is for): the lineage lsn columns are
+    nullable longs."""
+
+    def _lsn(v):
+        return int(v) if v is not None else None
+
+    return {
+        "batch_id": int(batch_id),
+        "lsn_min": _lsn(stats.get("lsn_min")),
+        "lsn_max": _lsn(stats.get("lsn_max")),
+        "event_count": int(stats["event_count"]),
+        "txn_ids_hash": format(stats["txn_hash"] & ((1 << 64) - 1), "x"),
+        "malformed_count": int(stats.get("malformed_count") or 0),
+    }
 
 
 def _malformed_key():

@@ -29,7 +29,9 @@ from gear5_spark.lake.table import (
     CDC_DELETED_AT,
     CDC_LSN,
     CDC_UPDATED_AT,
+    DELETE_MODES,
     LakeTable,
+    delete_mode_of,
 )
 from gear5_spark.pipeline.apply import KEY_COLS, TranscriptsApplier
 from gear5_spark.sources.changelog import read_changelog, stream_changelog
@@ -58,9 +60,14 @@ def bootstrap_table(
     delete_mode: str = "hard",
 ) -> LakeTable:
     """CREATE the transcripts lake table, bucketed by the full key.
-    ``delete_mode`` is a TABLE property (it changes what a MoR read
-    means, so it must be fixed at create time, not per reader)."""
-    return LakeTable.create(
+
+    ``delete_mode`` (hard|soft) is a TABLE property and this is the one
+    place it is chosen: both sinks read it from the table, so it is
+    fixed at create time. ``if_not_exists`` on a table created with the
+    other mode raises instead of returning it."""
+    if delete_mode not in DELETE_MODES:
+        raise ValueError(f"delete_mode must be hard|soft, got {delete_mode!r}")
+    table = LakeTable.create(
         spark,
         table_dir,
         schema=TRANSCRIPTS_SCHEMA,
@@ -70,6 +77,14 @@ def bootstrap_table(
         if_not_exists=if_not_exists,
         extra_properties={"delete_mode": delete_mode},
     )
+    have = delete_mode_of(table.snapshot())
+    if have != delete_mode:
+        raise ValueError(
+            f"table {table_dir} exists with delete_mode='{have}', not "
+            f"'{delete_mode}': the delete policy is fixed when the table "
+            "is created"
+        )
+    return table
 
 
 def snapshot_load(
@@ -81,8 +96,10 @@ def snapshot_load(
     """Phase-0 initial snapshot before CDC (S5, pkg/waljs/waljs.go:261-330):
     bulk-load a consistent snapshot of the source table, stamping every row
     as an insert at the snapshot LSN. The CDC stream then starts from
-    offset 0; replayed events at lsn >= snapshot lsn win via the merge
-    order-guard, so snapshot->stream handoff needs no coordination."""
+    offset 0; every applier batch is LSN-guarded in both sinks, so
+    replayed events at lsn >= snapshot lsn win and older ones never
+    overwrite a snapshot row — snapshot->stream handoff needs no
+    coordination."""
     from pyspark.sql import functions as F
 
     stamped = (
@@ -122,46 +139,34 @@ def replay_batch(
     min_lsn: int | None = None,
     max_lsn: int | None = None,
     salt_buckets: int = 1,
-    order_guard: bool | None = None,
-    delete_mode: str = "hard",
     sink_mode: str = "cow",
     compact_every: int = 8,
     quarantine_dir: str | None = None,
     exclude_columns: list[str] | None = None,
     rollup=None,
-    partition_lineage: bool = True,
-    auto_widen: bool | str = True,
 ) -> LakeTable:
     """Bulk replay: whole (or cursor-bounded) change log in one merge.
 
-    ``order_guard`` defaults OFF for an unbounded replay — its batch
-    provably contains the globally-latest event per key, so the cheaper
-    anti-join plan is safe. An ``max_lsn``-BOUNDED replay loses that
-    proof: phases can be re-run out of order (phase-1 rerun after
-    phase-2 committed), and the unguarded plan would let the stale
-    prefix win silently — so bounded replays default the guard ON.
-    Pass ``order_guard`` explicitly to override either way. Caveat: the
-    guard compares against EXISTING target rows, so it cannot refuse to
-    resurrect a key a later phase hard-deleted (nothing remains to
-    compare against) — phased replays that may be re-run out of order
-    should use ``delete_mode="soft"`` (tombstones carry the ordering).
+    The merge is LSN-guarded like every applier batch: a stored row
+    with a higher ``_cdc_lsn`` (a loaded snapshot, or a later phase of
+    a bounded replay re-run out of order) is never regressed. Deletes
+    follow the table's ``delete_mode``. Caveat: the guard compares
+    against EXISTING target rows, so it cannot refuse to resurrect a
+    key a later phase hard-deleted (nothing remains to compare
+    against) — phased replays that may be re-run out of order need a
+    table bootstrapped with ``delete_mode="soft"`` (tombstones carry
+    the ordering).
     """
-    if order_guard is None:
-        order_guard = max_lsn is not None
     applier = make_applier(
         table,
         checkpoint_dir,
         app_id=app_id,
         salt_buckets=salt_buckets,
-        order_guard=order_guard,
-        delete_mode=delete_mode,
         sink_mode=sink_mode,
         compact_every=compact_every,
         quarantine_dir=quarantine_dir,
         exclude_columns=exclude_columns or [],
         rollup=rollup,
-        partition_lineage=partition_lineage,
-        auto_widen=auto_widen,
     )
     changes = read_changelog(spark, changelog_dir, min_lsn=min_lsn, max_lsn=max_lsn)
     last = table.last_committed_batch(app_id)

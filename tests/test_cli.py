@@ -118,6 +118,30 @@ def test_bulk_read_respects_delete_mode_soft(capsys, spark, tmp_path):
     assert n_tombstones > 0  # deletes survived as tombstones
 
 
+def test_read_refuses_delete_mode_mismatch(capsys, spark, tmp_path):
+    """A config whose delete_mode differs from the existing table's is an
+    ERROR line and exit 1, before anything is applied."""
+    from gear5_spark.pipeline.runner import bootstrap_table
+
+    log = str(tmp_path / "log")
+    os.makedirs(log)
+    cfg = {
+        "changelog_dir": log,
+        "table_dir": str(tmp_path / "table"),
+        "checkpoint_dir": str(tmp_path / "ckpt"),
+        "mode": "bulk",
+        "n_buckets": 4,
+        "delete_mode": "soft",
+    }
+    bootstrap_table(spark, cfg["table_dir"], n_buckets=4)  # hard
+    cfg_path = str(tmp_path / "cfg.json")
+    with open(cfg_path, "w") as fh:
+        json.dump(cfg, fh)
+    rc, doc = _run(capsys, ["read", "--config", cfg_path])
+    assert rc == 1
+    assert doc["level"] == "ERROR" and "delete_mode='hard'" in doc["message"]
+
+
 def test_check_reports_type_error_as_failed(capsys, tmp_path):
     """A wrong-typed config value must yield a FAILED status line, not a
     traceback (dataclasses don't type-check)."""

@@ -40,7 +40,6 @@ def test_copartitioned_merge_matches_legacy_plan(spark, log_dir, tmp_path):
                 spark, log_dir, t,
                 checkpoint_dir=str(tmp_path / f"{plan}-ck{hi}"),
                 min_lsn=lo, max_lsn=hi, salt_buckets=salt,
-                order_guard=True,
             )
         outs[plan] = _rows(t)
     assert outs["fused"] == outs["salted"]
@@ -61,7 +60,7 @@ def test_copartitioned_merge_plan_shape(spark, log_dir, tmp_path):
         spark, log_dir, t, checkpoint_dir=str(tmp_path / "ck0"),
         max_lsn=2999,
     )
-    applier = make_applier(t, str(tmp_path / "ck1"), order_guard=True)
+    applier = make_applier(t, str(tmp_path / "ck1"))
     captured = {}
     orig = LT.LakeTable.write_data_files
 

@@ -1,6 +1,6 @@
 """Round-2 fix batch (VERDICT #4/#5/#7 + ADVICE): exclude_columns wired
 into the CDC path, quarantine idempotency, job-free point lookup,
-MoR+soft-delete rejection, vacuum retention."""
+delete-mode mismatch refusal, vacuum retention."""
 
 from __future__ import annotations
 
@@ -69,23 +69,8 @@ def test_exclude_key_column_rejected(spark, tmp_path):
         make_applier(table, str(tmp_path / "c"), exclude_columns=["conv_id"])
 
 
-def test_mor_soft_on_hard_table_rejected(spark, tmp_path):
-    """MoR soft-delete requires the TABLE to have been created soft —
-    applying soft deletes to a hard table would silently hard-delete."""
-    table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=4)  # hard
-    with pytest.raises(ValueError, match="delete_mode='soft'"):
-        make_applier(
-            table, str(tmp_path / "c"), sink_mode="mor", delete_mode="soft"
-        )
-
-
-def test_mor_soft_delete_keeps_tombstones(spark, tmp_path):
-    """sink_mode=mor + delete_mode=soft: delete winners survive
-    reconstruct AND compaction as tombstones with _cdc_deleted_at set."""
-    from gear5_spark.lake.merge import active
-    from gear5_spark.lake.mor import compact
-
-    log = str(tmp_path / "log")
+def _write_delete_log(log: str) -> str:
+    """Inserts (a,0) and (b,0), then deletes (a,0)."""
     payload = {"role": "u", "text": "x", "ts": 1_700_000_000}
     os.makedirs(log)
     tbl = pa.table(
@@ -102,12 +87,46 @@ def test_mor_soft_delete_keeps_tombstones(spark, tmp_path):
         schema=CHANGE_SCHEMA,
     )
     pq.write_table(tbl, os.path.join(log, "chunk-000000.parquet"))
+    return log
+
+
+@pytest.mark.parametrize("sink_mode", ["cow", "mor"])
+def test_bootstrap_refuses_delete_mode_mismatch(spark, tmp_path, sink_mode):
+    """The delete policy is fixed when the table is created: bootstrapping
+    an existing table with the other mode raises instead of handing it to
+    an applier, whichever sink then writes it. A hard table never holds
+    tombstones."""
+    log = _write_delete_log(str(tmp_path / "log"))
+    path = str(tmp_path / "t")
+    table = bootstrap_table(spark, path, n_buckets=4)  # hard
+    applier = make_applier(
+        table, str(tmp_path / "c"), sink_mode=sink_mode, compact_every=0
+    )
+    applier(read_changelog(spark, log), 0)
+    assert [r["conv_id"] for r in table.read().collect()] == ["b"]
+
+    with pytest.raises(ValueError, match="delete_mode='hard'"):
+        bootstrap_table(spark, path, n_buckets=4, delete_mode="soft")
+    soft = str(tmp_path / "s")
+    bootstrap_table(spark, soft, n_buckets=4, delete_mode="soft")
+    with pytest.raises(ValueError, match="delete_mode='soft'"):
+        bootstrap_table(spark, soft, n_buckets=4)
+    # same mode: the existing table is returned
+    assert bootstrap_table(spark, path, n_buckets=4).current_version() >= 1
+
+
+def test_mor_soft_delete_keeps_tombstones(spark, tmp_path):
+    """sink_mode=mor + delete_mode=soft: delete winners survive
+    reconstruct AND compaction as tombstones with _cdc_deleted_at set."""
+    from gear5_spark.lake.merge import active
+    from gear5_spark.lake.mor import compact
+
+    log = _write_delete_log(str(tmp_path / "log"))
     table = bootstrap_table(
         spark, str(tmp_path / "t"), n_buckets=4, delete_mode="soft"
     )
     applier = make_applier(
-        table, str(tmp_path / "c"), sink_mode="mor", delete_mode="soft",
-        compact_every=0,
+        table, str(tmp_path / "c"), sink_mode="mor", compact_every=0
     )
     applier(read_changelog(spark, log), 0)
 
@@ -251,8 +270,8 @@ def test_all_malformed_batch_records_lineage(spark, tmp_path):
 
 def test_bounded_replay_rerun_cannot_regress(spark, tmp_path):
     """Re-running an lsn-bounded replay phase AFTER a later phase
-    committed must be a no-op (order_guard defaults ON for bounded
-    replays), not a silent regression to the stale prefix."""
+    committed must be a no-op (every replay is LSN-guarded), not a
+    silent regression to the stale prefix."""
     from gen_fixtures import generate_changelog
     from gear5_spark.lake.merge import active
     from gear5_spark.pipeline.runner import replay_batch
@@ -265,17 +284,15 @@ def test_bounded_replay_rerun_cannot_regress(spark, tmp_path):
     # a row that no longer exists) — see replay_batch's docstring
     table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8,
                             delete_mode="soft")
-    replay_batch(spark, log, table, str(tmp_path / "c1"), max_lsn=999,
-                 delete_mode="soft")
+    replay_batch(spark, log, table, str(tmp_path / "c1"), max_lsn=999)
     replay_batch(spark, log, table, str(tmp_path / "c2"), min_lsn=1000,
-                 max_lsn=1999, delete_mode="soft")
+                 max_lsn=1999)
     want = {
         (r["conv_id"], r["turn_idx"]): r["text"]
         for r in active(table.read()).collect()
     }
     # out-of-order re-run of phase 1 (fresh checkpoint => fresh batch id)
-    replay_batch(spark, log, table, str(tmp_path / "c3"), max_lsn=999,
-                 delete_mode="soft")
+    replay_batch(spark, log, table, str(tmp_path / "c3"), max_lsn=999)
     got = {
         (r["conv_id"], r["turn_idx"]): r["text"]
         for r in active(table.read()).collect()

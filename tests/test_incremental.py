@@ -134,7 +134,7 @@ def test_snapshot_then_cdc_handoff(spark, tiny_changelog, tmp_path):
     assert table.read().count() == snapshot_df.count()
     replay_batch(
         spark, changelog_dir, table, str(tmp_path / "ckpt1"),
-        min_lsn=half - 1, order_guard=True,
+        min_lsn=half - 1,
     )
 
     got = [
@@ -148,6 +148,46 @@ def test_snapshot_then_cdc_handoff(spark, tiny_changelog, tmp_path):
     assert len(got) == len(want)
     for g, w in zip(got, want):
         assert g["text"] == w["text"], (g["conv_id"], g["turn_idx"])
+
+
+@pytest.mark.parametrize("sink_mode", ["cow", "mor"])
+def test_snapshot_then_older_replay_keeps_snapshot(spark, tmp_path, sink_mode):
+    """A snapshot loaded at lsn L is newer than every event of a log whose
+    lsns are all < L: an unbounded replay of that log must keep every
+    snapshot row, in both sinks (every applier batch is LSN-guarded)."""
+    from pyspark.sql import functions as F
+
+    from gen_fixtures import generate_changelog
+    from gear5_spark.pipeline.runner import (
+        bootstrap_table,
+        replay_batch,
+        snapshot_load,
+    )
+    from gear5_spark.sources.changelog import read_changelog
+
+    log = str(tmp_path / "log")
+    generate_changelog(log, n_events=2_000, n_convs=40, chunk_rows=500)
+    snapshot_df = (
+        read_changelog(spark, log)
+        .select("conv_id", "turn_idx")
+        .distinct()
+        .withColumn("role", F.lit("snapshot"))
+        .withColumn("text", F.concat(F.lit("snap-"), F.col("conv_id")))
+        .withColumn("ts", F.lit(None).cast("timestamp"))
+    )
+    want = {
+        (r["conv_id"], r["turn_idx"]): r["text"] for r in snapshot_df.collect()
+    }
+    table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8)
+    snapshot_load(spark, snapshot_df, table, lsn=10**12)
+    replay_batch(
+        spark, log, table, str(tmp_path / "ckpt"), sink_mode=sink_mode
+    )
+    got = {
+        (r["conv_id"], r["turn_idx"]): r["text"]
+        for r in table.read().collect()
+    }
+    assert got == want
 
 
 def test_incremental_files_mtime_snapshot_at_read(spark, tmp_path):

@@ -106,12 +106,17 @@ def test_bucket_pruned_read(spark, table):
     assert pruned.count() < 50
 
 
-def test_soft_delete_tombstones(spark, table):
+def test_soft_delete_tombstones(spark, tmp_path):
+    # the delete policy is the table's property, fixed at create time
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), schema=SCHEMA, key_columns=["k"],
+        n_buckets=4, extra_properties={"delete_mode": "soft"},
+    )
     merge_into(table, _batch(spark, [("a", 1, 1, "insert"), ("b", 2, 1, "insert")]))
     deletes = _batch(spark, [("a", None, 2, "delete")]).withColumn(
         "_cdc_deleted_at", F.lit("2024-01-01 00:00:00").cast("timestamp")
     )
-    merge_into(table, deletes, delete_mode="soft")
+    merge_into(table, deletes)
     all_rows = table.read()
     assert all_rows.count() == 2  # tombstone kept
     live = active(all_rows)
@@ -124,7 +129,7 @@ def test_order_guard_blocks_stale_batch(spark, table):
     # a late-arriving older batch must not regress the row
     merge_into(table, _batch(spark, [("a", 5, 50, "update")]), order_guard=True)
     assert table.read().first()["v"] == 10
-    # without the guard it would (documented bulk-path tradeoff)
+    # without the guard (the rollup's batch-wins policy) it does
     merge_into(table, _batch(spark, [("a", 5, 50, "update")]), order_guard=False)
     assert table.read().first()["v"] == 5
 

@@ -11,6 +11,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from gen_fixtures import CHANGE_SCHEMA
 from gear5_spark.pipeline.runner import bootstrap_table, make_applier
@@ -54,15 +55,21 @@ def test_sql_normalizer_coerces_messy_fields(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(ckpt)
     # seed the registry with typed fields (≈ a configured catalog schema)
+    tokens = {
+        "role": "string",
+        "text": "string",
+        "ts": "epoch_seconds",
+        "flagged": "boolean",
+        "seen_at": "timestamp_iso",
+        "score": "double",
+    }
     with open(os.path.join(ckpt, "payload_schema.json"), "w") as fh:
         json.dump(
             {
-                "role": "string",
-                "text": "string",
-                "ts": "double",
-                "flagged": "boolean",
-                "seen_at": "timestamp",
-                "score": "double",
+                "version": 2,
+                "fields": {
+                    k: {"type": t, "source": k} for k, t in tokens.items()
+                },
             },
             fh,
         )
@@ -88,6 +95,19 @@ def test_sql_normalizer_coerces_messy_fields(spark, tmp_path):
     # base text/ts columns intact
     assert rows["c0"]["text"] == "a"
     assert rows["c0"]["ts"] == dt.datetime(2023, 11, 14, 22, 13, 20)
+
+
+def test_version_1_registry_refused(spark, tmp_path):
+    """A registry in the old flat {name: spark-type} form is refused with
+    a clear error instead of having its types guessed."""
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(ckpt)
+    with open(os.path.join(ckpt, "payload_schema.json"), "w") as fh:
+        json.dump({"role": "string", "text": "string", "ts": "double"}, fh)
+    table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=4)
+    applier = make_applier(table, ckpt)
+    with pytest.raises(ValueError, match="not a version-2 registry"):
+        applier.load_registry()
 
 
 def test_null_key_events_quarantined(spark, tmp_path):

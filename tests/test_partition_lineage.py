@@ -86,9 +86,7 @@ def test_partition_lineage_absent_for_memory_batches(spark, tmp_path):
     from gear5_spark.pipeline.runner import bootstrap_table, make_applier
 
     table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=4)
-    applier = make_applier(
-        table, str(tmp_path / "c"), app_id="mem", order_guard=False
-    )
+    applier = make_applier(table, str(tmp_path / "c"), app_id="mem")
     batch = spark.createDataFrame(
         [
             (1, 1, 0, "insert", 1000, "c-1", 0, '{"role":"user","text":"x","ts":1}'),

@@ -78,7 +78,7 @@ def test_merge_plans_exactly_one_join(spark, log_dir, tmp_path):
     )
     merged = _guarded_merge(
         target, batch, ["conv_id", "turn_idx"], ["conv_id", "turn_idx"],
-        "op", "hard", write_schema,
+        "op", False, True, write_schema,
     )
     plan = _plan(merged, mode="simple")
     joins = sum(plan.count(j) for j in ("SortMergeJoin", "ShuffledHashJoin",
@@ -86,3 +86,42 @@ def test_merge_plans_exactly_one_join(spark, log_dir, tmp_path):
     # the per-row CASE picks the winning side, so the full-outer join
     # executes ONCE (a filter+union formulation would run it twice)
     assert joins == 1
+
+
+@pytest.mark.parametrize("order_guard", [True, False])
+def test_merge_into_runs_one_plan(spark, log_dir, tmp_path, order_guard):
+    """Copy-on-write MERGE against a non-empty table has one physical
+    formulation: one full-outer join, no anti-join, whichever
+    ``order_guard`` the caller passes (False only sets the guard true)."""
+    import gear5_spark.lake.table as LT
+    from gear5_spark.lake.merge import merge_into
+    from gear5_spark.pipeline.runner import bootstrap_table, replay_batch
+
+    table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=4)
+    replay_batch(spark, log_dir, table, str(tmp_path / "c"), max_lsn=999)
+    batch = (
+        read_changelog(spark, log_dir, min_lsn=999)
+        .limit(50)
+        .select(
+            "conv_id", "turn_idx", "op",
+            F.col("lsn").cast("string").alias("_cdc_lsn"),
+        )
+    )
+    captured = []
+    orig = LT.LakeTable.write_data_files
+
+    def spy(self, df, *a, **k):
+        captured.append(_plan(df, mode="simple"))
+        return orig(self, df, *a, **k)
+
+    LT.LakeTable.write_data_files = spy
+    try:
+        merge_into(table, batch, order_guard=order_guard)
+    finally:
+        LT.LakeTable.write_data_files = orig
+    (plan,) = captured
+    joins = sum(plan.count(j) for j in ("SortMergeJoin", "ShuffledHashJoin",
+                                        "BroadcastHashJoin"))
+    assert joins == 1
+    assert "LeftAnti" not in plan
+    assert "FullOuter" in plan

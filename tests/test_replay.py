@@ -64,7 +64,7 @@ def test_streaming_salted_matches_oracle(spark, tiny_changelog, tmp_path):
     from gear5_spark.pipeline.runner import make_applier
 
     applier = make_applier(
-        table, str(tmp_path / "ckpt"), salt_buckets=8, delete_mode="hard"
+        table, str(tmp_path / "ckpt"), salt_buckets=8
     )
     run_stream(
         spark,

@@ -106,7 +106,7 @@ def test_rollup_respects_soft_delete_tombstones(spark, tmp_path):
         base, bootstrap_rollup(spark, str(tmp_path / "r"), n_buckets=4)
     )
     applier = make_applier(
-        base, str(tmp_path / "ckpt"), delete_mode="soft", rollup=rollup
+        base, str(tmp_path / "ckpt"), rollup=rollup
     )
     applier(read_changelog(spark, log), 0)
     from gear5_spark.lake.merge import active

@@ -2,7 +2,7 @@
 beyond-additive; VERDICT r4 item 7).
 
 A registered payload key whose VALUES widen mid-stream (long→double,
-numeric→text) must not stall the registry or coerce lossily: the
+boolean→long) must not stall the registry or coerce lossily: the
 applier's per-batch probe (``operators/normalize.detect_widening``)
 re-registers the widened token BEFORE the flip batch is parsed, the
 merge widens the lake schema in place (metadata-only — see
@@ -76,26 +76,10 @@ def test_long_to_double_flip_lands_lossless(spark, tmp_path):
     assert _vals(table)["d"] == 7.0
 
 
-def test_numeric_to_text_flip_full_mode(spark, tmp_path):
-    """auto_widen="full" opts into the raw LCA behavior: an unparseable
-    value widens the column to string (the default stays numeric-only —
-    junk on a typed key is F1-F3 NULL, see test below)."""
-    table, applier = _mk(spark, tmp_path, auto_widen="full")
-    applier(_batch(spark, [(1, "a", 0, {"n": 3})]), 0)
-    applier(_batch(spark, [(2, "b", 0, {"n": "many"})]), 1)
-    assert table.schema["n"].dataType == T.StringType()
-    got = _vals(table)
-    assert got["b"] == "many"
-    # the long-era value casts up through its WRITTEN type ("3", never
-    # a lossy intermediate)
-    assert got["a"] == "3"
-
-
 def test_default_mode_nulls_junk_keeps_numeric_type(spark, tmp_path):
-    """Default (numeric-only) widening: junk text on a long key stays
-    the documented F2 NULL and the column keeps its type — the messy-
-    feed contract (tests/test_messy_payloads.py) is unaffected by
-    auto-widen."""
+    """Widening is numeric-only: junk text on a long key stays the
+    documented F2 NULL and the column keeps its type — the messy-feed
+    contract (tests/test_messy_payloads.py) is unaffected by widening."""
     table, applier = _mk(spark, tmp_path)
     applier(_batch(spark, [(1, "a", 0, {"n": 3})]), 0)
     applier(_batch(spark, [(2, "b", 0, {"n": "junk"})]), 1)
@@ -109,17 +93,6 @@ def test_flip_through_mor_sink(spark, tmp_path):
     applier(_batch(spark, [(3, "c", 0, {"n": 0.25})]), 1)  # triggers compact
     assert table.schema["n"].dataType == T.DoubleType()
     assert _vals(table) == {"a": 1.0, "b": 9.0, "c": 0.25}
-
-
-def test_auto_widen_off_keeps_pinned_types(spark, tmp_path):
-    """The documented opt-out: with auto_widen=False the registry pins
-    the first-observed type and the flip value coerces by the F2
-    contract (float truncates to long)."""
-    table, applier = _mk(spark, tmp_path, auto_widen=False)
-    applier(_batch(spark, [(1, "a", 0, {"n": 3})]), 0)
-    applier(_batch(spark, [(2, "b", 0, {"n": 2.5})]), 1)
-    assert table.schema["n"].dataType == T.LongType()
-    assert _vals(table) == {"a": 3, "b": 2}
 
 
 def test_detect_widening_classifier(spark):
@@ -146,10 +119,6 @@ def test_detect_widening_classifier(spark):
     # d: bool-words on a numeric key are NOT lossy (coerce_long NULLs
     # them by the documented F2 contract) — no widen
     assert "d" not in got
-    # full mode: the unparseable "x" now dominates b up to string
-    full = detect_widening(df, specs, include_string=True)
-    assert full["b"] == "string" and full["c"] == "long"
-    assert "a" not in full and "d" not in full
 
 
 def test_detect_widening_no_watched_keys_no_job(spark):
