@@ -124,11 +124,12 @@ def _q_skewed_latest_per_key(spark, sf_dir):
     """A5 under pathological skew (SURVEY §5.5): ~30% of all events are
     remapped onto one hot key (deterministic ``event_id % 10 < 3``
     rule, reproduced verbatim in the DuckDB oracle), then reduced with
-    the engine's SALTED two-phase plan (operators/dedup.py:64-77,
-    ``salt_buckets=8``) — the plan the applier swaps in when even
-    map-side partial aggregation leaves reducers unbalanced. The oracle
-    equality proves the salted cascade is result-identical to the
-    plain dedup window under the skew it exists for."""
+    the engine's salted plan (``operators.dedup.salted_pre_reduce``
+    then the per-key reduction, ``salt_buckets=8``) — the pre-reduction
+    the applier runs ahead of its placement exchange when one key
+    dominates a batch. The oracle equality proves the salted cascade is
+    result-identical to the plain dedup window under the skew it exists
+    for."""
     from gear5_spark.operators.dedup import latest_per_key
 
     ev = _t(spark, sf_dir, "events").select(

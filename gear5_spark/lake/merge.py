@@ -40,9 +40,11 @@ Scale properties:
 - only *affected buckets* (those containing a batched key) are read and
   rewritten — copy-on-write amplification is O(affected buckets), not
   O(table); file-level pruning comes from manifest bucket metadata;
-- the join shuffles on the MERGE key; the batch side is one row per key
-  post-dedup, so AQE broadcasts it when it fits; AQE skew-join splits
-  oversized partitions.
+- one join formulation: both sides are placed by the table
+  (``LakeTable.place``) on the same slots, and the full-outer join on
+  ``[_pslot, *key]`` builds a shuffled hash table over the (one row per
+  key) batch side with no further exchange; its output partitions are
+  already placed for the bucketed write.
 """
 
 from __future__ import annotations
@@ -58,6 +60,7 @@ from gear5_spark.lake.table import (
     BUCKET_COL,
     CDC_DELETED_AT,
     CDC_LSN,
+    SLOT_COL,
     ConcurrentCommitError,
     LakeTable,
     Placement,
@@ -71,9 +74,6 @@ from gear5_spark.operators.typing import merge_schemas
 
 # change-feed metadata columns that never land in the target table
 _FEED_META = ("lsn", "txn_id", "txn_seq", "ts_ms")
-# upstream placement-slot column (LakeTable.placement_expr) — physical
-# partitioning metadata, never a table column
-SLOT_COL = "_pslot"
 
 
 @dataclass
@@ -119,24 +119,22 @@ def merge_into(
     ``order_guard=False`` makes every batch row win regardless of LSN
     (the rollup's batch-wins policy); it runs the same plan.
 
-    ``pre_placed``: the batch is already identity-placed (see
-    ``LakeTable.placement_expr``) with this placement — the empty-target
-    bypass then writes it without a second shuffle.
+    ``pre_placed``: the placement the batch was placed with
+    (``LakeTable.place``; the batch then still carries ``_pslot``). A
+    batch that is not placed under this merge's snapshot — no
+    ``_pslot``, no ``pre_placed``, or a layout that drifted since —
+    is placed here, with ``pre_placed``'s slot count or else one slot
+    per bucket.
 
-    When the batch also still CARRIES its placement slot (``_pslot``)
-    the join runs CO-PARTITIONED on the slot: the target side is
-    repartitioned to the identical slot layout, ``_pslot`` leads the
-    equi-join keys (it is functionally dependent on the key columns, so
-    the join result is unchanged), and the join's output partitions —
-    each holding exactly one slot — feed the bucketed write directly.
-    Per micro-batch this removes two full shuffles of the payload
-    (guide §2.4/§3.3): the batch-side join exchange (the batch rides
-    its dedup placement) and the write's repartition (the join output
-    is already placed). Measured on the 4x1M-event CoW stream: the
-    merge+write stage shuffled 2.7 GB before, ~0.8 GB after.
-    Ignored (legacy two-shuffle plan) when the batch lacks ``_pslot`` or
-    the placement no longer matches the table's layout (bucket count,
-    bucket columns or slot count).
+    The join always runs CO-PARTITIONED on the slot: the target side is
+    placed on the batch's slots, ``_pslot`` leads the equi-join keys (it
+    is functionally dependent on the key columns, so the join result is
+    unchanged), and the join's output partitions — each holding exactly
+    one slot — feed the bucketed write directly. An applier batch,
+    placed before its dedup, is never shuffled again; the write never
+    repartitions. Measured on the 4x1M-event CoW stream: the merge+write
+    stage shuffled 2.7 GB with a key-shuffled join and a placing write,
+    ~0.8 GB co-partitioned.
 
     On a table with resident merge-on-read deltas the rewritten bucket
     set widens to the whole range of every delta file it touches, so
@@ -145,13 +143,6 @@ def merge_into(
     snap = table.snapshot()
     soft = delete_mode_of(snap) == "soft"
     key_cols = snap.properties["key_columns"]
-    co_partition = (
-        pre_placed is not None
-        and pre_placed == table.placement(snap, pre_placed.n_slots)
-        and SLOT_COL in batch.columns
-    )
-    if SLOT_COL in batch.columns and not co_partition:
-        batch = batch.drop(SLOT_COL)
 
     # batch-driven evolution: new columns append, and an existing
     # column whose batch type is WIDER evolves in place along the
@@ -174,6 +165,14 @@ def merge_into(
     )
 
     keyed = batch.withColumn(BUCKET_COL, table.bucket_expr(snap))
+    if (
+        pre_placed is None
+        or SLOT_COL not in batch.columns
+        or pre_placed != table.placement(snap, pre_placed.n_slots)
+    ):
+        keyed, pre_placed = table.place(
+            keyed, snap, pre_placed.n_slots if pre_placed else None
+        )
 
     def _check_declared_buckets(new_entries: list[dict]) -> None:
         # a caller-declared bucket set is a PROMISE that every batch row
@@ -237,29 +236,22 @@ def merge_into(
             schema_changes=changes,
         )
 
-    target = table.read(snapshot=snap, buckets=affected, with_internal=True)
-
-    join_cols = list(key_cols)
-    write_pre_placed = None
-    if co_partition:
-        _, slot_expr = table.placement_expr(snap, pre_placed.n_slots)
-        # one explicit shuffle of the target to the batch's slot layout;
-        # leading the equi-join with the (key-dependent) slot makes the
-        # join exchange-free on both sides and its output write-placed
-        target = target.withColumn(SLOT_COL, slot_expr).repartition(
-            pre_placed.n_slots, SLOT_COL
-        )
-        join_cols = [SLOT_COL, *key_cols]
-        write_pre_placed = pre_placed
-
+    # one explicit shuffle of the target to the batch's slot layout;
+    # leading the equi-join with the (key-dependent) slot makes the join
+    # exchange-free on both sides and its output write-placed
+    target, _ = table.place(
+        table.read(snapshot=snap, buckets=affected, with_internal=True),
+        snap,
+        pre_placed.n_slots,
+    )
     new_data = _guarded_merge(
-        target, keyed, join_cols, key_cols, op_col, soft, order_guard,
-        write_schema, hash_build=co_partition,
+        target, keyed, [SLOT_COL, *key_cols], key_cols, op_col, soft,
+        order_guard, write_schema,
     )
 
     try:
         _, new_entries = table.write_data_files(
-            new_data, snap=snap, pre_placed=write_pre_placed
+            new_data, snap=snap, pre_placed=pre_placed
         )
     finally:
         if affected_buckets is None:
@@ -291,16 +283,14 @@ def _guarded_merge(
     soft: bool,
     order_guard: bool,
     write_schema: T.StructType,
-    hash_build: bool = False,
 ) -> DataFrame:
-    """Full-outer merge with LSN guard; one shuffle on the join columns
-    (zero when both sides arrive co-partitioned on a leading slot
-    column — see ``merge_into``'s ``_pslot`` co-partitioning).
-    ``soft`` keeps delete winners as tombstones; ``order_guard=False``
-    sets the guard to true (batch-wins).
+    """Full-outer merge with LSN guard on ``join_cols`` (no exchange
+    when both sides arrive co-partitioned on a leading slot column — see
+    ``merge_into``). ``soft`` keeps delete winners as tombstones;
+    ``order_guard=False`` sets the guard to true (batch-wins).
 
-    ``hash_build``: hint a shuffled-hash build on the (one-row-per-key,
-    post-dedup) batch side instead of sort-merge — per-partition hash
+    The (one-row-per-key, post-dedup) batch side is hinted as a
+    shuffled-hash build instead of sort-merge — per-partition hash
     tables over the slot-bounded batch slice skip sorting both sides'
     full payload rows. The hint degrades to sort-merge wherever
     inapplicable, so it is advisory, never a correctness lever."""
@@ -312,9 +302,7 @@ def _guarded_merge(
     b = keyed_batch.select(
         *join_cols, F.struct(*[F.col(c) for c in b_payload]).alias("_b")
     )
-    if hash_build:
-        b = b.hint("shuffle_hash")
-    j = t.join(b, on=join_cols, how="full_outer")
+    j = t.join(b.hint("shuffle_hash"), on=join_cols, how="full_outer")
 
     # the documented batch contract allows any SUBSET of target columns:
     # referencing a struct field neither side carries would fail at plan

@@ -7,12 +7,14 @@ Iceberg/Hudi answer, built here on the same manifest format:
 
 - ``merge_delta``  — write the deduped batch AS-IS as *delta* files
   (manifest entries carry ``kind: delta``); base files untouched.
-  Write cost per batch: O(batch), not O(table). The applier places the
-  batch by contiguous bucket range, at most one slot per shuffle
-  partition, so a delta file holds several whole buckets when the table
-  has more buckets than the session has shuffle partitions (its entry
-  records the inclusive ``bucket_range``); base files stay one per
-  bucket.
+  Write cost per batch: O(batch), not O(table). The applier places
+  every batch, salted or not, by contiguous bucket range
+  (``LakeTable.place``), at most one slot per shuffle partition, so a
+  batch writes at most that many delta files and a delta file holds
+  several whole buckets when the table has more buckets than the
+  session has shuffle partitions (its entry records the inclusive
+  ``bucket_range``). An unplaced batch is placed by the write, one slot
+  per bucket; base files stay one per bucket.
 - ``LakeTable.read`` — when a snapshot holds deltas, reconstruct: union
   base + deltas, latest-per-key by ``(_cdc_lsn, file kind)``, drop rows
   whose winning op is delete. Read cost grows with resident deltas.
@@ -33,10 +35,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gear5_spark.lake.merge import _FEED_META, SLOT_COL
+from gear5_spark.lake.merge import _FEED_META
 from gear5_spark.lake.table import (
     BUCKET_COL,
     CDC_LSN,
+    SLOT_COL,
     LakeTable,
     Placement,
     Snapshot,
@@ -62,9 +65,10 @@ def merge_delta(
     """Append the deduped batch as delta files; no base rewrite.
 
     The batch keeps its ``op`` (persisted as ``_op``) so deletes survive
-    as logical tombstones until compaction. ``pre_placed``: see
-    ``LakeTable.write_data_files`` — an upstream identity placement lets
-    the delta write skip its repartition shuffle."""
+    as logical tombstones until compaction. ``pre_placed``: the
+    placement the batch was placed with upstream (``LakeTable.place``),
+    passed through to ``LakeTable.write_data_files`` so the delta write
+    keeps it instead of placing the batch again."""
     snap = table.snapshot()
     # same evolution contract as the CoW path (lake/merge.py): new
     # columns append, wider batch types widen the schema in place

@@ -11,7 +11,7 @@ This module is the half the reference leaves open, built Iceberg-style:
 - commits are atomic: manifest written to a temp file then published with
   ``os.link`` (fails if the version already exists → no torn commits; on a
   real deployment this maps to an Iceberg catalog's atomic swap);
-- data files are hash-bucketed by key (``bucket(n_buckets, bucket_column)``)
+- data files are hash-bucketed by key (``bucket(n_buckets, bucket_columns)``)
   so MERGE rewrites only affected buckets (copy-on-write at bucket
   granularity) and keyed scans prune files;
 - schema lives in the manifest; evolution is additive-only with the
@@ -48,7 +48,7 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +59,9 @@ MANIFEST_DIR = "_lake"
 DATA_DIR = "data"
 # the bucket id travels as a real data column (never path-inferred)
 BUCKET_COL = "_bucket"
+# placement slot (LakeTable.place) — physical partitioning metadata that
+# rides a placed batch up to its write, never a table column
+SLOT_COL = "_pslot"
 
 CDC_LSN = "_cdc_lsn"
 CDC_UPDATED_AT = "_cdc_updated_at"
@@ -145,6 +148,19 @@ def delete_mode_of(snap: Snapshot) -> str:
     return mode
 
 
+def bucket_columns_of(snap: Snapshot) -> list[str]:
+    """The columns rows are hashed on into buckets, a property
+    :meth:`LakeTable.create` always writes. Every reader of the bucket
+    layout goes through here; a snapshot without it is refused."""
+    cols = snap.properties.get("bucket_columns")
+    if not cols:
+        raise ValueError(
+            "table snapshot has no bucket_columns property; its bucket "
+            "layout is unknown"
+        )
+    return list(cols)
+
+
 def entry_buckets(f: dict[str, Any]) -> range:
     """The buckets a manifest entry holds: its ``bucket``, or every
     bucket of its inclusive ``bucket_range``. Every bucket-granular
@@ -186,12 +202,11 @@ def whole_file_scope(files: list[dict[str, Any]], buckets) -> set[int]:
 
 @dataclass(frozen=True)
 class Placement:
-    """Fingerprint of an identity placement (:meth:`LakeTable.placement_expr`).
+    """Fingerprint of an identity placement (:meth:`LakeTable.place`).
 
-    A write may skip its own repartition only when the placement the
-    caller partitioned by still equals the one its snapshot implies; any
-    drift (bucket count, bucket columns, slot count) falls back to the
-    write's own repartition."""
+    A placed batch is trusted only while this still equals the placement
+    its snapshot implies; any drift (bucket count, bucket columns, slot
+    count) makes the merge or write place it again."""
 
     n_buckets: int
     bucket_columns: tuple[str, ...]
@@ -681,9 +696,7 @@ class LakeTable:
         turning one bucket into a write/join straggler — point lookups by
         full key still prune to one bucket."""
         snap = snap or self.snapshot()
-        cols = snap.properties.get("bucket_columns") or [
-            snap.properties.get("bucket_column")
-        ]
+        cols = bucket_columns_of(snap)
         n = snap.properties["n_buckets"]
         return F.pmod(
             F.xxhash64(*[F.col(c).cast("string") for c in cols]), F.lit(n)
@@ -705,7 +718,7 @@ class LakeTable:
             ) from e
 
     def placement(self, snap: Snapshot, n_slots: int | None = None) -> Placement:
-        """The :class:`Placement` that :meth:`placement_expr` builds for
+        """The :class:`Placement` that :meth:`place` partitions by for
         ``n_slots`` requested slots under ``snap`` (metadata only).
 
         ``n_slots`` at or above the bucket count sub-splits each bucket
@@ -714,20 +727,21 @@ class LakeTable:
         contiguous whole buckets: ``slot = bucket * n_slots // n_buckets``.
         Default: one slot per bucket."""
         n = snap.properties["n_buckets"]
-        cols = snap.properties.get("bucket_columns") or [
-            snap.properties.get("bucket_column")
-        ]
         want = n if n_slots is None else max(1, int(n_slots))
         q = max(1, want // n)
-        return Placement(n, tuple(cols), min(want, n * q))
+        return Placement(n, tuple(bucket_columns_of(snap)), min(want, n * q))
 
-    def placement_expr(self, snap: Snapshot | None = None, n_slots: int | None = None):
-        """(placement, column expr) that an UPSTREAM operator can
-        ``repartition(placement.n_slots, ...)`` on so every resulting
-        partition holds the rows of one slot (see :meth:`placement`) —
-        letting :meth:`write_data_files` (via ``pre_placed``) skip its
-        own repartition and write the batch WITHOUT a second shuffle of
-        the parsed payload.
+    def place(
+        self, df: DataFrame, snap: Snapshot, n_slots: int | None = None
+    ) -> tuple[DataFrame, Placement]:
+        """Place ``df`` under ``snap``: add ``_bucket`` (unless ``df``
+        already carries it — a rewrite keeps the bucket its rows are
+        stored under) and the placement slot ``_pslot``, then do the one
+        ``repartition`` so every partition holds the rows of one slot
+        (see :meth:`placement`). Every lake write is placed here: the
+        applier places its raw batch before dedup, ``merge_into`` places
+        both join sides, and :meth:`write_data_files` places any input
+        that is not already placed under its snapshot.
 
         One formula covers both regimes: a fine slot
         ``bucket * q + sub`` in ``[0, n_buckets * q)`` maps to
@@ -739,7 +753,6 @@ class LakeTable:
         shuffle-free. With fewer slots than buckets (merge-on-read sized
         to the shuffle width) each slot holds contiguous whole buckets
         and writes one file covering that bucket range."""
-        snap = snap or self.snapshot()
         p = self.placement(snap, n_slots)
         q = max(1, p.n_slots // p.n_buckets)
         fine = F.col(BUCKET_COL) * q
@@ -751,36 +764,38 @@ class LakeTable:
                 F.lit(q),
             ).cast("int")
             fine = fine + sub
-        return p, identity_slot_expr(p.n_slots, fine, p.n_buckets * q)
+        if BUCKET_COL not in df.columns:
+            df = df.withColumn(BUCKET_COL, self.bucket_expr(snap))
+        slot = identity_slot_expr(p.n_slots, fine, p.n_buckets * q)
+        return df.withColumn(SLOT_COL, slot).repartition(p.n_slots, SLOT_COL), p
 
     def write_data_files(
         self,
         df: DataFrame,
         commit_token: str | None = None,
-        n_buckets: int | None = None,
         snap: Snapshot | None = None,
         pre_placed: Placement | None = None,
     ) -> tuple[str, list[dict[str, Any]]]:
-        """Write ``df`` (must carry ``_bucket``) as immutable data files.
+        """Write ``df`` as immutable data files under ``snap``'s layout
+        (``_bucket`` is computed from the bucket columns when ``df``
+        lacks it).
 
-        By default one plain-parquet file per non-empty bucket under
-        ``data/<commit>/`` via identity hash placement (no dynamic-
-        partition writer, measured 2.4x slower, and no hash collisions
-        mixing buckets); each file's bucket (or bucket range) is
-        recovered from its parquet footer statistics (min/max of
-        ``_bucket``) — on object stores this footer scan would be
-        gathered from task-side write stats instead. Uncommitted
-        directories are orphans (cleaned by :meth:`vacuum`), never
-        visible to readers — abort safety.
+        Each partition becomes one plain-parquet file under
+        ``data/<commit>/`` (no dynamic-partition writer, measured 2.4x
+        slower); each file's bucket (or bucket range) is recovered from
+        its parquet footer statistics (min/max of ``_bucket``) — on
+        object stores this footer scan would be gathered from task-side
+        write stats instead. Uncommitted directories are orphans
+        (cleaned by :meth:`vacuum`), never visible to readers — abort
+        safety.
 
-        ``pre_placed``: the caller already partitioned ``df`` upstream
-        with :meth:`placement_expr`. When that placement still equals
-        the one this write's snapshot implies, the repartition (a full
-        shuffle of the parsed batch) is skipped and partitions are
-        written as-is: several files per bucket when slots sub-split
-        buckets, one file per contiguous bucket range when slots group
-        them. Any drift (concurrent rebucket or bucket-column change)
-        falls back to the normal repartition, and ``_scan_written``'s
+        ``pre_placed``: the caller already placed ``df`` with
+        :meth:`place`. When that placement still equals the one ``snap``
+        implies, partitions are written as-is: several files per bucket
+        when slots sub-split buckets, one file per contiguous bucket
+        range when slots group them. Otherwise (no placement, or drift
+        such as a concurrent rebucket or bucket-column change) the write
+        places ``df`` itself, one slot per bucket. ``_scan_written``'s
         one-slot-per-file check remains the hard safety net against any
         partition mixing slots.
         """
@@ -795,23 +810,15 @@ class LakeTable:
         # the commit it computed (and skips a metadata re-read per batch)
         snap = snap or self.snapshot()
         props = snap.properties
-        n_buckets = n_buckets or props.get("n_buckets", 16)
-        if (
-            pre_placed is not None
-            and pre_placed.n_buckets == n_buckets
-            and pre_placed == self.placement(snap, pre_placed.n_slots)
-        ):
-            part, placed = df, pre_placed
-        else:
-            placed = None  # one bucket per partition
-            part = df.repartition(
-                n_buckets, identity_slot_expr(n_buckets, F.col(BUCKET_COL))
-            )
+        part, placed = df, pre_placed
+        if placed is None or placed != self.placement(snap, placed.n_slots):
+            part, placed = self.place(df, snap)
+            part = part.drop(SLOT_COL)
         # opt-in clustering (sort_columns table property): rows sorted
         # within each bucket file — parquet row-group/page stats on the
         # sort key then skip inside the file for point lookups and range
         # reads (Z-order-lite; a local sort, no extra shuffle)
-        sort_cols = [c for c in props.get("sort_columns") or [] if c in df.columns]
+        sort_cols = [c for c in props.get("sort_columns") or [] if c in part.columns]
         if sort_cols:
             part = part.sortWithinPartitions(*sort_cols)
         with span("table.write_parquet"):
@@ -838,10 +845,7 @@ class LakeTable:
         timestamp columns — the axes incremental/recency reads filter on."""
         want = snap.properties.get("stats_columns")
         if want is None:
-            want = list(
-                snap.properties.get("bucket_columns")
-                or [snap.properties.get("bucket_column")]
-            )
+            want = bucket_columns_of(snap)
             want += [
                 f.name
                 for f in snap.schema.fields
@@ -856,16 +860,14 @@ class LakeTable:
         self,
         out_dir: str,
         pq,
-        snap: Snapshot | None = None,
-        placed: Placement | None = None,
+        snap: Snapshot,
+        placed: Placement,
     ) -> list[dict[str, Any]]:
         """Manifest entries for the files a write just produced, with the
         bucket or inclusive bucket range read from each footer's
         ``_bucket`` min/max. ``placed`` is the placement the write
-        partitioned by (None: one bucket per partition); a file whose
-        range leaves one of its slots was mis-placed and fails the
-        write."""
-        snap = snap or self.snapshot()
+        partitioned by; a file whose range leaves one of its slots was
+        mis-placed and fails the write."""
         entries: list[dict[str, Any]] = []
         bucket_idx = None
         stat_idx: dict[str, int] | None = None
@@ -888,9 +890,7 @@ class LakeTable:
                     st = meta.row_group(rg).column(bucket_idx).statistics
                     bmin = st.min if bmin is None else min(bmin, st.min)
                     bmax = st.max if bmax is None else max(bmax, st.max)
-                if bmin != bmax and (
-                    placed is None or placed.slot_of(bmin) != placed.slot_of(bmax)
-                ):  # pragma: no cover - identity map guarantees
+                if placed.slot_of(bmin) != placed.slot_of(bmax):  # pragma: no cover
                     raise AssertionError(
                         f"file {name} spans buckets {bmin}..{bmax} "
                         "across placement slots"
@@ -1279,9 +1279,7 @@ class LakeTable:
         from gear5_spark.lake.xxh64 import bucket_of
 
         snap = self.snapshot()
-        cols = snap.properties.get("bucket_columns") or [
-            snap.properties.get("bucket_column")
-        ]
+        cols = bucket_columns_of(snap)
         missing = [c for c in cols if c not in key_values]
         if missing:
             raise ValueError(f"lookup requires bucket columns {missing}")
@@ -1397,17 +1395,11 @@ class LakeTable:
         snap = self.snapshot()
         if n_buckets == snap.properties["n_buckets"]:
             return snap
-        cols = snap.properties.get("bucket_columns") or [
-            snap.properties.get("bucket_column")
-        ]
-        new_bucket = F.pmod(
-            F.xxhash64(*[F.col(c).cast("string") for c in cols]),
-            F.lit(n_buckets),
-        ).cast("int")
-        data = self.read(snapshot=snap).withColumn(BUCKET_COL, new_bucket)
-        _, entries = self.write_data_files(data, n_buckets=n_buckets)
-        props = dict(snap.properties)
-        props["n_buckets"] = n_buckets
+        props = {**snap.properties, "n_buckets": n_buckets}
+        # the write places (and re-buckets) the rows under the new layout
+        _, entries = self.write_data_files(
+            self.read(snapshot=snap), snap=replace(snap, properties=props)
+        )
         # basis=snap: a merge that lands during the O(table) rewrite
         # must surface as ConcurrentCommitError (its rows are NOT in the
         # rewritten file set) instead of being silently dropped

@@ -6,18 +6,22 @@ The reference applies WAL changes strictly one-at-a-time in LSN order
 micro-batch sees many events per key at once, so the reduction must be
 explicit and deterministically ordered by ``(lsn, txn_seq)``.
 
-Two physical strategies, both shuffle-once on the key:
+One reduction, ``groupBy(key).agg(max_by(payload, struct(lsn,
+txn_seq)))``, with an optional pre-reduction in front of it:
 
-- ``max_by`` aggregation (default): ``groupBy(key).agg(max_by(payload,
-  struct(lsn, txn_seq)))``. Catalyst plans this with a *partial aggregate
-  before the shuffle* (map-side combine), so a hot key's events collapse
-  within each input partition first — at 100 TB this is the difference
-  between shuffling every event of a hot conv_id to one reducer and
-  shuffling one pre-reduced row per input partition.
-- salted two-phase (``salt_buckets > 1``): an explicit
-  ``groupBy(key, salt) -> groupBy(key)`` cascade for pathological skew
-  where even partial aggregation leaves reducers unbalanced (SURVEY.md
-  §4 skew row). Salt = ``pmod(xxhash64(lsn), S)`` — deterministic, no RNG.
+- In the applier the raw batch is first placed by the lake table
+  (``LakeTable.place``: one ``Exchange hashpartitioning(_pslot)``), and
+  the reduction groups on ``(_pslot, key)`` inside those partitions —
+  partial then final ``SortAggregate`` after the one exchange, no
+  aggregate before it, so every raw event crosses the shuffle. On an
+  unplaced input (``co_group_cols`` empty) Catalyst plans the usual
+  partial aggregate before its key exchange instead.
+- Salting (``salt_buckets > 1``, :func:`salted_pre_reduce`) is the
+  optional pre-reduction for pathological per-key skew (SURVEY.md §4
+  skew row): latest event per ``(key, salt)`` — a partial aggregate
+  before its own ``(key, salt)`` exchange — so a hot key reaches the
+  placement exchange as at most ``salt_buckets`` rows. Salt =
+  ``pmod(xxhash64(lsn), S)`` — deterministic, no RNG.
 """
 
 from __future__ import annotations
@@ -26,6 +30,38 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ORDER_COLS = ("lsn", "txn_seq")
+
+
+def _latest(
+    df: DataFrame, group_cols: list[str], order_cols: tuple[str, ...]
+) -> DataFrame:
+    """The row with the greatest ``order_cols`` per ``group_cols``;
+    output columns == input columns."""
+    payload_cols = [c for c in df.columns if c not in group_cols]
+    ord_expr = F.struct(*[F.col(c) for c in order_cols])
+    payload = F.struct(*[F.col(c) for c in payload_cols])
+    return (
+        df.groupBy(*group_cols)
+        .agg(F.max_by(payload, ord_expr).alias("_p"))
+        .select(*group_cols, *[F.col(f"_p.{c}").alias(c) for c in payload_cols])
+        .select(*df.columns)
+    )
+
+
+def salted_pre_reduce(
+    df: DataFrame,
+    key_cols: list[str],
+    salt_buckets: int,
+    order_cols: tuple[str, ...] = ORDER_COLS,
+) -> DataFrame:
+    """Latest event per ``(key, salt)``: at most ``salt_buckets`` rows
+    per key, same columns as ``df``. The per-key winner among them is
+    the per-key winner of ``df``, so :func:`latest_per_key` over the
+    result gives the same rows as over ``df``."""
+    salt = F.pmod(F.xxhash64(F.col(order_cols[0])), F.lit(salt_buckets))
+    return _latest(
+        df.withColumn("_salt", salt), [*key_cols, "_salt"], order_cols
+    ).drop("_salt")
 
 
 def latest_per_key(
@@ -41,41 +77,15 @@ def latest_per_key(
     Ties are impossible by construction — (lsn, txn_seq) is unique per
     event (FIXTURES.md §2) — but the struct ordering is total regardless.
 
+    ``salt_buckets > 1`` runs :func:`salted_pre_reduce` first.
+
     ``co_group_cols``: columns FUNCTIONALLY DEPENDENT on the key (e.g. a
     bucket/placement slot derived from it) added to the groupBy. Groups
     are unchanged; the point is physical: when the input is already
     hash-partitioned on one of these columns, Catalyst elides the
     aggregation exchange entirely — dedup runs shuffle-free inside the
-    partitioning an upstream repartition chose (see
-    ``LakeTable.placement_expr``). Mutually exclusive with salting
-    (a salted co-located plan would reintroduce the shuffle anyway).
+    partitioning an upstream placement chose (see ``LakeTable.place``).
     """
-    co_group_cols = co_group_cols or []
-    if co_group_cols and salt_buckets > 1:
-        raise ValueError("co_group_cols and salt_buckets are exclusive")
-    group_cols = [*co_group_cols, *key_cols]
-    payload_cols = [c for c in df.columns if c not in group_cols]
-    ord_expr = F.struct(*[F.col(c) for c in order_cols])
-    payload = F.struct(*[F.col(c) for c in payload_cols])
-
     if salt_buckets > 1:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(order_cols[0])), F.lit(salt_buckets))
-        )
-        stage1 = salted.groupBy(*key_cols, "_salt").agg(
-            F.max_by(payload, ord_expr).alias("_p")
-        )
-        stage2 = stage1.groupBy(*key_cols).agg(
-            F.max_by(
-                F.col("_p"),
-                F.struct(*[F.col(f"_p.{c}") for c in order_cols]),
-            ).alias("_p")
-        )
-    else:
-        stage2 = df.groupBy(*group_cols).agg(
-            F.max_by(payload, ord_expr).alias("_p")
-        )
-
-    return stage2.select(
-        *group_cols, *[F.col(f"_p.{c}").alias(c) for c in payload_cols]
-    ).select(*df.columns)
+        df = salted_pre_reduce(df, key_cols, salt_buckets, order_cols)
+    return _latest(df, [*(co_group_cols or []), *key_cols], order_cols)

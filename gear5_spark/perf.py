@@ -9,6 +9,7 @@ by bench.py and the scaling profiler to attribute fixed costs
 from __future__ import annotations
 
 import contextlib
+import threading
 import time
 
 _TIMINGS: dict[str, float] = {}
@@ -18,9 +19,18 @@ _COUNTS: dict[str, int] = {}
 # job group ("g5:<phase>") for its thread, so every job launched inside
 # the span is attributable to the phase afterwards via the UI REST API
 # (stage_metrics). Diagnostic-only: nothing is registered in production.
+# Job groups are per thread in Spark, so the stack of open spans is too:
+# two streams on one tracked session each restore their own parent.
 _TRACKED = None
-_GROUP_STACK: list[str] = []
+_LOCAL = threading.local()
 _PREFIX = ""
+
+
+def _group_stack() -> list[str]:
+    stack = getattr(_LOCAL, "stack", None)
+    if stack is None:
+        stack = _LOCAL.stack = []
+    return stack
 
 
 def track(spark, prefix: str = "") -> None:
@@ -37,17 +47,17 @@ def untrack() -> None:
     global _TRACKED, _PREFIX
     _TRACKED = None
     _PREFIX = ""
-    _GROUP_STACK.clear()
 
 
 @contextlib.contextmanager
 def span(name: str):
     # remember whether THIS span pushed: track()/untrack() may flip
-    # _TRACKED while a span is open, and the exit path must never pop
-    # an entry it didn't push
+    # _TRACKED while a span is open, and the exit path must pop exactly
+    # the entries it pushed
+    stack = _group_stack()
     pushed = _TRACKED is not None
     if pushed:
-        _GROUP_STACK.append(name)
+        stack.append(name)
         _TRACKED.sparkContext.setJobGroup(f"g5:{_PREFIX}{name}", name)
     t0 = time.perf_counter()
     try:
@@ -56,11 +66,12 @@ def span(name: str):
         dt = time.perf_counter() - t0
         _TIMINGS[name] = _TIMINGS.get(name, 0.0) + dt
         _COUNTS[name] = _COUNTS.get(name, 0) + 1
-        if pushed and _TRACKED is not None and _GROUP_STACK:
-            _GROUP_STACK.pop()
-            if _GROUP_STACK:
+        if pushed:
+            stack.pop()
+        if pushed and _TRACKED is not None:
+            if stack:
                 _TRACKED.sparkContext.setJobGroup(
-                    f"g5:{_PREFIX}{_GROUP_STACK[-1]}", _GROUP_STACK[-1]
+                    f"g5:{_PREFIX}{stack[-1]}", stack[-1]
                 )
             else:
                 _TRACKED.sparkContext.setLocalProperty(

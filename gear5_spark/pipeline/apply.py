@@ -14,8 +14,9 @@ micro-batch:
    mid-stream becomes a real typed column with null backfill.
 3. **normalize**: typed columns + ``_cdc_*`` stamps (operators.normalize).
 4. **dedup** (A5): latest event per ``(conv_id, turn_idx)`` by
-   ``(lsn, txn_seq)`` in one shuffle keyed by the table's placement
-   slot, or a salted two-stage plan for skewed keys.
+   ``(lsn, txn_seq)`` inside the one shuffle that places the batch by
+   the table's placement slot (``LakeTable.place``); with salting on,
+   an optional per-``(key, salt)`` pre-reduction runs before it.
 5. **MERGE** with LSN order-guard + lineage row embedded in the same
    atomic commit (lsn range, event count, txn-ids hash — FIXTURES.md §4).
 """
@@ -31,8 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gear5_spark.lake.merge import merge_into
-from gear5_spark.lake.table import LakeTable, Snapshot
-from gear5_spark.operators.dedup import latest_per_key
+from gear5_spark.lake.table import BUCKET_COL, SLOT_COL, LakeTable, Snapshot
+from gear5_spark.operators.dedup import latest_per_key, salted_pre_reduce
 from gear5_spark.operators.infer import infer_token
 from gear5_spark.operators.names import sanitize_unique
 from gear5_spark.operators.normalize import (
@@ -391,53 +392,40 @@ class TranscriptsApplier:
         # re-scans raw input.
         #
         # The dedup shuffle is FUSED with the table's bucket placement:
-        # the one unavoidable shuffle of the raw payload is keyed by the
-        # table's identity placement slot, the groupBy then runs
+        # the one unavoidable shuffle of the raw payload is the table's
+        # placement (LakeTable.place), the groupBy then runs
         # exchange-free inside those partitions (slot is in the grouping
-        # key and is the partitioning column), and the downstream write
-        # skips ITS repartition (pre_placed) — one shuffle total per
-        # batch instead of two (measured: the write re-shuffle moved
-        # ~1.2 GB both ways per 4M events). Salted dedup (pathological
-        # per-key skew) keeps the classic two-shuffle plan — salting is
-        # incompatible with co-location. The winner cache is built
+        # key and is the partitioning column), and neither the merge
+        # join nor the write shuffles the batch again (pre_placed) — one
+        # shuffle total per batch (measured: a separate write re-shuffle
+        # moved ~1.2 GB both ways per 4M events). Salting (pathological
+        # per-key skew) only adds a per-(key, salt) pre-reduction in
+        # front of the same placement. The winner cache is built
         # uncompressed (session conf, see session.get_spark).
-        pre_placed = None
-        if self.salt_buckets == 1:
-            from gear5_spark.lake.table import BUCKET_COL
-
-            # the placement is sized to the session's shuffle width.
-            # CoW sub-splits each bucket when the width exceeds the
-            # bucket count (lifting dedup/parse parallelism; up to
-            # width // n_buckets files per bucket per commit). MoR
-            # never does: every delta file is read back by EVERY
-            # reconstruct until compaction. Instead, when the table has
-            # more buckets than the width, MoR groups contiguous whole
-            # buckets into `width` slots — every stage after this
-            # exchange, and the delta write, then runs `width` tasks
-            # and writes `width` files, not one per bucket.
-            parts = shuffle_width(batch.sparkSession)
-            n_b = snap0.properties["n_buckets"]
-            want = min(parts, n_b) if self.sink_mode == "mor" else max(parts, n_b)
-            pre_placed, slot_expr = self.table.placement_expr(snap0, want)
-            placed = valid.withColumn(
-                BUCKET_COL, self.table.bucket_expr(snap0)
-            ).withColumn("_pslot", slot_expr)
-            placed = placed.repartition(pre_placed.n_slots, "_pslot")
-            # keep _pslot through the cache: the merge join co-partitions
-            # on it (lake/merge.py), so the batch is never re-shuffled
-            # after this one placement exchange
-            deduped_raw = (
-                latest_per_key(placed, KEY_COLS, co_group_cols=["_pslot"])
-                .drop(BUCKET_COL)
-                .persist()
-            )
-        else:
-            # salted plan: the dedup shuffle carries pre-reduced rows;
-            # the write repartitions the winner set by placement slot
-            # (pre_placed stays None)
-            deduped_raw = latest_per_key(
-                valid, KEY_COLS, salt_buckets=self.salt_buckets
-            ).persist()
+        #
+        # The placement is sized to the session's shuffle width. CoW
+        # sub-splits each bucket when the width exceeds the bucket count
+        # (lifting dedup/parse parallelism; up to width // n_buckets
+        # files per bucket per commit). MoR never does: every delta file
+        # is read back by EVERY reconstruct until compaction. Instead,
+        # when the table has more buckets than the width, MoR groups
+        # contiguous whole buckets into `width` slots — every stage
+        # after this exchange, and the delta write, then runs `width`
+        # tasks and writes `width` files, not one per bucket.
+        parts = shuffle_width(batch.sparkSession)
+        n_b = snap0.properties["n_buckets"]
+        want = min(parts, n_b) if self.sink_mode == "mor" else max(parts, n_b)
+        if self.salt_buckets > 1:
+            valid = salted_pre_reduce(valid, KEY_COLS, self.salt_buckets)
+        placed, pre_placed = self.table.place(valid, snap0, want)
+        # keep _pslot through the cache: the merge join co-partitions on
+        # it (lake/merge.py), so the batch is never re-shuffled after
+        # this one placement exchange
+        deduped_raw = (
+            latest_per_key(placed, KEY_COLS, co_group_cols=[SLOT_COL])
+            .drop(BUCKET_COL)
+            .persist()
+        )
         from gear5_spark.perf import span
 
         try:
@@ -539,7 +527,7 @@ class TranscriptsApplier:
                     for s in specs
                 ]
             deduped = normalize_changes(
-                deduped_raw, specs, carry_cols=("_pslot",)
+                deduped_raw, specs, carry_cols=(SLOT_COL,)
             )
             lineage = {
                 **_batch_lineage(batch_id, stats),

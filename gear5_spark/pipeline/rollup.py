@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gear5_spark.lake.merge import merge_into
-from gear5_spark.lake.table import LakeTable
+from gear5_spark.lake.table import LakeTable, bucket_columns_of
 
 ROLLUP_SCHEMA = T.StructType(
     [
@@ -172,8 +172,7 @@ class ConversationRollup:
         files, especially with ``sort_columns`` clustering); per-batch
         SHUFFLE work is O(touched) either way."""
         snap = self.base.snapshot()
-        cols = snap.properties.get("bucket_columns") or []
-        if cols == ["conv_id"]:
+        if bucket_columns_of(snap) == ["conv_id"]:
             from gear5_spark.lake.xxh64 import bucket_of
 
             n = snap.properties["n_buckets"]
@@ -189,8 +188,7 @@ class ConversationRollup:
         pruning on the applier's hot path too, not only on the
         list-input path."""
         snap = self.base.snapshot()
-        cols = snap.properties.get("bucket_columns") or []
-        if cols == ["conv_id"]:
+        if bucket_columns_of(snap) == ["conv_id"]:
             buckets = sorted(
                 r[0]
                 for r in touched.select(

@@ -1,7 +1,9 @@
-"""Focused tests for the r6 co-partitioned MERGE (lake/merge.py, the
-batch's ``_pslot`` placement): result-identical to the legacy two-shuffle
-plan, physically a single full-outer join with no batch-side re-shuffle,
-and a placement that no longer matches the table falls back."""
+"""Focused tests for the co-partitioned MERGE (lake/merge.py): every
+copy-on-write batch — fused, salted, or handed to ``merge_into``
+unplaced — is placed by the table and merged by one full-outer join on
+``[_pslot, *key]`` with no planner-inserted exchange; results match the
+serial oracle, and a placement that no longer matches the table is
+placed again."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,20 +21,17 @@ def log_dir(tmp_path_factory):
     return str(d)
 
 
-def _rows(table):
-    df = table.read()
-    return sorted(
-        tuple(str(x) for x in r)
-        for r in df.select(*sorted(df.columns)).collect()
-    )
+def _texts(rows):
+    return sorted((r["conv_id"], r["turn_idx"], r["text"]) for r in rows)
 
 
-def test_copartitioned_merge_matches_legacy_plan(spark, log_dir, tmp_path):
+def test_copartitioned_merge_matches_oracle(spark, log_dir, tmp_path):
     # phase 1 fills the target; phase 2 exercises the guarded merge
-    # against a NON-empty target — the fused plan carries _pslot and
-    # merges co-partitioned, the salted plan drops it and takes the
-    # legacy path.
-    outs = {}
+    # against a NON-empty target, fused and salted
+    from tests.oracle import oracle_rows
+
+    want = _texts(oracle_rows(log_dir))
+    assert want
     for plan, salt in (("fused", 1), ("salted", 2)):
         t = bootstrap_table(spark, str(tmp_path / plan), n_buckets=8)
         for lo, hi in ((None, 2999), (2999, None)):
@@ -41,17 +40,17 @@ def test_copartitioned_merge_matches_legacy_plan(spark, log_dir, tmp_path):
                 checkpoint_dir=str(tmp_path / f"{plan}-ck{hi}"),
                 min_lsn=lo, max_lsn=hi, salt_buckets=salt,
             )
-        outs[plan] = _rows(t)
-    assert outs["fused"] == outs["salted"]
-    assert len(outs["fused"]) > 0
+        assert _texts(t.read().collect()) == want, plan
 
 
-def test_copartitioned_merge_plan_shape(spark, log_dir, tmp_path):
+@pytest.mark.parametrize("case", ["fused", "salted", "direct"])
+def test_copartitioned_merge_plan_shape(spark, log_dir, tmp_path, case):
     # the guarded merge's write input: ONE full-outer join, built as a
     # shuffled-hash join on the batch side, with no exchange between the
-    # (already-placed) batch and the join
+    # placed batch and the join
     import gear5_spark.lake.table as LT
-    from gear5_spark.pipeline.apply import TranscriptsApplier
+    from gear5_spark.lake.merge import merge_into
+    from gear5_spark.operators.dedup import latest_per_key
     from gear5_spark.pipeline.runner import make_applier
     from gear5_spark.sources.changelog import read_changelog
 
@@ -60,7 +59,20 @@ def test_copartitioned_merge_plan_shape(spark, log_dir, tmp_path):
         spark, log_dir, t, checkpoint_dir=str(tmp_path / "ck0"),
         max_lsn=2999,
     )
-    applier = make_applier(t, str(tmp_path / "ck1"))
+    if case == "direct":
+        # a batch built from local rows: no upstream shuffle, no _pslot
+        rows = (
+            latest_per_key(
+                read_changelog(spark, log_dir, min_lsn=2999),
+                ["conv_id", "turn_idx"],
+            )
+            .select(
+                "conv_id", "turn_idx", "op",
+                F.col("lsn").cast("string").alias("_cdc_lsn"),
+            )
+            .collect()
+        )
+        batch = spark.createDataFrame(rows)
     captured = {}
     orig = LT.LakeTable.write_data_files
 
@@ -70,21 +82,36 @@ def test_copartitioned_merge_plan_shape(spark, log_dir, tmp_path):
 
     LT.LakeTable.write_data_files = spy
     try:
-        applier(read_changelog(spark, log_dir, min_lsn=2999), 1)
+        if case == "direct":
+            merge_into(t, batch)
+        else:
+            applier = make_applier(
+                t, str(tmp_path / "ck1"),
+                salt_buckets=2 if case == "salted" else 1,
+            )
+            applier(read_changelog(spark, log_dir, min_lsn=2999), 1)
     finally:
         LT.LakeTable.write_data_files = orig
     plan = captured["plan"]
-    assert "ShuffledHashJoin" in plan and "FullOuter" in plan
+    assert plan.count("ShuffledHashJoin") == 1 and "FullOuter" in plan, plan
     joins = sum(
         plan.count(j)
         for j in ("SortMergeJoin", "BroadcastHashJoin")
     )
     assert joins == 0, plan
-    # no planner-inserted exchange anywhere: every shuffle left in the
-    # plan is an explicit _pslot placement repartition (the legacy plan
-    # re-shuffled BOTH join sides by key via ENSURE_REQUIREMENTS —
-    # plans/r06/cow_merge_before.txt)
-    assert "ENSURE_REQUIREMENTS" not in plan, plan
+    # no planner-inserted exchange: every shuffle left in the plan is an
+    # explicit _pslot placement repartition (a key-shuffled merge
+    # re-shuffles BOTH join sides by key via ENSURE_REQUIREMENTS). The
+    # one exception is the salted pre-reduction's own (key, _salt)
+    # exchange inside the cached winner set, below its placement.
+    planned = [
+        line for line in plan.splitlines() if "ENSURE_REQUIREMENTS" in line
+    ]
+    if case == "salted":
+        assert planned and all("_salt" in line for line in planned), plan
+    else:
+        assert planned == [], plan
+    assert "hashpartitioning(_pslot" in plan, plan
 
 
 @pytest.mark.parametrize("sink_mode", ["cow", "mor"])

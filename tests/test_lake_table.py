@@ -269,3 +269,22 @@ def test_lookup_bool_and_null_semantics(spark, tmp_path):
     merge_into(t, b, order_guard=False)
     assert t.lookup(flag=True).collect()[0]["v"] == 1
     assert t.lookup(flag=False).collect()[0]["v"] == 2
+
+
+def test_snapshot_without_bucket_columns_is_refused(tmp_path):
+    """Every reader of the bucket layout goes through bucket_columns_of;
+    a snapshot without the property fails with a clear error instead of
+    hashing on a null column name."""
+    from gear5_spark.lake.table import bucket_columns_of
+
+    snap = Snapshot(
+        version=0, snapshot_id="s", parent_version=None, schema=SCHEMA,
+        properties={"key_columns": ["k"], "n_buckets": 4},
+        files=[], txn={},
+    )
+    with pytest.raises(ValueError, match="bucket_columns"):
+        bucket_columns_of(snap)
+    with pytest.raises(ValueError, match="bucket_columns"):
+        LakeTable(None, str(tmp_path / "t")).placement(snap)
+    ok = Snapshot(**{**snap.__dict__, "properties": {"bucket_columns": ["k"]}})
+    assert bucket_columns_of(ok) == ["k"]

@@ -1,8 +1,8 @@
 """Merge-on-read delta files that hold several buckets.
 
 A 32-bucket table streamed on the suite's width-8 session gets range-
-placed deltas: each micro-batch writes at most 8 delta files, each
-holding four contiguous whole buckets. Every read and rewrite path must
+placed deltas: each micro-batch, salted or not, writes at most 8 delta
+files, each holding four contiguous whole buckets. Every read and rewrite path must
 select, filter and drop those files by their full bucket range; each
 case is checked against the serial oracle or a full read."""
 
@@ -31,19 +31,23 @@ N_BUCKETS = 32
 COLS = ["conv_id", "turn_idx", "role", "text", "ts"]
 
 
-@pytest.fixture(scope="module")
-def range_table(spark, tiny_changelog, tmp_path_factory):
-    changelog_dir, _ = tiny_changelog
-    root = tmp_path_factory.mktemp("mor-ranges")
+def _stream(spark, changelog_dir, root, salt_buckets=1, files_per_trigger=1):
     table = bootstrap_table(spark, str(root / "t"), n_buckets=N_BUCKETS)
     applier = make_applier(
-        table, str(root / "ckpt"), sink_mode="mor", compact_every=0
+        table, str(root / "ckpt"), sink_mode="mor", compact_every=0,
+        salt_buckets=salt_buckets,
     )
     run_stream(
         spark, changelog_dir, table, checkpoint_dir=str(root / "ckpt"),
-        max_files_per_trigger=1, applier=applier, timeout_sec=600,
+        max_files_per_trigger=files_per_trigger, applier=applier,
+        timeout_sec=600,
     )
     return table
+
+
+@pytest.fixture(scope="module")
+def range_table(spark, tiny_changelog, tmp_path_factory):
+    return _stream(spark, tiny_changelog[0], tmp_path_factory.mktemp("mor-ranges"))
 
 
 def _copy(spark, table, tmp_path) -> LakeTable:
@@ -69,7 +73,18 @@ def _range_entries(snap) -> list[dict]:
     return [f for f in snap.files if len(entry_buckets(f)) > 1]
 
 
-def test_micro_batch_writes_at_most_width_range_files(spark, range_table):
+@pytest.mark.parametrize("salt_buckets", [1, 2])
+def test_micro_batch_writes_at_most_width_range_files(
+    spark, request, tiny_changelog, tmp_path, salt_buckets
+):
+    if salt_buckets == 1:
+        range_table = request.getfixturevalue("range_table")
+    else:
+        # the salted pre-reduction runs ahead of the same placement;
+        # three micro-batches of the 5-chunk log
+        range_table = _stream(
+            spark, tiny_changelog[0], tmp_path, salt_buckets, files_per_trigger=2
+        )
     width = shuffle_width(spark)
     assert width < N_BUCKETS  # the suite's session really groups buckets
     versions = [
@@ -169,14 +184,8 @@ def _kv_table(spark, tmp_path) -> LakeTable:
 
 def _range_delta(spark, t, rows, n_slots=8):
     """merge_delta with the applier's range placement."""
-    snap = t.snapshot()
-    placement, slot = t.placement_expr(snap, n_slots)
-    batch = (
-        spark.createDataFrame(rows, "k string, v long, _cdc_lsn string, op string")
-        .withColumn(BUCKET_COL, t.bucket_expr(snap))
-        .withColumn("_pslot", slot)
-        .repartition(placement.n_slots, "_pslot")
-    )
+    rows = spark.createDataFrame(rows, "k string, v long, _cdc_lsn string, op string")
+    batch, placement = t.place(rows, t.snapshot(), n_slots)
     return merge_delta(t, batch, pre_placed=placement)
 
 
