@@ -188,12 +188,13 @@ class TranscriptsApplier:
 
         The discovery job tokenizes each payload's top-level KEYS once
         (:func:`_payload_keys` — no value copies; factory-contention
-        A/B'd, see its docstring), explodes, drops known
-        source keys, counts per key — full codegen, map-side combined,
-        shuffles only (key, partial count). The batch ROW count rides the
-        same scan as a bare ``count(1)`` Observation: unlike round 2's
-        regression (a ``collect_set(json_object_keys(...))`` metric — the
-        interpreted CollectMetrics path burned ~7x codegen CPU,
+        A/B'd, see its docstring), explodes, counts per key — full
+        codegen, map-side combined, shuffles only (key, partial count);
+        known source keys are dropped from the collected counts. The
+        batch ROW count rides the same scan as a bare ``count(1)``
+        Observation: unlike round 2's regression (a
+        ``collect_set(json_object_keys(...))`` metric — the interpreted
+        CollectMetrics path burned ~7x codegen CPU,
         DIAG_DEDUP.json), a constant-width count costs nothing on the
         interpreted path, and fusing it here removes what used to be a
         separate full pass over the persisted deduped batch (~2.5 GB of
@@ -207,29 +208,29 @@ class TranscriptsApplier:
         from pyspark.sql import Observation
 
         known_sources = {f["source"] for f in registry.values()}
-
-        def _not_known(col):
-            return ~col.isin(*known_sources) if known_sources else F.lit(True)
-
         obs = Observation(f"dedup-count-{_uuid.uuid4().hex[:8]}")
+        # known keys and the NULL of a key-less payload are dropped on
+        # the driver, not filtered in the plan: the aggregate must stay
+        # non-empty whenever the batch has winners. An empty one lets
+        # AQE's empty-relation propagation re-plan both CollectMetrics
+        # nodes away (this one and the batch stats), leaving both
+        # Observations empty
         counts = {
             r["k"]: r["c"]
             for r in sample_src.observe(obs, F.count(F.lit(1)).alias("n"))
             .select(
                 F.explode_outer(_payload_keys("after_json")).alias("k")
             )
-            .filter(F.col("k").isNotNull() & _not_known(F.col("k")))
             .groupBy("k")
             .agg(F.count(F.lit(1)).alias("c"))
             .collect()
+            if r["k"] is not None and r["k"] not in known_sources
         }
         try:
             n = int(obs.get["n"])
         except Exception:
-            # AQE empty-relation propagation can re-plan the
-            # CollectMetrics node away when the input collapses to empty
-            # (same hazard as the batch-stats Observation below) — the
-            # count is then trivially recomputable
+            # a batch without winners: the empty aggregate is re-planned
+            # away with its CollectMetrics node
             n = sample_src.count()
         return n, counts
 
@@ -446,13 +447,13 @@ class TranscriptsApplier:
                     # would then crash outside this guard
                     raise KeyError("observation returned no metrics")
             except Exception:
-                # AQE empty-relation propagation can re-plan the
-                # CollectMetrics node away when the valid side collapses
-                # to empty (observed on Spark 4.1 with an all-malformed
-                # batch feeding the placed repartition), leaving the
+                # AQE empty-relation propagation re-plans the
+                # CollectMetrics node away when the discovery aggregate
+                # above is empty, which happens only when the batch has
+                # no winners (empty or all-quarantined), leaving the
                 # Observation unfilled — recompute the identical
-                # aggregates as an explicit job. Only this degenerate
-                # (empty or all-quarantined) batch pays the extra scan.
+                # aggregates as an explicit job. Only that batch pays
+                # the extra scan.
                 stats = batch.agg(*metrics).first().asDict()
             if stats.get("malformed_count") and self.quarantine_dir:
                 # idempotent per batch: the dead-letter write is OUTSIDE

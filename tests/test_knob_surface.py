@@ -1,7 +1,7 @@
 """The CDC path's settable surface is pinned here: the applier's fields,
-the pipeline config's fields and the parameters of ``replay_batch`` and
-``merge_into``. A new option has to edit this file in the same change,
-where it is visible. Static check, no Spark session."""
+the pipeline config's fields and the parameters of ``replay_batch``,
+``merge_into`` and ``get_spark``. A new option has to edit this file in
+the same change, where it is visible. Static check, no Spark session."""
 
 from __future__ import annotations
 
@@ -14,6 +14,7 @@ from gear5_spark.config import PipelineConfig
 from gear5_spark.lake.merge import merge_into
 from gear5_spark.pipeline.apply import TranscriptsApplier
 from gear5_spark.pipeline.runner import replay_batch
+from gear5_spark.session import get_spark
 
 APPLIER_FIELDS = [
     "table",
@@ -76,6 +77,9 @@ MERGE_INTO_PARAMS = [
 ]
 
 
+GET_SPARK_PARAMS = ["app_name", "master", "shuffle_partitions", "extra_conf"]
+
+
 def _fields(cls) -> list[str]:
     return [f.name for f in dataclasses.fields(cls)]
 
@@ -95,6 +99,10 @@ def test_config_fields_pinned():
 def test_replay_batch_and_merge_into_params_pinned():
     assert _params(replay_batch) == REPLAY_BATCH_PARAMS
     assert _params(merge_into) == MERGE_INTO_PARAMS
+
+
+def test_get_spark_params_pinned():
+    assert _params(get_spark) == GET_SPARK_PARAMS
 
 
 @pytest.mark.parametrize("key", ["auto_widen", "partition_lineage"])

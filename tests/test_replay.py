@@ -7,7 +7,15 @@ table must equal the serial in-memory fold on every column, under stable
 
 from __future__ import annotations
 
-from gear5_spark.pipeline.runner import bootstrap_table, replay_batch, run_stream
+import pytest
+
+from gear5_spark.pipeline.runner import (
+    bootstrap_table,
+    make_applier,
+    replay_batch,
+    run_stream,
+)
+from gear5_spark.sources.changelog import read_changelog
 from tests.oracle import oracle_rows
 
 COMPARE_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -123,3 +131,28 @@ def test_applier_sets_no_session_conf(
     )
     assert table.current_version() >= 1
     assert calls == []
+
+
+@pytest.mark.parametrize("sink_mode", ["cow", "mor"])
+def test_known_keys_batch_needs_no_observation_fallback(
+    spark, tiny_changelog, tmp_path, monkeypatch, sink_mode
+):
+    """A batch whose payload keys are all in the registry fills both of
+    the applier's Observations: neither the re-count of the winner cache
+    nor the re-scan of the batch for its stats runs."""
+    changelog_dir, manifest = tiny_changelog
+    table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8)
+    applier = make_applier(table, str(tmp_path / "ckpt"), sink_mode=sink_mode)
+    applier(read_changelog(spark, changelog_dir), 0)
+    # the second half of the same log: every payload key is registered
+    known = read_changelog(spark, changelog_dir, min_lsn=manifest["n_events"] // 2)
+    df_cls = type(known)
+
+    def fallback(self, *args, **kwargs):
+        raise AssertionError("Observation fallback ran")
+
+    monkeypatch.setattr(df_cls, "count", fallback)
+    monkeypatch.setattr(df_cls, "agg", fallback)
+    assert applier(known, 1) is not None
+    monkeypatch.undo()
+    _assert_matches_oracle(table, changelog_dir)
