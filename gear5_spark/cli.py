@@ -7,13 +7,18 @@ as ``python -m gear5_spark <cmd>``:
 - ``spec``      print the config JSON schema (≈ protocol/spec.go:26-77)
 - ``check``     validate config + source/table connectivity, emit a
                 CONNECTION_STATUS-style JSON line (≈ protocol/check.go)
-- ``discover``  sample the change feed, print the catalog: target schema +
-                discovered payload fields (≈ protocol/discover.go:46-90)
+- ``discover``  sample the change feed with the applier's own sampler,
+                print the catalog: target schema + the payload registry
+                ``read`` would write (≈ protocol/discover.go:46-90);
+                writes nothing
 - ``read``      run the pipeline — bulk replay or streaming tail
-                (≈ protocol/read.go)
+                (≈ protocol/read.go); its STATE carries per-phase times
 - ``state``     print the table's txn ledger + lineage (the reference's
                 STATE messages, queryable after the fact)
 - ``compact``   fold MoR delta files into base (maintenance)
+- ``rebucket``  rewrite the table into a new bucket count
+- ``fsck``      check the table's metadata against its files (``--deep``:
+                recorded row counts against parquet footers)
 - ``vacuum``    delete data unreachable from any snapshot
 - ``expire``    drop old snapshot metadata (bounds the log; lineage
                 archived first, freed data becomes vacuum-eligible)
@@ -29,7 +34,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 
 
@@ -79,72 +83,53 @@ def cmd_check(args) -> int:
     return 0 if not problems else 1
 
 
-def cmd_discover(args) -> int:
+def _config(path: str):
+    """The validated config at ``path``, or None after printing the one
+    LOG ERROR document that says why not."""
     from gear5_spark.config import PipelineConfig
-    from gear5_spark.pipeline.apply import BASE_PAYLOAD, KEY_COLS
-
-    BASE_PAYLOAD_SOURCES = {f["source"] for f in BASE_PAYLOAD.values()}
-    from gear5_spark.pipeline.runner import TRANSCRIPTS_SCHEMA
-    from gear5_spark.sources.changelog import read_changelog
 
     try:
-        cfg = PipelineConfig.from_file(args.config)
-    except (OSError, ValueError, TypeError, KeyError) as e:
-        # one-JSON-document contract: config problems surface as a LOG
-        # document (matching cmd_check/cmd_read), never a raw traceback
+        cfg = PipelineConfig.from_file(path)
+        problems = cfg.validate()
+    except (OSError, ValueError, TypeError) as e:
+        problems = [f"config: {e}"]
+    if problems:
         print(json.dumps({"type": "LOG", "level": "ERROR",
-                          "message": f"config error: {e}"}))
+                          "message": "; ".join(problems)}))
+        return None
+    return cfg
+
+
+def cmd_discover(args) -> int:
+    from gear5_spark.pipeline.apply import (
+        BASE_PAYLOAD,
+        KEY_COLS,
+        count_and_discover,
+        extend_from_counts,
+        load_registry,
+    )
+    from gear5_spark.pipeline.runner import TRANSCRIPTS_SCHEMA, registry_path
+    from gear5_spark.sources.changelog import read_changelog
+
+    cfg = _config(args.config)
+    if cfg is None:
+        return 1
+    try:
+        registry = load_registry(registry_path(cfg.checkpoint_dir))
+    except (OSError, ValueError) as e:
+        print(json.dumps({"type": "LOG", "level": "ERROR",
+                          "message": f"registry: {e}"}))
         return 1
     spark = _spark()
-    from pyspark.sql import functions as F
-
-    # sample payload keys (≈ 100-record sampling, protocol/discover.go:46)
-    # — ONE scan: the key set and counts derive from the same collected
-    # payloads (two unordered limit() scans could sample different rows)
-    sample = read_changelog(spark, cfg.changelog_dir).limit(args.sample)
-    import json as _json
-
-    from gear5_spark.operators.infer import infer_token
-    from gear5_spark.operators.names import sanitize_unique
-
-    rows = sample.select("after_json").collect()
-    payloads = [r[0] for r in rows if r[0] is not None]
-    observed_keys: set[str] = set()
-    for s_ in payloads:
-        try:
-            d = _json.loads(s_)
-        except ValueError:
-            continue
-        if isinstance(d, dict):
-            observed_keys.update(d.keys())
-    row = {"keys": sorted(observed_keys), "n": len(rows)}
-    vals_by_key: dict[str, list] = {}
-    for s in payloads:
-        try:
-            d = _json.loads(s)
-        except ValueError:
-            continue
-        if isinstance(d, dict):
-            for k, v in d.items():
-                if v is not None:
-                    vals_by_key.setdefault(k, []).append(v)
-    # the sanitize pool must match the applier's exactly (apply.py
-    # extend_registry: taken = registry names | KEY_COLS | RESERVED_COLS)
-    # or the advertised catalog name diverges from the column the
-    # applier actually creates for the same key
-    from gear5_spark.pipeline.apply import RESERVED_COLS
-
-    name_map = sanitize_unique(
-        [k for k in vals_by_key if k not in BASE_PAYLOAD_SOURCES],
-        taken=set(BASE_PAYLOAD) | set(KEY_COLS) | RESERVED_COLS,
+    # the applier's own sampler over the first --sample records; the
+    # checkpoint pins the sample, so both of its jobs see the same rows
+    sample = (
+        read_changelog(spark, cfg.changelog_dir)
+        .limit(args.sample)
+        .localCheckpoint()
     )
-    typed = {
-        name_map[k]: {"type": infer_token(v[:100]), "source": k}
-        for k, v in vals_by_key.items()
-        if k not in BASE_PAYLOAD_SOURCES
-    }
-    for col, spec in BASE_PAYLOAD.items():  # configured schema wins
-        typed[col] = dict(spec)
+    n, counts = count_and_discover(sample)
+    registry = extend_from_counts(sample, registry, counts)
     catalog = {
         "type": "CATALOG",
         "streams": [
@@ -158,10 +143,10 @@ def cmd_discover(args) -> int:
                     f.name: f.dataType.simpleString()
                     for f in TRANSCRIPTS_SCHEMA.fields
                 },
-                "payload_fields_observed": sorted(row["keys"] or []),
-                "payload_fields_typed": typed,
+                "payload_fields_observed": sorted(counts),
+                "payload_fields_typed": registry,
                 "payload_fields_known": sorted(BASE_PAYLOAD),
-                "sampled_records": row["n"],
+                "sampled_records": n,
             }
         ],
     }
@@ -170,10 +155,9 @@ def cmd_discover(args) -> int:
 
 
 def cmd_read(args) -> int:
-    import shutil
     import time
 
-    from gear5_spark.config import PipelineConfig
+    from gear5_spark import perf
     from gear5_spark.pipeline.runner import (
         bootstrap_table,
         make_applier,
@@ -181,16 +165,8 @@ def cmd_read(args) -> int:
         run_stream,
     )
 
-    try:
-        cfg = PipelineConfig.from_file(args.config)
-        problems = cfg.validate()
-    except (OSError, ValueError, TypeError) as e:
-        print(json.dumps({"type": "LOG", "level": "ERROR",
-                          "message": f"config: {e}"}))
-        return 1
-    if problems:
-        print(json.dumps({"type": "LOG", "level": "ERROR",
-                          "message": "; ".join(problems)}))
+    cfg = _config(args.config)
+    if cfg is None:
         return 1
     spark = _spark()
     try:
@@ -212,118 +188,19 @@ def cmd_read(args) -> int:
         rollup = ConversationRollup(
             table, bootstrap_rollup(spark, cfg.rollup_dir, cfg.n_buckets)
         )
-    if getattr(args, "warmup", False):
-        # tiny throwaway replay so JVM/codegen warmup stays out of the
-        # timed run (same honesty rule as bench.py's scaling pairs)
-        import tempfile
-
-        try:
-            from gen_fixtures import generate_changelog
-        except ImportError:
-            # gen_fixtures is a repo-root dev script, not packaged —
-            # warmup is a bench nicety, not a correctness step: degrade
-            # with a LOG line instead of dying before the timed run
-            print(json.dumps({
-                "type": "LOG", "level": "WARN",
-                "message": "warmup skipped: gen_fixtures not importable "
-                           "(run from the repo root to enable)",
-            }))
-            generate_changelog = None
-
-        if generate_changelog is not None:
-            wdir = tempfile.mkdtemp(prefix="gear5-warm-")
-            try:
-                generate_changelog(
-                    f"{wdir}/log", n_events=5_000, n_convs=100,
-                    chunk_rows=5_000, seed=7,
-                )
-                wt = bootstrap_table(
-                    spark, f"{wdir}/table", n_buckets=cfg.n_buckets
-                )
-                replay_batch(spark, f"{wdir}/log", wt, f"{wdir}/ckpt")
-            finally:
-                shutil.rmtree(wdir, ignore_errors=True)
-    if os.environ.get("SPARK_GRAFT_PHASES"):
-        from gear5_spark import perf
-
-        perf.reset()  # timed window only — warmup spans excluded
-    runs_sec: list[float] = []
+    perf.reset()
     t0 = time.perf_counter()
     if cfg.mode == "bulk":
-        # --repeats N (benchmarking): replay N times within THIS JVM and
-        # report every run — the first full-scale run pays tiered-JIT
-        # compilation of the hot codegen loops (~1.3x at 8 cores, ~4x at
-        # 32; see SCALING.md "First-run JIT"), which a long-running
-        # ingest job never sees again. Warm repeats land in throwaway
-        # table dirs (no rollup — it is stateful); the LAST run builds
-        # the real table, so STATE describes genuine output.
-        repeats = max(1, getattr(args, "repeats", 1) or 1)
-        for i in range(repeats):
-            last = i == repeats - 1
-            tdir = cfg.table_dir if last else f"{cfg.table_dir}.jit{i}"
-            ckpt = (
-                cfg.checkpoint_dir if last else f"{cfg.checkpoint_dir}.jit{i}"
-            )
-            if not last:
-                # a crashed prior invocation may have left a populated
-                # throwaway table; reusing it (bootstrap is
-                # if-not-exists) would time a merge-against-existing-rows
-                # workload instead of the cold/warm pair this records
-                shutil.rmtree(tdir, ignore_errors=True)
-                shutil.rmtree(ckpt, ignore_errors=True)
-                if cfg.quarantine_dir:
-                    shutil.rmtree(
-                        f"{cfg.quarantine_dir}.jit{i}", ignore_errors=True
-                    )
-            tbl = table if last else bootstrap_table(
-                spark, tdir, n_buckets=cfg.n_buckets,
-                delete_mode=cfg.delete_mode,
-            )
-            if last and os.environ.get("SPARK_GRAFT_PHASES"):
-                from gear5_spark import perf
-
-                # phases must describe the run elapsed_sec times — the
-                # JIT-cold repeats would otherwise inflate them
-                perf.reset()
-            r0 = time.perf_counter()
-            replay_batch(
-                spark, cfg.changelog_dir, tbl, ckpt,
-                app_id=cfg.app_id, salt_buckets=cfg.salt_buckets,
-                sink_mode=cfg.resolved_sink_mode,
-                compact_every=cfg.compact_every,
-                # warm (throwaway) repeats must not churn the REAL
-                # dead-letter dir: their table/checkpoint are discarded,
-                # so their quarantine output would describe batches the
-                # production table never committed
-                quarantine_dir=(
-                    cfg.quarantine_dir
-                    if last
-                    else (
-                        f"{cfg.quarantine_dir}.jit{i}"
-                        if cfg.quarantine_dir
-                        else None
-                    )
-                ),
-                exclude_columns=cfg.exclude_columns,
-                rollup=rollup if last else None,
-            )
-            runs_sec.append(round(time.perf_counter() - r0, 3))
-            if not last:
-                shutil.rmtree(tdir, ignore_errors=True)
-                shutil.rmtree(ckpt, ignore_errors=True)
-                if cfg.quarantine_dir:
-                    shutil.rmtree(
-                        f"{cfg.quarantine_dir}.jit{i}", ignore_errors=True
-                    )
-            else:
-                t0 = r0  # elapsed_sec times the FINAL (steady) run
+        replay_batch(
+            spark, cfg.changelog_dir, table, cfg.checkpoint_dir,
+            app_id=cfg.app_id, salt_buckets=cfg.salt_buckets,
+            sink_mode=cfg.resolved_sink_mode,
+            compact_every=cfg.compact_every,
+            quarantine_dir=cfg.quarantine_dir,
+            exclude_columns=cfg.exclude_columns,
+            rollup=rollup,
+        )
     else:
-        if (getattr(args, "repeats", 1) or 1) > 1:
-            print(json.dumps({
-                "type": "LOG", "level": "WARN",
-                "message": "--repeats applies to bulk mode only; "
-                           "streaming runs once",
-            }))
         applier = make_applier(
             table, cfg.checkpoint_dir, app_id=cfg.app_id,
             salt_buckets=cfg.salt_buckets, sink_mode=cfg.resolved_sink_mode,
@@ -338,19 +215,13 @@ def cmd_read(args) -> int:
             applier=applier, timeout_sec=args.timeout,
         )
     elapsed = time.perf_counter() - t0
-    state = {
+    print(json.dumps({
         "type": "STATE",
         "rows": table.read().count(),
         "snapshot_version": table.current_version(),
         "elapsed_sec": round(elapsed, 3),
-    }
-    if len(runs_sec) > 1:
-        state["runs_sec"] = runs_sec
-    if os.environ.get("SPARK_GRAFT_PHASES"):
-        from gear5_spark import perf
-
-        state["phases"] = perf.timings()
-    print(json.dumps(state))
+        "phases": perf.timings(),
+    }))
     return 0
 
 
@@ -477,12 +348,6 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("read")
     p.add_argument("--config", required=True)
     p.add_argument("--timeout", type=float, default=None)
-    p.add_argument("--warmup", action="store_true")
-    p.add_argument(
-        "--repeats", type=int, default=1,
-        help="bulk mode: replay N times in this JVM, report each run "
-        "(steady-state benchmarking; elapsed_sec times the final run)",
-    )
     p = sub.add_parser("state")
     p.add_argument("--table-dir", required=True)
     p = sub.add_parser("compact")

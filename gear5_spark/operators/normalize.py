@@ -139,30 +139,6 @@ def stamp_cdc_columns(df: DataFrame) -> DataFrame:
     )
 
 
-def _to_specs(payload_schema) -> list[PayloadField]:
-    """Accept either a list of PayloadField or a plain StructType (legacy
-    catalog-style schema: field name == JSON key, Spark type -> token)."""
-    if not isinstance(payload_schema, T.StructType):
-        return list(payload_schema)
-    specs = []
-    for f in payload_schema.fields:
-        dt = f.dataType
-        if isinstance(dt, T.BooleanType):
-            token = "boolean"
-        elif isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-            token = "long"
-        elif isinstance(dt, (T.FloatType, T.DoubleType)):
-            token = "double"
-        elif isinstance(dt, T.StringType):
-            token = "string"
-        elif isinstance(dt, T.TimestampType):
-            token = "timestamp_iso"
-        else:
-            token = dt.simpleString()
-        specs.append(PayloadField(col=f.name, token=token, source=f.name))
-    return specs
-
-
 def _parse_type(token: str) -> T.DataType:
     """from_json field type for a token: scalars parse as STRING (the
     JSON token text survives — "yes", "3.9", true all arrive as text for
@@ -197,14 +173,14 @@ def _coerce_sql(raw: Column, token: str) -> Column:
 
 def normalize_changes(
     df: DataFrame,
-    payload_schema,
+    specs: list[PayloadField],
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Raw change feed -> typed change DataFrame.
 
-    ``payload_schema``: list[PayloadField] (registry-driven) or a legacy
-    StructType. Input (FIXTURES.md §2): lsn, txn_id, txn_seq, op, ts_ms,
-    conv_id, turn_idx, after_json. Output: keys + ordered metadata + one
+    ``specs``: one PayloadField per registry entry. Input (FIXTURES.md
+    §2): lsn, txn_id, txn_seq, op, ts_ms, conv_id, turn_idx,
+    after_json. Output: keys + ordered metadata + one
     typed column per payload field + ``_cdc_*`` columns. Delete events
     carry null payload (wal2json deletes carry only oldkeys,
     /root/reference/pkg/waljs/types.go:59-63).
@@ -214,7 +190,6 @@ def normalize_changes(
     preserves the input's partitioning attribute so a downstream
     co-partitioned merge join needs no new exchange.
     """
-    specs = _to_specs(payload_schema)
     carried = [c for c in carry_cols if c in df.columns]
     parse_schema = T.StructType(
         [T.StructField(s.source, _parse_type(s.token), True) for s in specs]

@@ -2,7 +2,7 @@
 
 Every batch records wall-clock per engine phase into a process-global
 dict (one ``perf_counter`` pair per phase — negligible overhead). Used
-by bench.py and the scaling profiler to attribute fixed costs
+by bench.py and ``python -m gear5_spark read`` to attribute fixed costs
 (VERDICT r1 #3) instead of guessing; read with ``timings()``/``reset()``.
 """
 

@@ -54,7 +54,7 @@ BASE_PAYLOAD = {
 }
 KEY_COLS = ["conv_id", "turn_idx"]
 # feed-meta + engine-internal column names a discovered payload key must
-# never shadow (see extend_registry)
+# never shadow (see extend_from_counts)
 RESERVED_COLS = {
     "lsn", "txn_id", "txn_seq", "op", "ts_ms", "after_json",
     "_cdc_lsn", "_cdc_updated_at", "_cdc_deleted_at", "_bucket",
@@ -94,6 +94,162 @@ def _registry_specs(registry: dict[str, dict]) -> list[PayloadField]:
         PayloadField(col=name, token=f["type"], source=f["source"])
         for name, f in sorted(registry.items())
     ]
+
+
+# ----------------------------------------------------------- schema discovery
+# The feed sampler (≈ protocol/discover.go:46-90): the applier runs it on
+# every batch's winners, ``python -m gear5_spark discover`` on the first
+# records of the change log. Neither function writes the registry.
+
+
+def load_registry(path: str) -> dict[str, dict]:
+    """The persisted payload registry at ``path``, or the base payload
+    when none was written yet."""
+    if os.path.exists(path):
+        with open(path) as fh:
+            raw = json.load(fh)
+        if not (isinstance(raw, dict) and raw.get("version") == 2):
+            raise ValueError(
+                f"payload registry {path} is not a "
+                'version-2 registry ({"version": 2, "fields": '
+                '{column: {"type": token, "source": key}}}); '
+                "rewrite it in that form"
+            )
+        return raw["fields"]
+    return {k: dict(v) for k, v in BASE_PAYLOAD.items()}
+
+
+def count_and_discover(src: DataFrame) -> tuple[int, dict[str, int]]:
+    """ONE scan returning (row count, per-key counts of every top-level
+    payload key).
+
+    The discovery job tokenizes each payload's top-level KEYS once
+    (:func:`_payload_keys` — no value copies; factory-contention
+    A/B'd, see its docstring), explodes, counts per key — full
+    codegen, map-side combined, shuffles only (key, partial count).
+    The ROW count rides the same scan as a bare ``count(1)``
+    Observation: unlike round 2's regression (a
+    ``collect_set(json_object_keys(...))`` metric — the interpreted
+    CollectMetrics path burned ~7x codegen CPU,
+    DIAG_DEDUP.json), a constant-width count costs nothing on the
+    interpreted path, and fusing it here removes what used to be a
+    separate full pass over the persisted deduped batch (~2.5 GB of
+    cache traffic per 4M-event batch, BENCH_DETAIL stage metrics).
+
+    Grouping is per KEY (bounded by schema width), never per
+    key-combination (worst case 2^width) — safe for adversarial
+    payloads at scale."""
+    import uuid as _uuid
+
+    from pyspark.sql import Observation
+
+    obs = Observation(f"dedup-count-{_uuid.uuid4().hex[:8]}")
+    # the NULL of a key-less payload is dropped on the driver, not
+    # filtered in the plan (and so are known keys, by the caller): the
+    # aggregate must stay non-empty whenever the batch has winners. An
+    # empty one lets AQE's empty-relation propagation re-plan both
+    # CollectMetrics nodes away (this one and the applier's batch
+    # stats), leaving both Observations empty
+    counts = {
+        r["k"]: r["c"]
+        for r in src.observe(obs, F.count(F.lit(1)).alias("n"))
+        .select(F.explode_outer(_payload_keys("after_json")).alias("k"))
+        .groupBy("k")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .collect()
+        if r["k"] is not None
+    }
+    try:
+        n = int(obs.get["n"])
+    except Exception:
+        # a batch without winners: the empty aggregate is re-planned
+        # away with its CollectMetrics node
+        n = src.count()
+    return n, counts
+
+
+def extend_from_counts(
+    src: DataFrame, registry: dict[str, dict], counts: dict[str, int]
+) -> dict[str, dict]:
+    """Type the keys of ``counts`` that ``registry`` does not know yet and
+    return the extended registry (``registry`` itself when nothing is
+    new). The caller persists it.
+
+    Job 2 (only when new keys exist): re-scan with a per-key
+    hash-sample rate (~4x oversample of the 100-value target) and a
+    bounded collect per key, then parse the sampled docs driver-side
+    for reference-parity type inference (``typeutils/datatype.go:
+    12-40``, sampling like ``protocol/discover.go:46-90``); key
+    names sanitized (SafeNameConversion semantics, utils.go:147-185)
+    before becoming columns.
+
+    A key observed only with null values (or only in losing events)
+    is deferred to a later batch with zero data loss — the winners
+    being applied don't carry it."""
+    known_sources = {f["source"] for f in registry.values()}
+    counts = {k: c for k, c in counts.items() if k not in known_sources}
+    if not counts:
+        return registry
+    oversample = 4 * _SAMPLE_PER_KEY
+    rate = F.create_map(
+        *[
+            F.lit(x)
+            for k, c in counts.items()
+            for x in (k, min(1.0, oversample / c))
+        ]
+    )
+    sampled = (
+        src.select(
+            "after_json",
+            F.explode(_payload_keys("after_json")).alias("k"),
+        )
+        .filter(F.col("k").isin(*counts.keys()))
+        .filter(
+            (
+                F.pmod(F.xxhash64("after_json", F.lit(42)), F.lit(1_000_000))
+                / 1_000_000.0
+            )
+            < F.element_at(rate, F.col("k"))
+        )
+        .groupBy("k")
+        .agg(
+            F.slice(
+                F.collect_list("after_json"), 1, _SAMPLE_PER_KEY
+            ).alias("docs")
+        )
+        .collect()
+    )
+    vals_by_key: dict[str, list] = {}
+    for row in sampled:
+        k = row["k"]
+        vals = []
+        for s in row["docs"]:
+            try:
+                d = json.loads(s)
+            except (TypeError, ValueError):
+                continue
+            if isinstance(d, dict) and d.get(k) is not None:
+                vals.append(d[k])
+        if vals:
+            vals_by_key[k] = vals
+    if not vals_by_key:
+        return registry
+    updated = dict(registry)
+    # feed-meta and engine-internal names are RESERVED: a payload
+    # key named 'op' or 'lsn' registered verbatim would collide with
+    # the feed column in normalize/stamping (ambiguous reference),
+    # and the poisoned registry would re-crash every replay —
+    # sanitize_unique renames such keys instead
+    name_map = sanitize_unique(
+        sorted(vals_by_key),
+        taken=set(updated) | set(KEY_COLS) | RESERVED_COLS,
+    )
+    for k in sorted(vals_by_key):
+        updated[name_map[k]] = {
+            "type": infer_token(vals_by_key[k]),
+            "source": k,
+        }
+    return updated
 
 
 @dataclass
@@ -145,18 +301,7 @@ class TranscriptsApplier:
 
     # ------------------------------------------------------- schema registry
     def load_registry(self) -> dict[str, dict]:
-        if os.path.exists(self.registry_path):
-            with open(self.registry_path) as fh:
-                raw = json.load(fh)
-            if not (isinstance(raw, dict) and raw.get("version") == 2):
-                raise ValueError(
-                    f"payload registry {self.registry_path} is not a "
-                    'version-2 registry ({"version": 2, "fields": '
-                    '{column: {"type": token, "source": key}}}); '
-                    "rewrite it in that form"
-                )
-            return raw["fields"]
-        return {k: dict(v) for k, v in BASE_PAYLOAD.items()}
+        return load_registry(self.registry_path)
 
     def save_registry(self, registry: dict[str, dict]) -> None:
         # newest-wins durable replace through the commit backend (ports
@@ -169,151 +314,6 @@ class TranscriptsApplier:
                 sort_keys=True,
             ).encode(),
         )
-
-    def extend_registry(
-        self, sample_src: DataFrame, registry: dict[str, dict]
-    ) -> dict[str, dict]:
-        """Discover, type, and persist newly-observed payload keys in a
-        CONSTANT number of Spark jobs (independent of how many keys
-        appear — VERDICT r2 #6). See :meth:`_count_and_discover` (job 1)
-        and :meth:`_extend_from_counts` (job 2)."""
-        _, counts = self._count_and_discover(sample_src, registry)
-        return self._extend_from_counts(sample_src, registry, counts)
-
-    def _count_and_discover(
-        self, sample_src: DataFrame, registry: dict[str, dict]
-    ) -> tuple[int, dict[str, int]]:
-        """ONE scan returning (row count, per-key counts of unknown
-        payload keys).
-
-        The discovery job tokenizes each payload's top-level KEYS once
-        (:func:`_payload_keys` — no value copies; factory-contention
-        A/B'd, see its docstring), explodes, counts per key — full
-        codegen, map-side combined, shuffles only (key, partial count);
-        known source keys are dropped from the collected counts. The
-        batch ROW count rides the same scan as a bare ``count(1)``
-        Observation: unlike round 2's regression (a
-        ``collect_set(json_object_keys(...))`` metric — the interpreted
-        CollectMetrics path burned ~7x codegen CPU,
-        DIAG_DEDUP.json), a constant-width count costs nothing on the
-        interpreted path, and fusing it here removes what used to be a
-        separate full pass over the persisted deduped batch (~2.5 GB of
-        cache traffic per 4M-event batch, BENCH_DETAIL stage metrics).
-
-        Grouping is per KEY (bounded by schema width), never per
-        key-combination (worst case 2^width) — safe for adversarial
-        payloads at scale."""
-        import uuid as _uuid
-
-        from pyspark.sql import Observation
-
-        known_sources = {f["source"] for f in registry.values()}
-        obs = Observation(f"dedup-count-{_uuid.uuid4().hex[:8]}")
-        # known keys and the NULL of a key-less payload are dropped on
-        # the driver, not filtered in the plan: the aggregate must stay
-        # non-empty whenever the batch has winners. An empty one lets
-        # AQE's empty-relation propagation re-plan both CollectMetrics
-        # nodes away (this one and the batch stats), leaving both
-        # Observations empty
-        counts = {
-            r["k"]: r["c"]
-            for r in sample_src.observe(obs, F.count(F.lit(1)).alias("n"))
-            .select(
-                F.explode_outer(_payload_keys("after_json")).alias("k")
-            )
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-            if r["k"] is not None and r["k"] not in known_sources
-        }
-        try:
-            n = int(obs.get["n"])
-        except Exception:
-            # a batch without winners: the empty aggregate is re-planned
-            # away with its CollectMetrics node
-            n = sample_src.count()
-        return n, counts
-
-    def _extend_from_counts(
-        self,
-        sample_src: DataFrame,
-        registry: dict[str, dict],
-        counts: dict[str, int],
-    ) -> dict[str, dict]:
-        """Job 2 (only when new keys exist): re-scan with a per-key
-        hash-sample rate (~4x oversample of the 100-value target) and a
-        bounded collect per key, then parse the sampled docs driver-side
-        for reference-parity type inference (``typeutils/datatype.go:
-        12-40``, sampling like ``protocol/discover.go:46-90``); key
-        names sanitized (SafeNameConversion semantics, utils.go:147-185)
-        before becoming columns.
-
-        A key observed only with null values (or only in losing events)
-        is deferred to a later batch with zero data loss — the winners
-        being applied don't carry it."""
-        if not counts:
-            return registry
-        oversample = 4 * _SAMPLE_PER_KEY
-        rate = F.create_map(
-            *[
-                F.lit(x)
-                for k, c in counts.items()
-                for x in (k, min(1.0, oversample / c))
-            ]
-        )
-        sampled = (
-            sample_src.select(
-                "after_json",
-                F.explode(_payload_keys("after_json")).alias("k"),
-            )
-            .filter(F.col("k").isin(*counts.keys()))
-            .filter(
-                (
-                    F.pmod(F.xxhash64("after_json", F.lit(42)), F.lit(1_000_000))
-                    / 1_000_000.0
-                )
-                < F.element_at(rate, F.col("k"))
-            )
-            .groupBy("k")
-            .agg(
-                F.slice(
-                    F.collect_list("after_json"), 1, _SAMPLE_PER_KEY
-                ).alias("docs")
-            )
-            .collect()
-        )
-        vals_by_key: dict[str, list] = {}
-        for row in sampled:
-            k = row["k"]
-            vals = []
-            for s in row["docs"]:
-                try:
-                    d = json.loads(s)
-                except (TypeError, ValueError):
-                    continue
-                if isinstance(d, dict) and d.get(k) is not None:
-                    vals.append(d[k])
-            if vals:
-                vals_by_key[k] = vals
-        if not vals_by_key:
-            return registry
-        updated = dict(registry)
-        # feed-meta and engine-internal names are RESERVED: a payload
-        # key named 'op' or 'lsn' registered verbatim would collide with
-        # the feed column in normalize/stamping (ambiguous reference),
-        # and the poisoned registry would re-crash every replay —
-        # sanitize_unique renames such keys instead
-        name_map = sanitize_unique(
-            sorted(vals_by_key),
-            taken=set(updated) | set(KEY_COLS) | RESERVED_COLS,
-        )
-        for k in sorted(vals_by_key):
-            updated[name_map[k]] = {
-                "type": infer_token(vals_by_key[k]),
-                "source": k,
-            }
-        self.save_registry(updated)
-        return updated
 
     # --------------------------------------------------------------- applier
     def __call__(self, batch: DataFrame, batch_id: int) -> Snapshot | None:
@@ -346,7 +346,7 @@ class TranscriptsApplier:
         # codegen) path, and a per-row JSON tokenize there cost ~7x the
         # codegen CPU and serialized this phase at 32 cores (measured,
         # DIAG_DEDUP.json) — discovery runs as a normal codegen job over
-        # the persisted deduped batch in extend_registry instead.
+        # the persisted deduped batch in count_and_discover instead.
         snap0 = self.table.snapshot()
         obs = Observation(f"cdc-stats-{uuid.uuid4().hex[:8]}")
         metrics = [
@@ -434,11 +434,8 @@ class TranscriptsApplier:
             # counts it (Observation), and discovers unknown payload keys
             # — what used to be dedup_count + registry job 1 as two full
             # passes is now one (VERDICT r3: cut bytes-per-event)
-            registry0 = self.load_registry()
             with span("apply.dedup_count"):
-                n_keys, new_key_counts = self._count_and_discover(
-                    deduped_raw, registry0
-                )
+                n_keys, key_counts = count_and_discover(deduped_raw)
             try:
                 stats = obs.get
                 if not stats or "event_count" not in stats:
@@ -494,9 +491,10 @@ class TranscriptsApplier:
             # materialized) survivors are parsed with; sampling the
             # persisted deduped set costs memory reads, never a source
             # rescan
+            registry0 = self.load_registry()
             with span("apply.extend_registry"):
-                registry = self._extend_from_counts(
-                    deduped_raw, registry0, new_key_counts
+                registry = extend_from_counts(
+                    deduped_raw, registry0, key_counts
                 )
             # P2 column exclusion happens BEFORE the parse: an excluded
             # payload field is never extracted, never typed, never lands
@@ -516,9 +514,10 @@ class TranscriptsApplier:
             with span("apply.widen_detect"):
                 flips = detect_widening(deduped_raw, specs)
             if flips:
-                for col, tok in flips.items():
-                    registry[col] = {**registry[col], "type": tok}
-                self.save_registry(registry)
+                registry = {
+                    **registry,
+                    **{c: {**registry[c], "type": t} for c, t in flips.items()},
+                }
                 specs = [
                     PayloadField(
                         col=s.col,
@@ -527,6 +526,9 @@ class TranscriptsApplier:
                     )
                     for s in specs
                 ]
+            if registry != registry0:
+                # the one registry write of the batch, before its commit
+                self.save_registry(registry)
             deduped = normalize_changes(
                 deduped_raw, specs, carry_cols=(SLOT_COL,)
             )

@@ -90,33 +90,21 @@ class ConversationRollup:
         self.rollup = rollup_table
         self.app_id = app_id
 
-    def refresh(
-        self, touched_conv_ids: list[str] | DataFrame, batch_id: int
-    ) -> None:
-        """``touched_conv_ids`` may be a list or a DataFrame with a
-        ``conv_id`` column (the applier passes the persisted dedup
-        output — touched-set extraction costs a memory scan, never a
-        driver-side collect, so a bulk batch touching millions of
-        conversations still never materializes ids on the driver)."""
+    def refresh(self, touched: DataFrame, batch_id: int) -> None:
+        """``touched`` is a DataFrame with a ``conv_id`` column (the
+        applier passes the persisted dedup output — touched-set
+        extraction costs a memory scan, never a driver-side collect, so
+        a bulk batch touching millions of conversations still never
+        materializes ids on the driver)."""
         app_id = self.app_id or "transcripts-rollup"
         prev = self.rollup.last_committed_batch(app_id)
         if prev is not None and batch_id <= prev:
             return  # replayed batch: rollup already reflects it
+        from gear5_spark.lake.merge import active
         from gear5_spark.operators.conversations import conversation_stats
 
-        spark = self.base.spark
-        from gear5_spark.lake.merge import active
-
-        if isinstance(touched_conv_ids, DataFrame):
-            touched = touched_conv_ids.select("conv_id").distinct()
-            base = self._pruned_base_df(touched)
-        else:
-            if not touched_conv_ids:
-                return
-            touched = spark.createDataFrame(
-                [(c,) for c in touched_conv_ids], "conv_id string"
-            )
-            base = self._pruned_base(touched_conv_ids)
+        touched = touched.select("conv_id").distinct()
+        base = self._pruned_base(touched)
         # soft-delete tables keep tombstones in read() — a tombstoned
         # turn is not a live turn, and a fully-tombstoned conversation
         # must register as gone
@@ -150,43 +138,23 @@ class ConversationRollup:
             order_guard=False,
             txn_app_id=app_id,
             txn_batch_id=batch_id,
-            lineage={
-                "batch_id": batch_id,
-                "event_count": (
-                    len(touched_conv_ids)
-                    if isinstance(touched_conv_ids, list)
-                    else None
-                ),
-            },
+            lineage={"batch_id": batch_id, "event_count": None},
         )
 
-    def _pruned_base(self, conv_ids: list[str]) -> DataFrame:
+    def _pruned_base(self, touched: DataFrame) -> DataFrame:
         """Bucket-pruned base read when the base table is bucketed by
         ``conv_id`` ALONE (a deliberate layout choice for rollup-heavy
         deployments): every turn of a touched conversation then lives in
         a computable bucket, so the refresh opens only those buckets.
-        Under the default full-key bucketing — which spreads hot
-        conversations across all buckets instead — a conversation's
-        turns can live anywhere, so the read falls back to a full scan
-        with predicate pushdown (conv_id row-group stats skip inside
-        files, especially with ``sort_columns`` clustering); per-batch
-        SHUFFLE work is O(touched) either way."""
-        snap = self.base.snapshot()
-        if bucket_columns_of(snap) == ["conv_id"]:
-            from gear5_spark.lake.xxh64 import bucket_of
-
-            n = snap.properties["n_buckets"]
-            buckets = sorted({bucket_of([str(c)], n) for c in conv_ids})
-            return self.base.read(snapshot=snap, buckets=buckets)
-        return self.base.read(snapshot=snap)
-
-    def _pruned_base_df(self, touched: DataFrame) -> DataFrame:
-        """DataFrame-input variant of :meth:`_pruned_base`: the touched
-        bucket SET (<= n_buckets ints) is computed distributively and
-        collected — O(n_buckets) driver rows however many conversations
-        the batch touched — so the conv_id-bucketed layout gets file
-        pruning on the applier's hot path too, not only on the
-        list-input path."""
+        The touched bucket SET (<= n_buckets ints) is computed
+        distributively and collected — O(n_buckets) driver rows however
+        many conversations the batch touched. Under the default full-key
+        bucketing — which spreads hot conversations across all buckets
+        instead — a conversation's turns can live anywhere, so the read
+        falls back to a full scan with predicate pushdown (conv_id
+        row-group stats skip inside files, especially with
+        ``sort_columns`` clustering); per-batch SHUFFLE work is
+        O(touched) either way."""
         snap = self.base.snapshot()
         if bucket_columns_of(snap) == ["conv_id"]:
             buckets = sorted(

@@ -115,6 +115,12 @@ def snapshot_load(
     return table
 
 
+def registry_path(checkpoint_dir: str) -> str:
+    """The payload registry of the pipeline checkpointed at
+    ``checkpoint_dir``."""
+    return os.path.join(checkpoint_dir, "payload_schema.json")
+
+
 def make_applier(
     table: LakeTable,
     checkpoint_dir: str,
@@ -125,7 +131,7 @@ def make_applier(
     return TranscriptsApplier(
         table=table,
         app_id=app_id,
-        registry_path=os.path.join(checkpoint_dir, "payload_schema.json"),
+        registry_path=registry_path(checkpoint_dir),
         **kwargs,
     )
 

@@ -30,6 +30,12 @@ def pipeline(tmp_path_factory, spark):
     return cfg, cfg_path
 
 
+def _write_config(path, **cfg) -> str:
+    with open(path, "w") as fh:
+        json.dump(cfg, fh)
+    return str(path)
+
+
 def _run(capsys, argv) -> tuple[int, dict]:
     rc = main(argv)
     out = capsys.readouterr().out.strip()
@@ -65,10 +71,64 @@ def test_discover_types_payload(capsys, pipeline):
     assert typed["ts"]["type"] == "epoch_seconds"  # configured schema wins
 
 
+def test_discover_missing_changelog_is_an_error_document(capsys, tmp_path):
+    cfg_path = _write_config(
+        tmp_path / "cfg.json", changelog_dir=str(tmp_path / "missing"),
+        table_dir=str(tmp_path / "table"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    rc, doc = _run(capsys, ["discover", "--config", cfg_path])
+    assert rc == 1
+    assert doc["type"] == "LOG" and doc["level"] == "ERROR"
+    assert "changelog_dir not found" in doc["message"]
+
+
+def test_discover_advertises_the_registry_read_writes(capsys, spark, tmp_path):
+    """``discover`` runs the applier's sampler: a reserved-name key (``op``)
+    gets the same sanitized column and a new numeric key the same token
+    as the registry ``read`` then writes, and discover writes nothing."""
+    from tests.test_inference import _write_log
+
+    base = {"role": "user", "text": "x", "ts": 1_700_000_000}
+    log = str(tmp_path / "log")
+    _write_log(log, [{**base, "op": "edit", "n_tokens": 10 + i} for i in range(20)])
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    cfg_path = _write_config(
+        tmp_path / "cfg.json", changelog_dir=log,
+        table_dir=str(tmp_path / "table"), checkpoint_dir=str(ckpt),
+        mode="bulk", n_buckets=4,
+    )
+    rc, doc = _run(capsys, ["discover", "--config", cfg_path])
+    assert rc == 0
+    assert list(ckpt.iterdir()) == []
+    stream = doc["streams"][0]
+    assert {"op", "n_tokens"} <= set(stream["payload_fields_observed"])
+    assert stream["sampled_records"] == 20
+    typed = stream["payload_fields_typed"]
+
+    rc, _ = _run(capsys, ["read", "--config", cfg_path])
+    assert rc == 0
+    with open(ckpt / "payload_schema.json") as fh:
+        written = json.load(fh)["fields"]
+    assert typed == written
+    assert written["n_tokens"] == {"type": "long", "source": "n_tokens"}
+    assert "op" not in written
+    assert [f["source"] for f in written.values()].count("op") == 1
+
+
+@pytest.mark.parametrize("flags", [["--warmup"], ["--repeats", "2"]])
+def test_read_has_no_benchmark_flags(flags, tmp_path):
+    with pytest.raises(SystemExit) as e:
+        main(["read", "--config", str(tmp_path / "cfg.json"), *flags])
+    assert e.value.code == 2
+
+
 def test_read_then_state(capsys, pipeline):
     _, cfg_path = pipeline
     rc, doc = _run(capsys, ["read", "--config", cfg_path])
     assert rc == 0 and doc["type"] == "STATE" and doc["rows"] > 0
+    assert "apply.merge" in doc["phases"]
     cfg, _ = pipeline
     rc, st = _run(capsys, ["state", "--table-dir", cfg["table_dir"]])
     assert rc == 0

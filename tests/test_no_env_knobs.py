@@ -1,6 +1,7 @@
 """The CDC path takes its settings from arguments, never from the
 environment: no module under gear5_spark/{pipeline,lake,operators,sources}
-reads os.environ or os.getenv. Static check, no Spark."""
+and neither the CLI nor the pipeline config reads os.environ or
+os.getenv. Static check, no Spark."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "gear5_spark"
 )
 PACKAGES = ("pipeline", "lake", "operators", "sources")
+MODULES = ("cli.py", "config.py")
 
 
 def _env_reads(tree: ast.AST) -> list[int]:
@@ -38,17 +40,22 @@ def test_guard_catches_env_reads():
         assert _env_reads(ast.parse(src)), src
 
 
-def test_cdc_path_reads_no_env():
-    found = []
+def _cdc_path_modules() -> list[str]:
+    paths = [os.path.join(ROOT, name) for name in MODULES]
     for pkg in PACKAGES:
         for dirpath, _, files in os.walk(os.path.join(ROOT, pkg)):
-            for name in sorted(files):
-                if not name.endswith(".py"):
-                    continue
-                path = os.path.join(dirpath, name)
-                with open(path) as fh:
-                    tree = ast.parse(fh.read(), filename=path)
-                found += [
-                    f"{os.path.relpath(path, ROOT)}:{n}" for n in _env_reads(tree)
-                ]
+            paths += [
+                os.path.join(dirpath, name)
+                for name in sorted(files)
+                if name.endswith(".py")
+            ]
+    return paths
+
+
+def test_cdc_path_reads_no_env():
+    found = []
+    for path in _cdc_path_modules():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        found += [f"{os.path.relpath(path, ROOT)}:{n}" for n in _env_reads(tree)]
     assert found == [], f"environment reads on the CDC path: {found}"
