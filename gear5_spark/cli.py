@@ -107,7 +107,9 @@ def cmd_discover(args) -> int:
         count_and_discover,
         extend_from_counts,
         load_registry,
+        malformed_key,
     )
+    from gear5_spark.operators.dedup import latest_per_key
     from gear5_spark.pipeline.runner import TRANSCRIPTS_SCHEMA, registry_path
     from gear5_spark.sources.changelog import read_changelog
 
@@ -122,14 +124,17 @@ def cmd_discover(args) -> int:
         return 1
     spark = _spark()
     # the applier's own sampler over the first --sample records; the
-    # checkpoint pins the sample, so both of its jobs see the same rows
+    # checkpoint pins the sample, so every job below sees the same rows
     sample = (
         read_changelog(spark, cfg.changelog_dir)
         .limit(args.sample)
         .localCheckpoint()
     )
-    n, counts = count_and_discover(sample)
-    registry = extend_from_counts(sample, registry, counts)
+    # the applier types only each batch's last-write-wins winners, so a
+    # key carried only by losing (or unkeyable) events is not advertised
+    winners = latest_per_key(sample.filter(~malformed_key()), KEY_COLS)
+    _, counts = count_and_discover(winners)
+    registry = extend_from_counts(winners, registry, counts)
     catalog = {
         "type": "CATALOG",
         "streams": [
@@ -146,7 +151,7 @@ def cmd_discover(args) -> int:
                 "payload_fields_observed": sorted(counts),
                 "payload_fields_typed": registry,
                 "payload_fields_known": sorted(BASE_PAYLOAD),
-                "sampled_records": n,
+                "sampled_records": sample.count(),
             }
         ],
     }

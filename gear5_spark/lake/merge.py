@@ -37,9 +37,10 @@ The delete policy is the table's ``delete_mode`` property
 delete winners, ``soft`` keeps them as tombstones.
 
 Scale properties:
-- only *affected buckets* (those containing a batched key) are read and
-  rewritten — copy-on-write amplification is O(affected buckets), not
-  O(table); file-level pruning comes from manifest bucket metadata;
+- only *affected buckets* (those containing a batched key), widened to
+  the whole slots the batch is placed on, are read and rewritten —
+  copy-on-write amplification is O(affected slots), not O(table);
+  file-level pruning comes from manifest bucket metadata;
 - one join formulation: both sides are placed by the table
   (``LakeTable.place``) on the same slots, and the full-outer join on
   ``[_pslot, *key]`` builds a shuffled hash table over the (one row per
@@ -136,9 +137,14 @@ def merge_into(
     stage shuffled 2.7 GB with a key-shuffled join and a placing write,
     ~0.8 GB co-partitioned.
 
-    On a table with resident merge-on-read deltas the rewritten bucket
-    set widens to the whole range of every delta file it touches, so
-    range files are always dropped whole.
+    The rewritten bucket set widens to the whole range of every file it
+    touches (merge-on-read deltas, earlier range-placed batches), so
+    range files are always dropped whole. When the placement's slots
+    group whole buckets (a batch placed at a shuffle width below the
+    bucket count) it also widens to whole slots: each slot writes one
+    file over its bucket range, which replaces every file of that
+    range. A batch touching one bucket of a 32-bucket table on a
+    width-8 session therefore rewrites that bucket's slot of four.
     """
     snap = table.snapshot()
     soft = delete_mode_of(snap) == "soft"
@@ -203,9 +209,10 @@ def merge_into(
         affected = sorted(
             r[0] for r in keyed.select(BUCKET_COL).distinct().collect()
         )
-    # rewrite whole files only: a delta holding a bucket range drags
-    # its other buckets into the rewrite
-    affected_set = whole_file_scope(snap.files, affected)
+    # rewrite whole files only: a file holding a bucket range drags its
+    # other buckets into the rewrite, and so does a slot that groups
+    # whole buckets — its one new file replaces every file of its range
+    affected_set = whole_file_scope(snap.files, affected, pre_placed)
     affected = sorted(affected_set)
     target_files = [f for f in snap.files if touches(f, affected_set)]
     if not target_files:

@@ -14,7 +14,7 @@ Iceberg/Hudi answer, built here on the same manifest format:
   several whole buckets when the table has more buckets than the
   session has shuffle partitions (its entry records the inclusive
   ``bucket_range``). An unplaced batch is placed by the write, one slot
-  per bucket; base files stay one per bucket.
+  per bucket; compaction writes its base files one per bucket.
 - ``LakeTable.read`` — when a snapshot holds deltas, reconstruct: union
   base + deltas, latest-per-key by ``(_cdc_lsn, file kind)``, drop rows
   whose winning op is delete. Read cost grows with resident deltas.

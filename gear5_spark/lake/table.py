@@ -13,7 +13,8 @@ This module is the half the reference leaves open, built Iceberg-style:
   real deployment this maps to an Iceberg catalog's atomic swap);
 - data files are hash-bucketed by key (``bucket(n_buckets, bucket_columns)``)
   so MERGE rewrites only affected buckets (copy-on-write at bucket
-  granularity) and keyed scans prune files;
+  granularity, or at slot granularity when a batch is placed on fewer
+  slots than buckets) and keyed scans prune files;
 - schema lives in the manifest; evolution is additive-only with the
   reference's type-widening lattice (``/root/reference/typeutils/fields.go:
   18-28``) enforced by :mod:`gear5_spark.operators.typing`;
@@ -31,7 +32,8 @@ data-file entries into an immutable per-commit manifest file
 which of its buckets are still current (all pruning/rewriting in this
 engine is bucket-granular and keeps or drops whole files, so bucket sets
 are exact liveness). A data-file entry holds one bucket (``bucket``) or,
-for a merge-on-read delta placed by slot, an inclusive bucket range
+for a file written by a placement slot that groups buckets (either sink
+on a session narrower than the bucket count), an inclusive bucket range
 (``bucket_range: [lo, hi]``); :func:`entry_buckets` is the one reader of
 both. Engines that predate range entries must not read a table holding
 them (they would fail on the missing ``bucket`` key). Commit
@@ -181,19 +183,28 @@ def _buckets_of(files: list[dict[str, Any]]) -> list[int]:
     return sorted({b for f in files for b in entry_buckets(f)})
 
 
-def whole_file_scope(files: list[dict[str, Any]], buckets) -> set[int]:
+def whole_file_scope(
+    files: list[dict[str, Any]], buckets, placement: Placement | None = None
+) -> set[int]:
     """Widen ``buckets`` until no file straddles its edge: every file
     holding one of the buckets holds only buckets in the result.
 
     Rewrite paths (compaction, ``delete_where``, copy-on-write MERGE)
     drop and rewrite whole buckets; widening their scope this way keeps
-    liveness whole-file, so a range file is never half-dropped."""
+    liveness whole-file, so a range file is never half-dropped.
+
+    ``placement``: the placement the rewrite writes with. When its slots
+    group whole buckets, each slot writes one file over its bucket
+    range, so the scope also widens to whole slots — that file then
+    replaces every file of its range."""
+    groups = [entry_buckets(f) for f in files]
+    if placement is not None:
+        groups += placement.slot_buckets()
     scope = set(buckets)
     grew = True
     while grew:
         grew = False
-        for f in files:
-            bs = entry_buckets(f)
+        for bs in groups:
             if not scope.isdisjoint(bs) and not scope.issuperset(bs):
                 scope.update(bs)
                 grew = True
@@ -217,6 +228,13 @@ class Placement:
         (``n_slots < n_buckets``); the bucket itself otherwise (each
         slot then holds part of one bucket)."""
         return bucket * min(self.n_slots, self.n_buckets) // self.n_buckets
+
+    def slot_buckets(self) -> list[range]:
+        """The contiguous buckets of each slot (:meth:`slot_of`); one
+        bucket each when slots sub-split buckets."""
+        k = min(self.n_slots, self.n_buckets)
+        n = self.n_buckets
+        return [range(-(-s * n // k), -(-(s + 1) * n // k)) for s in range(k)]
 
 
 # session-wide cache: slot-count -> identity partition map (pure function
@@ -717,17 +735,32 @@ class LakeTable:
                 f"version {snap.version} already committed"
             ) from e
 
-    def placement(self, snap: Snapshot, n_slots: int | None = None) -> Placement:
+    @staticmethod
+    def placement(
+        snap: Snapshot, n_slots: int | None = None, sink_mode: str | None = None
+    ) -> Placement:
         """The :class:`Placement` that :meth:`place` partitions by for
-        ``n_slots`` requested slots under ``snap`` (metadata only).
+        ``n_slots`` requested slots under ``snap`` (metadata only, no
+        Spark).
 
         ``n_slots`` at or above the bucket count sub-splits each bucket
         into ``q = n_slots // n_buckets`` slots (``n_buckets * q`` in
         all; each slot holds part of one bucket). Below it, slots group
         contiguous whole buckets: ``slot = bucket * n_slots // n_buckets``.
-        Default: one slot per bucket."""
+        Default: one slot per bucket.
+
+        ``sink_mode`` applies the applier's rule for a batch placed at
+        the session's shuffle width ``n_slots``: copy-on-write (``cow``)
+        takes the width as is — sub-split above the bucket count, whole
+        bucket ranges below it, where a MERGE then rewrites whole slots
+        of ``n_buckets / width`` buckets (``whole_file_scope``).
+        Merge-on-read (``mor``) caps it at the bucket count: every delta
+        file is read back by every reconstruct until compaction, so a
+        bucket never gets more than one delta file per batch."""
         n = snap.properties["n_buckets"]
         want = n if n_slots is None else max(1, int(n_slots))
+        if sink_mode == "mor":
+            want = min(want, n)
         q = max(1, want // n)
         return Placement(n, tuple(bucket_columns_of(snap)), min(want, n * q))
 
@@ -750,9 +783,10 @@ class LakeTable:
         files per bucket per commit) that is the fine slot itself; the
         sub-key hashes the full bucket columns, so all events of one key
         share a slot — a co-located groupBy on (slot, key) is
-        shuffle-free. With fewer slots than buckets (merge-on-read sized
-        to the shuffle width) each slot holds contiguous whole buckets
-        and writes one file covering that bucket range."""
+        shuffle-free. With fewer slots than buckets (either sink on a
+        session narrower than the bucket count) each slot holds
+        contiguous whole buckets and writes one file covering that
+        bucket range."""
         p = self.placement(snap, n_slots)
         q = max(1, p.n_slots // p.n_buckets)
         fine = F.col(BUCKET_COL) * q

@@ -81,12 +81,14 @@ def span(name: str):
 
 def stage_metrics(spark, prefix: str = "") -> dict[str, dict[str, float]]:
     """Per-phase Spark stage metrics (task time, CPU, GC, shuffle bytes,
-    spill, input, task-time max for skew) aggregated over the stages of
-    every job launched inside a tracked span. Reads the UI REST API —
-    requires spark.ui.enabled=true; returns {} otherwise. This is the
-    evidence layer for 'phase X does not scale': it separates engine
-    causes (shuffle, spill, skewed tasks, GC) from host causes (wall
-    time >> task time at every width)."""
+    spill, input, task count, task-time max for skew) aggregated over
+    the stages of every job launched inside a tracked span.
+    ``deser_cpu_sec`` is the executor CPU spent deserializing tasks, a
+    fixed cost per task that ``cpu_sec`` (task-body CPU) leaves out.
+    Reads the UI REST API — requires spark.ui.enabled=true; returns {}
+    otherwise. This is the evidence layer for 'phase X does not scale':
+    it separates engine causes (shuffle, spill, skewed tasks, GC) from
+    host causes (wall time >> task time at every width)."""
     import json as _json
     import urllib.request
 
@@ -121,6 +123,7 @@ def stage_metrics(spark, prefix: str = "") -> dict[str, dict[str, float]]:
             {
                 "task_time_sec": 0.0,
                 "cpu_sec": 0.0,
+                "deser_cpu_sec": 0.0,
                 "gc_sec": 0.0,
                 "shuffle_read_mb": 0.0,
                 "shuffle_write_mb": 0.0,
@@ -134,6 +137,7 @@ def stage_metrics(spark, prefix: str = "") -> dict[str, dict[str, float]]:
         )
         a["task_time_sec"] += s.get("executorRunTime", 0) / 1e3
         a["cpu_sec"] += s.get("executorCpuTime", 0) / 1e9
+        a["deser_cpu_sec"] += s.get("executorDeserializeCpuTime", 0) / 1e9
         a["gc_sec"] += s.get("jvmGcTime", 0) / 1e3
         a["shuffle_read_mb"] += s.get("shuffleReadBytes", 0) / 2**20
         a["shuffle_write_mb"] += s.get("shuffleWriteBytes", 0) / 2**20

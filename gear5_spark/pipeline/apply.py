@@ -361,10 +361,10 @@ class TranscriptsApplier:
             # (null-key) row's hash bucket would otherwise be read and
             # rewritten for nothing every quarantine-bearing batch
             F.collect_set(
-                F.when(~_malformed_key(), self.table.bucket_expr(snap0))
+                F.when(~malformed_key(), self.table.bucket_expr(snap0))
             ).alias("buckets"),
             F.sum(
-                F.when(_malformed_key(), 1).otherwise(0)
+                F.when(malformed_key(), 1).otherwise(0)
             ).alias("malformed_count"),
         ]
         # file provenance for per-partition lineage: resolved from the
@@ -385,7 +385,7 @@ class TranscriptsApplier:
         # dead-letter routing: events that cannot be keyed are excluded
         # from the apply and (optionally) appended to a quarantine sink —
         # they are still counted in lineage for audit
-        valid = observed.filter(~_malformed_key())
+        valid = observed.filter(~malformed_key())
         # dedup BEFORE normalize: the JSON of an event that loses the
         # last-write-wins race is never parsed — at high update ratios
         # this cuts from_json work to O(distinct keys), not O(events).
@@ -404,18 +404,19 @@ class TranscriptsApplier:
         # front of the same placement. The winner cache is built
         # uncompressed (session conf, see session.get_spark).
         #
-        # The placement is sized to the session's shuffle width. CoW
-        # sub-splits each bucket when the width exceeds the bucket count
-        # (lifting dedup/parse parallelism; up to width // n_buckets
-        # files per bucket per commit). MoR never does: every delta file
-        # is read back by EVERY reconstruct until compaction. Instead,
-        # when the table has more buckets than the width, MoR groups
-        # contiguous whole buckets into `width` slots — every stage
-        # after this exchange, and the delta write, then runs `width`
-        # tasks and writes `width` files, not one per bucket.
-        parts = shuffle_width(batch.sparkSession)
-        n_b = snap0.properties["n_buckets"]
-        want = min(parts, n_b) if self.sink_mode == "mor" else max(parts, n_b)
+        # The placement is sized to the session's shuffle width, so every
+        # stage after this exchange, and the write, runs `width` tasks
+        # (LakeTable.placement holds the rule). Above the bucket count
+        # CoW sub-splits each bucket (up to width // n_buckets files per
+        # bucket per commit); MoR never does, since every delta file is
+        # read back by EVERY reconstruct until compaction. Below it both
+        # sinks group contiguous whole buckets into `width` slots and
+        # write one range file per slot, not one file per bucket; the
+        # trade-off is CoW's: a small batch rewrites whole slots of
+        # n_buckets / width buckets each (merge_into).
+        want = self.table.placement(
+            snap0, shuffle_width(batch.sparkSession), self.sink_mode
+        ).n_slots
         if self.salt_buckets > 1:
             valid = salted_pre_reduce(valid, KEY_COLS, self.salt_buckets)
         placed, pre_placed = self.table.place(valid, snap0, want)
@@ -456,7 +457,7 @@ class TranscriptsApplier:
                 # idempotent per batch: the dead-letter write is OUTSIDE
                 # the atomic commit, so a crash-then-replay would append
                 # duplicates — overwrite into a batch_id subdir instead
-                batch.filter(_malformed_key()).drop("_src_file").write.mode(
+                batch.filter(malformed_key()).drop("_src_file").write.mode(
                     "overwrite"
                 ).parquet(
                     os.path.join(self.quarantine_dir, f"batch_id={batch_id}")
@@ -621,7 +622,7 @@ def _batch_lineage(batch_id: int, stats: dict) -> dict:
     }
 
 
-def _malformed_key():
+def malformed_key():
     """Events that cannot participate in the keyed apply (null key parts
     — a feed bug; the reference would emit them as-is, we quarantine)."""
     return F.col("conv_id").isNull() | F.col("turn_idx").isNull()

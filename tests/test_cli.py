@@ -117,6 +117,66 @@ def test_discover_advertises_the_registry_read_writes(capsys, spark, tmp_path):
     assert [f["source"] for f in written.values()].count("op") == 1
 
 
+def test_discover_types_winners_only(capsys, spark, tmp_path):
+    """A key carried only by an event that loses last-write-wins is never
+    typed by the applier, so ``discover`` does not advertise it either;
+    ``sampled_records`` still counts the raw sample."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gen_fixtures import CHANGE_SCHEMA
+
+    base = {"role": "user", "text": "x", "ts": 1_700_000_000}
+    # (conv_id, lsn, payload): c0's first event carries `mood` and loses
+    # to its second; c1 and c2 carry `n_tokens` on their winners
+    events = [
+        ("c0", 0, {**base, "mood": "calm"}),
+        ("c1", 1, {**base, "n_tokens": 5}),
+        ("c0", 2, {**base, "text": "y"}),
+        ("c2", 3, {**base, "n_tokens": 7}),
+    ]
+    n = len(events)
+    log = tmp_path / "log"
+    log.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "lsn": [e[1] for e in events],
+                "txn_id": [0] * n,
+                "txn_seq": [e[1] for e in events],
+                "op": ["insert", "insert", "update", "insert"],
+                "ts_ms": [1_700_000_000_000 + e[1] for e in events],
+                "conv_id": [e[0] for e in events],
+                "turn_idx": [0] * n,
+                "after_json": [json.dumps(e[2]) for e in events],
+            },
+            schema=CHANGE_SCHEMA,
+        ),
+        str(log / "chunk-000000.parquet"),
+    )
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    cfg_path = _write_config(
+        tmp_path / "cfg.json", changelog_dir=str(log),
+        table_dir=str(tmp_path / "table"), checkpoint_dir=str(ckpt),
+        mode="bulk", n_buckets=4,
+    )
+    rc, doc = _run(capsys, ["discover", "--config", cfg_path])
+    assert rc == 0
+    stream = doc["streams"][0]
+    assert stream["sampled_records"] == n
+    typed = stream["payload_fields_typed"]
+    assert "mood" not in typed
+    assert typed["n_tokens"] == {"type": "long", "source": "n_tokens"}
+
+    rc, _ = _run(capsys, ["read", "--config", cfg_path])
+    assert rc == 0
+    with open(ckpt / "payload_schema.json") as fh:
+        written = json.load(fh)["fields"]
+    assert "mood" not in written
+    assert typed == written
+
+
 @pytest.mark.parametrize("flags", [["--warmup"], ["--repeats", "2"]])
 def test_read_has_no_benchmark_flags(flags, tmp_path):
     with pytest.raises(SystemExit) as e:
