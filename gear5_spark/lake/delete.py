@@ -13,9 +13,10 @@ Plan shape (scales to 100 TB):
    (bucket ids ride the data, so this is a scan + tiny distinct);
 3. only those buckets rewrite (widened to the whole range of every MoR
    delta file they touch): their rows re-filtered and written as fresh
-   base files (MoR deltas of the bucket fold in — reconstruct
-   semantics, same as compaction), every other file is carried into the
-   new snapshot untouched;
+   base files (MoR deltas of the bucket fold in through
+   ``mor.reconstruct`` — the copy-on-write guarded merge placed at the
+   MoR slot count, as in compaction), every other file is carried into
+   the new snapshot untouched;
 4. one atomic commit, lineage records the logical delete count.
 
 Null semantics are SQL DELETE's: a row deletes only when the predicate

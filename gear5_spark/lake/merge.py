@@ -20,13 +20,16 @@ that picks the winning side, so the join executes once.
   *order-insensitive across micro-batches* for live rows (replays,
   reordered batches and a change log older than a loaded snapshot can
   never regress a row), strictly stronger than the reference's reliance
-  on serial WAL order (``pkg/waljs/waljs.go:332-348``). Merge-on-read
-  ``reconstruct`` orders by the same rule. Caveat: on a ``hard`` delete
-  table the delete also removes the key's LSN watermark, so a REORDERED
-  older update arriving after the delete re-inserts the row — full
-  order-insensitivity across deletes needs a ``soft`` table (tombstones
-  keep the watermark). The engine's own feeds deliver batches in
-  checkpoint order, where hard deletes are safe.
+  on serial WAL order (``pkg/waljs/waljs.go:332-348``). The rule is
+  :func:`lww_order`, and merge-on-read reads and compaction
+  (``mor.reconstruct``) run this same guarded plan, placed at the
+  merge-on-read slot count, with each key's winning delta as the
+  batch side. Caveat: on a ``hard`` delete table the delete also
+  removes the key's LSN watermark, so a REORDERED older update arriving
+  after the delete re-inserts the row — full order-insensitivity across
+  deletes needs a ``soft`` table (tombstones keep the watermark). The
+  engine's own feeds deliver batches in checkpoint order, where hard
+  deletes are safe.
 - ``order_guard=False``: the same plan with the guard set to true —
   batch-wins. The conversation rollup uses it: its recompute is
   authoritative and its ``_cdc_lsn`` is a per-applier batch id, not a
@@ -53,7 +56,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -214,48 +217,24 @@ def merge_into(
     # whole buckets — its one new file replaces every file of its range
     affected_set = whole_file_scope(snap.files, affected, pre_placed)
     affected = sorted(affected_set)
-    target_files = [f for f in snap.files if touches(f, affected_set)]
-    if not target_files:
+    if any(touches(f, affected_set) for f in snap.files):
+        # one explicit shuffle of the target to the batch's slot layout;
+        # leading the equi-join with the (key-dependent) slot makes the
+        # join exchange-free on both sides and its output write-placed
+        target, _ = table.place(
+            table.read(snapshot=snap, buckets=affected, with_internal=True),
+            snap,
+            pre_placed.n_slots,
+        )
+        new_data = _guarded_merge(
+            target, keyed, [SLOT_COL, *key_cols], key_cols, op_col, soft,
+            order_guard, write_schema,
+        )
+    else:
         # nothing to merge against (bootstrap load / untouched buckets):
         # skip the join entirely — dedup output IS the new bucket content
         upserts = keyed if soft else keyed.filter(F.col(op_col) != "delete")
         new_data = _project(upserts, write_schema)
-        try:
-            _, new_entries = table.write_data_files(
-                new_data, snap=snap, pre_placed=pre_placed
-            )
-        finally:
-            if affected_buckets is None:
-                keyed.unpersist()
-        _check_declared_buckets(new_entries)
-        new_snap = table.commit(
-            files=list(snap.files) + new_entries,
-            schema=evolved,
-            txn_app_id=txn_app_id,
-            txn_batch_id=txn_batch_id,
-            lineage=lineage,
-            basis=snap,
-        )
-        return new_snap, MergeStats(
-            affected_buckets=affected,
-            rewritten_files=len(new_entries),
-            kept_files=len(snap.files),
-            schema_changes=changes,
-        )
-
-    # one explicit shuffle of the target to the batch's slot layout;
-    # leading the equi-join with the (key-dependent) slot makes the join
-    # exchange-free on both sides and its output write-placed
-    target, _ = table.place(
-        table.read(snapshot=snap, buckets=affected, with_internal=True),
-        snap,
-        pre_placed.n_slots,
-    )
-    new_data = _guarded_merge(
-        target, keyed, [SLOT_COL, *key_cols], key_cols, op_col, soft,
-        order_guard, write_schema,
-    )
-
     try:
         _, new_entries = table.write_data_files(
             new_data, snap=snap, pre_placed=pre_placed
@@ -281,6 +260,22 @@ def merge_into(
     )
 
 
+def lww_order(lsn: Column, newer: bool) -> Column:
+    """The one last-write-wins order of a change with LSN ``lsn`` (the
+    greater wins); ``newer`` marks the side that wins ties (batch or
+    delta rows; stored rows pass False). With the LSN read as a long, a
+    newer change without one wins, a stored row without one loses, and
+    equal LSNs go to the newer side. The merge guard compares a batch
+    row's order with the stored row's; merge-on-read's dedup picks each
+    key's winning delta by it."""
+    n = lsn.try_cast("long")
+    return F.struct(
+        (F.lit(newer) & n.isNull()).alias("unnumbered"),
+        F.coalesce(n, F.lit(-(2**63))).alias("lsn"),
+        F.lit(newer).alias("newer"),
+    )
+
+
 def _guarded_merge(
     target: DataFrame,
     keyed_batch: DataFrame,
@@ -293,8 +288,11 @@ def _guarded_merge(
 ) -> DataFrame:
     """Full-outer merge with LSN guard on ``join_cols`` (no exchange
     when both sides arrive co-partitioned on a leading slot column — see
-    ``merge_into``). ``soft`` keeps delete winners as tombstones;
-    ``order_guard=False`` sets the guard to true (batch-wins).
+    ``merge_into``): a batch row wins when its :func:`lww_order` is
+    greater than the stored row's. ``soft`` keeps delete winners as
+    tombstones; ``order_guard=False`` sets the guard to true
+    (batch-wins). Copy-on-write MERGE, merge-on-read reads and
+    compaction (``mor.reconstruct``) all run this plan.
 
     The (one-row-per-key, post-dedup) batch side is hinted as a
     shuffled-hash build instead of sort-merge — per-partition hash
@@ -313,13 +311,11 @@ def _guarded_merge(
 
     # the documented batch contract allows any SUBSET of target columns:
     # referencing a struct field neither side carries would fail at plan
-    # time, so the guard degrades to batch-wins (same as the coalesce
-    # fallback for NULL lsn) when either side lacks the ordering column
+    # time, so the guard degrades to batch-wins (as lww_order does for a
+    # NULL batch lsn) when either side lacks the ordering column
     if order_guard and CDC_LSN in t_payload and CDC_LSN in b_payload:
-        guard = F.coalesce(
-            F.col(f"_b.{CDC_LSN}").try_cast("long")
-            >= F.col(f"_t.{CDC_LSN}").try_cast("long"),
-            F.lit(True),
+        guard = lww_order(F.col(f"_b.{CDC_LSN}"), True) > lww_order(
+            F.col(f"_t.{CDC_LSN}"), False
         )
     else:
         guard = F.lit(True)

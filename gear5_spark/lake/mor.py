@@ -8,20 +8,25 @@ Iceberg/Hudi answer, built here on the same manifest format:
 - ``merge_delta``  — write the deduped batch AS-IS as *delta* files
   (manifest entries carry ``kind: delta``); base files untouched.
   Write cost per batch: O(batch), not O(table). The applier places
-  every batch, salted or not, by contiguous bucket range
-  (``LakeTable.place``), at most one slot per shuffle partition, so a
-  batch writes at most that many delta files and a delta file holds
-  several whole buckets when the table has more buckets than the
-  session has shuffle partitions (its entry records the inclusive
-  ``bucket_range``). An unplaced batch is placed by the write, one slot
-  per bucket; compaction writes its base files one per bucket.
-- ``LakeTable.read`` — when a snapshot holds deltas, reconstruct: union
-  base + deltas, latest-per-key by ``(_cdc_lsn, file kind)``, drop rows
-  whose winning op is delete. Read cost grows with resident deltas.
-- ``compact``      — fold deltas into base per bucket (the CoW merge path
-  reused), bounding read amplification; the applier auto-compacts every
-  ``compact_every`` batches. Like every rewrite, it widens its bucket
-  scope to whole range files.
+  every batch at the MoR slot count (``LakeTable.placement``), so a
+  batch writes at most that many delta files, each holding a
+  contiguous ``bucket_range`` when slots group buckets.
+- ``LakeTable.read`` — when a snapshot holds deltas, ``reconstruct``:
+  the copy-on-write guarded merge (``merge._guarded_merge``) of the
+  base rows with each key's winning delta, both placed at the MoR slot
+  count. One last-write-wins rule (``merge.lww_order``) and one delete
+  policy serve both sinks. Read cost grows with resident deltas.
+- ``compact``      — the same plan, written as base files one per slot
+  (deltas folded in), bounding read amplification; the applier
+  auto-compacts every ``compact_every`` batches. Like every rewrite, it
+  widens its bucket scope to whole range files and whole slots.
+
+Caveat: among deltas a change without a numeric LSN wins, as a CoW
+batch row does, so the result can depend on when compaction runs. A
+NULL-LSN delta followed by a numbered delta to the same key reads as
+the NULL-LSN one until compaction, but as the numbered one (CoW's
+answer) when compaction ran between them. The engine's own feeds
+always carry numeric LSNs.
 
 Exactly-once carries over unchanged: delta commits go through the same
 atomic manifest publish + txn ledger.
@@ -31,11 +36,11 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gear5_spark.lake.merge import _FEED_META
+from gear5_spark.lake.merge import _FEED_META, _guarded_merge, _project, lww_order
 from gear5_spark.lake.table import (
     BUCKET_COL,
     CDC_LSN,
@@ -45,10 +50,13 @@ from gear5_spark.lake.table import (
     Snapshot,
     delete_mode_of,
     entry_buckets,
+    read_file_entries,
     touches,
     whole_file_scope,
 )
+from gear5_spark.operators.dedup import latest_per_key
 from gear5_spark.operators.typing import merge_schemas
+from gear5_spark.parallel import shuffle_width
 
 OP_COL = "_op"
 
@@ -85,18 +93,11 @@ def merge_delta(
         snap.schema, T.StructType(batch_fields), allow_widen=True
     )
 
-    keyed = batch.withColumn(BUCKET_COL, table.bucket_expr(snap))
-    have = set(keyed.columns)
-    cols = [
-        (
-            F.col(f.name).cast(f.dataType)
-            if f.name in have
-            else F.lit(None).cast(f.dataType)
-        ).alias(f.name)
-        for f in evolved.fields
-    ]
-    delta = keyed.select(
-        *cols, F.col(op_col).alias(OP_COL), F.col(BUCKET_COL)
+    delta = _project(
+        batch.withColumn(BUCKET_COL, table.bucket_expr(snap)).withColumn(
+            OP_COL, F.col(op_col)
+        ),
+        _delta_schema(evolved),
     )
     _, entries = table.write_data_files(delta, snap=snap, pre_placed=pre_placed)
     for e in entries:
@@ -111,70 +112,71 @@ def merge_delta(
     )
 
 
+def _delta_schema(schema: T.StructType) -> T.StructType:
+    return T.StructType(
+        list(schema.fields)
+        + [
+            T.StructField(BUCKET_COL, T.IntegerType()),
+            T.StructField(OP_COL, T.StringType()),
+        ]
+    )
+
+
+def _placement(table: LakeTable, snap: Snapshot) -> Placement:
+    return table.placement(snap, shuffle_width(table.spark), "mor")
+
+
 def reconstruct(
     table: LakeTable,
     snap: Snapshot,
     files: list[dict[str, Any]],
     with_internal: bool = False,
     buckets: set[int] | None = None,
+    where: Column | None = None,
 ) -> DataFrame:
     """Merge base + delta files into the logical current state.
 
-    One keyed shuffle (max_by over ``(_cdc_lsn, delta-wins-ties)``) —
-    identical machinery to the micro-batch dedup, applied at read time.
-    ``buckets``: reconstruct only these buckets' rows (the caller read
-    range files for some of their buckets); ``files`` must hold every
-    file of each of them."""
+    The deltas reduce to one winner per key with the dedup operator
+    (``max_by`` over ``lww_order``), then run the copy-on-write guarded
+    merge against the base rows. Both sides are placed on the MoR slots,
+    so the dedup and the join need no further exchange: the join builds
+    its hash table over the winners and streams base rows past it,
+    never sorting or aggregating them. ``buckets``: reconstruct only
+    these buckets' rows (the caller read range files for some of their
+    buckets); ``files`` must hold every file of each of them. ``where``:
+    a key-column predicate applied to both sides before the merge."""
     key_cols = snap.properties["key_columns"]
-    read_schema = T.StructType(
-        list(snap.schema.fields)
-        + [
-            T.StructField(BUCKET_COL, T.IntegerType(), True),
-            T.StructField(OP_COL, T.StringType(), True),
-        ]
-    )
-    from gear5_spark.lake.table import read_file_entries
+    n_slots = _placement(table, snap).n_slots
 
-    # era-aware read (in-place widening): base/delta files written
-    # before a widen commit carry narrower physical types — group by
-    # era, cast up, union (see table.read_file_entries)
-    df = read_file_entries(
-        table.spark, table.table_dir, files, read_schema, buckets
-    )
-    # ordering mirrors the CoW guard (merge.py): a NULL or unparseable
-    # LSN on a DELTA row wins (CoW: coalesce(b>=t, True) makes the
-    # batch win whenever either LSN is NULL/unparseable), a NULL or
-    # unparseable LSN on a BASE row loses, ties prefer delta. Among
-    # multiple no-LSN deltas the pick is arbitrary — unreachable from
-    # the engine's own feed, whose normalize types lsn numerically.
-    is_delta = F.col(OP_COL).isNotNull()
-    lsn_num = F.col(CDC_LSN).try_cast("long")
-    ord_expr = F.struct(
-        F.when(is_delta & lsn_num.isNull(), 1)
-        .otherwise(0)
-        .alias("o0"),
-        F.coalesce(lsn_num, F.lit(-1)).alias("o1"),
-        F.when(is_delta, 1).otherwise(0).alias("o2"),
-    )
-    payload_cols = [c for c in df.columns if c not in key_cols]
-    winner = df.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload_cols]), ord_expr).alias("_p")
-    )
-    flat = winner.select(
-        *key_cols, *[F.col(f"_p.{c}").alias(c) for c in payload_cols]
-    )
-    if delete_mode_of(snap) == "soft":
-        # soft-delete tables keep delete winners as tombstones — the
-        # row's `_cdc_deleted_at` is already stamped by normalize;
-        # readers filter with merge.active() (same contract as CoW soft)
-        live = flat
-    else:
-        live = flat.filter(
-            F.coalesce(F.col(OP_COL) != "delete", F.lit(True))
+    def placed(kind_files, schema):
+        # era-aware read (in-place widening, table.read_file_entries)
+        df = read_file_entries(
+            table.spark, table.table_dir, kind_files, schema, buckets
         )
+        if where is not None:
+            df = df.filter(where)
+        return table.place(df, snap, n_slots)[0]
+
+    deltas = placed(
+        [f for f in files if f.get("kind") == "delta"], _delta_schema(snap.schema)
+    )
+    write_schema = table._read_schema(snap)
+    base = placed([f for f in files if f.get("kind") != "delta"], write_schema)
+    lsn = F.col(CDC_LSN) if CDC_LSN in snap.schema.names else F.lit(None)
+    winners = latest_per_key(
+        deltas.withColumn("_lww", lww_order(lsn, True)),
+        key_cols,
+        ("_lww",),
+        co_group_cols=[SLOT_COL],
+    ).drop("_lww")
+    soft = delete_mode_of(snap) == "soft"
+    merged = _guarded_merge(
+        base, winners, [SLOT_COL, *key_cols], key_cols, OP_COL, soft, True,
+        write_schema,
+    )
     if with_internal:
-        return live.select(*[f.name for f in snap.schema.fields], BUCKET_COL)
-    return live.select(*[f.name for f in snap.schema.fields])
+        return merged
+    return merged.select(*[f.name for f in snap.schema.fields])
 
 
 def compact(
@@ -195,9 +197,10 @@ def compact(
     buckets rewrites their (large) base files for no read-amplification
     gain. Skipping a bucket is always safe: reconstruct() keeps merging
     its base+deltas until a later compaction clears the threshold. A
-    delta holding a bucket range counts once for each bucket in it, and
-    the chosen buckets then widen to the whole range of every file they
-    touch, so no file is ever half-compacted.
+    delta holding a bucket range counts once for each bucket in it. The
+    chosen buckets widen to the whole range of every file they touch and
+    to whole MoR slots (``whole_file_scope``), so no file is ever
+    half-compacted and each slot's one new base file replaces its range.
 
     Runs as its own atomic commit — a crash mid-compaction leaves only
     orphan files; readers keep seeing base+delta until the swap."""
@@ -212,11 +215,12 @@ def compact(
         chosen &= set(buckets)
     if not chosen:
         return None
-    target = whole_file_scope(snap.files, chosen)
+    placement = _placement(table, snap)
+    target = whole_file_scope(snap.files, chosen, placement)
     in_scope = [f for f in snap.files if touches(f, target)]
     out_scope = [f for f in snap.files if not touches(f, target)]
     merged = reconstruct(table, snap, in_scope, with_internal=True)
-    _, entries = table.write_data_files(merged, snap=snap)
+    _, entries = table.write_data_files(merged, snap=snap, pre_placed=placement)
     return table.commit(
         files=out_scope + entries,
         txn_app_id=txn_app_id,

@@ -45,7 +45,9 @@ snapshot (full history = walk the snapshots), so it never re-serializes.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import shutil
 import time
@@ -53,7 +55,7 @@ import uuid
 from dataclasses import dataclass, field, replace
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -455,7 +457,15 @@ def read_file_entries(
             )
         parts.append(df)
     if not parts:
-        return spark.createDataFrame([], read_schema)
+        # an empty relation the optimizer can see (a false filter prunes
+        # to an empty LocalRelation), so a merge-on-read merge with no
+        # base files plans its join away
+        return (
+            spark.range(1)
+            .select(F.lit(None).cast(read_schema).alias("_e"))
+            .select("_e.*")
+            .where(F.lit(False))
+        )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -610,10 +620,14 @@ class LakeTable:
         files: list[dict[str, Any]],
         with_internal: bool = False,
         buckets: set[int] | None = None,
+        where: Column | None = None,
     ) -> DataFrame:
         """Read ``files``; ``buckets`` (when given) is the set of buckets
         the caller selected them for — the rows of any other bucket a
-        range file holds are filtered out."""
+        range file holds are filtered out. ``where``: a predicate over
+        key columns only, applied to every stored row version before a
+        merge-on-read merge (all versions of a key pass or fail
+        together), so it reaches the parquet scan."""
         if buckets is not None and all(
             buckets.issuperset(entry_buckets(f)) for f in files
         ):
@@ -623,12 +637,15 @@ class LakeTable:
             from gear5_spark.lake.mor import reconstruct
 
             return reconstruct(
-                self, snap, files, with_internal=with_internal, buckets=buckets
+                self, snap, files, with_internal=with_internal, buckets=buckets,
+                where=where,
             )
         read_schema = self._read_schema(snap)
         df = read_file_entries(
             self.spark, self.table_dir, files, read_schema, buckets
         )
+        if where is not None:
+            df = df.filter(where)
         if not with_internal:
             df = df.select(*[f.name for f in snap.schema.fields])
         return df
@@ -756,7 +773,10 @@ class LakeTable:
         of ``n_buckets / width`` buckets (``whole_file_scope``).
         Merge-on-read (``mor``) caps it at the bucket count: every delta
         file is read back by every reconstruct until compaction, so a
-        bucket never gets more than one delta file per batch."""
+        bucket never gets more than one delta file per batch. MoR reads
+        and compaction (``mor.reconstruct``) place base rows and delta
+        winners at this same slot count for the guarded merge, so a
+        compaction writes one base file per slot."""
         n = snap.properties["n_buckets"]
         want = n if n_slots is None else max(1, int(n_slots))
         if sink_mode == "mor":
@@ -1338,13 +1358,22 @@ class LakeTable:
             ],
             n,
         )
-        df = self.read(snapshot=snap, buckets=[bucket])
-        for col, val in key_values.items():
-            df = df.filter(
-                F.col(col).isNull()
-                if val is None
-                else F.col(col) == F.lit(val)
-            )
+        preds = {
+            col: F.col(col).isNull() if val is None else F.col(col) == F.lit(val)
+            for col, val in key_values.items()
+        }
+        key_cols = snap.properties["key_columns"]
+        on_key = [p for col, p in preds.items() if col in key_cols]
+        want = {bucket}
+        df = self._read_files(
+            snap,
+            [f for f in snap.files if touches(f, want)],
+            buckets=want,
+            where=functools.reduce(operator.and_, on_key) if on_key else None,
+        )
+        for col, p in preds.items():
+            if col not in key_cols:
+                df = df.filter(p)
         return df
 
     # -------------------------------------------------------------------- DDL

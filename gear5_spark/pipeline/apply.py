@@ -413,7 +413,9 @@ class TranscriptsApplier:
         # sinks group contiguous whole buckets into `width` slots and
         # write one range file per slot, not one file per bucket; the
         # trade-off is CoW's: a small batch rewrites whole slots of
-        # n_buckets / width buckets each (merge_into).
+        # n_buckets / width buckets each (merge_into). MoR reads and
+        # compaction run the same guarded merge at the MoR slot count
+        # (mor.reconstruct), so compaction also writes one file per slot.
         want = self.table.placement(
             snap0, shuffle_width(batch.sparkSession), self.sink_mode
         ).n_slots

@@ -186,3 +186,37 @@ def test_mor_null_lsn_delta_wins_like_cow(spark, tmp_path):
     )
     got = {r["k"]: r["v"] for r in t.read().select("k", "v").collect()}
     assert got == {"a": 2}  # NULL-lsn delta wins, matching CoW
+
+
+def test_mor_without_lsn_column_reads_like_cow(spark, tmp_path):
+    """A table with no _cdc_lsn column: copy-on-write merges degrade to
+    batch-wins (test_lake_table::test_guarded_merge_without_lsn_column),
+    and so must merge-on-read reads and compaction — the delta wins over
+    the base row and a delete delta drops it."""
+    from pyspark.sql import types as T
+
+    from gear5_spark.lake.merge import merge_into
+    from gear5_spark.lake.mor import merge_delta
+    from gear5_spark.lake.table import LakeTable
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("v", T.LongType(), True),
+        ]
+    )
+    t = LakeTable.create(
+        spark, str(tmp_path / "nolsn"), schema=schema, key_columns=["k"],
+        n_buckets=2,
+    )
+    ddl = "k string, v long, op string"
+    merge_into(
+        t, spark.createDataFrame([("a", 1, "insert"), ("b", 1, "insert")], ddl)
+    )
+    merge_delta(t, spark.createDataFrame([("a", 2, "update")], ddl))
+    merge_delta(t, spark.createDataFrame([("b", None, "delete")], ddl))
+    merge_delta(t, spark.createDataFrame([("c", 3, "insert")], ddl))
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {"a": 2, "c": 3}
+    compact(t)
+    assert not any(f.get("kind") == "delta" for f in t.snapshot().files)
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {"a": 2, "c": 3}

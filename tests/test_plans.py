@@ -6,6 +6,7 @@ These lock in what SCALING.md claims."""
 from __future__ import annotations
 
 import io
+import os
 from contextlib import redirect_stdout
 
 import pyspark.sql.functions as F
@@ -125,3 +126,144 @@ def test_merge_into_runs_one_plan(spark, log_dir, tmp_path, order_guard):
     assert joins == 1
     assert "LeftAnti" not in plan
     assert "FullOuter" in plan
+
+
+def _mor_table(spark, log_dir, root, n_buckets):
+    """A merge-on-read stream over the log, deltas left resident."""
+    from gear5_spark.pipeline.runner import bootstrap_table, make_applier, run_stream
+
+    table = bootstrap_table(spark, str(root / "t"), n_buckets=n_buckets)
+    applier = make_applier(
+        table, str(root / "ckpt"), sink_mode="mor", compact_every=0
+    )
+    run_stream(
+        spark, log_dir, table, checkpoint_dir=str(root / "ckpt"),
+        max_files_per_trigger=1, applier=applier, timeout_sec=600,
+    )
+    return table
+
+
+def _scan_paths_by_sort_aggregate(df) -> tuple[set[str], set[str]]:
+    """File names scanned under some ``SortAggregate`` of ``df``'s
+    physical plan, and those scanned outside every one."""
+    # the adaptive plan's current physical plan, before execution
+    plan = df._jdf.queryExecution().executedPlan().executedPlan()
+    under, outside = set(), set()
+
+    def walk(node, aggregated):
+        kind = node.getClass().getSimpleName()
+        aggregated = aggregated or kind == "SortAggregateExec"
+        if kind == "FileSourceScanExec":
+            roots = node.relation().location().rootPaths()
+            names = {roots.apply(i).getName() for i in range(roots.size())}
+            (under if aggregated else outside).update(names)
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), aggregated)
+
+    walk(plan, False)
+    return under, outside
+
+
+def test_compaction_runs_the_guarded_merge_plan(spark, log_dir, tmp_path):
+    """Compaction is the copy-on-write guarded merge: its write input
+    plans one full-outer join of the base rows with each key's winning
+    delta, aggregates delta rows only (base rows stream past the
+    winners' hash table), and is written pre-placed at the merge-on-read
+    slot count instead of being placed again by the write."""
+    import gear5_spark.lake.table as LT
+    from gear5_spark.lake.mor import compact
+    from gear5_spark.parallel import shuffle_width
+    from gear5_spark.lake.mor import merge_delta
+
+    table = _mor_table(spark, log_dir, tmp_path, n_buckets=4)
+    compact(table)  # a base to merge against
+    merge_delta(
+        table,
+        table.read()
+        .limit(20)
+        .withColumn("text", F.lit("rewritten"))
+        .withColumn("_cdc_lsn", F.lit("99999"))
+        .withColumn("op", F.lit("update")),
+    )
+    from gear5_spark.lake.table import entry_buckets, touches
+
+    snap = table.snapshot()
+    delta_files = [f for f in snap.files if f.get("kind") == "delta"]
+    hit = {b for f in delta_files for b in entry_buckets(f)}
+    deltas = {os.path.basename(f["path"]) for f in delta_files}
+    base = {
+        os.path.basename(f["path"])
+        for f in snap.files
+        if f.get("kind") != "delta" and touches(f, hit)
+    }
+    assert base and deltas
+    captured = []
+    orig = LT.LakeTable.write_data_files
+
+    def spy(self, df, *a, **k):
+        captured.append((_plan(df, mode="simple"), _scan_paths_by_sort_aggregate(df), k))
+        return orig(self, df, *a, **k)
+
+    LT.LakeTable.write_data_files = spy
+    try:
+        compact(table)
+    finally:
+        LT.LakeTable.write_data_files = orig
+    ((plan, (aggregated, streamed), kwargs),) = captured
+    joins = sum(plan.count(j) for j in ("SortMergeJoin", "ShuffledHashJoin",
+                                        "BroadcastHashJoin"))
+    assert joins == 1 and "FullOuter" in plan
+    assert aggregated and aggregated <= deltas
+    assert base <= streamed
+    assert kwargs["pre_placed"] == table.placement(snap, shuffle_width(spark), "mor")
+    assert table.read().filter(F.col("text") == "rewritten").count() == 20
+
+
+def test_32_bucket_compaction_writes_at_most_width_files(spark, log_dir, tmp_path):
+    from gear5_spark.lake.mor import compact
+    from gear5_spark.parallel import shuffle_width
+    from tests.oracle import oracle_rows
+
+    table = _mor_table(spark, log_dir, tmp_path, n_buckets=32)
+    compact(table)
+    files = table.snapshot().files
+    assert not any(f.get("kind") == "delta" for f in files)
+    assert len(files) <= shuffle_width(spark) == 8
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    got = [
+        tuple(r)
+        for r in table.read().select(*cols).orderBy("conv_id", "turn_idx").collect()
+    ]
+    assert got == [tuple(w[c] for c in cols) for w in oracle_rows(log_dir)]
+
+
+def test_mor_lookup_pushes_its_key_to_both_scans(spark, tmp_path):
+    """A point lookup on a table with base and delta files filters every
+    stored version of the key at the parquet scan, below the merge —
+    the merge's full-outer join would otherwise stop the predicate and
+    the lookup would reconstruct its whole bucket."""
+    from pyspark.sql import types as T
+
+    from gear5_spark.lake.merge import merge_into
+    from gear5_spark.lake.mor import merge_delta
+    from gear5_spark.lake.table import LakeTable
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("v", T.LongType(), True),
+            T.StructField("_cdc_lsn", T.StringType(), True),
+        ]
+    )
+    t = LakeTable.create(
+        spark, str(tmp_path / "kv"), schema=schema, key_columns=["k"], n_buckets=2
+    )
+    ddl = "k string, v long, _cdc_lsn string, op string"
+    merge_into(t, spark.createDataFrame([("a", 1, "1", "insert")], ddl))
+    merge_delta(t, spark.createDataFrame([("a", 2, "2", "update")], ddl))
+    df = t.lookup(k="a")
+    scans = [ln for ln in _plan(df, mode="simple").splitlines() if "FileScan" in ln]
+    assert len(scans) == 2
+    assert all("EqualTo(k,a)" in ln for ln in scans)
+    assert [r["v"] for r in df.collect()] == [2]
