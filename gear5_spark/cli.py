@@ -193,26 +193,21 @@ def cmd_read(args) -> int:
         rollup = ConversationRollup(
             table, bootstrap_rollup(spark, cfg.rollup_dir, cfg.n_buckets)
         )
+    applier = make_applier(
+        table, cfg.checkpoint_dir, app_id=cfg.app_id,
+        salt_buckets=cfg.salt_buckets, sink_mode=cfg.resolved_sink_mode,
+        compact_every=cfg.compact_every, quarantine_dir=cfg.quarantine_dir,
+        exclude_columns=cfg.exclude_columns,
+        rollup=rollup,
+    )
     perf.reset()
     t0 = time.perf_counter()
     if cfg.mode == "bulk":
         replay_batch(
             spark, cfg.changelog_dir, table, cfg.checkpoint_dir,
-            app_id=cfg.app_id, salt_buckets=cfg.salt_buckets,
-            sink_mode=cfg.resolved_sink_mode,
-            compact_every=cfg.compact_every,
-            quarantine_dir=cfg.quarantine_dir,
-            exclude_columns=cfg.exclude_columns,
-            rollup=rollup,
+            applier=applier,
         )
     else:
-        applier = make_applier(
-            table, cfg.checkpoint_dir, app_id=cfg.app_id,
-            salt_buckets=cfg.salt_buckets, sink_mode=cfg.resolved_sink_mode,
-            compact_every=cfg.compact_every, quarantine_dir=cfg.quarantine_dir,
-            exclude_columns=cfg.exclude_columns,
-            rollup=rollup,
-        )
         run_stream(
             spark, cfg.changelog_dir, table, cfg.checkpoint_dir,
             app_id=cfg.app_id,

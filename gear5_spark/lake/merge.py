@@ -69,6 +69,7 @@ from gear5_spark.lake.table import (
     LakeTable,
     Placement,
     Snapshot,
+    _project,
     delete_mode_of,
     entry_buckets,
     touches,
@@ -88,23 +89,9 @@ class MergeStats:
     schema_changes: list[str]
 
 
-def _project(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Select schema columns, adding typed nulls for columns df lacks
-    (null backfill for additive evolution, SURVEY.md ST7)."""
-    have = set(df.columns)
-    cols = [
-        F.col(f.name).cast(f.dataType).alias(f.name)
-        if f.name in have
-        else F.lit(None).cast(f.dataType).alias(f.name)
-        for f in schema.fields
-    ]
-    return df.select(*cols)
-
-
 def merge_into(
     table: LakeTable,
     batch: DataFrame,
-    op_col: str = "op",
     order_guard: bool = True,
     txn_app_id: str | None = None,
     txn_batch_id: int | None = None,
@@ -163,7 +150,7 @@ def merge_into(
     batch_fields = [
         f
         for f in batch.schema.fields
-        if f.name not in (op_col, BUCKET_COL, SLOT_COL)
+        if f.name not in ("op", BUCKET_COL, SLOT_COL)
         and f.name not in _FEED_META
     ]
     evolved, changes = merge_schemas(
@@ -227,13 +214,13 @@ def merge_into(
             pre_placed.n_slots,
         )
         new_data = _guarded_merge(
-            target, keyed, [SLOT_COL, *key_cols], key_cols, op_col, soft,
+            target, keyed, [SLOT_COL, *key_cols], key_cols, "op", soft,
             order_guard, write_schema,
         )
     else:
         # nothing to merge against (bootstrap load / untouched buckets):
         # skip the join entirely — dedup output IS the new bucket content
-        upserts = keyed if soft else keyed.filter(F.col(op_col) != "delete")
+        upserts = keyed if soft else keyed.filter(F.col("op") != "delete")
         new_data = _project(upserts, write_schema)
     try:
         _, new_entries = table.write_data_files(

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gear5_spark.lake.merge import _FEED_META, _guarded_merge, _project, lww_order
+from gear5_spark.lake.merge import _FEED_META, _guarded_merge, lww_order
 from gear5_spark.lake.table import (
     BUCKET_COL,
     CDC_LSN,
@@ -48,6 +48,7 @@ from gear5_spark.lake.table import (
     LakeTable,
     Placement,
     Snapshot,
+    _project,
     delete_mode_of,
     entry_buckets,
     read_file_entries,
@@ -64,7 +65,6 @@ OP_COL = "_op"
 def merge_delta(
     table: LakeTable,
     batch: DataFrame,
-    op_col: str = "op",
     txn_app_id: str | None = None,
     txn_batch_id: int | None = None,
     lineage: dict[str, Any] | None = None,
@@ -86,7 +86,7 @@ def merge_delta(
     batch_fields = [
         f
         for f in batch.schema.fields
-        if f.name not in (op_col, OP_COL, BUCKET_COL, SLOT_COL)
+        if f.name not in ("op", OP_COL, BUCKET_COL, SLOT_COL)
         and f.name not in _FEED_META
     ]
     evolved, _changes = merge_schemas(
@@ -95,7 +95,7 @@ def merge_delta(
 
     delta = _project(
         batch.withColumn(BUCKET_COL, table.bucket_expr(snap)).withColumn(
-            OP_COL, F.col(op_col)
+            OP_COL, F.col("op")
         ),
         _delta_schema(evolved),
     )
@@ -182,9 +182,6 @@ def reconstruct(
 def compact(
     table: LakeTable,
     buckets: list[int] | None = None,
-    txn_app_id: str | None = None,
-    txn_batch_id: int | None = None,
-    lineage: dict[str, Any] | None = None,
     min_deltas: int = 1,
 ) -> Snapshot | None:
     """Fold resident deltas into base files for ``buckets`` (default: every
@@ -221,10 +218,4 @@ def compact(
     out_scope = [f for f in snap.files if not touches(f, target)]
     merged = reconstruct(table, snap, in_scope, with_internal=True)
     _, entries = table.write_data_files(merged, snap=snap, pre_placed=placement)
-    return table.commit(
-        files=out_scope + entries,
-        txn_app_id=txn_app_id,
-        txn_batch_id=txn_batch_id,
-        lineage=lineage,
-        basis=snap,
-    )
+    return table.commit(files=out_scope + entries, basis=snap)

@@ -41,6 +41,14 @@ cost is O(new files + number of manifests), NOT O(total files): at 100 TB
 with millions of data files the snapshot write stays KB-sized, and reads
 resolve manifests through an immutable cache. Lineage is one entry per
 snapshot (full history = walk the snapshots), so it never re-serializes.
+
+One snapshot format, one commit path: every snapshot carries a manifest
+list (a snapshot listing its files inline is refused on load, naming the
+file). :meth:`LakeTable.create` publishes version 0; every later
+snapshot — data commits, DDL, compaction, ``rewrite_manifests`` — goes
+through ``_commit``'s rebase-and-retry loop, is built by
+``_commit_once`` and names manifests written by
+``_build_manifest_list`` (tests/test_commit_path.py).
 """
 
 from __future__ import annotations
@@ -92,15 +100,15 @@ class Snapshot:
     parent_version: int | None
     schema: T.StructType
     properties: dict[str, Any]
+    # the RESOLVED file view, populated from the manifest list at load
+    # and never serialized:
     # {"path": rel, "bucket": int | "bucket_range": [lo, hi], "rows": int|None}
     files: list[dict[str, Any]]
     txn: dict[str, int]  # app_id -> last committed batch id
+    # [{"path": "_lake/m-*.json", "buckets": [int]}]
+    manifest_list: list[dict[str, Any]]
     lineage: list[dict[str, Any]] = field(default_factory=list)
     committed_at_ms: int = 0
-    # manifest list: [{"path": "_lake/m-*.json", "buckets": [int]}];
-    # None = legacy inline-files snapshot. When present, `files` is the
-    # RESOLVED view (populated at load, not serialized).
-    manifest_list: list[dict[str, Any]] | None = None
 
     def to_json(self) -> str:
         d = {
@@ -112,27 +120,32 @@ class Snapshot:
             "txn": self.txn,
             "lineage": self.lineage,
             "committed_at_ms": self.committed_at_ms,
+            "manifest_list": self.manifest_list,
         }
-        if self.manifest_list is not None:
-            d["manifest_list"] = self.manifest_list
-        else:
-            d["files"] = self.files
         return json.dumps(d, indent=None, separators=(",", ":"))
 
     @staticmethod
-    def from_json(s: str) -> "Snapshot":
+    def from_json(s: str, path: str) -> "Snapshot":
+        """The snapshot serialized in ``s``, read from ``path``. A
+        snapshot without a manifest list (its files listed inline, the
+        format of engines before manifest lists) is refused."""
         d = json.loads(s)
+        if "manifest_list" not in d:
+            raise ValueError(
+                f"snapshot {path} has no manifest_list: it lists its files "
+                "inline, a snapshot format this engine does not read"
+            )
         return Snapshot(
             version=d["version"],
             snapshot_id=d["snapshot_id"],
             parent_version=d.get("parent_version"),
             schema=T.StructType.fromJson(d["schema"]),
             properties=d.get("properties", {}),
-            files=d.get("files", []),
+            files=[],
             txn=d.get("txn", {}),
+            manifest_list=d["manifest_list"],
             lineage=d.get("lineage", []),
             committed_at_ms=d.get("committed_at_ms", 0),
-            manifest_list=d.get("manifest_list"),
         )
 
 
@@ -319,28 +332,47 @@ def _json_stat(v: Any) -> Any:
     return v
 
 
+def footer_min_max(meta, idx: int) -> tuple[Any, Any] | None:
+    """Column ``idx``'s (min, max), folded across the row groups of the
+    parquet footer ``meta``; None when a row group has no min/max
+    statistics (e.g. all-null) or there is no row group."""
+    lo = hi = None
+    for rg in range(meta.num_row_groups):
+        st = meta.row_group(rg).column(idx).statistics
+        if st is None or not st.has_min_max:
+            return None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return None if lo is None else (lo, hi)
+
+
 def _collect_file_stats(
     meta, stat_idx: dict[str, int] | None
 ) -> dict[str, list[Any]]:
-    """Per-file [min, max] for the chosen columns, folded across row
-    groups from footer statistics. Writer-truncated string bounds stay
-    valid bounds (prefix min / incremented max), so pruning on them is
+    """Per-file [min, max] for the chosen columns from footer
+    statistics. Writer-truncated string bounds stay valid bounds
+    (prefix min / incremented max), so pruning on them is
     conservative-correct. Columns without stats (e.g. all-null) are
     omitted — absence means 'cannot prune'."""
     out: dict[str, list[Any]] = {}
     for col, idx in (stat_idx or {}).items():
-        lo = hi = None
-        ok = True
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                ok = False
-                break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        if ok and lo is not None:
-            out[col] = [_json_stat(lo), _json_stat(hi)]
+        mm = footer_min_max(meta, idx)
+        if mm is not None:
+            out[col] = [_json_stat(mm[0]), _json_stat(mm[1])]
     return out
+
+
+def _project(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Select schema columns, adding typed nulls for columns df lacks
+    (null backfill for additive evolution, SURVEY.md ST7)."""
+    have = set(df.columns)
+    cols = [
+        F.col(f.name).cast(f.dataType).alias(f.name)
+        if f.name in have
+        else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in schema.fields
+    ]
+    return df.select(*cols)
 
 
 def _file_may_match(
@@ -498,7 +530,7 @@ class LakeTable:
         table_dir: str,
         schema: T.StructType,
         key_columns: list[str],
-        bucket_columns: list[str] | str | None = None,
+        bucket_columns: list[str] | None = None,
         n_buckets: int = 16,
         if_not_exists: bool = False,
         extra_properties: dict[str, Any] | None = None,
@@ -521,57 +553,48 @@ class LakeTable:
             schema=schema,
             properties={
                 "key_columns": key_columns,
-                "bucket_columns": (
-                    [bucket_columns]
-                    if isinstance(bucket_columns, str)
-                    else (bucket_columns or list(key_columns))
-                ),
+                "bucket_columns": list(bucket_columns or key_columns),
                 "n_buckets": n_buckets,
                 **(extra_properties or {}),
             },
             files=[],
             txn={},
-            committed_at_ms=int(time.time() * 1000),
             manifest_list=[],
+            committed_at_ms=int(time.time() * 1000),
         )
         t._publish(snap)
         return t
 
     def exists(self) -> bool:
-        d = os.path.join(self.table_dir, MANIFEST_DIR)
-        return os.path.isdir(d) and any(
-            f.startswith("v") and f.endswith(".json") for f in os.listdir(d)
-        )
+        return bool(self._list_versions())
 
     # ------------------------------------------------------------- snapshots
     def current_version(self) -> int:
-        d = os.path.join(self.table_dir, MANIFEST_DIR)
-        versions = [
-            int(f[1:9])
-            for f in os.listdir(d)
-            if f.startswith("v") and f.endswith(".json")
-        ]
+        versions = self._list_versions()
         if not versions:
-            raise FileNotFoundError(f"no snapshots in {d}")
-        return max(versions)
+            raise FileNotFoundError(
+                f"no snapshots in {os.path.join(self.table_dir, MANIFEST_DIR)}"
+            )
+        return versions[-1]
 
     def snapshot(self, version: int | None = None) -> Snapshot:
         v = self.current_version() if version is None else version
         path = _manifest_path(self.table_dir, v)
         try:
             with open(path) as fh:
-                snap = Snapshot.from_json(fh.read())
+                snap = Snapshot.from_json(fh.read(), path)
         except FileNotFoundError:
             raise FileNotFoundError(
                 f"snapshot v{v} not found in {self.table_dir} — "
                 "expired (expire_snapshots) or never committed"
             ) from None
-        if snap.manifest_list is not None:
-            snap.files = _resolve_files(self.table_dir, snap.manifest_list)
+        snap.files = _resolve_files(self.table_dir, snap.manifest_list)
         return snap
 
     def _list_versions(self) -> list[int]:
         d = os.path.join(self.table_dir, MANIFEST_DIR)
+        if not os.path.isdir(d):
+            return []
         return sorted(
             int(f[1:9])
             for f in os.listdir(d)
@@ -826,7 +849,6 @@ class LakeTable:
     def write_data_files(
         self,
         df: DataFrame,
-        commit_token: str | None = None,
         snap: Snapshot | None = None,
         pre_placed: Placement | None = None,
     ) -> tuple[str, list[dict[str, Any]]]:
@@ -857,7 +879,7 @@ class LakeTable:
 
         from gear5_spark.perf import span
 
-        commit = commit_token or f"c-{uuid.uuid4().hex}"
+        commit = f"c-{uuid.uuid4().hex}"
         rel_dir = os.path.join(DATA_DIR, commit)
         out_dir = os.path.join(self.table_dir, rel_dir)
         # caller's basis snapshot keeps sort/stats config consistent with
@@ -939,11 +961,7 @@ class LakeTable:
                         for i in range(meta.num_columns)
                     }[BUCKET_COL]
                     stat_idx = self._stats_columns(meta, snap)
-                bmin = bmax = None
-                for rg in range(meta.num_row_groups):
-                    st = meta.row_group(rg).column(bucket_idx).statistics
-                    bmin = st.min if bmin is None else min(bmin, st.min)
-                    bmax = st.max if bmax is None else max(bmax, st.max)
+                bmin, bmax = footer_min_max(meta, bucket_idx)
                 if placed.slot_of(bmin) != placed.slot_of(bmax):  # pragma: no cover
                     raise AssertionError(
                         f"file {name} spans buckets {bmin}..{bmax} "
@@ -968,6 +986,7 @@ class LakeTable:
         files: list[dict[str, Any]],
         version: int,
         widened: dict[str, str] | None = None,
+        fold: bool = False,
     ) -> list[dict[str, Any]]:
         """Diff ``files`` (the full logical set) against the parent:
         entries the parent already tracked stay attributed to their
@@ -982,9 +1001,13 @@ class LakeTable:
         widening commit: every KEPT parent manifest inherits the era map
         (``setdefault`` — a manifest already annotated from an earlier
         widen keeps its own, narrower, written type), while this
-        commit's new manifest is written post-widen and needs none."""
+        commit's new manifest is written post-widen and needs none.
+
+        ``fold``: keep no parent manifest — every entry of ``files``
+        lands in the one new manifest (``rewrite_manifests``). Resolved
+        entries carry their era map entry-level, so the eras survive."""
         want_paths = {f["path"] for f in files}
-        parent_paths = {f["path"] for f in parent.files}
+        parent_paths = set() if fold else {f["path"] for f in parent.files}
         new_entries = [f for f in files if f["path"] not in parent_paths]
 
         def _kept_physical(m: dict[str, Any]) -> dict[str, Any]:
@@ -994,60 +1017,30 @@ class LakeTable:
             return {"physical": phys} if phys else {}
 
         m_list: list[dict[str, Any]] = []
-        if parent.manifest_list is None:
-            # legacy inline-files parent: fold its surviving entries into
-            # this commit's manifest (one-time conversion). A widening
-            # commit must keep the eras apart — the parent's surviving
-            # files (pre-widen physical types) go into their own
-            # annotated manifest, this commit's new files into the
-            # unannotated one.
-            if widened:
-                kept = [f for f in files if f["path"] in parent_paths]
-                if kept:
-                    rel = os.path.join(
-                        MANIFEST_DIR,
-                        f"m-{version:08d}-{uuid.uuid4().hex[:12]}.json",
+        for m in [] if fold else parent.manifest_list:
+            live = set(m["buckets"])
+            by_bucket: dict[int, list[str]] = {}
+            for f in _load_manifest(self.table_dir, m["path"]):
+                for b in entry_buckets(f):
+                    if b in live:
+                        by_bucket.setdefault(b, []).append(f["path"])
+            keep = []
+            for b, paths in by_bucket.items():
+                present = sum(p in want_paths for p in paths)
+                if present == len(paths):
+                    keep.append(b)
+                elif present:  # pragma: no cover - no partial paths
+                    raise AssertionError(
+                        f"partial-bucket drop in {m['path']} bucket {b}"
                     )
-                    self.backend.put_if_absent(
-                        os.path.join(self.table_dir, rel),
-                        json.dumps(
-                            {"files": kept}, separators=(",", ":")
-                        ).encode(),
-                    )
-                    m_list.append(
-                        {
-                            "path": rel,
-                            "buckets": _buckets_of(kept),
-                            "physical": dict(widened),
-                        }
-                    )
-            else:
-                new_entries = list(files)
-        else:
-            for m in parent.manifest_list:
-                live = set(m["buckets"])
-                by_bucket: dict[int, list[str]] = {}
-                for f in _load_manifest(self.table_dir, m["path"]):
-                    for b in entry_buckets(f):
-                        if b in live:
-                            by_bucket.setdefault(b, []).append(f["path"])
-                keep = []
-                for b, paths in by_bucket.items():
-                    present = sum(p in want_paths for p in paths)
-                    if present == len(paths):
-                        keep.append(b)
-                    elif present:  # pragma: no cover - no partial paths
-                        raise AssertionError(
-                            f"partial-bucket drop in {m['path']} bucket {b}"
-                        )
-                if keep:
-                    m_list.append(
-                        {
-                            "path": m["path"],
-                            "buckets": sorted(keep),
-                            **_kept_physical(m),
-                        }
-                    )
+            if keep:
+                m_list.append(
+                    {
+                        "path": m["path"],
+                        "buckets": sorted(keep),
+                        **_kept_physical(m),
+                    }
+                )
         if new_entries:
             rel = os.path.join(
                 MANIFEST_DIR, f"m-{version:08d}-{uuid.uuid4().hex[:12]}.json"
@@ -1108,6 +1101,7 @@ class LakeTable:
         lineage: dict[str, Any] | None,
         properties: dict[str, Any] | None = None,
         basis: Snapshot | None = None,
+        fold: bool = False,
     ) -> Snapshot:
         """Optimistic concurrency: attempt the commit against the current
         snapshot; when the current snapshot has moved past the caller's
@@ -1120,7 +1114,8 @@ class LakeTable:
         therefore both make progress without coordination; conflicting
         rewrites of the same files raise, and a property-changing commit
         (rebucket) never rebases — its file layout depends on the
-        properties, so a race forces a recompute."""
+        properties, so a race forces a recompute. ``fold`` writes the
+        whole file set into one new manifest (``_build_manifest_list``)."""
         base = basis if basis is not None else self.snapshot()
         # the physical types this commit's NEW files were written with:
         # the caller's schema, else the basis schema they were computed
@@ -1174,7 +1169,7 @@ class LakeTable:
             try:
                 return self._commit_once(
                     base, files, schema, txn_app_id, txn_batch_id,
-                    lineage, properties,
+                    lineage, properties, fold,
                 )
             except CommitRaceLost:
                 if _attempt == self.COMMIT_RETRIES:
@@ -1222,6 +1217,7 @@ class LakeTable:
         txn_batch_id: int | None,
         lineage: dict[str, Any] | None,
         properties: dict[str, Any] | None = None,
+        fold: bool = False,
     ) -> Snapshot:
         txn = dict(parent.txn)
         if txn_app_id is not None:
@@ -1259,7 +1255,9 @@ class LakeTable:
                 for f in parent.schema.fields
                 if f.name in new_by and new_by[f.name] != f.dataType
             }
-        m_list = self._build_manifest_list(parent, files, version, widened)
+        m_list = self._build_manifest_list(
+            parent, files, version, widened, fold
+        )
         snap = Snapshot(
             version=version,
             snapshot_id=snapshot_id,
@@ -1268,9 +1266,9 @@ class LakeTable:
             properties=properties or parent.properties,
             files=files,
             txn=txn,
+            manifest_list=m_list,
             lineage=lin,
             committed_at_ms=now_ms,
-            manifest_list=m_list,
         )
         self._publish(snap)
         return snap
@@ -1283,46 +1281,11 @@ class LakeTable:
         """Replace all table data (used by snapshot/full-refresh load, S1/S5).
         Projects to the table schema (missing columns null-backfilled)."""
         snap = self.snapshot()
-        target = schema or snap.schema
-        have = set(df.columns)
-        cols = [
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in have
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in target.fields
-        ]
-        data = df.select(*cols).withColumn(BUCKET_COL, self.bucket_expr(snap))
+        data = _project(df, schema or snap.schema).withColumn(
+            BUCKET_COL, self.bucket_expr(snap)
+        )
         _, entries = self.write_data_files(data)
         return self.commit(entries, schema=schema)
-
-    def read_updated_since(
-        self, since, snapshot: Snapshot | None = None
-    ) -> DataFrame:
-        """Timestamp-incremental consumer read: rows whose last CDC
-        update (``_cdc_updated_at``) is at/after ``since`` — the
-        change-data-feed a downstream pipeline tails when it keys off
-        wall-clock rather than snapshot versions (version-based row diffs
-        are :func:`gear5_spark.lake.diff.table_diff`).
-
-        File-pruned by manifest stats: bucket files untouched since
-        ``since`` are never opened, so steady-state consumers read
-        O(recent churn), not O(table)."""
-        snap = snapshot or self.snapshot()
-        keep, _skipped, buckets = self._plan_scan(
-            [(CDC_UPDATED_AT, ">=", since)], snap
-        )
-        df = self._read_files(snap, keep, buckets=buckets)
-        return df.filter(F.col(CDC_UPDATED_AT) >= F.lit(since))
-
-    def register_view(
-        self, name: str, snapshot: Snapshot | None = None
-    ) -> DataFrame:
-        """Expose the table (or a pinned snapshot) to Spark SQL as a
-        temp view — ``spark.sql(f"SELECT ... FROM {name}")`` then runs
-        with full Catalyst pushdown over the snapshot's file set."""
-        df = self.read(snapshot=snapshot)
-        df.createOrReplaceTempView(name)
-        return df
 
     def lookup(self, **key_values) -> DataFrame:
         """Bucket-pruned point lookup by full key: computes the bucket
@@ -1521,10 +1484,9 @@ class LakeTable:
         for s in expire:
             os.unlink(_manifest_path(self.table_dir, s.version))
         # manifests referenced by no retained snapshot are dead metadata
-        live_manifests = set()
-        for s in self.history():
-            for m in s.manifest_list or []:
-                live_manifests.add(m["path"])
+        live_manifests = {
+            m["path"] for s in self.history() for m in s.manifest_list
+        }
         mdir = os.path.join(self.table_dir, MANIFEST_DIR)
         # mtime grace (like vacuum's retention): an in-flight commit
         # writes its m-*.json BEFORE publishing the snapshot that
@@ -1556,54 +1518,12 @@ class LakeTable:
         (:mod:`gear5_spark.lake.delete`).
 
         Pure metadata compaction removes no data files, so a lost
-        publish race always rebases: re-snapshot the (new) current state
-        and retry, cleaning up the failed attempt's manifest file."""
-        for _attempt in range(self.COMMIT_RETRIES + 1):
-            parent = self.snapshot()
-            version = parent.version + 1
-            m_list: list[dict[str, Any]] = []
-            rel: str | None = None
-            if parent.files:
-                rel = os.path.join(
-                    MANIFEST_DIR,
-                    f"m-{version:08d}-{uuid.uuid4().hex[:12]}.json",
-                )
-                # through the commit backend: fsync-before-publish (a
-                # snapshot must never reference torn content) and
-                # portability off POSIX, same as _build_manifest_list
-                self.backend.put_if_absent(
-                    os.path.join(self.table_dir, rel),
-                    json.dumps(
-                        {"files": parent.files}, separators=(",", ":")
-                    ).encode(),
-                )
-                m_list = [
-                    {
-                        "path": rel,
-                        "buckets": _buckets_of(parent.files),
-                    }
-                ]
-            snap = Snapshot(
-                version=version,
-                snapshot_id=uuid.uuid4().hex,
-                parent_version=parent.version,
-                schema=parent.schema,
-                properties=parent.properties,
-                files=parent.files,
-                txn=parent.txn,
-                lineage=[],
-                committed_at_ms=int(time.time() * 1000),
-                manifest_list=m_list,
-            )
-            try:
-                self._publish(snap)
-                return snap
-            except CommitRaceLost:
-                if rel is not None:
-                    os.unlink(os.path.join(self.table_dir, rel))
-                if _attempt == self.COMMIT_RETRIES:
-                    raise
-        raise AssertionError("unreachable")  # pragma: no cover
+        publish race always rebases onto the winner (``_commit``) and
+        folds the winner's live entries instead."""
+        parent = self.snapshot()
+        return self._commit(
+            parent.files, None, None, None, None, basis=parent, fold=True
+        )
 
     def _archived_lineage(self) -> list[dict[str, Any]]:
         arch = os.path.join(self.table_dir, MANIFEST_DIR, self._LINEAGE_ARCHIVE)

@@ -32,7 +32,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gear5_spark.lake.merge import merge_into
-from gear5_spark.lake.table import BUCKET_COL, SLOT_COL, LakeTable, Snapshot
+from gear5_spark.lake.table import (
+    BUCKET_COL,
+    SLOT_COL,
+    LakeTable,
+    Snapshot,
+    footer_min_max,
+)
 from gear5_spark.operators.dedup import latest_per_key, salted_pre_reduce
 from gear5_spark.operators.infer import infer_token
 from gear5_spark.operators.names import sanitize_unique
@@ -692,22 +698,10 @@ def _partition_lineage(
             "path": os.path.basename(path),
             "rows": int(md.num_rows),
         }
-        try:
-            ci = md.schema.names.index("lsn")
-        except ValueError:
-            ci = -1
-        if ci >= 0:
-            lo = hi = None
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    lo = hi = None
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if lo is not None:
-                entry["lsn_min"] = int(lo)
-                entry["lsn_max"] = int(hi)
+        if "lsn" in md.schema.names:
+            mm = footer_min_max(md, md.schema.names.index("lsn"))
+            if mm is not None:
+                entry["lsn_min"], entry["lsn_max"] = int(mm[0]), int(mm[1])
         prov.recorded.append(entry)
     if unreadable:
         prov.total_rows = -1

@@ -64,7 +64,8 @@ def bootstrap_table(
     ``delete_mode`` (hard|soft) is a TABLE property and this is the one
     place it is chosen: both sinks read it from the table, so it is
     fixed at create time. ``if_not_exists`` on a table created with the
-    other mode raises instead of returning it."""
+    other mode, or with another bucket count, raises instead of
+    returning it (``LakeTable.rebucket`` changes the bucket count)."""
     if delete_mode not in DELETE_MODES:
         raise ValueError(f"delete_mode must be hard|soft, got {delete_mode!r}")
     table = LakeTable.create(
@@ -77,12 +78,20 @@ def bootstrap_table(
         if_not_exists=if_not_exists,
         extra_properties={"delete_mode": delete_mode},
     )
-    have = delete_mode_of(table.snapshot())
+    snap = table.snapshot()
+    have = delete_mode_of(snap)
     if have != delete_mode:
         raise ValueError(
             f"table {table_dir} exists with delete_mode='{have}', not "
             f"'{delete_mode}': the delete policy is fixed when the table "
             "is created"
+        )
+    have_buckets = snap.properties["n_buckets"]
+    if have_buckets != n_buckets:
+        raise ValueError(
+            f"table {table_dir} exists with n_buckets={have_buckets}, not "
+            f"{n_buckets}: change a table's bucket count with "
+            "LakeTable.rebucket"
         )
     return table
 
@@ -144,12 +153,7 @@ def replay_batch(
     app_id: str = "transcripts-bulk",
     min_lsn: int | None = None,
     max_lsn: int | None = None,
-    salt_buckets: int = 1,
-    sink_mode: str = "cow",
-    compact_every: int = 8,
-    quarantine_dir: str | None = None,
-    exclude_columns: list[str] | None = None,
-    rollup=None,
+    applier: TranscriptsApplier | None = None,
 ) -> LakeTable:
     """Bulk replay: whole (or cursor-bounded) change log in one merge.
 
@@ -162,20 +166,14 @@ def replay_batch(
     against) — phased replays that may be re-run out of order need a
     table bootstrapped with ``delete_mode="soft"`` (tombstones carry
     the ordering).
+
+    ``applier``: a built applier (``make_applier``), as ``run_stream``
+    takes one; default: a copy-on-write applier for ``app_id``. The
+    batch id continues the applier's own txn ledger.
     """
-    applier = make_applier(
-        table,
-        checkpoint_dir,
-        app_id=app_id,
-        salt_buckets=salt_buckets,
-        sink_mode=sink_mode,
-        compact_every=compact_every,
-        quarantine_dir=quarantine_dir,
-        exclude_columns=exclude_columns or [],
-        rollup=rollup,
-    )
+    applier = applier or make_applier(table, checkpoint_dir, app_id=app_id)
     changes = read_changelog(spark, changelog_dir, min_lsn=min_lsn, max_lsn=max_lsn)
-    last = table.last_committed_batch(app_id)
+    last = table.last_committed_batch(applier.app_id)
     next_batch = (last if last is not None else -1) + 1
     applier(changes, next_batch)
     return table

@@ -1,5 +1,6 @@
-"""Downstream-consumer surfaces: timestamp-incremental reads and
-Spark SQL views over lake tables."""
+"""Downstream-consumer reads: a timestamp-incremental read is a
+stats-pruned ``scan`` on ``_cdc_updated_at``, and a Spark SQL view is a
+``read`` registered as a temp view."""
 
 from __future__ import annotations
 
@@ -53,7 +54,7 @@ def table(spark, tmp_path):
 
 def test_read_updated_since_returns_only_recent_rows(spark, table):
     _apply(spark, table, [("k0", 100, 100)], T1)  # one key after the cut
-    got = table.read_updated_since(CUT).collect()
+    got = table.scan([("_cdc_updated_at", ">=", CUT)]).collect()
     assert [(r["k"], r["v"]) for r in got] == [("k0", 100)]
 
 
@@ -69,12 +70,12 @@ def test_read_updated_since_prunes_files(spark, table):
 
 
 def test_read_updated_since_far_future_is_empty(spark, table):
-    got = table.read_updated_since(dt.datetime(2030, 1, 1))
+    got = table.scan([("_cdc_updated_at", ">=", dt.datetime(2030, 1, 1))])
     assert got.count() == 0
 
 
 def test_register_view_enables_spark_sql(spark, table):
-    table.register_view("consumer_t")
+    table.read().createOrReplaceTempView("consumer_t")
     got = spark.sql(
         "SELECT k, v FROM consumer_t WHERE v >= 6 ORDER BY k"
     ).collect()
@@ -84,6 +85,6 @@ def test_register_view_enables_spark_sql(spark, table):
 def test_register_view_pinned_snapshot(spark, table):
     pinned = table.snapshot()
     _apply(spark, table, [("k0", 999, 200)], T1)
-    table.register_view("pinned_t", snapshot=pinned)
+    table.read(snapshot=pinned).createOrReplaceTempView("pinned_t")
     got = {r["k"]: r["v"] for r in spark.sql("SELECT * FROM pinned_t").collect()}
     assert got["k0"] == 0  # pre-update state

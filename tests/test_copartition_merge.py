@@ -9,7 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from gen_fixtures import generate_changelog
-from gear5_spark.pipeline.runner import bootstrap_table, replay_batch
+from gear5_spark.pipeline.runner import (
+    bootstrap_table,
+    make_applier,
+    replay_batch,
+)
 
 
 @pytest.fixture(scope="module")
@@ -35,10 +39,10 @@ def test_copartitioned_merge_matches_oracle(spark, log_dir, tmp_path):
     for plan, salt in (("fused", 1), ("salted", 2)):
         t = bootstrap_table(spark, str(tmp_path / plan), n_buckets=8)
         for lo, hi in ((None, 2999), (2999, None)):
+            ckpt = str(tmp_path / f"{plan}-ck{hi}")
             replay_batch(
-                spark, log_dir, t,
-                checkpoint_dir=str(tmp_path / f"{plan}-ck{hi}"),
-                min_lsn=lo, max_lsn=hi, salt_buckets=salt,
+                spark, log_dir, t, ckpt, min_lsn=lo, max_lsn=hi,
+                applier=make_applier(t, ckpt, salt_buckets=salt),
             )
         assert _texts(t.read().collect()) == want, plan
 

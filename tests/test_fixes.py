@@ -115,6 +115,18 @@ def test_bootstrap_refuses_delete_mode_mismatch(spark, tmp_path, sink_mode):
     assert bootstrap_table(spark, path, n_buckets=4).current_version() >= 1
 
 
+def test_bootstrap_refuses_n_buckets_mismatch(spark, tmp_path):
+    """The bucket count is fixed when the table is created: bootstrapping
+    an existing table with another count raises and names rebucket,
+    instead of handing back the old layout."""
+    path = str(tmp_path / "t")
+    bootstrap_table(spark, path, n_buckets=16)
+    with pytest.raises(ValueError, match="n_buckets=16.*rebucket"):
+        bootstrap_table(spark, path, n_buckets=32)
+    table = bootstrap_table(spark, path, n_buckets=16)
+    assert table.snapshot().properties["n_buckets"] == 16
+
+
 def test_mor_soft_delete_keeps_tombstones(spark, tmp_path):
     """sink_mode=mor + delete_mode=soft: delete winners survive
     reconstruct AND compaction as tombstones with _cdc_deleted_at set."""

@@ -160,6 +160,7 @@ def test_snapshot_then_older_replay_keeps_snapshot(spark, tmp_path, sink_mode):
     from gen_fixtures import generate_changelog
     from gear5_spark.pipeline.runner import (
         bootstrap_table,
+        make_applier,
         replay_batch,
         snapshot_load,
     )
@@ -180,8 +181,10 @@ def test_snapshot_then_older_replay_keeps_snapshot(spark, tmp_path, sink_mode):
     }
     table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8)
     snapshot_load(spark, snapshot_df, table, lsn=10**12)
+    ckpt = str(tmp_path / "ckpt")
     replay_batch(
-        spark, log, table, str(tmp_path / "ckpt"), sink_mode=sink_mode
+        spark, log, table, ckpt,
+        applier=make_applier(table, ckpt, sink_mode=sink_mode),
     )
     got = {
         (r["conv_id"], r["turn_idx"]): r["text"]

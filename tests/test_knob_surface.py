@@ -1,7 +1,10 @@
 """The CDC path's settable surface is pinned here: the applier's fields,
-the pipeline config's fields and the parameters of ``replay_batch``,
-``merge_into`` and ``get_spark``. A new option has to edit this file in
-the same change, where it is visible. Static check, no Spark session."""
+the pipeline config's fields, the parameters of ``replay_batch``,
+``merge_into``, ``merge_delta``, ``compact``,
+``LakeTable.write_data_files`` and ``get_spark``, and the public
+``LakeTable`` methods. A new option or entry point has to edit this file
+in the same change, where it is visible. Static check, no Spark
+session."""
 
 from __future__ import annotations
 
@@ -12,6 +15,8 @@ import pytest
 
 from gear5_spark.config import PipelineConfig
 from gear5_spark.lake.merge import merge_into
+from gear5_spark.lake.mor import compact, merge_delta
+from gear5_spark.lake.table import LakeTable
 from gear5_spark.pipeline.apply import TranscriptsApplier
 from gear5_spark.pipeline.runner import replay_batch
 from gear5_spark.session import get_spark
@@ -56,24 +61,61 @@ REPLAY_BATCH_PARAMS = [
     "app_id",
     "min_lsn",
     "max_lsn",
-    "salt_buckets",
-    "sink_mode",
-    "compact_every",
-    "quarantine_dir",
-    "exclude_columns",
-    "rollup",
+    "applier",
 ]
 
 MERGE_INTO_PARAMS = [
     "table",
     "batch",
-    "op_col",
     "order_guard",
     "txn_app_id",
     "txn_batch_id",
     "lineage",
     "affected_buckets",
     "pre_placed",
+]
+
+MERGE_DELTA_PARAMS = [
+    "table",
+    "batch",
+    "txn_app_id",
+    "txn_batch_id",
+    "lineage",
+    "pre_placed",
+]
+
+COMPACT_PARAMS = ["table", "buckets", "min_deltas"]
+
+WRITE_DATA_FILES_PARAMS = ["self", "df", "snap", "pre_placed"]
+
+LAKE_TABLE_PUBLIC = [
+    "add_column",
+    "bucket_expr",
+    "commit",
+    "create",
+    "current_version",
+    "drop",
+    "exists",
+    "expire_snapshots",
+    "history",
+    "last_committed_batch",
+    "lineage_df",
+    "lookup",
+    "overwrite",
+    "partition_lineage_df",
+    "place",
+    "placement",
+    "plan_scan",
+    "read",
+    "rebucket",
+    "rewrite_manifests",
+    "scan",
+    "schema",
+    "snapshot",
+    "truncate",
+    "vacuum",
+    "widen_column",
+    "write_data_files",
 ]
 
 
@@ -99,6 +141,19 @@ def test_config_fields_pinned():
 def test_replay_batch_and_merge_into_params_pinned():
     assert _params(replay_batch) == REPLAY_BATCH_PARAMS
     assert _params(merge_into) == MERGE_INTO_PARAMS
+
+
+def test_lake_entry_points_pinned():
+    assert _params(merge_delta) == MERGE_DELTA_PARAMS
+    assert _params(compact) == COMPACT_PARAMS
+    assert _params(LakeTable.write_data_files) == WRITE_DATA_FILES_PARAMS
+    # bucket columns are a list; the single-string form is gone
+    create = inspect.signature(LakeTable.create).parameters
+    assert create["bucket_columns"].annotation == "list[str] | None"
+    public = sorted(
+        n for n in vars(LakeTable) if not n.startswith("_") and not n.isupper()
+    )
+    assert public == LAKE_TABLE_PUBLIC
 
 
 def test_get_spark_params_pinned():

@@ -75,6 +75,7 @@ def test_concurrent_commit_rejected(spark, table):
         properties=snap.properties,
         files=snap.files,
         txn={},
+        manifest_list=snap.manifest_list,
     )
     with pytest.raises(ConcurrentCommitError):
         table._publish(stale)
@@ -280,7 +281,7 @@ def test_snapshot_without_bucket_columns_is_refused(tmp_path):
     snap = Snapshot(
         version=0, snapshot_id="s", parent_version=None, schema=SCHEMA,
         properties={"key_columns": ["k"], "n_buckets": 4},
-        files=[], txn={},
+        files=[], txn={}, manifest_list=[],
     )
     with pytest.raises(ValueError, match="bucket_columns"):
         bucket_columns_of(snap)
@@ -288,3 +289,25 @@ def test_snapshot_without_bucket_columns_is_refused(tmp_path):
         LakeTable(None, str(tmp_path / "t")).placement(snap)
     ok = Snapshot(**{**snap.__dict__, "properties": {"bucket_columns": ["k"]}})
     assert bucket_columns_of(ok) == ["k"]
+
+
+def test_inline_files_snapshot_is_refused(spark, table):
+    """Every snapshot carries a manifest list: one that lists its files
+    inline (the format before manifest lists) is refused on load with
+    an error naming the snapshot file."""
+    import json
+    import os
+
+    merge_into(table, _batch(spark, [("a", 1, 1, "insert")]))
+    snap = table.snapshot()
+    path = os.path.join(table.table_dir, "_lake", f"v{snap.version:08d}.json")
+    with open(path) as fh:
+        d = json.load(fh)
+    d.pop("manifest_list")
+    d["files"] = snap.files
+    with open(path, "w") as fh:
+        json.dump(d, fh)
+    with pytest.raises(ValueError, match=f"{path}.*manifest_list"):
+        table.snapshot()
+    with pytest.raises(ValueError, match="inline"):
+        table.read()

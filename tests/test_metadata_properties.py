@@ -89,6 +89,7 @@ def _snap(paths: set[str]) -> Snapshot:
         properties={"p": 1},
         files=[{"path": p, "bucket": 0} for p in sorted(paths)],
         txn={},
+        manifest_list=[],
     )
 
 

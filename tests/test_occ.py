@@ -94,6 +94,30 @@ def test_lost_race_rebases_and_succeeds(spark, table):
     assert {"mine", "theirs"} <= ks
 
 
+def test_rewrite_manifests_race_keeps_merge_files(spark, table):
+    """rewrite_manifests losing the publish race to a merge commit
+    rebases through the one commit path: the merge's files stay live,
+    and the retried fold still leaves exactly one live manifest."""
+    merged = {}
+
+    def competitor(other):
+        snap, _ = merge_into(
+            other, _batch(spark, [("k0", 100, 100), ("new", 9, 9)])
+        )
+        merged["paths"] = {f["path"] for f in snap.files}
+
+    state = _race_once(spark, table, competitor)
+    snap = table.rewrite_manifests()
+
+    assert state["raced"]
+    assert len(snap.manifest_list) == 1
+    current = table.snapshot()
+    assert current.version == snap.version
+    assert {f["path"] for f in current.files} == merged["paths"]
+    got = {r["k"]: r["v"] for r in table.read().collect()}
+    assert got == {**{f"k{i}": i for i in range(8)}, "k0": 100, "new": 9}
+
+
 def test_same_file_rewrite_conflict_raises(spark, table):
     snap0 = table.snapshot()
     victim = snap0.files[0]

@@ -5,7 +5,11 @@ from __future__ import annotations
 
 import pytest
 
-from gear5_spark.pipeline.runner import bootstrap_table, replay_batch
+from gear5_spark.pipeline.runner import (
+    bootstrap_table,
+    make_applier,
+    replay_batch,
+)
 from tests.oracle import oracle_rows
 
 
@@ -39,9 +43,10 @@ def test_hot_key_fixture_is_actually_skewed(skewed_changelog):
 def test_skewed_replay_matches_oracle(spark, skewed_changelog, tmp_path, salt):
     d, manifest = skewed_changelog
     table = bootstrap_table(spark, str(tmp_path / f"t{salt}"), n_buckets=8)
+    ckpt = str(tmp_path / f"c{salt}")
     replay_batch(
-        spark, d, table, checkpoint_dir=str(tmp_path / f"c{salt}"),
-        salt_buckets=salt,
+        spark, d, table, ckpt,
+        applier=make_applier(table, ckpt, salt_buckets=salt),
     )
     got = [
         r.asDict()

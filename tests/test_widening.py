@@ -406,43 +406,6 @@ def test_occ_rebase_schema_none_onto_widening_winner(spark, tmp_path):
     assert _rows(t) == {"a": (1.0, 10), "y": (3.0, 30)}
 
 
-def test_legacy_inline_snapshot_widen_splits_eras(spark, tmp_path):
-    """A widen whose parent is a legacy inline-files snapshot must keep
-    the eras apart during the one-time manifest conversion: surviving
-    pre-widen files land in their own annotated manifest, this commit's
-    new files in an unannotated one."""
-    import glob
-    import json as _json
-    import os as _os
-
-    t = _mk(spark, tmp_path)
-    rows = [(f"k{i}", i, i, "1", "insert") for i in range(8)]
-    merge_into(t, spark.createDataFrame(rows, _batch_schema(T.LongType())))
-    snap = t.snapshot()
-    vfiles = sorted(
-        glob.glob(_os.path.join(t.table_dir, "_lake", "v*.json"))
-    )
-    d = _json.loads(open(vfiles[-1]).read())
-    d.pop("manifest_list", None)
-    d["files"] = snap.files  # rewrite as a legacy inline snapshot
-    with open(vfiles[-1], "w") as fh:
-        fh.write(_json.dumps(d))
-    merge_into(
-        t,
-        spark.createDataFrame(
-            [("k0", 0.5, 99, "2", "update")], _batch_schema(T.DoubleType())
-        ),
-    )
-    assert t.schema["v"].dataType == T.DoubleType()
-    got = _rows(t)
-    assert got["k0"] == (0.5, 99)
-    assert all(got[f"k{i}"] == (float(i), i) for i in range(1, 8))
-    snap2 = t.snapshot()
-    phys = [m.get("physical") for m in snap2.manifest_list]
-    assert {"v": "bigint"} in phys  # kept pre-widen files, annotated
-    assert None in phys  # this commit's post-widen files, unannotated
-
-
 def test_scan_stats_prune_across_widened_eras(spark, tmp_path):
     """Manifest-stats file skipping keeps working across a widen: the
     long-era files carry INTEGER min/max for v while the filter value
