@@ -124,12 +124,9 @@ def _q_skewed_latest_per_key(spark, sf_dir):
     """A5 under pathological skew (SURVEY §5.5): ~30% of all events are
     remapped onto one hot key (deterministic ``event_id % 10 < 3``
     rule, reproduced verbatim in the DuckDB oracle), then reduced with
-    the engine's salted plan (``operators.dedup.salted_pre_reduce``
-    then the per-key reduction, ``salt_buckets=8``) — the pre-reduction
-    the applier runs ahead of its placement exchange when one key
-    dominates a batch. The oracle equality proves the salted cascade is
-    result-identical to the plain dedup window under the skew it exists
-    for."""
+    the engine's one dedup plan (``operators.dedup.latest_per_key``).
+    The oracle equality proves that plan result-identical to the plain
+    dedup window under a single hot key."""
     from gear5_spark.operators.dedup import latest_per_key
 
     ev = _t(spark, sf_dir, "events").select(
@@ -141,7 +138,7 @@ def _q_skewed_latest_per_key(spark, sf_dir):
         "ts",
     )
     return latest_per_key(
-        ev, ["user_id"], order_cols=("ts", "event_id"), salt_buckets=8
+        ev, ["user_id"], order_cols=("ts", "event_id")
     ).select("user_id", "event_id", "event_type", "ts")
 
 
@@ -1391,7 +1388,7 @@ def oracle_sql() -> dict[str, str]:
         "skewed_latest_per_key": (
             # same skew rule as the Spark query: ~30% of events collapse
             # onto hot key -1; the oracle reduces with a plain window, so
-            # equality proves the salted two-phase cascade exact
+            # equality proves the one dedup plan exact under a hot key
             "WITH skewed AS (SELECT CASE WHEN event_id % 10 < 3 THEN -1 "
             "ELSE user_id END AS user_id, event_id, event_type, ts "
             "FROM events) "

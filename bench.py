@@ -573,8 +573,8 @@ def main() -> None:
     # --- analytic operators at SF_DIR
     bench_queries = [
         "latest_per_key",
-        # pathological skew (one key ~30% of events) through the salted
-        # two-phase plan — timed next to the plain path so a reducer
+        # pathological skew (one key ~30% of events) through the one
+        # dedup plan — timed next to the plain path so a reducer
         # imbalance would show up as a latest_per_key/skew gap
         "skewed_latest_per_key",
         "changelog_replay",

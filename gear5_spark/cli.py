@@ -195,10 +195,9 @@ def cmd_read(args) -> int:
         )
     applier = make_applier(
         table, cfg.checkpoint_dir, app_id=cfg.app_id,
-        salt_buckets=cfg.salt_buckets, sink_mode=cfg.resolved_sink_mode,
-        compact_every=cfg.compact_every, quarantine_dir=cfg.quarantine_dir,
-        exclude_columns=cfg.exclude_columns,
-        rollup=rollup,
+        sink_mode=cfg.resolved_sink_mode, compact_every=cfg.compact_every,
+        quarantine_dir=cfg.quarantine_dir,
+        exclude_columns=cfg.exclude_columns, rollup=rollup,
     )
     perf.reset()
     t0 = time.perf_counter()

@@ -31,7 +31,6 @@ class PipelineConfig:
         default="hard",
         metadata={"jsonschema": {"enum": ["hard", "soft"]}},
     )
-    salt_buckets: int = 1
     # None = per-mode default: stream -> mor (delta append + periodic
     # compaction; per-batch CoW rewrite amplification is the wrong shape
     # for a steady tail — see runner.run_stream), bulk -> cow (one big
@@ -74,8 +73,6 @@ class PipelineConfig:
             )
         if self.n_buckets < 1:
             problems.append("n_buckets must be >= 1")
-        if self.salt_buckets < 1:
-            problems.append("salt_buckets must be >= 1")
         if self.sink_mode not in ("cow", "mor", None):
             problems.append(
                 f"sink_mode must be cow|mor|None(auto), got {self.sink_mode}"

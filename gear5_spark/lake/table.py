@@ -1270,7 +1270,16 @@ class LakeTable:
             lineage=lin,
             committed_at_ms=now_ms,
         )
-        self._publish(snap)
+        try:
+            self._publish(snap)
+        except CommitRaceLost:
+            # no snapshot names this attempt's new manifest; the retry
+            # writes its own
+            kept = {m["path"] for m in parent.manifest_list}
+            for m in m_list:
+                if m["path"] not in kept:
+                    os.unlink(os.path.join(self.table_dir, m["path"]))
+            raise
         return snap
 
     def last_committed_batch(self, txn_app_id: str) -> int | None:
@@ -1568,10 +1577,10 @@ class LakeTable:
                 T.StructField("event_count", T.LongType()),
                 T.StructField("txn_ids_hash", T.StringType()),
                 T.StructField("malformed_count", T.LongType()),
-                # physical dedup plan the batch ran (fused | salted;
-                # "partial" on commits written before that plan was
-                # removed; NULL on pre-plan-audit commits and data-less
-                # quarantine-only commits)
+                # physical dedup plan the batch ran ("fused"; "salted"
+                # or "partial" on commits written before those plans
+                # were removed; NULL on pre-plan-audit commits and
+                # data-less quarantine-only commits)
                 T.StructField("dedup_plan", T.StringType()),
                 T.StructField("snapshot_id", T.StringType()),
                 T.StructField("snapshot_version", T.LongType()),

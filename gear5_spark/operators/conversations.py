@@ -18,9 +18,8 @@ Scale notes (100 TB):
   straight from the lake, rows arrive already bucketed by
   ``(conv_id, turn_idx)`` — AQE coalesces the near-no-op exchange.
 - ``gap_sessionize`` is one shuffle + per-key sort (window). A
-  pathologically hot key serializes into one task — same caveat as any
-  ordered-gap detection; pre-split by coarse time range first if a
-  single entity exceeds a partition.
+  pathologically hot key serializes into one task, as in any
+  ordered-gap detection; the operator has no hot-key option.
 - ``asof_join`` is the union-window formulation: one shuffle + sort,
   NO range-join row explosion, no per-key driver loop. This is the
   shape that survives 10^10 rows where a naive
@@ -108,8 +107,6 @@ def gap_sessionize(
     ts_col: str = "ts",
     gap_sec: int = 1800,
     session_col: str = "session_idx",
-    hot_key_budget: int | None = None,
-    split_interval_sec: int = 86_400,
 ) -> DataFrame:
     """Split each key's event stream into sessions wherever the gap to
     the previous event exceeds ``gap_sec`` (lag + running sum — the
@@ -124,19 +121,7 @@ def gap_sessionize(
     rows are dropped (they cannot be placed in time; Spark sorts NULLs
     FIRST while ANSI engines default NULLS LAST, so keeping them would
     shift every real session index relative to the SQL oracle — the
-    streaming sessionizer drops them the same way).
-
-    Hot-key guard (the salted-dedup pattern applied to ordered work):
-    with ``hot_key_budget`` set, keys whose event count exceeds it are
-    routed to an EXACT two-phase plan — rows pre-split into coarse
-    ``split_interval_sec`` time chunks, sessionized locally per
-    (key, chunk) in parallel, then the per-chunk summaries (one row per
-    chunk: first/last ts, local session count) are stitched with a tiny
-    window and the offsets joined back. A key holding 30% of the corpus
-    costs max(chunk) rows per task instead of serializing into one; the
-    output is bit-identical to the single-window formulation (the
-    stitch merges a chunk-leading session into the previous chunk's
-    trailing one whenever the boundary gap <= gap_sec)."""
+    streaming sessionizer drops them the same way)."""
     df = df.filter(F.col(ts_col).isNotNull())
 
     def _us(c: Column) -> Column:
@@ -144,97 +129,19 @@ def gap_sessionize(
         # session pins UTC, so the cast is value-preserving
         return F.unix_micros(c.cast("timestamp"))
 
-    def _single_window(part: DataFrame) -> DataFrame:
-        w = Window.partitionBy(key_col).orderBy(ts_col)
-        prev = F.lag(F.col(ts_col)).over(w)
-        is_new = F.when(
-            prev.isNull()
-            | ((_us(F.col(ts_col)) - _us(prev)) > gap_sec * 1_000_000),
-            F.lit(1),
-        ).otherwise(F.lit(0))
-        return part.withColumn(
-            session_col,
-            F.sum(is_new).over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-
-    if hot_key_budget is None:
-        return _single_window(df)
-
-    counts = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("_kc"))
-    hot_keys = [
-        r[key_col]
-        for r in counts.filter(F.col("_kc") > hot_key_budget).collect()
-        # NULL keys stay on the single-window path: ~isin() is NULL (not
-        # true) for them, so routing NULL through the hot branch would
-        # silently drop those rows from BOTH branches
-        if r[key_col] is not None
-    ]
-    if not hot_keys:
-        return _single_window(df)
-    cold = _single_window(
-        df.filter(F.col(key_col).isNull() | ~F.col(key_col).isin(hot_keys))
-    )
-
-    hot = df.filter(F.col(key_col).isin(hot_keys)).withColumn(
-        "_chunk",
-        # floor, not truncate-toward-zero: pre-epoch timestamps must
-        # still bucket monotonically
-        F.floor(
-            _us(F.col(ts_col)) / F.lit(split_interval_sec * 1_000_000)
-        ).cast("long"),
-    )
-    # phase 1: local sessionization per (key, chunk) — parallel across
-    # chunks; a chunk's first row always opens local session 1
-    wl = Window.partitionBy(key_col, "_chunk").orderBy(ts_col)
-    prev_l = F.lag(F.col(ts_col)).over(wl)
-    is_new_l = F.when(
-        prev_l.isNull()
-        | ((_us(F.col(ts_col)) - _us(prev_l)) > gap_sec * 1_000_000),
+    w = Window.partitionBy(key_col).orderBy(ts_col)
+    prev = F.lag(F.col(ts_col)).over(w)
+    is_new = F.when(
+        prev.isNull()
+        | ((_us(F.col(ts_col)) - _us(prev)) > gap_sec * 1_000_000),
         F.lit(1),
     ).otherwise(F.lit(0))
-    local = hot.withColumn(
-        "_lidx",
-        F.sum(is_new_l).over(
-            wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return df.withColumn(
+        session_col,
+        F.sum(is_new).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    # phase 2: stitch — ONE summary row per (key, chunk), so this window
-    # is tiny no matter how hot the key is
-    summ = local.groupBy(key_col, "_chunk").agg(
-        F.min(ts_col).alias("_first_ts"),
-        F.max(ts_col).alias("_last_ts"),
-        F.max("_lidx").alias("_nsess"),
-    )
-    ws = Window.partitionBy(key_col).orderBy("_chunk")
-    prev_last = F.lag("_last_ts").over(ws)
-    merged = F.when(
-        prev_last.isNotNull()
-        & ((_us(F.col("_first_ts")) - _us(prev_last)) <= gap_sec * 1_000_000),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    offsets = summ.select(
-        key_col,
-        "_chunk",
-        (
-            F.coalesce(
-                F.sum("_nsess").over(
-                    ws.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-            - F.sum(merged).over(
-                ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-        ).alias("_offset"),
-    )
-    hot_done = (
-        local.join(F.broadcast(offsets), [key_col, "_chunk"])
-        .withColumn(session_col, F.col("_lidx") + F.col("_offset"))
-        .drop("_chunk", "_lidx", "_offset")
-    )
-    return cold.unionByName(hot_done)
 
 
 def asof_join(

@@ -15,8 +15,8 @@ micro-batch:
 3. **normalize**: typed columns + ``_cdc_*`` stamps (operators.normalize).
 4. **dedup** (A5): latest event per ``(conv_id, turn_idx)`` by
    ``(lsn, txn_seq)`` inside the one shuffle that places the batch by
-   the table's placement slot (``LakeTable.place``); with salting on,
-   an optional per-``(key, salt)`` pre-reduction runs before it.
+   the table's placement slot (``LakeTable.place``). The placement
+   buckets on the full key, so it also spreads a hot ``conv_id``.
 5. **MERGE** with LSN order-guard + lineage row embedded in the same
    atomic commit (lsn range, event count, txn-ids hash — FIXTURES.md §4).
 """
@@ -39,7 +39,7 @@ from gear5_spark.lake.table import (
     Snapshot,
     footer_min_max,
 )
-from gear5_spark.operators.dedup import latest_per_key, salted_pre_reduce
+from gear5_spark.operators.dedup import latest_per_key
 from gear5_spark.operators.infer import infer_token
 from gear5_spark.operators.names import sanitize_unique
 from gear5_spark.operators.normalize import (
@@ -265,7 +265,6 @@ class TranscriptsApplier:
     table: LakeTable
     app_id: str
     registry_path: str
-    salt_buckets: int = 1
     sink_mode: str = "cow"  # cow | mor (delta files + periodic compaction)
     compact_every: int = 8
     quarantine_dir: str | None = None  # dead-letter sink for unkeyable events
@@ -405,10 +404,8 @@ class TranscriptsApplier:
         # key and is the partitioning column), and neither the merge
         # join nor the write shuffles the batch again (pre_placed) — one
         # shuffle total per batch (measured: a separate write re-shuffle
-        # moved ~1.2 GB both ways per 4M events). Salting (pathological
-        # per-key skew) only adds a per-(key, salt) pre-reduction in
-        # front of the same placement. The winner cache is built
-        # uncompressed (session conf, see session.get_spark).
+        # moved ~1.2 GB both ways per 4M events). The winner cache is
+        # built uncompressed (session conf, see session.get_spark).
         #
         # The placement is sized to the session's shuffle width, so every
         # stage after this exchange, and the write, runs `width` tasks
@@ -425,8 +422,6 @@ class TranscriptsApplier:
         want = self.table.placement(
             snap0, shuffle_width(batch.sparkSession), self.sink_mode
         ).n_slots
-        if self.salt_buckets > 1:
-            valid = salted_pre_reduce(valid, KEY_COLS, self.salt_buckets)
         placed, pre_placed = self.table.place(valid, snap0, want)
         # keep _pslot through the cache: the merge join co-partitions on
         # it (lake/merge.py), so the batch is never re-shuffled after
@@ -543,7 +538,7 @@ class TranscriptsApplier:
             )
             lineage = {
                 **_batch_lineage(batch_id, stats),
-                "dedup_plan": "salted" if self.salt_buckets > 1 else "fused",
+                "dedup_plan": "fused",
                 # snapshot_version is stamped by commit itself (the only
                 # value that survives an OCC rebase)
             }

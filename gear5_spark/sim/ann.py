@@ -244,24 +244,6 @@ def _table_buckets(
     ).select(out_id, F.col("tb.tbl").alias("tbl"), F.col("tb.bkt").alias("bkt"))
 
 
-def _fits_broadcast(df: DataFrame) -> bool:
-    """True when the optimizer's own size estimate for ``df`` is a real
-    (non-default) figure under the session broadcast threshold — a
-    driver-side metadata read, never a job."""
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        thresh = int(
-            df.sparkSession._jsparkSession.sessionState()
-            .conf()
-            .autoBroadcastJoinThreshold()
-        )
-    except Exception:
-        return False
-    return 0 < thresh and 0 < est <= thresh
-
-
 def _confirm_cosine_pairs(
     emb: DataFrame,
     cand: DataFrame,
@@ -296,21 +278,13 @@ def _confirm_cosine_pairs(
     cand = cand.repartition(
         emb.sparkSession.sparkContext.defaultParallelism
     )
-    # Broadcast the VECTOR projections when the corpus is provably small
-    # (driver-side stats, no job): the candidate side is a post-
-    # aggregate subtree whose size estimate collapses to a few bytes, so
-    # left alone the planner broadcasts the PAIR SET and streams the
-    # vectors — every scoring task then deserializes the multi-million-
-    # row pair relation (measured: 150 CPU-s for a 2M-pair confirm whose
-    # explicit-broadcast plan costs ~20). When the corpus is too big to
-    # broadcast the hint is omitted and the joins shuffle both sides as
-    # before (the 10^9-vector shape).
-    force_bcast = _fits_broadcast(emb)
-    if not force_bcast:
-        # spread the per-row norm compute only when the vectors will be
-        # shuffle-joined; a broadcast build runs single-stream anyway,
-        # so the fan_out exchange would be a pure extra stage
-        emb = fan_out(emb)
+    # No broadcast hint on either side: a hint trusts Catalyst's static
+    # size estimate, which collapses on post-aggregate subtrees (the
+    # candidate set, and any derived ``emb``) and would pin a multi-GB
+    # broadcast past AQE's runtime size check. Spark's own size-based
+    # broadcast, re-planned by AQE on the shuffled sides' real sizes,
+    # picks the build side.
+    emb = fan_out(emb)
     with_norm = impl != "arrow"  # arrow mode norms inside the batch
     va = emb.select(
         F.col(id_col).alias("doc_id_a"),
@@ -322,8 +296,6 @@ def _confirm_cosine_pairs(
         F.col(vec_col).alias("_vb"),
         *([_norm(F.col(vec_col)).alias("_nb")] if with_norm else []),
     )
-    if force_bcast:
-        va, vb = F.broadcast(va), F.broadcast(vb)
     joined = cand.join(va, "doc_id_a").join(vb, "doc_id_b")
     if impl == "arrow":
         return _arrow_cosine_confirm(joined, threshold)
@@ -876,18 +848,13 @@ def lsh_cosine_topk(
         F.col(vec_col).alias("q_vec"),
         _norm(F.col(vec_col)).alias("_qn"),
     )
-    bcast_base = _fits_broadcast(emb)
-    bv = (emb if bcast_base else fan_out(emb)).select(
+    # no hint on the base vectors (see _confirm_cosine_pairs): AQE picks
+    # the build side from runtime sizes
+    bv = fan_out(emb).select(
         F.col(id_col).alias("b_id"),
         F.col(vec_col).alias("b_vec"),
         _norm(F.col(vec_col)).alias("_bn"),
     )
-    if bcast_base:
-        # small corpus: pin the base-vector attach as a broadcast so the
-        # (post-aggregate, estimate-less) candidate set is never the
-        # build side, and skip the fan_out exchange a broadcast build
-        # would waste (same rationale as _confirm_cosine_pairs)
-        bv = F.broadcast(bv)
     scored = (
         cand.join(F.broadcast(qv), "q_id")
         .join(bv, "b_id")

@@ -1,5 +1,5 @@
 """Focused tests for the co-partitioned MERGE (lake/merge.py): every
-copy-on-write batch — fused, salted, or handed to ``merge_into``
+copy-on-write batch — the applier's, or one handed to ``merge_into``
 unplaced — is placed by the table and merged by one full-outer join on
 ``[_pslot, *key]`` with no planner-inserted exchange; results match the
 serial oracle, and a placement that no longer matches the table is
@@ -31,23 +31,22 @@ def _texts(rows):
 
 def test_copartitioned_merge_matches_oracle(spark, log_dir, tmp_path):
     # phase 1 fills the target; phase 2 exercises the guarded merge
-    # against a NON-empty target, fused and salted
+    # against a NON-empty target
     from tests.oracle import oracle_rows
 
     want = _texts(oracle_rows(log_dir))
     assert want
-    for plan, salt in (("fused", 1), ("salted", 2)):
-        t = bootstrap_table(spark, str(tmp_path / plan), n_buckets=8)
-        for lo, hi in ((None, 2999), (2999, None)):
-            ckpt = str(tmp_path / f"{plan}-ck{hi}")
-            replay_batch(
-                spark, log_dir, t, ckpt, min_lsn=lo, max_lsn=hi,
-                applier=make_applier(t, ckpt, salt_buckets=salt),
-            )
-        assert _texts(t.read().collect()) == want, plan
+    t = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8)
+    for lo, hi in ((None, 2999), (2999, None)):
+        ckpt = str(tmp_path / f"ck{hi}")
+        replay_batch(
+            spark, log_dir, t, ckpt, min_lsn=lo, max_lsn=hi,
+            applier=make_applier(t, ckpt),
+        )
+    assert _texts(t.read().collect()) == want
 
 
-@pytest.mark.parametrize("case", ["fused", "salted", "direct"])
+@pytest.mark.parametrize("case", ["fused", "direct"])
 def test_copartitioned_merge_plan_shape(spark, log_dir, tmp_path, case):
     # the guarded merge's write input: ONE full-outer join, built as a
     # shuffled-hash join on the batch side, with no exchange between the
@@ -89,10 +88,7 @@ def test_copartitioned_merge_plan_shape(spark, log_dir, tmp_path, case):
         if case == "direct":
             merge_into(t, batch)
         else:
-            applier = make_applier(
-                t, str(tmp_path / "ck1"),
-                salt_buckets=2 if case == "salted" else 1,
-            )
+            applier = make_applier(t, str(tmp_path / "ck1"))
             applier(read_changelog(spark, log_dir, min_lsn=2999), 1)
     finally:
         LT.LakeTable.write_data_files = orig
@@ -105,16 +101,11 @@ def test_copartitioned_merge_plan_shape(spark, log_dir, tmp_path, case):
     assert joins == 0, plan
     # no planner-inserted exchange: every shuffle left in the plan is an
     # explicit _pslot placement repartition (a key-shuffled merge
-    # re-shuffles BOTH join sides by key via ENSURE_REQUIREMENTS). The
-    # one exception is the salted pre-reduction's own (key, _salt)
-    # exchange inside the cached winner set, below its placement.
+    # re-shuffles BOTH join sides by key via ENSURE_REQUIREMENTS)
     planned = [
         line for line in plan.splitlines() if "ENSURE_REQUIREMENTS" in line
     ]
-    if case == "salted":
-        assert planned and all("_salt" in line for line in planned), plan
-    else:
-        assert planned == [], plan
+    assert planned == [], plan
     assert "hashpartitioning(_pslot" in plan, plan
 
 

@@ -1,8 +1,8 @@
 """The CDC path's settable surface is pinned here: the applier's fields,
 the pipeline config's fields, the parameters of ``replay_batch``,
 ``merge_into``, ``merge_delta``, ``compact``,
-``LakeTable.write_data_files`` and ``get_spark``, and the public
-``LakeTable`` methods. A new option or entry point has to edit this file
+``LakeTable.write_data_files``, ``get_spark``, ``latest_per_key`` and
+``gap_sessionize``, and the public ``LakeTable`` methods. A new option or entry point has to edit this file
 in the same change, where it is visible. Static check, no Spark
 session."""
 
@@ -17,6 +17,8 @@ from gear5_spark.config import PipelineConfig
 from gear5_spark.lake.merge import merge_into
 from gear5_spark.lake.mor import compact, merge_delta
 from gear5_spark.lake.table import LakeTable
+from gear5_spark.operators.conversations import gap_sessionize
+from gear5_spark.operators.dedup import latest_per_key
 from gear5_spark.pipeline.apply import TranscriptsApplier
 from gear5_spark.pipeline.runner import replay_batch
 from gear5_spark.session import get_spark
@@ -25,7 +27,6 @@ APPLIER_FIELDS = [
     "table",
     "app_id",
     "registry_path",
-    "salt_buckets",
     "sink_mode",
     "compact_every",
     "quarantine_dir",
@@ -43,7 +44,6 @@ CONFIG_FIELDS = [
     "mode",
     "n_buckets",
     "delete_mode",
-    "salt_buckets",
     "sink_mode",
     "compact_every",
     "max_files_per_trigger",
@@ -121,6 +121,12 @@ LAKE_TABLE_PUBLIC = [
 
 GET_SPARK_PARAMS = ["app_name", "master", "shuffle_partitions", "extra_conf"]
 
+# skew is the table placement's job: neither operator takes a hot-key
+# option (no salting, no hot-key guard)
+LATEST_PER_KEY_PARAMS = ["df", "key_cols", "order_cols", "co_group_cols"]
+
+GAP_SESSIONIZE_PARAMS = ["df", "key_col", "ts_col", "gap_sec", "session_col"]
+
 
 def _fields(cls) -> list[str]:
     return [f.name for f in dataclasses.fields(cls)]
@@ -160,7 +166,14 @@ def test_get_spark_params_pinned():
     assert _params(get_spark) == GET_SPARK_PARAMS
 
 
-@pytest.mark.parametrize("key", ["auto_widen", "partition_lineage"])
+def test_skew_free_operator_params_pinned():
+    assert _params(latest_per_key) == LATEST_PER_KEY_PARAMS
+    assert _params(gap_sessionize) == GAP_SESSIONIZE_PARAMS
+
+
+@pytest.mark.parametrize(
+    "key", ["auto_widen", "partition_lineage", "salt_buckets"]
+)
 def test_removed_config_keys_are_unknown(key):
     base = {"changelog_dir": "l", "table_dir": "t", "checkpoint_dir": "c"}
     with pytest.raises(ValueError, match=f"unknown config keys.*{key}"):

@@ -1,8 +1,8 @@
 """Merge-on-read delta files that hold several buckets.
 
 A 32-bucket table streamed on the suite's width-8 session gets range-
-placed deltas: each micro-batch, salted or not, writes at most 8 delta
-files, each holding four contiguous whole buckets. Every read and rewrite path must
+placed deltas: each micro-batch, of one change-log file or two, writes at
+most 8 delta files, each holding four contiguous whole buckets. Every read and rewrite path must
 select, filter and drop those files by their full bucket range; each
 case is checked against the serial oracle or a full read."""
 
@@ -31,11 +31,10 @@ N_BUCKETS = 32
 COLS = ["conv_id", "turn_idx", "role", "text", "ts"]
 
 
-def _stream(spark, changelog_dir, root, salt_buckets=1, files_per_trigger=1):
+def _stream(spark, changelog_dir, root, files_per_trigger=1):
     table = bootstrap_table(spark, str(root / "t"), n_buckets=N_BUCKETS)
     applier = make_applier(
-        table, str(root / "ckpt"), sink_mode="mor", compact_every=0,
-        salt_buckets=salt_buckets,
+        table, str(root / "ckpt"), sink_mode="mor", compact_every=0
     )
     run_stream(
         spark, changelog_dir, table, checkpoint_dir=str(root / "ckpt"),
@@ -73,17 +72,16 @@ def _range_entries(snap) -> list[dict]:
     return [f for f in snap.files if len(entry_buckets(f)) > 1]
 
 
-@pytest.mark.parametrize("salt_buckets", [1, 2])
+@pytest.mark.parametrize("files_per_trigger", [1, 2])
 def test_micro_batch_writes_at_most_width_range_files(
-    spark, request, tiny_changelog, tmp_path, salt_buckets
+    spark, request, tiny_changelog, tmp_path, files_per_trigger
 ):
-    if salt_buckets == 1:
+    if files_per_trigger == 1:
         range_table = request.getfixturevalue("range_table")
     else:
-        # the salted pre-reduction runs ahead of the same placement;
         # three micro-batches of the 5-chunk log
         range_table = _stream(
-            spark, tiny_changelog[0], tmp_path, salt_buckets, files_per_trigger=2
+            spark, tiny_changelog[0], tmp_path, files_per_trigger=2
         )
     width = shuffle_width(spark)
     assert width < N_BUCKETS  # the suite's session really groups buckets

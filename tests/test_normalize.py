@@ -71,26 +71,20 @@ def test_coerce_timestamp_layouts(spark):
     assert got[6] is None
 
 
-def test_latest_per_key_plain_vs_salted(spark):
+def test_latest_per_key_keeps_latest_event(spark):
     rows = []
     for lsn in range(200):
         key = lsn % 7
         rows.append((lsn, lsn % 3, key, f"v{lsn}"))
     df = spark.createDataFrame(rows, ["lsn", "txn_seq", "k", "val"])
-    plain = {
+    got = {
         (r["k"], r["val"])
         for r in latest_per_key(df, ["k"]).collect()
     }
-    salted = {
-        (r["k"], r["val"])
-        for r in latest_per_key(df, ["k"], salt_buckets=5).collect()
-    }
-    assert plain == salted
-    assert len(plain) == 7
+    assert len(got) == 7
     # latest lsn per key wins
-    assert ("0", "v196") not in plain  # keys are ints; sanity on shape
     want = {(k, f"v{max(l for l in range(200) if l % 7 == k)}") for k in range(7)}
-    assert plain == want
+    assert got == want
 
 
 def test_config_validate_and_spec(tmp_path):
@@ -106,11 +100,10 @@ def test_config_validate_and_spec(tmp_path):
         checkpoint_dir="c",
         mode="nope",
         delete_mode="purge",
-        salt_buckets=0,
         exclude_columns=["conv_id"],
     )
     problems = bad.validate()
-    assert len(problems) == 5
+    assert len(problems) == 4
     spec = config_spec()
     assert spec["required"] == ["changelog_dir", "table_dir", "checkpoint_dir"]
     assert spec["properties"]["mode"]["default"] == "stream"

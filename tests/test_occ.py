@@ -94,6 +94,30 @@ def test_lost_race_rebases_and_succeeds(spark, table):
     assert {"mine", "theirs"} <= ks
 
 
+def test_lost_race_leaves_no_orphan_manifest(spark, table):
+    """The attempt that loses the publish race deletes the manifest it
+    wrote: afterwards every m-*.json is named by a retained snapshot."""
+    import glob
+    import os
+
+    snap0 = table.snapshot()
+    mine = _write_entries(spark, table, [("mine", 100, 100)])
+    theirs = _write_entries(spark, table, [("theirs", 200, 200)])
+    state = _race_once(
+        spark, table,
+        lambda other: other.commit(other.snapshot().files + theirs),
+    )
+    table.commit(snap0.files + mine)
+
+    assert state["raced"]
+    named = {m["path"] for s in table.history() for m in s.manifest_list}
+    on_disk = {
+        os.path.relpath(p, table.table_dir)
+        for p in glob.glob(os.path.join(table.table_dir, "_lake", "m-*.json"))
+    }
+    assert on_disk == named
+
+
 def test_rewrite_manifests_race_keeps_merge_files(spark, table):
     """rewrite_manifests losing the publish race to a merge commit
     rebases through the one commit path: the merge's files stay live,

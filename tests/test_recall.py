@@ -314,3 +314,38 @@ def test_arrow_confirm_matches_sql_mode(spark):
             assert any(c is None for (_, _, c, _) in arrow_rows)
     with pytest.raises(ValueError):
         embedding_near_duplicates(emb, confirm_impl="simd", **kw).collect()
+
+
+def _broadcast_hints(df) -> int:
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return sum(
+        "broadcast" in line
+        for line in plan.splitlines()
+        if "ResolvedHint" in line
+    )
+
+
+def test_vector_joins_carry_no_forced_broadcast(spark):
+    """A post-aggregate ``emb`` has a collapsed static size estimate; the
+    vector sides of the cosine joins must not be pinned as a broadcast
+    on it (AQE picks the build side from runtime sizes)."""
+    from gear5_spark.sim.ann import _confirm_cosine_pairs, lsh_cosine_topk
+
+    # a range scan has real stats; the aggregate's estimate is ~500 bytes
+    raw = spark.range(40).select(
+        (F.col("id") % 20).alias("vec_id"),
+        F.array(F.col("id").cast("double"), F.lit(1.0), F.lit(0.5)).alias(
+            "embedding"
+        ),
+    )
+    emb = raw.groupBy("vec_id").agg(F.first("embedding").alias("embedding"))
+    cand = spark.createDataFrame(
+        [(i, i + 1, False) for i in range(19)],
+        "doc_id_a long, doc_id_b long, star boolean",
+    )
+    confirmed = _confirm_cosine_pairs(emb, cand, 0.9, "embedding", "vec_id")
+    assert _broadcast_hints(confirmed) == 0
+    # lsh_cosine_topk keeps only its small query side's two broadcasts
+    # (bucket probes and query vectors); the base vectors get none
+    topk = lsh_cosine_topk(emb, emb.limit(3), k=2, dim=3)
+    assert _broadcast_hints(topk) == 2

@@ -65,23 +65,17 @@ def test_streaming_replay_matches_oracle(spark, tiny_changelog, tmp_path):
     assert table.current_version() >= 3
 
 
-def test_streaming_salted_matches_oracle(spark, tiny_changelog, tmp_path):
+def test_streaming_cow_matches_oracle(spark, tiny_changelog, tmp_path):
     changelog_dir, _ = tiny_changelog
     table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8)
-    applier = None
-    from gear5_spark.pipeline.runner import make_applier
-
-    applier = make_applier(
-        table, str(tmp_path / "ckpt"), salt_buckets=8
-    )
     run_stream(
         spark,
         changelog_dir,
         table,
         checkpoint_dir=str(tmp_path / "ckpt"),
         max_files_per_trigger=2,
-        applier=applier,
         timeout_sec=300,
+        sink_mode="cow",
     )
     _assert_matches_oracle(table, changelog_dir)
 
