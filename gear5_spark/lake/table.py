@@ -252,39 +252,6 @@ class Placement:
         return [range(-(-s * n // k), -(-(s + 1) * n // k)) for s in range(k)]
 
 
-# session-wide cache: slot-count -> identity partition map (pure function
-# of Murmur3, independent of table)
-_IDENT_MAP_CACHE: dict[int, list[int]] = {}
-
-
-def identity_slot_expr(n_slots: int, slot_expr, n_fine: int | None = None):
-    """Int expression whose ``repartition(n_slots, ...)`` hash-partition
-    slot equals ``slot_expr * n_slots // n_fine`` (``slot_expr`` an int
-    column in [0, n_fine); ``n_fine`` defaults to ``n_slots``, i.e. the
-    slot is ``slot_expr`` itself).
-
-    ``repartition(n, col)`` places a row in ``pmod(murmur3(col), n)``;
-    we precompute, per slot s, an integer x_s with
-    ``pmod(hash(x_s), n) == s`` (driver-side Murmur3 probe, no Spark
-    job — ``murmur3_int32`` matches ``F.hash`` exactly, pinned by
-    tests/test_lake_table.py) and partition on ``x_[slot]``. The
-    ``n_fine → n_slots`` grouping is folded into the same literal array,
-    so the row-side cost is one array lookup either way."""
-    cache = _IDENT_MAP_CACHE.get(n_slots)
-    if cache is None:
-        from gear5_spark.lake.xxh64 import murmur3_int32
-
-        mapping: dict[int, int] = {}
-        x = 0
-        while len(mapping) < n_slots:
-            mapping.setdefault(murmur3_int32(x) % n_slots, x)
-            x += 1
-        cache = [mapping[s] for s in range(n_slots)]
-        _IDENT_MAP_CACHE[n_slots] = cache
-    n_fine = n_fine or n_slots
-    arr = F.array(*[F.lit(cache[i * n_slots // n_fine]) for i in range(n_fine)])
-    return F.element_at(arr, slot_expr + 1)
-
 # manifest files are immutable once written — cache their entries
 # process-wide (bounded FIFO; re-read is cheap if evicted)
 _MANIFEST_FILE_CACHE: dict[str, list[dict[str, Any]]] = {}
@@ -813,26 +780,28 @@ class LakeTable:
         """Place ``df`` under ``snap``: add ``_bucket`` (unless ``df``
         already carries it — a rewrite keeps the bucket its rows are
         stored under) and the placement slot ``_pslot``, then do the one
-        ``repartition`` so every partition holds the rows of one slot
-        (see :meth:`placement`). Every lake write is placed here: the
-        applier places its raw batch before dedup, ``merge_into`` places
-        both join sides, and :meth:`write_data_files` places any input
-        that is not already placed under its snapshot.
+        ``repartitionById(n_slots, _pslot)``, so partition ``i`` holds
+        exactly the rows of slot ``i`` (see :meth:`placement`). Every
+        lake write is placed here: the applier places its raw batch
+        before dedup, ``merge_into`` places both join sides, and
+        :meth:`write_data_files` places any input that is not already
+        placed under its snapshot.
 
         One formula covers both regimes: a fine slot
-        ``bucket * q + sub`` in ``[0, n_buckets * q)`` maps to
-        ``fine * n_slots // (n_buckets * q)``. With ``q > 1`` (copy-on-
+        ``bucket * q + sub`` in ``[0, n_buckets * q)`` is slot
+        ``fine * n_slots div (n_buckets * q)``. With ``q > 1`` (copy-on-
         write: upstream parallelism above the bucket count, up to ``q``
         files per bucket per commit) that is the fine slot itself; the
         sub-key hashes the full bucket columns, so all events of one key
         share a slot — a co-located groupBy on (slot, key) is
         shuffle-free. With fewer slots than buckets (either sink on a
         session narrower than the bucket count) each slot holds
-        contiguous whole buckets and writes one file covering that
-        bucket range."""
+        contiguous whole buckets (:meth:`Placement.slot_of`) and writes
+        one file covering that bucket range."""
         p = self.placement(snap, n_slots)
         q = max(1, p.n_slots // p.n_buckets)
-        fine = F.col(BUCKET_COL) * q
+        if BUCKET_COL not in df.columns:
+            df = df.withColumn(BUCKET_COL, self.bucket_expr(snap))
         if q > 1:
             sub = F.pmod(
                 F.xxhash64(
@@ -840,11 +809,11 @@ class LakeTable:
                 ),
                 F.lit(q),
             ).cast("int")
-            fine = fine + sub
-        if BUCKET_COL not in df.columns:
-            df = df.withColumn(BUCKET_COL, self.bucket_expr(snap))
-        slot = identity_slot_expr(p.n_slots, fine, p.n_buckets * q)
-        return df.withColumn(SLOT_COL, slot).repartition(p.n_slots, SLOT_COL), p
+            slot = F.col(BUCKET_COL) * q + sub
+        else:
+            slot = F.expr(f"{BUCKET_COL} * {p.n_slots} div {p.n_buckets}").cast("int")
+        df = df.withColumn(SLOT_COL, slot)
+        return df.repartitionById(p.n_slots, SLOT_COL), p
 
     def write_data_files(
         self,

@@ -8,7 +8,7 @@ explicit and deterministically ordered by ``(lsn, txn_seq)``.
 
 One reduction, ``groupBy(key).agg(max_by(payload, struct(lsn,
 txn_seq)))``. In the applier the raw batch is first placed by the lake
-table (``LakeTable.place``: one ``Exchange hashpartitioning(_pslot)``),
+table (``LakeTable.place``: one ``repartitionById`` exchange on ``_pslot``),
 and the reduction groups on ``(_pslot, key)`` inside those partitions —
 partial then final ``SortAggregate`` after the one exchange, no
 aggregate before it, so every raw event crosses the shuffle. On an
@@ -43,7 +43,7 @@ def latest_per_key(
     ``co_group_cols``: columns FUNCTIONALLY DEPENDENT on the key (e.g. a
     bucket/placement slot derived from it) added to the groupBy. Groups
     are unchanged; the point is physical: when the input is already
-    hash-partitioned on one of these columns, Catalyst elides the
+    partitioned on one of these columns, Catalyst elides the
     aggregation exchange entirely — dedup runs shuffle-free inside the
     partitioning an upstream placement chose (see ``LakeTable.place``).
     """

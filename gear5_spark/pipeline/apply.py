@@ -151,27 +151,20 @@ def count_and_discover(src: DataFrame) -> tuple[int, dict[str, int]]:
 
     obs = Observation(f"dedup-count-{_uuid.uuid4().hex[:8]}")
     # the NULL of a key-less payload is dropped on the driver, not
-    # filtered in the plan (and so are known keys, by the caller): the
-    # aggregate must stay non-empty whenever the batch has winners. An
-    # empty one lets AQE's empty-relation propagation re-plan both
-    # CollectMetrics nodes away (this one and the applier's batch
-    # stats), leaving both Observations empty
-    counts = {
-        r["k"]: r["c"]
-        for r in src.observe(obs, F.count(F.lit(1)).alias("n"))
+    # filtered in the plan (and so are known keys, by the caller):
+    # explode_outer emits a row for every input row, so the aggregate is
+    # empty exactly when ``src`` is. Only then does AQE's empty-relation
+    # propagation re-plan both CollectMetrics nodes away (this one and
+    # the applier's batch stats), leaving both Observations empty
+    rows = (
+        src.observe(obs, F.count(F.lit(1)).alias("n"))
         .select(F.explode_outer(_payload_keys("after_json")).alias("k"))
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("c"))
         .collect()
-        if r["k"] is not None
-    }
-    try:
-        n = int(obs.get["n"])
-    except Exception:
-        # a batch without winners: the empty aggregate is re-planned
-        # away with its CollectMetrics node
-        n = src.count()
-    return n, counts
+    )
+    counts = {r["k"]: r["c"] for r in rows if r["k"] is not None}
+    return (int(obs.get["n"]) if rows else 0), counts
 
 
 def extend_from_counts(
@@ -440,22 +433,18 @@ class TranscriptsApplier:
             # passes is now one (VERDICT r3: cut bytes-per-event)
             with span("apply.dedup_count"):
                 n_keys, key_counts = count_and_discover(deduped_raw)
-            try:
-                stats = obs.get
-                if not stats or "event_count" not in stats:
-                    # some elimination paths fill the Observation with
-                    # an EMPTY dict rather than raising — subscripts
-                    # would then crash outside this guard
-                    raise KeyError("observation returned no metrics")
-            except Exception:
-                # AQE empty-relation propagation re-plans the
-                # CollectMetrics node away when the discovery aggregate
-                # above is empty, which happens only when the batch has
-                # no winners (empty or all-quarantined), leaving the
-                # Observation unfilled — recompute the identical
+            if n_keys == 0:
+                # no winners (an empty or all-quarantined batch): AQE's
+                # empty-relation propagation re-plans the CollectMetrics
+                # node away with the empty discovery aggregate, so the
+                # Observation is unfilled — recompute the identical
                 # aggregates as an explicit job. Only that batch pays
                 # the extra scan.
                 stats = batch.agg(*metrics).first().asDict()
+            else:
+                stats = obs.get
+                if "event_count" not in stats:
+                    raise RuntimeError(f"batch {batch_id}: empty stats observation")
             if stats.get("malformed_count") and self.quarantine_dir:
                 # idempotent per batch: the dead-letter write is OUTSIDE
                 # the atomic commit, so a crash-then-replay would append

@@ -77,6 +77,9 @@ def get_spark(
       the ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_MASTER`` /
       ``SPARK_GRAFT_DRIVER_MEM`` / ``SPARK_GRAFT_SHUFFLE`` deployment
       overrides are set.
+    - join planning stays at Spark's defaults: the co-partitioned MERGE
+      (lake/merge.py) needs no override, because both sides arrive
+      placed by ``repartitionById`` on the slot the join leads with.
 
     When this call launches the driver JVM, it starts from the install's
     class-data archive (see :func:`plan_cold_start`): the first launch
@@ -95,14 +98,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # allow a join whose children are hash-partitioned on a SUBSET
-        # of the join keys to run without a new exchange (rows with
-        # equal join keys share the subset hash, so co-location is
-        # guaranteed). The co-partitioned MERGE (lake/merge.py
-        # _pslot) leads its equi-join with the placement slot
-        # both sides are already partitioned on; with the default
-        # (true) Spark re-shuffles both sides by the full key anyway.
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")

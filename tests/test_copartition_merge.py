@@ -106,7 +106,7 @@ def test_copartitioned_merge_plan_shape(spark, log_dir, tmp_path, case):
         line for line in plan.splitlines() if "ENSURE_REQUIREMENTS" in line
     ]
     assert planned == [], plan
-    assert "hashpartitioning(_pslot" in plan, plan
+    assert "direct_shuffle_partition_id(_pslot" in plan, plan
 
 
 @pytest.mark.parametrize("sink_mode", ["cow", "mor"])

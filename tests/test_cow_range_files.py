@@ -15,10 +15,12 @@ from types import SimpleNamespace
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from gear5_spark.lake.merge import merge_into
 from gear5_spark.lake.table import (
     BUCKET_COL,
+    SLOT_COL,
     ConcurrentCommitError,
     LakeTable,
     Placement,
@@ -48,6 +50,31 @@ def test_slot_count_rule_by_sink():
         for w in (4, 8, 32, 64)
     }
     assert got == {4: (4, 4), 8: (8, 8), 32: (32, 32), 64: (64, 32)}
+
+
+@pytest.mark.parametrize("n_buckets", [32, 8])
+def test_place_sends_each_row_to_its_slot(spark, tmp_path, n_buckets):
+    """``place`` puts every row in the partition its ``_pslot`` names,
+    and ``_pslot`` follows the placement's slot rule: whole bucket
+    ranges at or below the bucket count, sub-split buckets above it."""
+    table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=n_buckets)
+    snap = table.snapshot()
+    df = spark.range(2000).select(
+        (F.col("id") % 97).cast("string").alias("conv_id"),
+        (F.col("id") / 97).cast("int").alias("turn_idx"),
+    )
+    for n in (4, 8, 32, 64):
+        placed, p = table.place(df, snap, n)
+        rows = placed.select(
+            BUCKET_COL, SLOT_COL, F.spark_partition_id().alias("pid")
+        ).collect()
+        assert {r["pid"] for r in rows} == set(range(p.n_slots)), n
+        assert all(r["pid"] == r[SLOT_COL] for r in rows), n
+        if p.n_slots <= n_buckets:
+            assert all(r[SLOT_COL] == p.slot_of(r[BUCKET_COL]) for r in rows), n
+        else:
+            q = p.n_slots // n_buckets
+            assert all(r[SLOT_COL] // q == r[BUCKET_COL] for r in rows), n
 
 
 def test_scope_widens_to_whole_slots_and_files():

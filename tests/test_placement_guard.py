@@ -1,6 +1,6 @@
 """The lake table is the one place that places rows: under
 gear5_spark/lake and gear5_spark/pipeline, ``.repartition(`` and
-``identity_slot_expr(`` are called only by ``LakeTable.place`` in
+``.repartitionById(`` are called only by ``LakeTable.place`` in
 lake/table.py. A second placement site would let a write path drift
 from the layout the merge, the write and the footer check agree on.
 Static check, no Spark."""
@@ -14,13 +14,13 @@ PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "gear5_spark"
 )
 DIRS = ("lake", "pipeline")
-CALLS = ("repartition", "identity_slot_expr")
+CALLS = ("repartition", "repartitionById")
 # (module, function) allowed to call them
 PLACEMENT = {("lake/table.py", "place")}
 
 
 def _stray_calls(tree: ast.AST, module: str) -> list[int]:
-    """Lines that call ``x.repartition(...)`` or ``identity_slot_expr(...)``
+    """Lines that call ``x.repartition(...)`` or ``x.repartitionById(...)``
     outside the placement code."""
     allowed: set[int] = set()
     for node in ast.walk(tree):
@@ -43,14 +43,13 @@ def _stray_calls(tree: ast.AST, module: str) -> list[int]:
 def test_guard_catches_stray_placement():
     for src in (
         "df = df.repartition(8, '_pslot')",
-        "x = identity_slot_expr(8, col)",
+        "df = df.repartitionById(8, '_pslot')",
         "def place(df):\n    return df.repartition(4)\n",
     ):
         assert _stray_calls(ast.parse(src), "lake/merge.py"), src
     ok = (
         "def place(self, df):\n"
-        "    slot = identity_slot_expr(8, col)\n"
-        "    return df.repartition(8, slot)\n"
+        "    return df.repartitionById(8, '_pslot')\n"
         "df.coalesce(1)\n"
     )
     assert _stray_calls(ast.parse(ok), "lake/table.py") == []

@@ -94,6 +94,9 @@ def test_get_spark_defaults_follow_the_host(recorder, monkeypatch):
     assert recorder.conf["spark.sql.inMemoryColumnarStorage.compressed"] == "false"
     # shuffle width is 2 x the host's CPUs, not a fixed count
     assert recorder.conf["spark.sql.shuffle.partitions"] == "8"
+    # join co-partitioning stays at Spark's default: the placement
+    # (repartitionById) needs no session-wide override
+    assert "spark.sql.requireAllClusterKeysForCoPartition" not in recorder.conf
 
 
 def test_env_overrides_win(recorder, monkeypatch):
