@@ -15,29 +15,26 @@ the physical join strategy:
 One physical plan: a full-outer join on the key with a per-row CASE
 that picks the winning side, so the join executes once.
 
-- ``order_guard=True`` (default, every applier batch): a batch row only
-  wins if its ``_cdc_lsn`` >= the stored row's. This makes apply
-  *order-insensitive across micro-batches* for live rows (replays,
-  reordered batches and a change log older than a loaded snapshot can
-  never regress a row), strictly stronger than the reference's reliance
-  on serial WAL order (``pkg/waljs/waljs.go:332-348``). The rule is
-  :func:`lww_order`, and merge-on-read reads and compaction
-  (``mor.reconstruct``) run this same guarded plan, placed at the
-  merge-on-read slot count, with each key's winning delta as the
-  batch side. Caveat: on a ``hard`` delete table the delete also
-  removes the key's LSN watermark, so a REORDERED older update arriving
-  after the delete re-inserts the row — full order-insensitivity across
-  deletes needs a ``soft`` table (tombstones keep the watermark). The
-  engine's own feeds deliver batches in checkpoint order, where hard
-  deletes are safe.
-- ``order_guard=False``: the same plan with the guard set to true —
-  batch-wins. The conversation rollup uses it: its recompute is
-  authoritative and its ``_cdc_lsn`` is a per-applier batch id, not a
-  source LSN.
+Every batch is LSN-guarded: a batch row only wins if its ``_cdc_lsn``
+>= the stored row's. This makes apply *order-insensitive across
+micro-batches* for live rows (replays, reordered batches and a change
+log older than a loaded snapshot can never regress a row), strictly
+stronger than the reference's reliance on serial WAL order
+(``pkg/waljs/waljs.go:332-348``). The rule is :func:`lww_order`, and
+merge-on-read reads and compaction (``mor.reconstruct``) run this same
+guarded plan, placed at the merge-on-read slot count, with each key's
+winning delta as the batch side. The guard degrades to batch-wins only
+when either side lacks ``_cdc_lsn``. Caveat: on a ``hard`` delete table
+the delete also removes the key's LSN watermark, so a REORDERED older
+update arriving after the delete re-inserts the row — full
+order-insensitivity across deletes needs a ``soft`` table (tombstones
+keep the watermark). The engine's own feeds deliver batches in
+checkpoint order, where hard deletes are safe.
 
 The delete policy is the table's ``delete_mode`` property
 (``table.delete_mode_of``), never a per-call choice: ``hard`` drops
-delete winners, ``soft`` keeps them as tombstones.
+delete winners, ``soft`` keeps them as tombstones. Both sinks evolve
+the schema through one step, :func:`evolve_schema`.
 
 Scale properties:
 - only *affected buckets* (those containing a batched key), widened to
@@ -77,8 +74,12 @@ from gear5_spark.lake.table import (
 )
 from gear5_spark.operators.typing import merge_schemas
 
-# change-feed metadata columns that never land in the target table
-_FEED_META = ("lsn", "txn_id", "txn_seq", "ts_ms")
+# batch columns that never land in the target table: the change op
+# (merge-on-read stores it as ``_op``), the placement columns and the
+# change-feed metadata
+_NON_TABLE_COLS = {
+    "op", "_op", BUCKET_COL, SLOT_COL, "lsn", "txn_id", "txn_seq", "ts_ms",
+}
 
 
 @dataclass
@@ -92,7 +93,6 @@ class MergeStats:
 def merge_into(
     table: LakeTable,
     batch: DataFrame,
-    order_guard: bool = True,
     txn_app_id: str | None = None,
     txn_batch_id: int | None = None,
     lineage: dict[str, Any] | None = None,
@@ -106,9 +106,6 @@ def merge_into(
     widening lattice). On a ``soft`` delete table (its ``delete_mode``
     property), deletes survive as tombstones with ``_cdc_deleted_at``
     set; on a ``hard`` one they remove the row.
-
-    ``order_guard=False`` makes every batch row win regardless of LSN
-    (the rollup's batch-wins policy); it runs the same plan.
 
     ``pre_placed``: the placement the batch was placed with
     (``LakeTable.place``; the batch then still carries ``_pslot``). A
@@ -140,22 +137,7 @@ def merge_into(
     soft = delete_mode_of(snap) == "soft"
     key_cols = snap.properties["key_columns"]
 
-    # batch-driven evolution: new columns append, and an existing
-    # column whose batch type is WIDER evolves in place along the
-    # lattice (long -> double -> string). The widen is metadata-only —
-    # commit stamps the kept manifests with the written physical type
-    # and read_file_entries casts those eras up (see
-    # table.widen_column); a NARROWER batch type is absorbed (the
-    # _project/_side casts lift it), and an incompatible one raises.
-    batch_fields = [
-        f
-        for f in batch.schema.fields
-        if f.name not in ("op", BUCKET_COL, SLOT_COL)
-        and f.name not in _FEED_META
-    ]
-    evolved, changes = merge_schemas(
-        snap.schema, T.StructType(batch_fields), allow_widen=True
-    )
+    evolved, changes = evolve_schema(snap.schema, batch)
     write_schema = T.StructType(
         list(evolved.fields) + [T.StructField(BUCKET_COL, T.IntegerType(), True)]
     )
@@ -215,7 +197,7 @@ def merge_into(
         )
         new_data = _guarded_merge(
             target, keyed, [SLOT_COL, *key_cols], key_cols, "op", soft,
-            order_guard, write_schema,
+            write_schema,
         )
     else:
         # nothing to merge against (bootstrap load / untouched buckets):
@@ -247,6 +229,22 @@ def merge_into(
     )
 
 
+def evolve_schema(
+    schema: T.StructType, batch: DataFrame
+) -> tuple[T.StructType, list[str]]:
+    """The table schema once ``batch`` lands, and its changes: the one
+    schema-evolution step of both sinks (``merge_into``,
+    ``mor.merge_delta``). New columns append; an existing column whose
+    batch type is WIDER evolves in place along the lattice (long ->
+    double -> string). The widen is metadata-only — commit stamps the
+    kept manifests with the written physical type and
+    ``read_file_entries`` casts those eras up (``table.widen_column``);
+    a NARROWER batch type is absorbed by the writer's cast, and an
+    incompatible one raises."""
+    fields = [f for f in batch.schema.fields if f.name not in _NON_TABLE_COLS]
+    return merge_schemas(schema, T.StructType(fields), allow_widen=True)
+
+
 def lww_order(lsn: Column, newer: bool) -> Column:
     """The one last-write-wins order of a change with LSN ``lsn`` (the
     greater wins); ``newer`` marks the side that wins ties (batch or
@@ -270,15 +268,13 @@ def _guarded_merge(
     key_cols: list[str],
     op_col: str,
     soft: bool,
-    order_guard: bool,
     write_schema: T.StructType,
 ) -> DataFrame:
     """Full-outer merge with LSN guard on ``join_cols`` (no exchange
     when both sides arrive co-partitioned on a leading slot column — see
     ``merge_into``): a batch row wins when its :func:`lww_order` is
     greater than the stored row's. ``soft`` keeps delete winners as
-    tombstones; ``order_guard=False`` sets the guard to true
-    (batch-wins). Copy-on-write MERGE, merge-on-read reads and
+    tombstones. Copy-on-write MERGE, merge-on-read reads and
     compaction (``mor.reconstruct``) all run this plan.
 
     The (one-row-per-key, post-dedup) batch side is hinted as a
@@ -300,7 +296,7 @@ def _guarded_merge(
     # referencing a struct field neither side carries would fail at plan
     # time, so the guard degrades to batch-wins (as lww_order does for a
     # NULL batch lsn) when either side lacks the ordering column
-    if order_guard and CDC_LSN in t_payload and CDC_LSN in b_payload:
+    if CDC_LSN in t_payload and CDC_LSN in b_payload:
         guard = lww_order(F.col(f"_b.{CDC_LSN}"), True) > lww_order(
             F.col(f"_t.{CDC_LSN}"), False
         )

@@ -18,8 +18,9 @@ Iceberg/Hudi answer, built here on the same manifest format:
   policy serve both sinks. Read cost grows with resident deltas.
 - ``compact``      — the same plan, written as base files one per slot
   (deltas folded in), bounding read amplification; the applier
-  auto-compacts every ``compact_every`` batches. Like every rewrite, it
-  widens its bucket scope to whole range files and whole slots.
+  auto-compacts every ``compact_every`` batches. It folds every bucket
+  that holds a delta and, like every rewrite, widens that scope to
+  whole range files and whole slots.
 
 Caveat: among deltas a change without a numeric LSN wins, as a CoW
 batch row does, so the result can depend on when compaction runs. A
@@ -40,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gear5_spark.lake.merge import _FEED_META, _guarded_merge, lww_order
+from gear5_spark.lake.merge import _guarded_merge, evolve_schema, lww_order
 from gear5_spark.lake.table import (
     BUCKET_COL,
     CDC_LSN,
@@ -56,7 +57,6 @@ from gear5_spark.lake.table import (
     whole_file_scope,
 )
 from gear5_spark.operators.dedup import latest_per_key
-from gear5_spark.operators.typing import merge_schemas
 from gear5_spark.parallel import shuffle_width
 
 OP_COL = "_op"
@@ -78,21 +78,7 @@ def merge_delta(
     passed through to ``LakeTable.write_data_files`` so the delta write
     keeps it instead of placing the batch again."""
     snap = table.snapshot()
-    # same evolution contract as the CoW path (lake/merge.py): new
-    # columns append, wider batch types widen the schema in place
-    # (metadata-only — commit stamps the kept base/delta manifests with
-    # their written physical types and reconstruct casts the eras up),
-    # narrower ones are absorbed by the cast below
-    batch_fields = [
-        f
-        for f in batch.schema.fields
-        if f.name not in ("op", OP_COL, BUCKET_COL, SLOT_COL)
-        and f.name not in _FEED_META
-    ]
-    evolved, _changes = merge_schemas(
-        snap.schema, T.StructType(batch_fields), allow_widen=True
-    )
-
+    evolved, _changes = evolve_schema(snap.schema, batch)
     delta = _project(
         batch.withColumn(BUCKET_COL, table.bucket_expr(snap)).withColumn(
             OP_COL, F.col("op")
@@ -171,7 +157,7 @@ def reconstruct(
     ).drop("_lww")
     soft = delete_mode_of(snap) == "soft"
     merged = _guarded_merge(
-        base, winners, [SLOT_COL, *key_cols], key_cols, OP_COL, soft, True,
+        base, winners, [SLOT_COL, *key_cols], key_cols, OP_COL, soft,
         write_schema,
     )
     if with_internal:
@@ -179,37 +165,20 @@ def reconstruct(
     return merged.select(*[f.name for f in snap.schema.fields])
 
 
-def compact(
-    table: LakeTable,
-    buckets: list[int] | None = None,
-    min_deltas: int = 1,
-) -> Snapshot | None:
-    """Fold resident deltas into base files for ``buckets`` (default: every
-    bucket that has deltas). No-op (returns None) when nothing to compact.
-
-    ``min_deltas`` skips buckets holding fewer resident delta files than
-    the threshold: under skewed touch patterns (a few hot conversations
-    receiving every update) the hot buckets accumulate deltas fast while
-    the cold long tail holds one small delta each — folding those cold
-    buckets rewrites their (large) base files for no read-amplification
-    gain. Skipping a bucket is always safe: reconstruct() keeps merging
-    its base+deltas until a later compaction clears the threshold. A
-    delta holding a bucket range counts once for each bucket in it. The
-    chosen buckets widen to the whole range of every file they touch and
+def compact(table: LakeTable) -> Snapshot | None:
+    """Fold resident deltas into base files for every bucket that holds a
+    delta. No-op (returns None) when there is nothing to compact. The
+    bucket scope widens to the whole range of every file it touches and
     to whole MoR slots (``whole_file_scope``), so no file is ever
     half-compacted and each slot's one new base file replaces its range.
 
     Runs as its own atomic commit — a crash mid-compaction leaves only
     orphan files; readers keep seeing base+delta until the swap."""
     snap = table.snapshot()
-    per_bucket: dict[int, int] = {}
-    for f in snap.files:
-        if f.get("kind") == "delta":
-            for b in entry_buckets(f):
-                per_bucket[b] = per_bucket.get(b, 0) + 1
-    chosen = {b for b, n in per_bucket.items() if n >= max(1, min_deltas)}
-    if buckets is not None:
-        chosen &= set(buckets)
+    chosen = {
+        b for f in snap.files if f.get("kind") == "delta"
+        for b in entry_buckets(f)
+    }
     if not chosen:
         return None
     placement = _placement(table, snap)

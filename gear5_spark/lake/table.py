@@ -851,21 +851,14 @@ class LakeTable:
         commit = f"c-{uuid.uuid4().hex}"
         rel_dir = os.path.join(DATA_DIR, commit)
         out_dir = os.path.join(self.table_dir, rel_dir)
-        # caller's basis snapshot keeps sort/stats config consistent with
-        # the commit it computed (and skips a metadata re-read per batch)
+        # caller's basis snapshot keeps the layout and stats columns
+        # consistent with the commit it computed (and skips a metadata
+        # re-read per batch)
         snap = snap or self.snapshot()
-        props = snap.properties
         part, placed = df, pre_placed
         if placed is None or placed != self.placement(snap, placed.n_slots):
             part, placed = self.place(df, snap)
             part = part.drop(SLOT_COL)
-        # opt-in clustering (sort_columns table property): rows sorted
-        # within each bucket file — parquet row-group/page stats on the
-        # sort key then skip inside the file for point lookups and range
-        # reads (Z-order-lite; a local sort, no extra shuffle)
-        sort_cols = [c for c in props.get("sort_columns") or [] if c in part.columns]
-        if sort_cols:
-            part = part.sortWithinPartitions(*sort_cols)
         with span("table.write_parquet"):
             # dictionary encoding off for DATA files: the payload-bearing
             # columns are near-unique (dictionary build runs until the
@@ -881,38 +874,39 @@ class LakeTable:
             )
             writer.parquet(out_dir)
         with span("table.footer_scan"):
-            entries = self._scan_written(out_dir, pq, snap, placed)
+            entries = self._scan_written(
+                out_dir, pq, placed, self._stat_columns(snap, part.schema)
+            )
         return commit, entries
 
-    def _stats_columns(self, meta, snap: Snapshot) -> dict[str, int]:
-        """Footer column indexes to collect min/max stats for: the table's
-        ``stats_columns`` property, or (default) bucket columns plus any
-        timestamp columns — the axes incremental/recency reads filter on."""
-        want = snap.properties.get("stats_columns")
-        if want is None:
-            want = bucket_columns_of(snap)
-            want += [
-                f.name
-                for f in snap.schema.fields
-                if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
-            ]
-        names = {
-            meta.schema.column(i).name: i for i in range(meta.num_columns)
-        }
-        return {c: names[c] for c in want if c in names}
+    @staticmethod
+    def _stat_columns(snap: Snapshot, written: T.StructType) -> list[str]:
+        """Columns whose footer min/max land in the manifest: the bucket
+        columns plus every timestamp, integer and floating-point column
+        the write carries (``_bucket`` aside) — the axes incremental,
+        recency and range reads filter on. Decimals get none (their
+        footer values are not JSON scalars)."""
+        kinds = (T.TimestampType, T.TimestampNTZType, T.IntegralType,
+                 T.FloatType, T.DoubleType)
+        return bucket_columns_of(snap) + [
+            f.name
+            for f in written.fields
+            if f.name != BUCKET_COL and isinstance(f.dataType, kinds)
+        ]
 
     def _scan_written(
         self,
         out_dir: str,
         pq,
-        snap: Snapshot,
         placed: Placement,
+        stat_cols: list[str],
     ) -> list[dict[str, Any]]:
         """Manifest entries for the files a write just produced, with the
         bucket or inclusive bucket range read from each footer's
-        ``_bucket`` min/max. ``placed`` is the placement the write
-        partitioned by; a file whose range leaves one of its slots was
-        mis-placed and fails the write."""
+        ``_bucket`` min/max and min/max stats of ``stat_cols``.
+        ``placed`` is the placement the write partitioned by; a file
+        whose range leaves one of its slots was mis-placed and fails the
+        write."""
         entries: list[dict[str, Any]] = []
         bucket_idx = None
         stat_idx: dict[str, int] | None = None
@@ -925,11 +919,12 @@ class LakeTable:
                 if meta.num_rows == 0:
                     continue
                 if bucket_idx is None:
-                    bucket_idx = {
+                    cols = {
                         meta.schema.column(i).name: i
                         for i in range(meta.num_columns)
-                    }[BUCKET_COL]
-                    stat_idx = self._stats_columns(meta, snap)
+                    }
+                    bucket_idx = cols[BUCKET_COL]
+                    stat_idx = {c: cols[c] for c in stat_cols if c in cols}
                 bmin, bmax = footer_min_max(meta, bucket_idx)
                 if placed.slot_of(bmin) != placed.slot_of(bmax):  # pragma: no cover
                     raise AssertionError(
@@ -1566,8 +1561,9 @@ class LakeTable:
         file (source partition) of every committed micro-batch, with its
         offset (lsn) range, row count, and the commit's snapshot id —
         the partition-granular companion of :meth:`lineage_df`. Rows
-        exist for batches applied with ``partition_lineage`` enabled
-        (the applier default) from a file-backed feed.
+        exist for batches applied from a file-backed feed whose footer
+        row totals reconcile with the batch (not a filtered replay or a
+        stream's slice of a shared feed).
         ``batch_truncated_files`` surfaces the count of files beyond the
         per-batch recording cap (repeated on each of the batch's rows)
         so a shortfall against ``event_count`` is never silent."""

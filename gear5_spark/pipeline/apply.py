@@ -261,18 +261,13 @@ class TranscriptsApplier:
     sink_mode: str = "cow"  # cow | mor (delta files + periodic compaction)
     compact_every: int = 8
     quarantine_dir: str | None = None  # dead-letter sink for unkeyable events
-    # per-source-partition lineage (north-star metric): per input file,
-    # its lsn range + row count from parquet FOOTER stats — driver-side
-    # metadata reads only, never an extra Spark job over the batch.
-    # MultiStreamApplier turns it off (per-stream slices never reconcile
-    # against whole-source footers)
-    partition_lineage: bool = True
     exclude_columns: list[str] = field(default_factory=list)  # P2
     # optional incrementally-maintained derived table
     # (gear5_spark.pipeline.rollup.ConversationRollup); refreshed with
     # the batch's touched conversations after every base commit
     rollup: Any = None
-    skipped_batches: list[int] = field(default_factory=list)
+    # batch ids skipped as already committed (checkpoint replays)
+    skipped_batches: list[int] = field(default_factory=list, init=False)
     # valid events per surviving key in the last applied batch; the
     # benchmark's tracer reads it (perfbench operators.keys_per_event)
     _last_dup_ratio: float | None = field(default=None, init=False, repr=False)
@@ -372,8 +367,8 @@ class TranscriptsApplier:
         # (batches are maxFilesPerTrigger-bounded, so the per-row
         # input_file_name projection is cheap; it is nondeterministic and
         # must be projected before feeding an Observation aggregate).
-        src_files = list(batch.inputFiles()) if self.partition_lineage else []
-        collect_provenance = self.partition_lineage and not src_files
+        src_files = list(batch.inputFiles())
+        collect_provenance = not src_files
         if collect_provenance:
             batch = batch.withColumn("_src_file", F.input_file_name())
             metrics.append(F.collect_set(F.col("_src_file")).alias("src_files"))
@@ -531,28 +526,27 @@ class TranscriptsApplier:
                 # snapshot_version is stamped by commit itself (the only
                 # value that survives an OCC rebase)
             }
-            if self.partition_lineage:
-                if collect_provenance:
-                    src_files = list(stats.get("src_files") or [])
-                with span("apply.partition_lineage"):
-                    prov = _partition_lineage(src_files)
-                # footer stats describe whole files; only record them
-                # when EVERY source footer was read and their row total
-                # reconciles with the batch (a filtered batch, e.g. an
-                # lsn-bounded replay, must not get whole-file stats) —
-                # otherwise say why nothing was recorded
-                if prov.note is None and prov.total_rows == int(
-                    stats["event_count"]
-                ):
-                    if prov.recorded:
-                        lineage["partitions"] = prov.recorded
-                        if prov.truncated:
-                            lineage["partitions_truncated"] = prov.truncated
-                elif src_files:
-                    lineage["partitions_note"] = prov.note or (
-                        "source files are filtered by this batch; "
-                        "file-granular footer stats omitted"
-                    )
+            if collect_provenance:
+                src_files = list(stats.get("src_files") or [])
+            with span("apply.partition_lineage"):
+                prov = _partition_lineage(src_files)
+            # footer stats describe whole files; only record them when
+            # EVERY source footer was read and their row total reconciles
+            # with the batch (a filtered batch — an lsn-bounded replay, a
+            # stream's slice of a shared feed — must not get whole-file
+            # stats) — otherwise say why nothing was recorded
+            if prov.note is None and prov.total_rows == int(
+                stats["event_count"]
+            ):
+                if prov.recorded:
+                    lineage["partitions"] = prov.recorded
+                    if prov.truncated:
+                        lineage["partitions_truncated"] = prov.truncated
+            elif src_files:
+                lineage["partitions_note"] = prov.note or (
+                    "source files are filtered by this batch; "
+                    "file-granular footer stats omitted"
+                )
             affected = list(stats["buckets"] or [])
             if self.sink_mode == "mor":
                 from gear5_spark.lake.mor import compact, merge_delta

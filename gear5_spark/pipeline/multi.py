@@ -33,20 +33,13 @@ STREAM_COL = "stream"
 
 @dataclass
 class MultiStreamApplier:
-    """foreachBatch callable routing an interleaved feed to N tables."""
+    """foreachBatch callable routing an interleaved feed to N tables.
+    A slice never reconciles with its source files' footers, so its
+    lineage records a ``partitions_note``, not ``partitions``."""
 
     appliers: dict[str, TranscriptsApplier]
     strict: bool = False
     dropped_streams: set = field(default_factory=set)
-
-    def __post_init__(self) -> None:
-        # per-stream slices can NEVER reconcile against whole-source
-        # parquet footers (every slice sees the full interleaved feed's
-        # file list but only its own rows), so file-granular lineage
-        # would cost N_streams x all-footer driver reads per micro-batch
-        # and still record only a "filtered" note — disable it up front
-        for a in self.appliers.values():
-            a.partition_lineage = False
 
     def __call__(self, batch: DataFrame, batch_id: int) -> dict:
         # persist around the routing loop: the stream probe plus each

@@ -8,20 +8,20 @@ transcripts table, maintained per micro-batch:
 1. the batch's distinct ``conv_id`` set (already computed once by the
    applier's dedup pass) names every conversation whose aggregate may
    have changed — nothing else can change, so shuffle/aggregate work
-   per batch is O(touched conversations). Scan volume depends on the
-   base layout: with ``bucket_columns=["conv_id"]`` the refresh opens
-   only the touched buckets (see ``_pruned_base``); under default
-   full-key bucketing it is a predicate-pushdown scan whose row groups
-   skip on conv_id stats — the deliberate tradeoff vs hot-key
-   spreading;
-2. those conversations' stats are recomputed exactly from the
-   POST-merge base table (filter-pushdown scan; with ``sort_columns``
-   clustering the row-group stats skip most files) — recompute-affected
-   is idempotent and self-healing, where pure delta arithmetic on
+   per batch is O(touched conversations). The base read is a
+   predicate-pushdown scan whose row groups skip on conv_id stats: the
+   base is bucketed on the full key, so a conversation's turns can live
+   in any bucket;
+2. those conversations' stats are recomputed exactly from ONE
+   POST-merge snapshot of the base table — recompute-affected is
+   idempotent and self-healing, where pure delta arithmetic on
    counters would drift on replays;
-3. the result upserts into the rollup table through the SAME
+3. the result upserts into the rollup table through the SAME guarded
    ``merge_into`` + txn-ledger machinery as the base table, with the
-   batch id as the ordering LSN — a replayed batch is a no-op commit,
+   version of the base snapshot the recompute read as the ordering
+   LSN: a later refresh reads a version at least as new and wins ties,
+   so an older recompute never overwrites a newer one, whichever
+   applier's batch ids drove it. A replayed batch is a no-op commit,
    giving the rollup the base table's exactly-once contract;
 4. conversations whose every turn vanished (hard deletes) emit delete
    ops, so the rollup never carries ghost rows.
@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gear5_spark.lake.merge import merge_into
-from gear5_spark.lake.table import LakeTable, bucket_columns_of
+from gear5_spark.lake.table import LakeTable
 
 ROLLUP_SCHEMA = T.StructType(
     [
@@ -75,20 +75,14 @@ class ConversationRollup:
     """Per-micro-batch maintainer: call after the base apply with the
     batch's touched conv_ids."""
 
-    def __init__(
-        self,
-        base_table: LakeTable,
-        rollup_table: LakeTable,
-        app_id: str | None = None,
-    ):
-        """``app_id`` scopes the rollup's replay-dedup ledger. Leave it
-        None when attaching to an applier: the applier derives
-        ``<base app_id>::rollup``, so two pipelines (or bulk-vs-stream
-        modes) with independent batch-id sequences never share a ledger
-        and silently skip each other's refreshes."""
+    def __init__(self, base_table: LakeTable, rollup_table: LakeTable):
         self.base = base_table
         self.rollup = rollup_table
-        self.app_id = app_id
+        # scopes the rollup's replay-dedup ledger; the applier it is
+        # attached to sets ``<base app_id>::rollup``, so two pipelines
+        # (or bulk-vs-stream modes) with independent batch-id sequences
+        # never share a ledger and silently skip each other's refreshes
+        self.app_id: str | None = None
 
     def refresh(self, touched: DataFrame, batch_id: int) -> None:
         """``touched`` is a DataFrame with a ``conv_id`` column (the
@@ -104,7 +98,8 @@ class ConversationRollup:
         from gear5_spark.operators.conversations import conversation_stats
 
         touched = touched.select("conv_id").distinct()
-        base = self._pruned_base(touched)
+        snap = self.base.snapshot()
+        base = self.base.read(snapshot=snap)
         # soft-delete tables keep tombstones in read() — a tombstoned
         # turn is not a live turn, and a fully-tombstoned conversation
         # must register as gone
@@ -120,7 +115,7 @@ class ConversationRollup:
                 gone.withColumn("op", F.lit("delete")),
                 allowMissingColumns=True,
             )
-            .withColumn("_cdc_lsn", F.lit(str(batch_id)))
+            .withColumn("_cdc_lsn", F.lit(str(snap.version)))
             .withColumn("_cdc_updated_at", F.current_timestamp())
             .withColumn(
                 "_cdc_deleted_at", F.lit(None).cast("timestamp")
@@ -129,44 +124,10 @@ class ConversationRollup:
         merge_into(
             self.rollup,
             batch,
-            # order_guard OFF: the recompute is authoritative (full stats
-            # over CURRENT base state), and _cdc_lsn here is a per-applier
-            # batch id — a bulk catch-up (fresh ledger, batch 0) refreshing
-            # rows stamped by a stream applier's batch 50 would otherwise
-            # lose the LSN comparison and leave the rollup stale forever.
-            # Replay safety comes from the per-app txn ledger, not the guard.
-            order_guard=False,
             txn_app_id=app_id,
             txn_batch_id=batch_id,
             lineage={"batch_id": batch_id, "event_count": None},
         )
-
-    def _pruned_base(self, touched: DataFrame) -> DataFrame:
-        """Bucket-pruned base read when the base table is bucketed by
-        ``conv_id`` ALONE (a deliberate layout choice for rollup-heavy
-        deployments): every turn of a touched conversation then lives in
-        a computable bucket, so the refresh opens only those buckets.
-        The touched bucket SET (<= n_buckets ints) is computed
-        distributively and collected — O(n_buckets) driver rows however
-        many conversations the batch touched. Under the default full-key
-        bucketing — which spreads hot conversations across all buckets
-        instead — a conversation's turns can live anywhere, so the read
-        falls back to a full scan with predicate pushdown (conv_id
-        row-group stats skip inside files, especially with
-        ``sort_columns`` clustering); per-batch SHUFFLE work is
-        O(touched) either way."""
-        snap = self.base.snapshot()
-        if bucket_columns_of(snap) == ["conv_id"]:
-            buckets = sorted(
-                r[0]
-                for r in touched.select(
-                    self.base.bucket_expr(snap).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            return self.base.read(snapshot=snap, buckets=buckets)
-        return self.base.read(snapshot=snap)
 
     def read(self) -> DataFrame:
         return self.rollup.read()

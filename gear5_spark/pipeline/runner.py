@@ -56,16 +56,16 @@ def bootstrap_table(
     spark: SparkSession,
     table_dir: str,
     n_buckets: int = 16,
-    if_not_exists: bool = True,
     delete_mode: str = "hard",
 ) -> LakeTable:
-    """CREATE the transcripts lake table, bucketed by the full key.
+    """CREATE the transcripts lake table, bucketed by the full key, or
+    return the existing one.
 
     ``delete_mode`` (hard|soft) is a TABLE property and this is the one
     place it is chosen: both sinks read it from the table, so it is
-    fixed at create time. ``if_not_exists`` on a table created with the
-    other mode, or with another bucket count, raises instead of
-    returning it (``LakeTable.rebucket`` changes the bucket count)."""
+    fixed at create time. An existing table created with the other
+    mode, or with another bucket count, raises instead of being
+    returned (``LakeTable.rebucket`` changes the bucket count)."""
     if delete_mode not in DELETE_MODES:
         raise ValueError(f"delete_mode must be hard|soft, got {delete_mode!r}")
     table = LakeTable.create(
@@ -75,7 +75,7 @@ def bootstrap_table(
         key_columns=KEY_COLS,
         bucket_columns=KEY_COLS,
         n_buckets=n_buckets,
-        if_not_exists=if_not_exists,
+        if_not_exists=True,
         extra_properties={"delete_mode": delete_mode},
     )
     snap = table.snapshot()

@@ -789,9 +789,9 @@ def lsh_cosine_topk(
     hash tables (OR-amplification — a neighbor missed by one table's
     planes is caught by another's) and multi-probe (``probe_radius=1``
     also visits every bucket one sign-flip away, catching
-    boundary-adjacent neighbors). Both multiply only the small,
-    broadcast query side; the base is hashed once per table and joined
-    by (table, bucket) — an equi-join, never a cross join. This is the
+    boundary-adjacent neighbors). Both multiply only the query side;
+    the base is hashed once per table and joined by (table, bucket) —
+    an equi-join, never a cross join. This is the
     10^9-vector path: candidate fraction ~= n_tables * probes /
     2^n_planes, tuned per corpus; recall is measured against the exact
     answer in tests/test_recall.py and bench.py (never assumed)."""
@@ -819,9 +819,11 @@ def lsh_cosine_topk(
         tq = tq.select("q_id", "tbl", F.explode(probes).alias("bkt"))
     # candidate ids first, THEN one cosine per distinct pair — dedup
     # before the dot product so overlapping tables never re-score
+    # no hint on either side (AQE picks the build side from runtime
+    # sizes): a forced broadcast would pin a large query set past that
+    # size check
     cand = (
-        F.broadcast(tq)
-        .join(tb, ["tbl", "bkt"])
+        tq.join(tb, ["tbl", "bkt"])
         .filter(F.col("q_id") != F.col("b_id"))
         .select("q_id", "b_id")
     )
@@ -856,7 +858,7 @@ def lsh_cosine_topk(
         _norm(F.col(vec_col)).alias("_bn"),
     )
     scored = (
-        cand.join(F.broadcast(qv), "q_id")
+        cand.join(qv, "q_id")
         .join(bv, "b_id")
         .select(
             F.col("q_id").alias("vec_id"),

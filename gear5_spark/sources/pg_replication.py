@@ -309,6 +309,7 @@ class ReplicationClient:
         self._sock: socket.socket | None = None
         self._buf = b""
         self._stopping = False
+        self._server_done = False  # the server sent CopyDone
         self._scram: _ScramSha256 | None = None
 
     # -- transport ---------------------------------------------------
@@ -317,6 +318,7 @@ class ReplicationClient:
         # stop flags or buffered bytes from the old socket must not
         # leak into (and silently stall or desync) the new stream
         self._stopping = False
+        self._server_done = False
         self._buf = b""
         self._scram = None
         self._sock = socket.create_connection(
@@ -423,11 +425,17 @@ class ReplicationClient:
                 )
 
     def close(self) -> None:
-        if self._sock is not None:
-            try:
-                self._send_raw(_msg(b"X", b""))  # Terminate
-            except OSError:
-                pass
+        """Hang up; once the server ended the stream, end the copy first
+        so the server has written the stream's end before the close."""
+        if self._sock is None:
+            return
+        try:
+            if self._server_done:
+                self._end_copy()
+            self._send_raw(_msg(b"X", b""))  # Terminate
+        except OSError:
+            pass
+        finally:
             self._sock.close()
             self._sock = None
 
@@ -484,7 +492,9 @@ class ReplicationClient:
         triggers a standby-status update carrying ``self.flush_lsn`` —
         set by the caller after durable flushes (the two-level
         durability contract in wal_adapter.py). The generator exits on
-        CopyDone/stream end or after :meth:`stop`."""
+        the server's CopyDone, leaving the client's side of the copy
+        open for a last status update (:meth:`close` ends it), or after
+        :meth:`stop`."""
         def _ident(s: str) -> str:  # embedded " doubles inside "..."
             return '"' + s.replace('"', '""') + '"'
 
@@ -542,6 +552,7 @@ class ReplicationClient:
                         f"unknown CopyData kind {kind!r}"
                     )
             elif tag == b"c":  # CopyDone — server ends the stream
+                self._server_done = True
                 return
             elif tag == b"E":
                 raise ReplicationError(_parse_error(body))
@@ -550,6 +561,21 @@ class ReplicationClient:
             if time.monotonic() - last_status >= self.keepalive_interval:
                 self._send_status()
                 last_status = time.monotonic()
+
+    def _end_copy(self) -> None:
+        """Answer the server's CopyDone with ours and read through its
+        CommandComplete to ReadyForQuery. A status update sent after
+        this is outside the copy, where a walsender discards it."""
+        self._send_raw(_msg(b"c", b""))
+        while True:
+            try:
+                tag, body = self._recv_msg()
+            except socket.timeout:
+                continue
+            if tag == b"Z":
+                return
+            if tag == b"E":
+                raise ReplicationError(_parse_error(body))
 
     def run(
         self,

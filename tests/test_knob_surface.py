@@ -1,18 +1,22 @@
 """The CDC path's settable surface is pinned here: the applier's fields,
 the pipeline config's fields, the parameters of ``replay_batch``,
 ``merge_into``, ``merge_delta``, ``compact``,
-``LakeTable.write_data_files``, ``get_spark``, ``latest_per_key`` and
-``gap_sessionize``, and the public ``LakeTable`` methods. A new option or entry point has to edit this file
-in the same change, where it is visible. Static check, no Spark
-session."""
+``LakeTable.write_data_files``, ``bootstrap_table``,
+``ConversationRollup``, ``get_spark``, ``latest_per_key`` and
+``gap_sessionize``, and the public ``LakeTable`` methods; the engine
+reads no clustering or stats-column table property. A new option or
+entry point has to edit this file in the same change, where it is
+visible. Static check, no Spark session."""
 
 from __future__ import annotations
 
 import dataclasses
 import inspect
+import pathlib
 
 import pytest
 
+import gear5_spark
 from gear5_spark.config import PipelineConfig
 from gear5_spark.lake.merge import merge_into
 from gear5_spark.lake.mor import compact, merge_delta
@@ -20,7 +24,8 @@ from gear5_spark.lake.table import LakeTable
 from gear5_spark.operators.conversations import gap_sessionize
 from gear5_spark.operators.dedup import latest_per_key
 from gear5_spark.pipeline.apply import TranscriptsApplier
-from gear5_spark.pipeline.runner import replay_batch
+from gear5_spark.pipeline.rollup import ConversationRollup
+from gear5_spark.pipeline.runner import bootstrap_table, replay_batch
 from gear5_spark.session import get_spark
 
 APPLIER_FIELDS = [
@@ -30,7 +35,6 @@ APPLIER_FIELDS = [
     "sink_mode",
     "compact_every",
     "quarantine_dir",
-    "partition_lineage",
     "exclude_columns",
     "rollup",
     "skipped_batches",
@@ -67,7 +71,6 @@ REPLAY_BATCH_PARAMS = [
 MERGE_INTO_PARAMS = [
     "table",
     "batch",
-    "order_guard",
     "txn_app_id",
     "txn_batch_id",
     "lineage",
@@ -84,9 +87,13 @@ MERGE_DELTA_PARAMS = [
     "pre_placed",
 ]
 
-COMPACT_PARAMS = ["table", "buckets", "min_deltas"]
+COMPACT_PARAMS = ["table"]
 
 WRITE_DATA_FILES_PARAMS = ["self", "df", "snap", "pre_placed"]
+
+BOOTSTRAP_TABLE_PARAMS = ["spark", "table_dir", "n_buckets", "delete_mode"]
+
+ROLLUP_INIT_PARAMS = ["self", "base_table", "rollup_table"]
 
 LAKE_TABLE_PUBLIC = [
     "add_column",
@@ -138,6 +145,9 @@ def _params(fn) -> list[str]:
 
 def test_applier_fields_pinned():
     assert _fields(TranscriptsApplier) == APPLIER_FIELDS
+    # run state, not options: neither is a constructor argument
+    init = [f.name for f in dataclasses.fields(TranscriptsApplier) if f.init]
+    assert "skipped_batches" not in init and "_last_dup_ratio" not in init
 
 
 def test_config_fields_pinned():
@@ -160,6 +170,22 @@ def test_lake_entry_points_pinned():
         n for n in vars(LakeTable) if not n.startswith("_") and not n.isupper()
     )
     assert public == LAKE_TABLE_PUBLIC
+
+
+def test_bootstrap_and_rollup_params_pinned():
+    assert _params(bootstrap_table) == BOOTSTRAP_TABLE_PARAMS
+    assert _params(ConversationRollup.__init__) == ROLLUP_INIT_PARAMS
+
+
+@pytest.mark.parametrize("prop", ["sort_columns", "stats_columns"])
+def test_removed_table_properties_are_not_read(prop):
+    root = pathlib.Path(gear5_spark.__file__).parent
+    hits = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if prop in p.read_text()
+    ]
+    assert hits == []
 
 
 def test_get_spark_params_pinned():

@@ -128,11 +128,8 @@ def test_soft_delete_tombstones(spark, tmp_path):
 def test_order_guard_blocks_stale_batch(spark, table):
     merge_into(table, _batch(spark, [("a", 10, 100, "update")]))
     # a late-arriving older batch must not regress the row
-    merge_into(table, _batch(spark, [("a", 5, 50, "update")]), order_guard=True)
+    merge_into(table, _batch(spark, [("a", 5, 50, "update")]))
     assert table.read().first()["v"] == 10
-    # without the guard (the rollup's batch-wins policy) it does
-    merge_into(table, _batch(spark, [("a", 5, 50, "update")]), order_guard=False)
-    assert table.read().first()["v"] == 5
 
 
 def test_vacuum_keeps_live_history(spark, table):
@@ -206,7 +203,7 @@ def test_rebucket_race_raises_not_drops(spark, table, monkeypatch):
 
 
 def test_guarded_merge_without_lsn_column(spark, tmp_path):
-    """order_guard=True must degrade to batch-wins (not crash) when the
+    """The LSN guard must degrade to batch-wins (not crash) when the
     schema carries no _cdc_lsn — the documented 'any subset of target
     columns' contract."""
     schema = T.StructType(
@@ -222,11 +219,11 @@ def test_guarded_merge_without_lsn_column(spark, tmp_path):
     b = spark.createDataFrame(
         [("a", 1, "insert")], "k string, v long, op string"
     )
-    merge_into(t, b, order_guard=True)
+    merge_into(t, b)
     b2 = spark.createDataFrame(
         [("a", 2, "update")], "k string, v long, op string"
     )
-    merge_into(t, b2, order_guard=True)
+    merge_into(t, b2)
     assert t.read().collect()[0]["v"] == 2
 
 
@@ -267,7 +264,7 @@ def test_lookup_bool_and_null_semantics(spark, tmp_path):
         [(True, 1, "insert"), (False, 2, "insert")],
         "flag boolean, v long, op string",
     )
-    merge_into(t, b, order_guard=False)
+    merge_into(t, b)
     assert t.lookup(flag=True).collect()[0]["v"] == 1
     assert t.lookup(flag=False).collect()[0]["v"] == 2
 

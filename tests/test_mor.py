@@ -84,69 +84,6 @@ def test_mor_delete_tombstones_drop_rows(spark, tmp_path):
     _assert_matches(table, log)
 
 
-def test_mor_compact_min_deltas_skips_cold_buckets(spark, tmp_path):
-    """min_deltas folds only buckets at/over the threshold: under key
-    skew the cold long tail keeps its single small delta instead of
-    paying a full base rewrite. Skipped buckets stay readable (the
-    reconstruct path covers them) and a later lower-threshold compact
-    folds them."""
-    from pyspark.sql import types as T
-
-    from gear5_spark.lake.mor import compact, merge_delta
-    from gear5_spark.lake.table import LakeTable
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.StringType(), False),
-            T.StructField("v", T.LongType(), True),
-            T.StructField("_cdc_lsn", T.StringType(), True),
-        ]
-    )
-    t = LakeTable.create(
-        spark, str(tmp_path / "t"), schema=schema, key_columns=["k"],
-        n_buckets=2,
-    )
-    # batch 1 touches every bucket; batch 2 touches only key "a"'s
-    rows1 = [(f"k{i}", i, str(10 + i), "insert") for i in range(8)]
-    rows1.append(("a", 1, "20", "insert"))
-    merge_delta(
-        t,
-        spark.createDataFrame(
-            rows1, "k string, v long, _cdc_lsn string, op string"
-        ),
-    )
-    merge_delta(
-        t,
-        spark.createDataFrame(
-            [("a", 2, "30", "update")],
-            "k string, v long, _cdc_lsn string, op string",
-        ),
-    )
-
-    def _delta_counts():
-        counts: dict[int, int] = {}
-        for f in t.snapshot().files:
-            if f.get("kind") == "delta":
-                counts[f["bucket"]] = counts.get(f["bucket"], 0) + 1
-        return counts
-
-    before = _delta_counts()
-    hot = {b for b, n in before.items() if n >= 2}
-    cold = {b for b, n in before.items() if n < 2}
-    assert hot and cold  # the fixture really is skewed across buckets
-
-    expect = {f"k{i}": i for i in range(8)} | {"a": 2}
-    compact(t, min_deltas=2)
-    after = _delta_counts()
-    assert set(after) == cold  # hot folded, cold deltas untouched
-    assert {r["k"]: r["v"] for r in t.read().collect()} == expect
-
-    compact(t, min_deltas=1)
-    assert _delta_counts() == {}
-    assert {r["k"]: r["v"] for r in t.read().collect()} == expect
-    assert compact(t) is None  # idempotent no-op once clean
-
-
 def test_mor_null_lsn_delta_wins_like_cow(spark, tmp_path):
     """CoW's order guard makes a NULL-lsn batch row WIN
     (coalesce(b>=t, True)); MoR reconstruction must order identically,
@@ -175,7 +112,6 @@ def test_mor_null_lsn_delta_wins_like_cow(spark, tmp_path):
             [("a", 1, "100", "insert")],
             "k string, v long, _cdc_lsn string, op string",
         ),
-        order_guard=False,
     )
     merge_delta(
         t,

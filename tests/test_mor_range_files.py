@@ -22,7 +22,12 @@ from gear5_spark.lake.diff import table_diff
 from gear5_spark.lake.fsck import fsck
 from gear5_spark.lake.merge import merge_into
 from gear5_spark.lake.mor import compact, merge_delta
-from gear5_spark.lake.table import BUCKET_COL, LakeTable, entry_buckets
+from gear5_spark.lake.table import (
+    BUCKET_COL,
+    LakeTable,
+    entry_buckets,
+    whole_file_scope,
+)
 from gear5_spark.parallel import shuffle_width
 from gear5_spark.pipeline.runner import bootstrap_table, make_applier, run_stream
 from tests.oracle import oracle_final_state
@@ -189,32 +194,32 @@ def _range_delta(spark, t, rows, n_slots=8):
 
 
 def test_compact_min_deltas_widens_to_whole_ranges(spark, tmp_path):
+    """A one-bucket delta over range-placed base files: compaction folds
+    only the bucket that holds a delta, widened to the whole base range
+    file holding it; every other base file is kept."""
     t = _kv_table(spark, tmp_path)
     _range_delta(spark, t, [(f"k{i}", i, str(10 + i), "insert") for i in range(200)])
+    compact(t)
     first = {f["path"]: f for f in t.snapshot().files}
-    assert len(first) <= 8 and all(len(entry_buckets(f)) > 1 for f in first.values())
+    assert len(first) <= 8 and not any(f.get("kind") == "delta" for f in first.values())
+    assert all(len(entry_buckets(f)) > 1 for f in first.values())
     _range_delta(spark, t, [("k7", 70, "500", "update")])
     hot = [f for f in t.snapshot().files if f["path"] not in first]
     assert len(hot) == 1 and len(entry_buckets(hot[0])) == 1
     hot_bucket = entry_buckets(hot[0])[0]
     holder = next(f for f in first.values() if hot_bucket in entry_buckets(f))
 
-    compact(t, min_deltas=2)
+    compact(t)
     snap = t.snapshot()
-    deltas = [f for f in snap.files if f.get("kind") == "delta"]
-    # the hot bucket's range file went whole; every other range file stayed
-    assert {f["path"] for f in deltas} == set(first) - {holder["path"]}
-    base = [f for f in snap.files if f.get("kind") != "delta"]
-    assert sorted(b for f in base for b in entry_buckets(f)) == sorted(
-        {b for f in base for b in entry_buckets(f)}
-    )  # one base file per bucket
-    assert {b for f in base for b in entry_buckets(f)} <= set(entry_buckets(holder))
+    assert not any(f.get("kind") == "delta" for f in snap.files)
+    # the holder's range was rewritten whole; every other base file stayed
+    kept = {f["path"] for f in snap.files} & set(first)
+    assert kept == set(first) - {holder["path"]}
+    (new,) = [f for f in snap.files if f["path"] not in first]
+    assert entry_buckets(new) == entry_buckets(holder)
     expect = {f"k{i}": i for i in range(200)} | {"k7": 70}
     assert {r["k"]: r["v"] for r in t.read().collect()} == expect
-
-    compact(t)
-    assert not any(f.get("kind") == "delta" for f in t.snapshot().files)
-    assert {r["k"]: r["v"] for r in t.read().collect()} == expect
+    assert compact(t) is None  # no-op once no delta is resident
 
 
 def test_delete_where_rewrites_whole_range_files(
@@ -321,9 +326,10 @@ def test_cow_merge_over_resident_range_deltas(
 
 def test_ranges_of_two_widths_close_transitively(spark, tmp_path):
     # a table written by sessions of different widths holds overlapping
-    # ranges ([0..3] at width 8, [0..7] at width 4): compacting bucket 0
-    # must take [0..3], then [0..7], then [4..7] — the closure — and a
-    # read of one bucket must still filter every range file it opens
+    # ranges ([0..3] at width 8, [0..7] at width 4): the rewrite scope of
+    # bucket 0 must take [0..3], then [0..7], then [4..7] — the closure —
+    # and a read of one bucket must still filter every range file it
+    # opens, before and after compaction
     t = _kv_table(spark, tmp_path)
     _range_delta(spark, t, [(f"k{i}", i, str(10 + i), "insert") for i in range(200)])
     _range_delta(
@@ -337,7 +343,10 @@ def test_ranges_of_two_widths_close_transitively(spark, tmp_path):
         got = {r["k"]: r["v"] for r in t.read(buckets=[b]).collect()}
         assert got == {k: r["v"] for k, r in full.items() if r[BUCKET_COL] == b}
 
-    compact(t, buckets=[0])
-    deltas = [f for f in t.snapshot().files if f.get("kind") == "delta"]
-    assert deltas and not any(set(entry_buckets(f)) & set(range(8)) for f in deltas)
+    assert whole_file_scope(t.snapshot().files, {0}) == set(range(8))
+    compact(t)
+    assert not any(f.get("kind") == "delta" for f in t.snapshot().files)
     assert {r["k"]: r["v"] for r in t.read().collect()} == expect
+    for b in (0, 5, 31):
+        got = {r["k"]: r["v"] for r in t.read(buckets=[b]).collect()}
+        assert got == {k: r["v"] for k, r in full.items() if r[BUCKET_COL] == b}

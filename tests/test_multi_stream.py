@@ -76,6 +76,13 @@ def test_multi_stream_routing(spark, interleaved_feed, tmp_path):
     # alpha's lineage covers only alpha's events
     lin_a = t_a.lineage_df().collect()
     assert sum(r["event_count"] for r in lin_a) == na
+    # a slice never reconciles with the whole source files' footers:
+    # its lineage says so instead of recording per-file partitions
+    for t, n in ((t_a, na), (t_b, nb)):
+        (entry,) = t._lineage_entries()
+        assert "partitions" not in entry
+        assert "filtered" in entry["partitions_note"]
+        assert entry["event_count"] == n
 
 
 def test_multi_stream_partial_crash_recovery(spark, interleaved_feed, tmp_path):

@@ -73,6 +73,8 @@ class FakeWalSender(threading.Thread):
         self.startup_params: dict[str, str] = {}
         self.queries: list[str] = []
         self.errors: list[str] = []
+        # message tags the client sent after the server's CopyDone
+        self.end_tags: list[bytes] = []
         self._lsock = socket.create_server(("127.0.0.1", 0))
         self.port = self._lsock.getsockname()[1]
 
@@ -173,6 +175,7 @@ class FakeWalSender(threading.Thread):
         try:
             while True:
                 tag, body = self._recv_msg(c)
+                self.end_tags.append(tag)
                 if tag == b"d" and body[:1] == b"r":
                     self.statuses.append(
                         struct.unpack_from(">q", body, 9)[0]
@@ -339,6 +342,23 @@ def test_live_tail_end_to_end(tmp_path):
     # final drain acks 2000+1; nothing beyond the durable max
     assert srv.statuses[0] == 1001
     assert srv.statuses[-1] == 2001
+
+
+def test_client_ends_the_copy_before_terminate(tmp_path):
+    """After the server's CopyDone the client sends its final status
+    update while the copy is still open, then answers with its own
+    CopyDone and reads through ReadyForQuery before it hangs up, so the
+    server's end-of-stream writes never meet a closed socket."""
+    srv = FakeWalSender(_tx_frames(700, 2))
+    srv.start()
+    client = ReplicationClient("127.0.0.1", srv.port, user="r", dbname="d")
+    client.connect()
+    client.run(PgOutputFeed(str(tmp_path / "wal")), slot="s", publication="p")
+    client.close()
+    srv.join(timeout=5)
+    assert not srv.errors, srv.errors
+    assert srv.end_tags == [b"d", b"c", b"X"]
+    assert srv.statuses[-1] == 701  # the final ack, inside the copy
 
 
 def test_resume_from_durable_chunks(tmp_path):

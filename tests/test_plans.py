@@ -79,7 +79,7 @@ def test_merge_plans_exactly_one_join(spark, log_dir, tmp_path):
     )
     merged = _guarded_merge(
         target, batch, ["conv_id", "turn_idx"], ["conv_id", "turn_idx"],
-        "op", False, True, write_schema,
+        "op", False, write_schema,
     )
     plan = _plan(merged, mode="simple")
     joins = sum(plan.count(j) for j in ("SortMergeJoin", "ShuffledHashJoin",
@@ -89,11 +89,9 @@ def test_merge_plans_exactly_one_join(spark, log_dir, tmp_path):
     assert joins == 1
 
 
-@pytest.mark.parametrize("order_guard", [True, False])
-def test_merge_into_runs_one_plan(spark, log_dir, tmp_path, order_guard):
+def test_merge_into_runs_one_plan(spark, log_dir, tmp_path):
     """Copy-on-write MERGE against a non-empty table has one physical
-    formulation: one full-outer join, no anti-join, whichever
-    ``order_guard`` the caller passes (False only sets the guard true)."""
+    formulation: one full-outer join, no anti-join."""
     import gear5_spark.lake.table as LT
     from gear5_spark.lake.merge import merge_into
     from gear5_spark.pipeline.runner import bootstrap_table, replay_batch
@@ -117,7 +115,7 @@ def test_merge_into_runs_one_plan(spark, log_dir, tmp_path, order_guard):
 
     LT.LakeTable.write_data_files = spy
     try:
-        merge_into(table, batch, order_guard=order_guard)
+        merge_into(table, batch)
     finally:
         LT.LakeTable.write_data_files = orig
     (plan,) = captured

@@ -345,7 +345,7 @@ def test_vector_joins_carry_no_forced_broadcast(spark):
     )
     confirmed = _confirm_cosine_pairs(emb, cand, 0.9, "embedding", "vec_id")
     assert _broadcast_hints(confirmed) == 0
-    # lsh_cosine_topk keeps only its small query side's two broadcasts
-    # (bucket probes and query vectors); the base vectors get none
+    # nor are lsh_cosine_topk's query-side bucket probes and vectors: a
+    # large query set must not be pinned past AQE's size check either
     topk = lsh_cosine_topk(emb, emb.limit(3), k=2, dim=3)
-    assert _broadcast_hints(topk) == 2
+    assert _broadcast_hints(topk) == 0

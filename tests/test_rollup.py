@@ -76,6 +76,25 @@ def test_rollup_drops_fully_deleted_conversations(spark, pipeline):
     assert _rows(rollup.read()) == _rows(_full_recompute(base))
 
 
+def test_rollup_refreshed_by_a_fresh_ledger_applier(spark, pipeline, tmp_path):
+    """A second applier with its own (fresh) ledger refreshes the rollup
+    after the first applier's later batches: the rollup is stamped with
+    the base version its recompute read, not a batch id, so the
+    refresh of batch 0 replaces rows the first applier wrote at
+    batches 1 and 2."""
+    log, base, rollup, applier = pipeline
+    for bid, (lo, hi) in enumerate([(None, 999), (999, 1999), (1999, 2499)]):
+        applier(read_changelog(spark, log, min_lsn=lo, max_lsn=hi), bid)
+    bulk_rollup = ConversationRollup(base, rollup.rollup)
+    bulk = make_applier(
+        base, str(tmp_path / "ckpt-bulk"), app_id="bulk", rollup=bulk_rollup
+    )
+    bulk(read_changelog(spark, log), 0)
+    assert _rows(rollup.read()) == _rows(_full_recompute(base))
+    stamps = {r["_cdc_lsn"] for r in rollup.read().collect()}
+    assert stamps == {str(base.current_version())}
+
+
 def test_rollup_catches_up_after_crash_between_commits(spark, tmp_path):
     """Crash window: base committed batch 0 but the rollup never saw it.
     The checkpoint replay skips the base apply (txn ledger) — the rollup

@@ -110,9 +110,38 @@ def test_scan_rejects_unknown_op(table):
 
 
 def test_unstatted_column_never_prunes(table):
-    # v carries no stats (not a bucket/timestamp column) -> full read
-    keep, skipped = table.plan_scan([("v", ">=", 0)])
+    # _cdc_lsn carries no stats (a string, not a bucket column) -> full read
+    keep, skipped = table.plan_scan([("_cdc_lsn", ">", "zzz")])
     assert skipped == 0
+
+
+def test_numeric_columns_prune(table):
+    # every integer and floating-point column is statted by default
+    keep, skipped = table.plan_scan([("v", ">", 50)])
+    assert skipped > 0 and keep
+    assert all(f["stats"]["v"][1] > 50 for f in keep)
+
+
+def test_numeric_payload_column_gets_stats(spark, tmp_path):
+    from gear5_spark.pipeline.runner import bootstrap_table, make_applier
+
+    table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=4)
+    applier = make_applier(table, str(tmp_path / "c"), app_id="stats")
+    batch = spark.createDataFrame(
+        [
+            (i, i, 0, "insert", 1000, f"c-{i}", 0,
+             f'{{"role":"user","text":"x","ts":1,"tokens":{10 * i}}}')
+            for i in range(1, 9)
+        ],
+        "lsn long, txn_id long, txn_seq int, op string, ts_ms long, "
+        "conv_id string, turn_idx int, after_json string",
+    )
+    applier(batch, 0)
+    assert table.schema["tokens"].dataType == T.LongType()
+    files = table.snapshot().files
+    assert files and all("tokens" in f["stats"] for f in files)
+    assert min(f["stats"]["tokens"][0] for f in files) == 10
+    assert max(f["stats"]["tokens"][1] for f in files) == 80
 
 
 def test_mor_snapshot_prunes_at_bucket_granularity(spark, tmp_path):

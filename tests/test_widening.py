@@ -411,14 +411,14 @@ def test_scan_stats_prune_across_widened_eras(spark, tmp_path):
     long-era files carry INTEGER min/max for v while the filter value
     is a float — pruning still skips non-matching files (Python int ↔
     float compare), and a mixed-type comparison can only ever KEEP a
-    file (the conservative TypeError guard), never wrongly skip one."""
+    file (the conservative TypeError guard), never wrongly skip one.
+    ``v`` is numeric, so its stats are collected by default."""
     t = LakeTable.create(
         spark,
         str(tmp_path / "t"),
         schema=SCHEMA,
         key_columns=["k"],
         n_buckets=4,
-        extra_properties={"stats_columns": ["v"]},
     )
     rows = [(f"k{i}", i * 10, i, "1", "insert") for i in range(12)]
     merge_into(t, spark.createDataFrame(rows, _batch_schema(T.LongType())))
