@@ -3,8 +3,9 @@
 The reference auto-generates JSON-schema for connector configs from Go
 struct tags (``/root/reference/jsonschema/generator/generator.go``) and
 validates them at startup (``utils/validation.go:37-41``,
-``protocol/root.go:75-78`` flags). Python-side a dataclass + a hand-rolled
-JSON schema does the same job with no reflection machinery.
+``protocol/root.go:75-78`` flags). Python-side a dataclass does the same
+job: ``validate`` checks it by hand, and ``config_spec`` derives its JSON
+schema with the general dataclass reflector (``gear5_spark.spec.reflect``).
 """
 
 from __future__ import annotations

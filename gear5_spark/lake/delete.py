@@ -11,12 +11,12 @@ Plan shape (scales to 100 TB):
    are given (no footers opened), else the full file set;
 2. ONE job finds the distinct buckets actually containing matches
    (bucket ids ride the data, so this is a scan + tiny distinct);
-3. only those buckets rewrite (widened to the whole range of every MoR
-   delta file they touch): their rows re-filtered and written as fresh
-   base files (MoR deltas of the bucket fold in through
-   ``mor.reconstruct`` — the copy-on-write guarded merge placed at the
-   MoR slot count, as in compaction), every other file is carried into
-   the new snapshot untouched;
+3. only those buckets rewrite (widened to the whole range of every
+   file they touch and to whole placement slots, as in compaction):
+   their rows re-filtered and written as fresh base files, one per slot
+   (MoR deltas of the bucket fold in through ``mor.reconstruct`` — the
+   copy-on-write guarded merge), every other file is carried into the
+   new snapshot untouched;
 4. one atomic commit, lineage records the logical delete count.
 
 Null semantics are SQL DELETE's: a row deletes only when the predicate
@@ -98,8 +98,10 @@ def delete_where(
     if not hits:
         return snap, 0
     n_deleted = int(sum(r["n"] for r in hits))
-    # rewrite whole files only: a range delta drags its other buckets in
-    scope = whole_file_scope(snap.files, {r[BUCKET_COL] for r in hits})
+    # rewrite whole files only: a range file drags its other buckets in,
+    # and so does the slot the write places each bucket in
+    hit = {r[BUCKET_COL] for r in hits}
+    scope = whole_file_scope(snap.files, hit, table._placement(snap))
 
     in_scope = [f for f in snap.files if touches(f, scope)]
     out_scope = [f for f in snap.files if not touches(f, scope)]

@@ -110,9 +110,8 @@ def merge_into(
     ``pre_placed``: the placement the batch was placed with
     (``LakeTable.place``; the batch then still carries ``_pslot``). A
     batch that is not placed under this merge's snapshot — no
-    ``_pslot``, no ``pre_placed``, or a layout that drifted since —
-    is placed here, with ``pre_placed``'s slot count or else one slot
-    per bucket.
+    ``_pslot``, no ``pre_placed``, or a layout or shuffle width that
+    drifted since — is placed here.
 
     The join always runs CO-PARTITIONED on the slot: the target side is
     placed on the batch's slots, ``_pslot`` leads the equi-join keys (it
@@ -143,14 +142,10 @@ def merge_into(
     )
 
     keyed = batch.withColumn(BUCKET_COL, table.bucket_expr(snap))
-    if (
-        pre_placed is None
-        or SLOT_COL not in batch.columns
-        or pre_placed != table.placement(snap, pre_placed.n_slots)
-    ):
-        keyed, pre_placed = table.place(
-            keyed, snap, pre_placed.n_slots if pre_placed else None
-        )
+    # the target is placed at the table's width below; a batch placed at
+    # any other slot count would miss its target rows in the slot join
+    if pre_placed != table._placement(snap) or SLOT_COL not in batch.columns:
+        keyed, pre_placed = table.place(keyed, snap)
 
     def _check_declared_buckets(new_entries: list[dict]) -> None:
         # a caller-declared bucket set is a PROMISE that every batch row
@@ -191,9 +186,7 @@ def merge_into(
         # leading the equi-join with the (key-dependent) slot makes the
         # join exchange-free on both sides and its output write-placed
         target, _ = table.place(
-            table.read(snapshot=snap, buckets=affected, with_internal=True),
-            snap,
-            pre_placed.n_slots,
+            table.read(snapshot=snap, buckets=affected, with_internal=True), snap
         )
         new_data = _guarded_merge(
             target, keyed, [SLOT_COL, *key_cols], key_cols, "op", soft,
@@ -242,7 +235,7 @@ def evolve_schema(
     a NARROWER batch type is absorbed by the writer's cast, and an
     incompatible one raises."""
     fields = [f for f in batch.schema.fields if f.name not in _NON_TABLE_COLS]
-    return merge_schemas(schema, T.StructType(fields), allow_widen=True)
+    return merge_schemas(schema, T.StructType(fields))
 
 
 def lww_order(lsn: Column, newer: bool) -> Column:

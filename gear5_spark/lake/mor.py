@@ -8,14 +8,15 @@ Iceberg/Hudi answer, built here on the same manifest format:
 - ``merge_delta``  — write the deduped batch AS-IS as *delta* files
   (manifest entries carry ``kind: delta``); base files untouched.
   Write cost per batch: O(batch), not O(table). The applier places
-  every batch at the MoR slot count (``LakeTable.placement``), so a
-  batch writes at most that many delta files, each holding a
-  contiguous ``bucket_range`` when slots group buckets.
+  every batch with ``LakeTable.place`` (``min(width, n_buckets)``
+  slots), so a batch writes at most that many delta files, each
+  holding a contiguous ``bucket_range`` when slots group buckets.
 - ``LakeTable.read`` — when a snapshot holds deltas, ``reconstruct``:
   the copy-on-write guarded merge (``merge._guarded_merge``) of the
-  base rows with each key's winning delta, both placed at the MoR slot
-  count. One last-write-wins rule (``merge.lww_order``) and one delete
-  policy serve both sinks. Read cost grows with resident deltas.
+  base rows with each key's winning delta, both placed by
+  ``LakeTable.place``. One last-write-wins rule (``merge.lww_order``)
+  and one delete policy serve both sinks. Read cost grows with
+  resident deltas.
 - ``compact``      — the same plan, written as base files one per slot
   (deltas folded in), bounding read amplification; the applier
   auto-compacts every ``compact_every`` batches. It folds every bucket
@@ -57,7 +58,6 @@ from gear5_spark.lake.table import (
     whole_file_scope,
 )
 from gear5_spark.operators.dedup import latest_per_key
-from gear5_spark.parallel import shuffle_width
 
 OP_COL = "_op"
 
@@ -108,10 +108,6 @@ def _delta_schema(schema: T.StructType) -> T.StructType:
     )
 
 
-def _placement(table: LakeTable, snap: Snapshot) -> Placement:
-    return table.placement(snap, shuffle_width(table.spark), "mor")
-
-
 def reconstruct(
     table: LakeTable,
     snap: Snapshot,
@@ -124,15 +120,15 @@ def reconstruct(
 
     The deltas reduce to one winner per key with the dedup operator
     (``max_by`` over ``lww_order``), then run the copy-on-write guarded
-    merge against the base rows. Both sides are placed on the MoR slots,
-    so the dedup and the join need no further exchange: the join builds
-    its hash table over the winners and streams base rows past it,
-    never sorting or aggregating them. ``buckets``: reconstruct only
-    these buckets' rows (the caller read range files for some of their
-    buckets); ``files`` must hold every file of each of them. ``where``:
-    a key-column predicate applied to both sides before the merge."""
+    merge against the base rows. Both sides are placed by
+    ``LakeTable.place``, so the dedup and the join need no further
+    exchange: the join builds its hash table over the winners and
+    streams base rows past it, never sorting or aggregating them.
+    ``buckets``: reconstruct only these buckets' rows (the caller read
+    range files for some of their buckets); ``files`` must hold every
+    file of each of them. ``where``: a key-column predicate applied to
+    both sides before the merge."""
     key_cols = snap.properties["key_columns"]
-    n_slots = _placement(table, snap).n_slots
 
     def placed(kind_files, schema):
         # era-aware read (in-place widening, table.read_file_entries)
@@ -141,7 +137,7 @@ def reconstruct(
         )
         if where is not None:
             df = df.filter(where)
-        return table.place(df, snap, n_slots)[0]
+        return table.place(df, snap)[0]
 
     deltas = placed(
         [f for f in files if f.get("kind") == "delta"], _delta_schema(snap.schema)
@@ -169,7 +165,7 @@ def compact(table: LakeTable) -> Snapshot | None:
     """Fold resident deltas into base files for every bucket that holds a
     delta. No-op (returns None) when there is nothing to compact. The
     bucket scope widens to the whole range of every file it touches and
-    to whole MoR slots (``whole_file_scope``), so no file is ever
+    to whole placement slots (``whole_file_scope``), so no file is ever
     half-compacted and each slot's one new base file replaces its range.
 
     Runs as its own atomic commit — a crash mid-compaction leaves only
@@ -181,7 +177,7 @@ def compact(table: LakeTable) -> Snapshot | None:
     }
     if not chosen:
         return None
-    placement = _placement(table, snap)
+    placement = table._placement(snap)
     target = whole_file_scope(snap.files, chosen, placement)
     in_scope = [f for f in snap.files if touches(f, target)]
     out_scope = [f for f in snap.files if not touches(f, target)]

@@ -67,6 +67,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gear5_spark.parallel import shuffle_width
+
 MANIFEST_DIR = "_lake"
 DATA_DIR = "data"
 # the bucket id travels as a real data column (never path-inferred)
@@ -239,16 +241,13 @@ class Placement:
     n_slots: int
 
     def slot_of(self, bucket: int) -> int:
-        """The slot that holds ``bucket`` when slots group whole buckets
-        (``n_slots < n_buckets``); the bucket itself otherwise (each
-        slot then holds part of one bucket)."""
-        return bucket * min(self.n_slots, self.n_buckets) // self.n_buckets
+        """The slot that holds ``bucket``: slots group contiguous whole
+        buckets."""
+        return bucket * self.n_slots // self.n_buckets
 
     def slot_buckets(self) -> list[range]:
-        """The contiguous buckets of each slot (:meth:`slot_of`); one
-        bucket each when slots sub-split buckets."""
-        k = min(self.n_slots, self.n_buckets)
-        n = self.n_buckets
+        """The contiguous buckets of each slot (:meth:`slot_of`)."""
+        k, n = self.n_slots, self.n_buckets
         return [range(-(-s * n // k), -(-(s + 1) * n // k)) for s in range(k)]
 
 
@@ -407,7 +406,7 @@ def read_file_entries(
 ) -> DataFrame:
     """Read manifest entries as ``read_schema``, casting through their
     ``physical`` era annotations (in-place column widening,
-    :meth:`LakeTable.widen_column` / ``merge_schemas(allow_widen=True)``).
+    :meth:`LakeTable.widen_column` / ``merge_schemas``).
 
     ``buckets``: keep only rows of these buckets. Needed when a read
     wants some of a range file's buckets; the ``_bucket`` filter sits on
@@ -743,77 +742,45 @@ class LakeTable:
             ) from e
 
     @staticmethod
-    def placement(
-        snap: Snapshot, n_slots: int | None = None, sink_mode: str | None = None
-    ) -> Placement:
-        """The :class:`Placement` that :meth:`place` partitions by for
-        ``n_slots`` requested slots under ``snap`` (metadata only, no
-        Spark).
+    def placement(snap: Snapshot, width: int) -> Placement:
+        """The :class:`Placement` that :meth:`place` partitions by at
+        shuffle width ``width`` under ``snap`` (metadata only, no Spark):
+        ``min(width, n_buckets)`` slots, each holding a run of contiguous
+        whole buckets (``slot = bucket * n_slots // n_buckets``).
 
-        ``n_slots`` at or above the bucket count sub-splits each bucket
-        into ``q = n_slots // n_buckets`` slots (``n_buckets * q`` in
-        all; each slot holds part of one bucket). Below it, slots group
-        contiguous whole buckets: ``slot = bucket * n_slots // n_buckets``.
-        Default: one slot per bucket.
-
-        ``sink_mode`` applies the applier's rule for a batch placed at
-        the session's shuffle width ``n_slots``: copy-on-write (``cow``)
-        takes the width as is — sub-split above the bucket count, whole
-        bucket ranges below it, where a MERGE then rewrites whole slots
-        of ``n_buckets / width`` buckets (``whole_file_scope``).
-        Merge-on-read (``mor``) caps it at the bucket count: every delta
-        file is read back by every reconstruct until compaction, so a
-        bucket never gets more than one delta file per batch. MoR reads
-        and compaction (``mor.reconstruct``) place base rows and delta
-        winners at this same slot count for the guarded merge, so a
-        compaction writes one base file per slot."""
+        Every write in both sinks uses it. Below the bucket count each
+        slot writes one file over its bucket range, and a copy-on-write
+        MERGE rewrites whole slots of ``n_buckets / width`` buckets
+        (``whole_file_scope``). The bucket count caps it: a merge-on-read
+        delta file is read back by every reconstruct until compaction, so
+        a bucket never gets more than one file per batch; a session wider
+        than the table runs its placed stages with ``n_buckets`` tasks
+        (``rebucket`` raises that count)."""
         n = snap.properties["n_buckets"]
-        want = n if n_slots is None else max(1, int(n_slots))
-        if sink_mode == "mor":
-            want = min(want, n)
-        q = max(1, want // n)
-        return Placement(n, tuple(bucket_columns_of(snap)), min(want, n * q))
+        return Placement(n, tuple(bucket_columns_of(snap)), min(max(1, width), n))
 
-    def place(
-        self, df: DataFrame, snap: Snapshot, n_slots: int | None = None
-    ) -> tuple[DataFrame, Placement]:
-        """Place ``df`` under ``snap``: add ``_bucket`` (unless ``df``
+    def _placement(self, snap: Snapshot) -> Placement:
+        """:meth:`placement` at the shuffle width of the table's session:
+        the slots :meth:`place` partitions by now."""
+        return self.placement(snap, shuffle_width(self.spark))
+
+    def place(self, df: DataFrame, snap: Snapshot) -> tuple[DataFrame, Placement]:
+        """Place ``df`` under ``snap`` at the shuffle width of the table's
+        session (:meth:`placement`): add ``_bucket`` (unless ``df``
         already carries it — a rewrite keeps the bucket its rows are
-        stored under) and the placement slot ``_pslot``, then do the one
+        stored under) and the slot ``_pslot``, then do the one
         ``repartitionById(n_slots, _pslot)``, so partition ``i`` holds
-        exactly the rows of slot ``i`` (see :meth:`placement`). Every
-        lake write is placed here: the applier places its raw batch
-        before dedup, ``merge_into`` places both join sides, and
-        :meth:`write_data_files` places any input that is not already
-        placed under its snapshot.
-
-        One formula covers both regimes: a fine slot
-        ``bucket * q + sub`` in ``[0, n_buckets * q)`` is slot
-        ``fine * n_slots div (n_buckets * q)``. With ``q > 1`` (copy-on-
-        write: upstream parallelism above the bucket count, up to ``q``
-        files per bucket per commit) that is the fine slot itself; the
-        sub-key hashes the full bucket columns, so all events of one key
-        share a slot — a co-located groupBy on (slot, key) is
-        shuffle-free. With fewer slots than buckets (either sink on a
-        session narrower than the bucket count) each slot holds
-        contiguous whole buckets (:meth:`Placement.slot_of`) and writes
-        one file covering that bucket range."""
-        p = self.placement(snap, n_slots)
-        q = max(1, p.n_slots // p.n_buckets)
+        exactly the rows of slot ``i``. Every lake write is placed here:
+        the applier places its raw batch before dedup, ``merge_into``
+        places both join sides, MoR reads and compaction place base rows
+        and deltas, and :meth:`write_data_files` places any input that is
+        not already placed under its snapshot. All events of one key share
+        a slot, so a co-located groupBy on (slot, key) is shuffle-free."""
+        p = self._placement(snap)
         if BUCKET_COL not in df.columns:
             df = df.withColumn(BUCKET_COL, self.bucket_expr(snap))
-        if q > 1:
-            sub = F.pmod(
-                F.xxhash64(
-                    *[F.col(c).cast("string") for c in p.bucket_columns], F.lit(q)
-                ),
-                F.lit(q),
-            ).cast("int")
-            slot = F.col(BUCKET_COL) * q + sub
-        else:
-            slot = F.expr(f"{BUCKET_COL} * {p.n_slots} div {p.n_buckets}").cast("int")
-        df = df.withColumn(SLOT_COL, slot)
-        return df.repartitionById(p.n_slots, SLOT_COL), p
+        slot = F.expr(f"{BUCKET_COL} * {p.n_slots} div {p.n_buckets}").cast("int")
+        return df.withColumn(SLOT_COL, slot).repartitionById(p.n_slots, SLOT_COL), p
 
     def write_data_files(
         self,
@@ -836,13 +803,11 @@ class LakeTable:
 
         ``pre_placed``: the caller already placed ``df`` with
         :meth:`place`. When that placement still equals the one ``snap``
-        implies, partitions are written as-is: several files per bucket
-        when slots sub-split buckets, one file per contiguous bucket
-        range when slots group them. Otherwise (no placement, or drift
-        such as a concurrent rebucket or bucket-column change) the write
-        places ``df`` itself, one slot per bucket. ``_scan_written``'s
-        one-slot-per-file check remains the hard safety net against any
-        partition mixing slots.
+        implies, partitions are written as-is, one file per contiguous
+        bucket range. Otherwise (no placement, or drift such as a
+        concurrent rebucket or bucket-column change) the write places
+        ``df`` itself. ``_scan_written``'s one-slot-per-file check remains
+        the hard safety net against any partition mixing slots.
         """
         import pyarrow.parquet as pq
 
@@ -1101,13 +1066,11 @@ class LakeTable:
                 if schema is not None:
                     from gear5_spark.operators.typing import merge_schemas
 
-                    # allow_widen: a widening commit racing another
-                    # writer is safe — _commit_once recomputes the era
-                    # map against the WINNER's schema, so the winner's
-                    # files (written pre-widen) get annotated too
-                    schema, _ = merge_schemas(
-                        current.schema, schema, allow_widen=True
-                    )
+                    # a widening commit racing another writer is safe —
+                    # _commit_once recomputes the era map against the
+                    # WINNER's schema, so the winner's files (written
+                    # pre-widen) get annotated too
+                    schema, _ = merge_schemas(current.schema, schema)
                 base = current
                 # the MIRROR race: the winner widened past the types
                 # this commit's own files were physically written with
@@ -1206,11 +1169,11 @@ class LakeTable:
             entry["committed_at_ms"] = now_ms
             lin.append(entry)
         # in-place widening: when this commit publishes a schema that
-        # retypes existing columns (merge_schemas allow_widen /
-        # widen_column), every file the PARENT tracked still physically
-        # holds the narrower type — stamp the kept manifests with the
-        # era map so reads cast through it (read_file_entries). Pure
-        # metadata: O(#manifests), no file rewritten.
+        # retypes existing columns (merge_schemas / widen_column), every
+        # file the PARENT tracked still physically holds the narrower
+        # type — stamp the kept manifests with the era map so reads cast
+        # through it (read_file_entries). Pure metadata: O(#manifests),
+        # no file rewritten.
         widened: dict[str, str] = {}
         if schema is not None:
             new_by = {f.name: f.dataType for f in schema.fields}
@@ -1261,39 +1224,24 @@ class LakeTable:
         return self.commit(entries, schema=schema)
 
     def lookup(self, **key_values) -> DataFrame:
-        """Bucket-pruned point lookup by full key: computes the bucket
-        driver-side (pure-Python XXH64 pinned to Spark's xxhash64 — no
-        probe job) and opens ONLY that bucket's files — O(1/n_buckets) of
-        the table regardless of size, exactly one Spark job (the pruned
-        scan)."""
-        from gear5_spark.lake.xxh64 import bucket_of
-
+        """Bucket-pruned point lookup by full key: evaluates the table's
+        own :meth:`bucket_expr` over the key values as typed literals on
+        the driver (a one-row ``VALUES`` relation that Spark folds to a
+        local scan — no probe job) and opens ONLY that bucket's files —
+        O(1/n_buckets) of the table regardless of size, exactly one Spark
+        job (the pruned scan)."""
         snap = self.snapshot()
         cols = bucket_columns_of(snap)
         missing = [c for c in cols if c not in key_values]
         if missing:
             raise ValueError(f"lookup requires bucket columns {missing}")
-        n = snap.properties["n_buckets"]
-
-        def _spark_str(v: Any) -> str:
-            # match bucket_expr's cast(col AS STRING): Spark renders
-            # booleans lowercase; Python str() would give 'True' and
-            # hash into the wrong bucket
-            if isinstance(v, bool):
-                return "true" if v else "false"
-            return str(v)
-
-        # NULL key values: xxhash64 SKIPS null arguments (the hash is
-        # over the remaining columns + seed), so the driver-side
-        # computation must skip them identically
-        bucket = bucket_of(
-            [
-                _spark_str(key_values[c])
+        keys = self.spark.sql("VALUES (1)").select(
+            *[
+                F.lit(key_values[c]).cast(snap.schema[c].dataType).alias(c)
                 for c in cols
-                if key_values[c] is not None
-            ],
-            n,
+            ]
         )
+        bucket = keys.select(self.bucket_expr(snap)).collect()[0][0]
         preds = {
             col: F.col(col).isNull() if val is None else F.col(col) == F.lit(val)
             for col, val in key_values.items()

@@ -1,9 +1,10 @@
 """Type-widening lattice + additive schema merge.
 
 Re-expresses the reference's hand-built type BST
-(``/root/reference/typeutils/fields.go:18-28`` ``typecastTree``, LCA walk at
-``fields.go:182-205``): ``BOOL < INT64 < FLOAT64 < STRING > TIMESTAMP`` —
-anything mixed with string widens to string; int+float widens to double.
+(``/root/reference/typeutils/fields.go:18-28`` ``typecastTree``):
+``BOOL < INT64 < FLOAT64 < STRING > TIMESTAMP`` — anything may widen to
+string; int may widen to double. Its LCA walk (``fields.go:182-205``) is
+``operators.infer.merge_tokens``, the one that payload inference runs.
 Here the lattice drives *schema evolution policy* (what the lake table will
 accept as an in-place widening) instead of per-record casting: Spark columns
 are statically typed, so the lattice runs once per schema change, never per
@@ -61,33 +62,8 @@ def can_widen(src: T.DataType, dst: T.DataType) -> bool:
     return False
 
 
-def widen(a: T.DataType, b: T.DataType) -> T.DataType:
-    """Least common ancestor of two observed types (lattice LCA)."""
-    if a == b:
-        return a
-    if isinstance(a, T.NullType):
-        return b
-    if isinstance(b, T.NullType):
-        return a
-    sa, sb = _simple(a), _simple(b)
-    if sa in _WIDEN_RANK and sb in _WIDEN_RANK:
-        ra, rb = _WIDEN_RANK[sa], _WIDEN_RANK[sb]
-        if ra == rb:
-            # same rank, different width (e.g. int vs long) -> wider physical
-            order = ["byte", "short", "integer", "long", "float", "double"]
-            if sa in order and sb in order:
-                return a if order.index(sa) >= order.index(sb) else b
-            return a
-        hi, lo = (a, sb) if ra > rb else (b, sa)
-        if _simple(hi) == "float" and lo in ("integer", "long"):
-            return T.DoubleType()  # see can_widen: float32 loses ints
-        return hi
-    # mixed families (timestamp+int, struct+scalar, ...) -> string top
-    return T.StringType()
-
-
 def merge_schemas(
-    current: T.StructType, incoming: T.StructType, allow_widen: bool = True
+    current: T.StructType, incoming: T.StructType
 ) -> tuple[T.StructType, list[str]]:
     """Additive merge: current columns keep position/type (or widen along the
     lattice); new incoming columns append as nullable. Returns
@@ -105,7 +81,7 @@ def merge_schemas(
         ):
             out.append(f)
             continue
-        if allow_widen and can_widen(f.dataType, inc.dataType):
+        if can_widen(f.dataType, inc.dataType):
             out.append(T.StructField(f.name, inc.dataType, True))
             changes.append(
                 f"widen {f.name}: {f.dataType.simpleString()} -> "

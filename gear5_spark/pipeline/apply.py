@@ -47,7 +47,6 @@ from gear5_spark.operators.normalize import (
     detect_widening,
     normalize_changes,
 )
-from gear5_spark.parallel import shuffle_width
 
 # payload fields every transcripts feed starts with (BASELINE.json
 # input_hint); `ts` arrives as epoch-seconds and lands as timestamp.
@@ -395,22 +394,15 @@ class TranscriptsApplier:
         # moved ~1.2 GB both ways per 4M events). The winner cache is
         # built uncompressed (session conf, see session.get_spark).
         #
-        # The placement is sized to the session's shuffle width, so every
-        # stage after this exchange, and the write, runs `width` tasks
-        # (LakeTable.placement holds the rule). Above the bucket count
-        # CoW sub-splits each bucket (up to width // n_buckets files per
-        # bucket per commit); MoR never does, since every delta file is
-        # read back by EVERY reconstruct until compaction. Below it both
-        # sinks group contiguous whole buckets into `width` slots and
-        # write one range file per slot, not one file per bucket; the
+        # The placement has min(width, n_buckets) slots (LakeTable.placement
+        # holds the one rule), so every stage after this exchange, and the
+        # write, runs that many tasks. Each slot groups contiguous whole
+        # buckets and writes one range file, not one file per bucket; the
         # trade-off is CoW's: a small batch rewrites whole slots of
         # n_buckets / width buckets each (merge_into). MoR reads and
-        # compaction run the same guarded merge at the MoR slot count
-        # (mor.reconstruct), so compaction also writes one file per slot.
-        want = self.table.placement(
-            snap0, shuffle_width(batch.sparkSession), self.sink_mode
-        ).n_slots
-        placed, pre_placed = self.table.place(valid, snap0, want)
+        # compaction place at the same slots (mor.reconstruct), so
+        # compaction also writes one file per slot.
+        placed, pre_placed = self.table.place(valid, snap0)
         # keep _pslot through the cache: the merge join co-partitions on
         # it (lake/merge.py), so the batch is never re-shuffled after
         # this one placement exchange

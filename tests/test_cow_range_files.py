@@ -17,6 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from gear5_spark.lake.delete import delete_where
 from gear5_spark.lake.merge import merge_into
 from gear5_spark.lake.table import (
     BUCKET_COL,
@@ -35,28 +36,32 @@ from gear5_spark.pipeline.runner import (
     run_stream,
 )
 from tests.oracle import oracle_final_state
-from tests.test_mor_range_files import COLS, N_BUCKETS, _kv_table, _oracle, _rows
+from tests.test_mor_range_files import (
+    COLS,
+    N_BUCKETS,
+    _kv_table,
+    _oracle,
+    _rows,
+    width,
+)
 
 
-def test_slot_count_rule_by_sink():
-    """The applier's slot count at each shuffle width, for a 32-bucket
-    table: copy-on-write places at the width, merge-on-read at most one
-    slot per bucket. Metadata only, no Spark."""
+def test_slot_count_rule():
+    """The slot count of every lake write at each shuffle width, for a
+    32-bucket table and either sink: the width, capped at one slot per
+    bucket. Metadata only, no Spark."""
     snap = SimpleNamespace(
         properties={"n_buckets": N_BUCKETS, "bucket_columns": ["k"]}
     )
-    got = {
-        w: tuple(LakeTable.placement(snap, w, m).n_slots for m in ("cow", "mor"))
-        for w in (4, 8, 32, 64)
-    }
-    assert got == {4: (4, 4), 8: (8, 8), 32: (32, 32), 64: (64, 32)}
+    got = {w: LakeTable.placement(snap, w).n_slots for w in (4, 8, 32, 64)}
+    assert got == {4: 4, 8: 8, 32: 32, 64: 32}
 
 
 @pytest.mark.parametrize("n_buckets", [32, 8])
 def test_place_sends_each_row_to_its_slot(spark, tmp_path, n_buckets):
     """``place`` puts every row in the partition its ``_pslot`` names,
-    and ``_pslot`` follows the placement's slot rule: whole bucket
-    ranges at or below the bucket count, sub-split buckets above it."""
+    and ``_pslot`` follows the placement's slot rule: runs of whole
+    buckets, at most one slot per bucket."""
     table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=n_buckets)
     snap = table.snapshot()
     df = spark.range(2000).select(
@@ -64,17 +69,15 @@ def test_place_sends_each_row_to_its_slot(spark, tmp_path, n_buckets):
         (F.col("id") / 97).cast("int").alias("turn_idx"),
     )
     for n in (4, 8, 32, 64):
-        placed, p = table.place(df, snap, n)
-        rows = placed.select(
-            BUCKET_COL, SLOT_COL, F.spark_partition_id().alias("pid")
-        ).collect()
+        with width(spark, n):
+            placed, p = table.place(df, snap)
+            rows = placed.select(
+                BUCKET_COL, SLOT_COL, F.spark_partition_id().alias("pid")
+            ).collect()
+        assert p.n_slots == min(n, n_buckets), n
         assert {r["pid"] for r in rows} == set(range(p.n_slots)), n
         assert all(r["pid"] == r[SLOT_COL] for r in rows), n
-        if p.n_slots <= n_buckets:
-            assert all(r[SLOT_COL] == p.slot_of(r[BUCKET_COL]) for r in rows), n
-        else:
-            q = p.n_slots // n_buckets
-            assert all(r[SLOT_COL] // q == r[BUCKET_COL] for r in rows), n
+        assert all(r[SLOT_COL] == p.slot_of(r[BUCKET_COL]) for r in rows), n
 
 
 def test_scope_widens_to_whole_slots_and_files():
@@ -84,9 +87,9 @@ def test_scope_widens_to_whole_slots_and_files():
     # a range file from an earlier, narrower session closes transitively
     files = one_per_bucket + [{"path": "r", "bucket_range": [6, 9]}]
     assert whole_file_scope(files, [4], p8) == set(range(4, 12))
-    # slots that sub-split buckets never widen the scope
-    p64 = Placement(N_BUCKETS, ("k",), 64)
-    assert whole_file_scope(one_per_bucket, [4, 6], p64) == {4, 6}
+    # one slot per bucket never widens the scope
+    p32 = Placement(N_BUCKETS, ("k",), 32)
+    assert whole_file_scope(one_per_bucket, [4, 6], p32) == {4, 6}
     assert whole_file_scope(one_per_bucket, [4, 6]) == {4, 6}
 
 
@@ -183,13 +186,13 @@ def _bucket_keys(t: LakeTable, n: int) -> dict[int, list[str]]:
 
 
 def _per_bucket_table(spark, tmp_path, n_keys=400):
-    """A 32-bucket table holding one file per bucket (an unplaced merge
-    places one slot per bucket), and its {key: v} contents."""
+    """A 32-bucket table holding one file per bucket (written at width
+    32), and its {key: v} contents."""
     t = _kv_table(spark, tmp_path)
     rows = [(f"k{i}", i, str(10 + i), "insert") for i in range(n_keys)]
-    merge_into(
-        t, spark.createDataFrame(rows, "k string, v long, _cdc_lsn string, op string")
-    )
+    batch = spark.createDataFrame(rows, "k string, v long, _cdc_lsn string, op string")
+    with width(spark, N_BUCKETS):
+        merge_into(t, batch)
     files = t.snapshot().files
     assert sorted(b for f in files for b in entry_buckets(f)) == list(range(N_BUCKETS))
     assert len(files) == N_BUCKETS
@@ -198,7 +201,7 @@ def _per_bucket_table(spark, tmp_path, n_keys=400):
 
 def _placed_merge(spark, t, rows, affected):
     batch = spark.createDataFrame(rows, "k string, v long, _cdc_lsn string, op string")
-    placed, placement = t.place(batch, t.snapshot(), 8)
+    placed, placement = t.place(batch, t.snapshot())
     return merge_into(t, placed, affected_buckets=affected, pre_placed=placement)
 
 
@@ -251,3 +254,56 @@ def test_row_in_untouched_slot_still_refuses(spark, tmp_path):
     with pytest.raises(ConcurrentCommitError, match="20"):
         _placed_merge(spark, t, rows, [4])
     assert t.current_version() == version
+
+
+def test_merge_over_bucket_of_two_files_rewrites_both(spark, tmp_path):
+    """A bucket holding two base files, the layout left by commits that
+    split a bucket over several slots: a copy-on-write merge touching
+    the bucket rewrites both files and reads back equal to the oracle."""
+    t = _kv_table(spark, tmp_path)
+    by_bucket = _bucket_keys(t, 1_000)
+    halves = (by_bucket[4][:3] + by_bucket[9][:2], by_bucket[4][3:6])
+    expect = {k: int(k[1:]) for half in halves for k in half}
+    snap = t.snapshot()
+    entries = []
+    with width(spark, N_BUCKETS):
+        for half in halves:
+            df = spark.createDataFrame(
+                [(k, int(k[1:]), "10") for k in half],
+                "k string, v long, _cdc_lsn string",
+            )
+            entries += t.write_data_files(df, snap=snap)[1]
+    t.commit(files=entries, basis=snap)
+    two = [f["path"] for f in t.snapshot().files if entry_buckets(f) == range(4, 5)]
+    assert len(two) == 2
+
+    upd, dele = halves[0][0], halves[1][0]
+    rows = [(upd, -1, "20", "update"), (dele, None, "20", "delete")]
+    merge_into(
+        t, spark.createDataFrame(rows, "k string, v long, _cdc_lsn string, op string")
+    )
+    assert not set(two) & {f["path"] for f in t.snapshot().files}
+    expect[upd] = -1
+    del expect[dele]
+    assert {r["k"]: r["v"] for r in t.read().collect()} == expect
+    assert t.lookup(k=upd).collect()[0]["v"] == -1
+
+
+def test_delete_where_rewrites_whole_slots(spark, tmp_path):
+    """A predicate delete hitting buckets 4 and 6 of a one-file-per-bucket
+    table, on the width-8 session, writes one file for slot [4..7]: it
+    replaces the slot's four files, like a MERGE."""
+    t, expect = _per_bucket_table(spark, tmp_path)
+    by_bucket = _bucket_keys(t, 1_000)
+    live = {b: [k for k in by_bucket[b] if k in expect] for b in (4, 6)}
+    gone = live[4][:2] + live[6][:1]
+    before = t.snapshot().files
+    _snap, n = delete_where(t, F.col("k").isin(gone))
+    assert n == 3
+    after = t.snapshot().files
+    added = [f for f in after if f["path"] not in {g["path"] for g in before}]
+    assert [entry_buckets(f) for f in added] == [range(4, 8)]
+    assert len(before) - len(after) == 3
+    for k in gone:
+        del expect[k]
+    assert {r["k"]: r["v"] for r in t.read().collect()} == expect

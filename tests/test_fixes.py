@@ -180,8 +180,9 @@ def test_quarantine_replay_is_idempotent(spark, tmp_path):
 
 
 def test_lookup_runs_exactly_one_job(spark, tmp_path):
-    """VERDICT #7: the bucket is computed driver-side (pure-Python XXH64
-    == Spark xxhash64); lookup costs exactly one job — the pruned scan."""
+    """VERDICT #7: the bucket is computed driver-side (the table's bucket
+    expression folded over literals); lookup costs exactly one job — the
+    pruned scan."""
     log = str(tmp_path / "log")
     _write_log(
         log,
@@ -200,21 +201,6 @@ def test_lookup_runs_exactly_one_job(spark, tmp_path):
     after = set(tracker.getJobIdsForGroup() or [])
     assert len(rows) == 1 and rows[0]["text"] == "t7"
     assert len(after - before) == 1  # the scan job, nothing else
-
-    # the driver-side hash prunes to the SAME bucket Spark computes
-    from gear5_spark.lake.xxh64 import bucket_of
-
-    from pyspark.sql import functions as F
-    want = (
-        spark.range(1)
-        .select(
-            F.pmod(
-                F.xxhash64(F.lit("c7"), F.lit("0")), F.lit(8)
-            ).cast("int").alias("b")
-        )
-        .first()["b"]
-    )
-    assert bucket_of(["c7", "0"], 8) == want
 
 
 def test_vacuum_respects_retention(spark, tmp_path):

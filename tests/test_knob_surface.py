@@ -1,7 +1,8 @@
 """The CDC path's settable surface is pinned here: the applier's fields,
 the pipeline config's fields, the parameters of ``replay_batch``,
 ``merge_into``, ``merge_delta``, ``compact``,
-``LakeTable.write_data_files``, ``bootstrap_table``,
+``LakeTable.write_data_files``, ``LakeTable.placement``,
+``LakeTable.place``, ``bootstrap_table``,
 ``ConversationRollup``, ``get_spark``, ``latest_per_key`` and
 ``gap_sessionize``, and the public ``LakeTable`` methods; the engine
 reads no clustering or stats-column table property. A new option or
@@ -91,6 +92,11 @@ COMPACT_PARAMS = ["table"]
 
 WRITE_DATA_FILES_PARAMS = ["self", "df", "snap", "pre_placed"]
 
+# one layout rule: min(width, n_buckets) slots at the session's width,
+# no caller-chosen slot count or sink mode
+PLACEMENT_PARAMS = ["snap", "width"]
+PLACE_PARAMS = ["self", "df", "snap"]
+
 BOOTSTRAP_TABLE_PARAMS = ["spark", "table_dir", "n_buckets", "delete_mode"]
 
 ROLLUP_INIT_PARAMS = ["self", "base_table", "rollup_table"]
@@ -163,6 +169,8 @@ def test_lake_entry_points_pinned():
     assert _params(merge_delta) == MERGE_DELTA_PARAMS
     assert _params(compact) == COMPACT_PARAMS
     assert _params(LakeTable.write_data_files) == WRITE_DATA_FILES_PARAMS
+    assert _params(LakeTable.placement) == PLACEMENT_PARAMS
+    assert _params(LakeTable.place) == PLACE_PARAMS
     # bucket columns are a list; the single-string form is gone
     create = inspect.signature(LakeTable.create).parameters
     assert create["bucket_columns"].annotation == "list[str] | None"

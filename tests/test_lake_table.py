@@ -233,12 +233,12 @@ def test_declared_affected_buckets_drift_raises(spark, table):
     merge_into(table, _batch(spark, [("a", 1, 1, "insert")]))
     all_buckets = list(range(4))
     # find a key and a declared set that EXCLUDES that key's bucket
-    from gear5_spark.lake.xxh64 import bucket_of
-
-    key = "zz"
-    while bucket_of([key], 4) == bucket_of(["a"], 4):
-        key += "z"
-    wrong = [b for b in all_buckets if b != bucket_of([key], 4)]
+    keys = spark.createDataFrame(
+        [("a",)] + [("z" * n,) for n in range(2, 40)], "k string"
+    )
+    bucket = dict(keys.select("k", table.bucket_expr()).collect())
+    key = next(k for k in bucket if bucket[k] != bucket["a"])
+    wrong = [b for b in all_buckets if b != bucket[key]]
     with pytest.raises(ConcurrentCommitError, match="affected_buckets"):
         merge_into(
             table,
@@ -269,6 +269,38 @@ def test_lookup_bool_and_null_semantics(spark, tmp_path):
     assert t.lookup(flag=False).collect()[0]["v"] == 2
 
 
+def test_lookup_finds_timestamp_and_double_keys(spark, tmp_path):
+    """The bucket of a lookup is the table's own bucket expression over
+    typed key values: keys whose Python rendering differs from Spark's
+    string cast (a fractional second, a double of 1e16 and above) still
+    prune to the bucket that holds them."""
+    import datetime as dt
+
+    schema = T.StructType(
+        [
+            T.StructField("ts", T.TimestampType(), False),
+            T.StructField("x", T.DoubleType(), False),
+            T.StructField("v", T.LongType(), True),
+        ]
+    )
+    t = LakeTable.create(
+        spark, str(tmp_path / "tskey"), schema=schema,
+        key_columns=["ts", "x"], n_buckets=8,
+    )
+    keys = [
+        (dt.datetime(2024, 1, 1, 0, 0, i, 500_000), float(10 ** (15 + i)))
+        for i in range(8)
+    ]
+    merge_into(
+        t,
+        spark.createDataFrame(
+            [(ts, x, i, "insert") for i, (ts, x) in enumerate(keys)],
+            "ts timestamp, x double, v long, op string",
+        ),
+    )
+    assert [t.lookup(ts=ts, x=x).count() for ts, x in keys] == [1] * 8
+
+
 def test_snapshot_without_bucket_columns_is_refused(tmp_path):
     """Every reader of the bucket layout goes through bucket_columns_of;
     a snapshot without the property fails with a clear error instead of
@@ -283,7 +315,7 @@ def test_snapshot_without_bucket_columns_is_refused(tmp_path):
     with pytest.raises(ValueError, match="bucket_columns"):
         bucket_columns_of(snap)
     with pytest.raises(ValueError, match="bucket_columns"):
-        LakeTable(None, str(tmp_path / "t")).placement(snap)
+        LakeTable(None, str(tmp_path / "t")).placement(snap, 8)
     ok = Snapshot(**{**snap.__dict__, "properties": {"bucket_columns": ["k"]}})
     assert bucket_columns_of(ok) == ["k"]
 

@@ -8,6 +8,7 @@ case is checked against the serial oracle or a full read."""
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import shutil
@@ -186,11 +187,23 @@ def _kv_table(spark, tmp_path) -> LakeTable:
     )
 
 
+@contextlib.contextmanager
+def width(spark, n):
+    """Run the block on a session of shuffle width ``n``."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 def _range_delta(spark, t, rows, n_slots=8):
-    """merge_delta with the applier's range placement."""
+    """merge_delta with the applier's range placement at width ``n_slots``."""
     rows = spark.createDataFrame(rows, "k string, v long, _cdc_lsn string, op string")
-    batch, placement = t.place(rows, t.snapshot(), n_slots)
-    return merge_delta(t, batch, pre_placed=placement)
+    with width(spark, n_slots):
+        batch, placement = t.place(rows, t.snapshot())
+        return merge_delta(t, batch, pre_placed=placement)
 
 
 def test_compact_min_deltas_widens_to_whole_ranges(spark, tmp_path):

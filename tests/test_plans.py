@@ -214,7 +214,7 @@ def test_compaction_runs_the_guarded_merge_plan(spark, log_dir, tmp_path):
     assert joins == 1 and "FullOuter" in plan
     assert aggregated and aggregated <= deltas
     assert base <= streamed
-    assert kwargs["pre_placed"] == table.placement(snap, shuffle_width(spark), "mor")
+    assert kwargs["pre_placed"] == table.placement(snap, shuffle_width(spark))
     assert table.read().filter(F.col("text") == "rewritten").count() == 20
 
 

@@ -67,14 +67,12 @@ def test_placement_bounds_per_task_rows_under_skew(
     placement slot carries about the mean."""
     from pyspark.sql import functions as F
 
-    from gear5_spark.parallel import shuffle_width
     from gear5_spark.sources.changelog import read_changelog
 
     d, manifest = skewed_changelog
     table = bootstrap_table(spark, str(tmp_path / "t"), n_buckets=8)
     snap = table.snapshot()
-    n_slots = table.placement(snap, shuffle_width(spark), "cow").n_slots
-    placed, _ = table.place(read_changelog(spark, d), snap, n_slots)
+    placed, p = table.place(read_changelog(spark, d), snap)
     per_task = [
         r["n"]
         for r in placed.groupBy(F.spark_partition_id().alias("p"))
@@ -82,4 +80,4 @@ def test_placement_bounds_per_task_rows_under_skew(
         .collect()
     ]
     assert sum(per_task) == manifest["n_events"]
-    assert max(per_task) <= 1.25 * manifest["n_events"] / n_slots, per_task
+    assert max(per_task) <= 1.25 * manifest["n_events"] / p.n_slots, per_task
