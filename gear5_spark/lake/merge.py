@@ -40,12 +40,15 @@ Scale properties:
 - only *affected buckets* (those containing a batched key), widened to
   the whole slots the batch is placed on, are read and rewritten —
   copy-on-write amplification is O(affected slots), not O(table);
-  file-level pruning comes from manifest bucket metadata;
+  file-level pruning comes from manifest bucket metadata. The scope,
+  read, write and commit are ``LakeTable._rewrite``, the one
+  bucket-rewrite path compaction and ``delete_where`` share;
 - one join formulation: both sides are placed by the table
   (``LakeTable.place``) on the same slots, and the full-outer join on
   ``[_pslot, *key]`` builds a shuffled hash table over the (one row per
   key) batch side with no further exchange; its output partitions are
-  already placed for the bucketed write.
+  already placed for the bucketed write. A scope holding no file (a
+  bootstrap load, untouched buckets) writes the batch with no join.
 """
 
 from __future__ import annotations
@@ -62,15 +65,11 @@ from gear5_spark.lake.table import (
     CDC_DELETED_AT,
     CDC_LSN,
     SLOT_COL,
-    ConcurrentCommitError,
     LakeTable,
     Placement,
     Snapshot,
     _project,
     delete_mode_of,
-    entry_buckets,
-    touches,
-    whole_file_scope,
 )
 from gear5_spark.operators.typing import merge_schemas
 
@@ -85,9 +84,6 @@ _NON_TABLE_COLS = {
 @dataclass
 class MergeStats:
     affected_buckets: list[int]
-    rewritten_files: int
-    kept_files: int
-    schema_changes: list[str]
 
 
 def merge_into(
@@ -105,7 +101,8 @@ def merge_into(
     (missing -> null-backfilled; new -> additive schema evolution via the
     widening lattice). On a ``soft`` delete table (its ``delete_mode``
     property), deletes survive as tombstones with ``_cdc_deleted_at``
-    set; on a ``hard`` one they remove the row.
+    set; on a ``hard`` one they remove the row. A change whose ``op`` is
+    NULL is an upsert (:func:`_is_delete`).
 
     ``pre_placed``: the placement the batch was placed with
     (``LakeTable.place``; the batch then still carries ``_pslot``). A
@@ -113,113 +110,73 @@ def merge_into(
     ``_pslot``, no ``pre_placed``, or a layout or shuffle width that
     drifted since — is placed here.
 
-    The join always runs CO-PARTITIONED on the slot: the target side is
-    placed on the batch's slots, ``_pslot`` leads the equi-join keys (it
-    is functionally dependent on the key columns, so the join result is
-    unchanged), and the join's output partitions — each holding exactly
-    one slot — feed the bucketed write directly. An applier batch,
-    placed before its dedup, is never shuffled again; the write never
-    repartitions. Measured on the 4x1M-event CoW stream: the merge+write
-    stage shuffled 2.7 GB with a key-shuffled join and a placing write,
-    ~0.8 GB co-partitioned.
+    ``affected_buckets``: the buckets the batch's rows hash to, when the
+    caller already knows them (the applier gets them from an earlier
+    pass over the raw batch); otherwise one job probes them. A declared
+    set that misses a row fails the merge before commit.
 
-    The rewritten bucket set widens to the whole range of every file it
-    touches (merge-on-read deltas, earlier range-placed batches), so
-    range files are always dropped whole. When the placement's slots
-    group whole buckets (a batch placed at a shuffle width below the
-    bucket count) it also widens to whole slots: each slot writes one
-    file over its bucket range, which replaces every file of that
-    range. A batch touching one bucket of a 32-bucket table on a
-    width-8 session therefore rewrites that bucket's slot of four.
+    The rewrite (``LakeTable._rewrite``) widens the affected buckets to
+    whole files and whole slots, reads that scope and folds the batch
+    into it. The join always runs CO-PARTITIONED on the slot: the target
+    side is placed on the batch's slots, ``_pslot`` leads the equi-join
+    keys (it is functionally dependent on the key columns, so the join
+    result is unchanged), and the join's output partitions — each
+    holding exactly one slot — feed the bucketed write directly. An
+    applier batch, placed before its dedup, is never shuffled again; the
+    write never repartitions. Measured on the 4x1M-event CoW stream: the
+    merge+write stage shuffled 2.7 GB with a key-shuffled join and a
+    placing write, ~0.8 GB co-partitioned. A batch touching one bucket
+    of a 32-bucket table on a width-8 session rewrites that bucket's
+    slot of four.
     """
     snap = table.snapshot()
     soft = delete_mode_of(snap) == "soft"
     key_cols = snap.properties["key_columns"]
 
-    evolved, changes = evolve_schema(snap.schema, batch)
+    evolved, _ = evolve_schema(snap.schema, batch)
     write_schema = T.StructType(
         list(evolved.fields) + [T.StructField(BUCKET_COL, T.IntegerType(), True)]
     )
 
     keyed = batch.withColumn(BUCKET_COL, table.bucket_expr(snap))
-    # the target is placed at the table's width below; a batch placed at
-    # any other slot count would miss its target rows in the slot join
+    # the target is placed at the table's width; a batch placed at any
+    # other slot count would miss its target rows in the slot join
     if pre_placed != table._placement(snap) or SLOT_COL not in batch.columns:
-        keyed, pre_placed = table.place(keyed, snap)
-
-    def _check_declared_buckets(new_entries: list[dict]) -> None:
-        # a caller-declared bucket set is a PROMISE that every batch row
-        # hashes into it; a row outside (bucket-layout drift, e.g. a
-        # concurrent rebucket between the caller's bucket pass and this
-        # merge) would be appended while its bucket's old files are
-        # kept — duplicate keys published. The writer knows each new
-        # file's bucket for free, so verify before commit and fail
-        # loudly instead.
-        if affected_buckets is None:
-            return
-        stray = {b for f in new_entries for b in entry_buckets(f)} - affected_set
-        if stray:
-            raise ConcurrentCommitError(
-                f"batch rows landed in buckets {sorted(stray)} outside "
-                f"the declared affected_buckets — bucket layout drift "
-                "(concurrent rebucket?); retry without affected_buckets"
-            )
-    if affected_buckets is not None:
-        # caller computed bucket membership upstream (it depends only on
-        # the bucket column, so it can ride an earlier pass over the raw
-        # batch) — no extra job, no persist needed
-        affected = sorted(affected_buckets)
-    else:
+        keyed, _ = table.place(keyed, snap)
+    probe = affected_buckets is None
+    if probe:
         # persist: the probe and the merge join would otherwise both
         # execute the whole upstream (parse + dedup shuffle)
         keyed = keyed.persist()
-        affected = sorted(
+        affected_buckets = [
             r[0] for r in keyed.select(BUCKET_COL).distinct().collect()
-        )
-    # rewrite whole files only: a file holding a bucket range drags its
-    # other buckets into the rewrite, and so does a slot that groups
-    # whole buckets — its one new file replaces every file of its range
-    affected_set = whole_file_scope(snap.files, affected, pre_placed)
-    affected = sorted(affected_set)
-    if any(touches(f, affected_set) for f in snap.files):
-        # one explicit shuffle of the target to the batch's slot layout;
-        # leading the equi-join with the (key-dependent) slot makes the
-        # join exchange-free on both sides and its output write-placed
-        target, _ = table.place(
-            table.read(snapshot=snap, buckets=affected, with_internal=True), snap
-        )
-        new_data = _guarded_merge(
+        ]
+
+    def fold(target: DataFrame | None) -> DataFrame:
+        if target is None:
+            # nothing to merge against (bootstrap load, untouched
+            # buckets): the batch IS the new content. Kept as a branch,
+            # not left to the optimizer (which also plans the join
+            # away): without it every perfbench backfill run got slower
+            # (median events/CPU-s 12,967 -> 9,831 over 3 interleaved
+            # pairs; lake.merge_s 0.51 -> 0.83 s, lake.write_s 0.44 ->
+            # 0.64 s at the same 7 jobs per batch)
+            upserts = keyed if soft else keyed.filter(~_is_delete(F.col("op")))
+            return _project(upserts, write_schema)
+        return _guarded_merge(
             target, keyed, [SLOT_COL, *key_cols], key_cols, "op", soft,
             write_schema,
         )
-    else:
-        # nothing to merge against (bootstrap load / untouched buckets):
-        # skip the join entirely — dedup output IS the new bucket content
-        upserts = keyed if soft else keyed.filter(F.col("op") != "delete")
-        new_data = _project(upserts, write_schema)
+
     try:
-        _, new_entries = table.write_data_files(
-            new_data, snap=snap, pre_placed=pre_placed
+        new_snap, scope = table._rewrite(
+            snap, affected_buckets, fold, schema=evolved,
+            txn_app_id=txn_app_id, txn_batch_id=txn_batch_id, lineage=lineage,
         )
     finally:
-        if affected_buckets is None:
+        if probe:
             keyed.unpersist()
-    _check_declared_buckets(new_entries)
-    kept = [f for f in snap.files if not touches(f, affected_set)]
-    new_snap = table.commit(
-        files=kept + new_entries,
-        schema=evolved,
-        txn_app_id=txn_app_id,
-        txn_batch_id=txn_batch_id,
-        lineage=lineage,
-        basis=snap,
-    )
-    return new_snap, MergeStats(
-        affected_buckets=affected,
-        rewritten_files=len(new_entries),
-        kept_files=len(kept),
-        schema_changes=changes,
-    )
+    return new_snap, MergeStats(affected_buckets=sorted(scope))
 
 
 def evolve_schema(
@@ -254,6 +211,12 @@ def lww_order(lsn: Column, newer: bool) -> Column:
     )
 
 
+def _is_delete(op: Column) -> Column:
+    """True for a delete change. A NULL ``op`` is an upsert, in every
+    plan of both sinks."""
+    return F.coalesce(op == "delete", F.lit(False))
+
+
 def _guarded_merge(
     target: DataFrame,
     keyed_batch: DataFrame,
@@ -270,62 +233,63 @@ def _guarded_merge(
     tombstones. Copy-on-write MERGE, merge-on-read reads and
     compaction (``mor.reconstruct``) all run this plan.
 
+    Each side is packed once into one struct of ``write_schema``'s
+    non-key fields at their types (a column the side lacks is NULL), and
+    one CASE picks the winning struct whole.
+
     The (one-row-per-key, post-dedup) batch side is hinted as a
     shuffled-hash build instead of sort-merge — per-partition hash
     tables over the slot-bounded batch slice skip sorting both sides'
     full payload rows. The hint degrades to sort-merge wherever
     inapplicable, so it is advisory, never a correctness lever."""
-    t_payload = [c for c in target.columns if c not in join_cols]
-    b_payload = [c for c in keyed_batch.columns if c not in join_cols]
-    t = target.select(
-        *join_cols, F.struct(*[F.col(c) for c in t_payload]).alias("_t")
-    )
-    b = keyed_batch.select(
-        *join_cols, F.struct(*[F.col(c) for c in b_payload]).alias("_b")
-    )
-    j = t.join(b.hint("shuffle_hash"), on=join_cols, how="full_outer")
+    payload = [f for f in write_schema.fields if f.name not in key_cols]
+
+    def pack(df: DataFrame) -> Column:
+        have = set(df.columns)
+        return F.struct(
+            *[
+                (F.col(f.name) if f.name in have else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in payload
+            ]
+        )
 
     # the documented batch contract allows any SUBSET of target columns:
-    # referencing a struct field neither side carries would fail at plan
-    # time, so the guard degrades to batch-wins (as lww_order does for a
-    # NULL batch lsn) when either side lacks the ordering column
-    if CDC_LSN in t_payload and CDC_LSN in b_payload:
-        guard = lww_order(F.col(f"_b.{CDC_LSN}"), True) > lww_order(
+    # the guard degrades to batch-wins (as lww_order does for a NULL
+    # batch lsn) when either side lacks the ordering column; it reads
+    # the batch's own lsn value, before any cast to the table's type
+    guarded = CDC_LSN in target.columns and CDC_LSN in keyed_batch.columns
+    t = target.select(*join_cols, pack(target).alias("_t"))
+    b = keyed_batch.select(
+        *join_cols,
+        pack(keyed_batch).alias("_b"),
+        _is_delete(F.col(op_col)).alias("_del"),
+        *([F.col(CDC_LSN).alias("_blsn")] if guarded else []),
+    )
+    j = t.join(b.hint("shuffle_hash"), on=join_cols, how="full_outer")
+    guard = F.lit(True)
+    if guarded:
+        guard = lww_order(F.col("_blsn"), True) > lww_order(
             F.col(f"_t.{CDC_LSN}"), False
         )
-    else:
-        guard = F.lit(True)
     batch_wins = F.col("_b").isNotNull() & (F.col("_t").isNull() | guard)
-    is_delete = F.coalesce(F.col(f"_b.{op_col}") == "delete", F.lit(False))
 
     # ONE pass over ONE join: a per-row CASE picks the winning side, so the
     # join executes once (a kept/applied filter+union pair would run the
     # whole join subtree twice)
-    def _side(prefix: str, cols: list[str]):
-        have = set(cols)
-        return F.struct(
-            *[
-                (
-                    F.col(f"{prefix}.{f.name}").cast(f.dataType)
-                    if f.name in have
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in write_schema.fields
-                if f.name not in key_cols
-            ]
-        )
-
-    row = F.when(batch_wins, _side("_b", b_payload)).otherwise(
-        _side("_t", t_payload)
-    )
-    out = j.withColumn("_r", row)
+    out = j.withColumn("_r", F.when(batch_wins, F.col("_b")).otherwise(F.col("_t")))
     if not soft:
-        out = out.filter(~(batch_wins & is_delete))
-    non_key = [f.name for f in write_schema.fields if f.name not in key_cols]
-    merged = out.select(
-        *key_cols, *[F.col(f"_r.{c}").alias(c) for c in non_key]
+        out = out.filter(~(batch_wins & F.col("_del")))
+    return out.select(
+        *[
+            (
+                F.col(f.name).cast(f.dataType) if f.name in key_cols
+                else F.col(f"_r.{f.name}")
+            ).alias(f.name)
+            for f in write_schema.fields
+        ]
     )
-    return _project(merged, write_schema)
 
 
 def active(df: DataFrame) -> DataFrame:

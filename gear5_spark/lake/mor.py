@@ -20,8 +20,9 @@ Iceberg/Hudi answer, built here on the same manifest format:
 - ``compact``      — the same plan, written as base files one per slot
   (deltas folded in), bounding read amplification; the applier
   auto-compacts every ``compact_every`` batches. It folds every bucket
-  that holds a delta and, like every rewrite, widens that scope to
-  whole range files and whole slots.
+  that holds a delta through ``LakeTable._rewrite``, the one
+  bucket-rewrite path copy-on-write MERGE and ``delete_where`` share,
+  so its scope widens to whole range files and whole slots.
 
 Caveat: among deltas a change without a numeric LSN wins, as a CoW
 batch row does, so the result can depend on when compaction runs. A
@@ -54,8 +55,6 @@ from gear5_spark.lake.table import (
     delete_mode_of,
     entry_buckets,
     read_file_entries,
-    touches,
-    whole_file_scope,
 )
 from gear5_spark.operators.dedup import latest_per_key
 
@@ -164,9 +163,10 @@ def reconstruct(
 def compact(table: LakeTable) -> Snapshot | None:
     """Fold resident deltas into base files for every bucket that holds a
     delta. No-op (returns None) when there is nothing to compact. The
-    bucket scope widens to the whole range of every file it touches and
-    to whole placement slots (``whole_file_scope``), so no file is ever
-    half-compacted and each slot's one new base file replaces its range.
+    rewrite (``LakeTable._rewrite``) widens that scope to whole files
+    and whole placement slots, so no file is ever half-compacted and
+    each slot's one new base file — the reconstructed rows, written as
+    they lie — replaces its range.
 
     Runs as its own atomic commit — a crash mid-compaction leaves only
     orphan files; readers keep seeing base+delta until the swap."""
@@ -177,10 +177,4 @@ def compact(table: LakeTable) -> Snapshot | None:
     }
     if not chosen:
         return None
-    placement = table._placement(snap)
-    target = whole_file_scope(snap.files, chosen, placement)
-    in_scope = [f for f in snap.files if touches(f, target)]
-    out_scope = [f for f in snap.files if not touches(f, target)]
-    merged = reconstruct(table, snap, in_scope, with_internal=True)
-    _, entries = table.write_data_files(merged, snap=snap, pre_placed=placement)
-    return table.commit(files=out_scope + entries, basis=snap)
+    return table._rewrite(snap, chosen)[0]

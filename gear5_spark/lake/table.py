@@ -61,13 +61,14 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field, replace
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gear5_spark.parallel import shuffle_width
+from gear5_spark.session import require_utc
 
 MANIFEST_DIR = "_lake"
 DATA_DIR = "data"
@@ -642,16 +643,14 @@ class LakeTable:
     _SCAN_OPS = ("=", "<", "<=", ">", ">=")
 
     def plan_scan(
-        self,
-        filters: list[tuple[str, str, Any]],
-        snapshot: Snapshot | None = None,
+        self, filters: list[tuple[str, str, Any]]
     ) -> tuple[list[dict[str, Any]], int]:
-        """File-skipping plan: ``(files_to_read, files_skipped)`` for
-        conjunctive ``(col, op, value)`` filters, pruned against the
-        per-file min/max stats recorded in the manifests at write time.
-        No footer is opened — stats-based skipping is pure metadata, so
-        a 100 TB table with a tight ``ts`` range reads only the files
-        whose range intersects.
+        """File-skipping plan over the current snapshot: ``(files_to_read,
+        files_skipped)`` for conjunctive ``(col, op, value)`` filters,
+        pruned against the per-file min/max stats recorded in the
+        manifests at write time. No footer is opened — stats-based
+        skipping is pure metadata, so a 100 TB table with a tight ``ts``
+        range reads only the files whose range intersects.
 
         On a MoR snapshot pruning degrades to bucket granularity: a
         bucket is skipped only when NONE of its base or delta files may
@@ -660,20 +659,17 @@ class LakeTable:
         may hold several buckets (range placement); :meth:`scan` then
         reads only the rows of the kept buckets.
         """
-        keep, skipped, _buckets = self._plan_scan(filters, snapshot)
+        keep, skipped, _buckets = self._plan_scan(filters, self.snapshot())
         return keep, skipped
 
     def _plan_scan(
-        self,
-        filters: list[tuple[str, str, Any]],
-        snapshot: Snapshot | None = None,
+        self, filters: list[tuple[str, str, Any]], snap: Snapshot
     ) -> tuple[list[dict[str, Any]], int, set[int] | None]:
         """:meth:`plan_scan` plus the bucket set a MoR read must keep
         rows of (None when every kept file is read whole)."""
         for _c, op, _v in filters:
             if op not in self._SCAN_OPS:
                 raise ValueError(f"unsupported scan op {op!r}")
-        snap = snapshot or self.snapshot()
         norm = [(c, op, _json_stat(v)) for c, op, v in filters]
         files = snap.files
         keep = [
@@ -687,19 +683,14 @@ class LakeTable:
             keep = [f for f in files if touches(f, live_buckets)]
         return keep, len(files) - len(keep), live_buckets
 
-    def scan(
-        self,
-        filters: list[tuple[str, str, Any]],
-        snapshot: Snapshot | None = None,
-        with_internal: bool = False,
-    ) -> DataFrame:
-        """Filtered read with manifest-stats file skipping: prune via
-        :meth:`plan_scan`, read survivors, then apply the exact filters
-        as Spark predicates (which also push down into the parquet scan
-        for row-group skipping)."""
-        snap = snapshot or self.snapshot()
+    def scan(self, filters: list[tuple[str, str, Any]]) -> DataFrame:
+        """Filtered read of the current snapshot with manifest-stats file
+        skipping: prune via :meth:`plan_scan`, read survivors, then apply
+        the exact filters as Spark predicates (which also push down into
+        the parquet scan for row-group skipping)."""
+        snap = self.snapshot()
         keep, _skipped, buckets = self._plan_scan(filters, snap)
-        df = self._read_files(snap, keep, with_internal, buckets=buckets)
+        df = self._read_files(snap, keep, buckets=buckets)
         for c, op, v in filters:
             col = F.col(c)
             df = df.filter(
@@ -718,10 +709,16 @@ class LakeTable:
         are the FULL key: a hot entity (one conv_id receiving a large
         share of events) then spreads across all buckets instead of
         turning one bucket into a write/join straggler — point lookups by
-        full key still prune to one bucket."""
+        full key still prune to one bucket. A table with a timestamp
+        bucket column is refused under a non-UTC session time zone."""
         snap = snap or self.snapshot()
         cols = bucket_columns_of(snap)
         n = snap.properties["n_buckets"]
+        # a timestamp's string form follows the session time zone, so
+        # its bucket would too; the conf is read only for such tables
+        for c in cols:
+            if isinstance(snap.schema[c].dataType, T.TimestampType):
+                require_utc(self.spark, f"timestamp bucket column {c!r}")
         return F.pmod(
             F.xxhash64(*[F.col(c).cast("string") for c in cols]), F.lit(n)
         ).cast("int")
@@ -990,6 +987,59 @@ class LakeTable:
             )
         return m_list
 
+    def _rewrite(
+        self,
+        snap: Snapshot,
+        buckets,
+        fold: Callable[[DataFrame | None], DataFrame] | None = None,
+        schema: T.StructType | None = None,
+        txn_app_id: str | None = None,
+        txn_batch_id: int | None = None,
+        lineage: dict[str, Any] | None = None,
+    ) -> tuple[Snapshot, set[int]]:
+        """Rewrite ``buckets`` of ``snap`` and commit against it: the one
+        bucket-rewrite path of copy-on-write MERGE (``merge_into``),
+        compaction (``mor.compact``) and ``delete_where``. Returns the new
+        snapshot and the rewritten scope.
+
+        The scope widens to whole files and whole placement slots
+        (:func:`whole_file_scope`), so every file it touches is dropped
+        whole and each slot's one new file replaces its range. Its rows
+        are read with deltas reconstructed. ``fold=None`` writes them as
+        they lie: ``mor.reconstruct`` already placed them, partition ``i``
+        holding slot ``i``. Otherwise the rows are placed again (a
+        full-outer join declares no output partitioning) and
+        ``fold(rows)`` is written, placed on the same slots; a scope
+        holding no file folds ``None``.
+
+        A written file holding a bucket outside the scope fails the
+        rewrite before commit: its bucket's old files would be kept
+        beside it, publishing duplicate keys."""
+        placement = self._placement(snap)
+        scope = whole_file_scope(snap.files, buckets, placement)
+        in_scope = [f for f in snap.files if touches(f, scope)]
+        kept = [f for f in snap.files if not touches(f, scope)]
+        rows = None
+        if in_scope:
+            rows = self._read_files(snap, in_scope, with_internal=True)
+        if fold is not None:
+            rows = fold(None if rows is None else self.place(rows, snap)[0])
+        _, entries = self.write_data_files(
+            rows.drop(SLOT_COL), snap=snap, pre_placed=placement
+        )
+        stray = {b for f in entries for b in entry_buckets(f)} - scope
+        if stray:
+            raise ConcurrentCommitError(
+                f"rewrite wrote buckets {sorted(stray)} outside its scope — "
+                "a row missed the declared affected_buckets (bucket layout "
+                "drift, a concurrent rebucket?); retry without affected_buckets"
+            )
+        new_snap = self.commit(
+            kept + entries, schema=schema, txn_app_id=txn_app_id,
+            txn_batch_id=txn_batch_id, lineage=lineage, basis=snap,
+        )
+        return new_snap, scope
+
     def commit(
         self,
         files: list[dict[str, Any]],
@@ -1213,15 +1263,15 @@ class LakeTable:
         """Commit-dedup lookup: highest batch id this app has committed."""
         return self.snapshot().txn.get(txn_app_id)
 
-    def overwrite(self, df: DataFrame, schema: T.StructType | None = None) -> Snapshot:
+    def overwrite(self, df: DataFrame) -> Snapshot:
         """Replace all table data (used by snapshot/full-refresh load, S1/S5).
         Projects to the table schema (missing columns null-backfilled)."""
         snap = self.snapshot()
-        data = _project(df, schema or snap.schema).withColumn(
+        data = _project(df, snap.schema).withColumn(
             BUCKET_COL, self.bucket_expr(snap)
         )
         _, entries = self.write_data_files(data)
-        return self.commit(entries, schema=schema)
+        return self.commit(entries)
 
     def lookup(self, **key_values) -> DataFrame:
         """Bucket-pruned point lookup by full key: evaluates the table's

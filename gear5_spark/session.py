@@ -139,6 +139,18 @@ def get_spark(
     return spark
 
 
+def require_utc(spark: SparkSession, what: str) -> None:
+    """Refuse a session whose ``spark.sql.session.timeZone`` is not UTC
+    (or an alias of it): ``what`` depends on it. :func:`get_spark` pins
+    UTC; externally built sessions are checked here."""
+    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
+    if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z"):
+        raise ValueError(
+            f"{what} requires spark.sql.session.timeZone=UTC (got {tz!r}) "
+            "— see gear5_spark.session.get_spark"
+        )
+
+
 # ------------------------------------------------------------- cold start
 # When get_spark launches the driver JVM itself, the JVM maps an AppCDS
 # archive of the classes a previous start of this install loaded: the

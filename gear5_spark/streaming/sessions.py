@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from gear5_spark.session import require_utc
+
 OUTPUT_SCHEMA = (
     "conv_id string, n_events long, max_turn int, last_lsn long, "
     "finalized boolean"
@@ -110,15 +112,8 @@ def _require_utc_session(df: DataFrame) -> None:
     while ``setTimeoutTimestamp`` compares against the epoch-UTC
     watermark — any non-UTC offset shifts every idle timeout by that
     offset (premature finalization west of UTC, hours-late eviction
-    east of it). The engine's session factory pins UTC; enforce it here
-    for externally-built sessions instead of corrupting timeouts."""
-    tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-    if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z"):
-        raise ValueError(
-            "stateful streaming timeout math requires "
-            f"spark.sql.session.timeZone=UTC (got {tz!r}) — see "
-            "gear5_spark.session.get_spark"
-        )
+    east of it)."""
+    require_utc(df.sparkSession, "stateful streaming timeout math")
 
 
 def conversation_progress(

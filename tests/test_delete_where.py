@@ -78,10 +78,11 @@ def test_delete_where_null_predicate_keeps_rows(spark, table):
 
 
 def test_delete_where_sql_string_and_lineage(spark, table):
-    snap, n = delete_where(table, "v % 2 = 0", txn_batch_id=99)
+    snap, n = delete_where(table, "v % 2 = 0")
     assert n == 6
-    lin = {r["batch_id"]: r for r in table.lineage_df().collect()}
-    assert lin[99]["event_count"] == -6
+    lin = {r["snapshot_version"]: r for r in table.lineage_df().collect()}
+    assert lin[snap.version]["event_count"] == -6
+    assert lin[snap.version]["txn_ids_hash"] == "delete_where"
 
 
 def test_delete_where_mor_folds_deltas(spark, tmp_path):

@@ -1,8 +1,9 @@
 """The CDC path's settable surface is pinned here: the applier's fields,
 the pipeline config's fields, the parameters of ``replay_batch``,
-``merge_into``, ``merge_delta``, ``compact``,
+``merge_into``, ``merge_delta``, ``compact``, ``delete_where``,
 ``LakeTable.write_data_files``, ``LakeTable.placement``,
-``LakeTable.place``, ``bootstrap_table``,
+``LakeTable.place``, ``LakeTable.overwrite``, ``LakeTable.scan``,
+``LakeTable.plan_scan``, ``bootstrap_table``,
 ``ConversationRollup``, ``get_spark``, ``latest_per_key`` and
 ``gap_sessionize``, and the public ``LakeTable`` methods; the engine
 reads no clustering or stats-column table property. A new option or
@@ -19,6 +20,7 @@ import pytest
 
 import gear5_spark
 from gear5_spark.config import PipelineConfig
+from gear5_spark.lake.delete import delete_where
 from gear5_spark.lake.merge import merge_into
 from gear5_spark.lake.mor import compact, merge_delta
 from gear5_spark.lake.table import LakeTable
@@ -89,6 +91,13 @@ MERGE_DELTA_PARAMS = [
 ]
 
 COMPACT_PARAMS = ["table"]
+
+# one rewrite path: the scope comes from the match scan, the txn ledger
+# is the applier's, and reads and rewrites see the current snapshot
+DELETE_WHERE_PARAMS = ["table", "condition"]
+OVERWRITE_PARAMS = ["self", "df"]
+SCAN_PARAMS = ["self", "filters"]
+PLAN_SCAN_PARAMS = ["self", "filters"]
 
 WRITE_DATA_FILES_PARAMS = ["self", "df", "snap", "pre_placed"]
 
@@ -168,6 +177,10 @@ def test_replay_batch_and_merge_into_params_pinned():
 def test_lake_entry_points_pinned():
     assert _params(merge_delta) == MERGE_DELTA_PARAMS
     assert _params(compact) == COMPACT_PARAMS
+    assert _params(delete_where) == DELETE_WHERE_PARAMS
+    assert _params(LakeTable.overwrite) == OVERWRITE_PARAMS
+    assert _params(LakeTable.scan) == SCAN_PARAMS
+    assert _params(LakeTable.plan_scan) == PLAN_SCAN_PARAMS
     assert _params(LakeTable.write_data_files) == WRITE_DATA_FILES_PARAMS
     assert _params(LakeTable.placement) == PLACEMENT_PARAMS
     assert _params(LakeTable.place) == PLACE_PARAMS

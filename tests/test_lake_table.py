@@ -340,3 +340,54 @@ def test_inline_files_snapshot_is_refused(spark, table):
         table.snapshot()
     with pytest.raises(ValueError, match="inline"):
         table.read()
+
+
+@pytest.mark.parametrize("case", ["cow_empty", "cow_scope_holds_a_file", "mor"])
+def test_null_op_change_is_an_upsert_in_every_plan(spark, tmp_path, case):
+    """A change whose ``op`` is NULL upserts its key in every plan: the
+    copy-on-write write with no join (empty scope), the copy-on-write
+    join, and merge-on-read. tests/oracle.py agrees: only
+    ``op == 'delete'`` removes a key there."""
+    from gear5_spark.lake.mor import merge_delta
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), schema=SCHEMA, key_columns=["k"], n_buckets=1
+    )
+    if case != "cow_empty":
+        merge_into(t, _batch(spark, [("x", 0, 1, "insert")]))
+    nullable_op = T.StructType(
+        _BATCH_SCHEMA.fields[:-1] + [T.StructField("op", T.StringType(), True)]
+    )
+    change = spark.createDataFrame([("a", 1, "2", None, None, None)], nullable_op)
+    (merge_delta if case == "mor" else merge_into)(t, change)
+    want = ["a"] if case == "cow_empty" else ["a", "x"]
+    assert sorted(r["k"] for r in t.read().collect()) == want
+
+
+def test_timestamp_bucket_column_refuses_a_non_utc_session(spark, tmp_path):
+    """A timestamp is hashed through its string form, which follows the
+    session time zone; a table bucketed on one refuses any zone but UTC
+    instead of placing the same instant in another bucket."""
+    schema = T.StructType(
+        [
+            T.StructField("ts", T.TimestampType(), False),
+            T.StructField("v", T.LongType(), True),
+        ]
+    )
+    t = LakeTable.create(
+        spark, str(tmp_path / "ts"), schema=schema, key_columns=["ts"], n_buckets=8
+    )
+    # 2024-01-01 00:00 .. 07:00 UTC
+    instants = spark.range(8).select(
+        "id", (F.lit(1704067200) + F.col("id") * 3600).cast("timestamp").alias("ts")
+    )
+    got = instants.select("id", t.bucket_expr().alias("b")).orderBy("id")
+    assert [r["b"] for r in got.collect()] == [2, 4, 0, 3, 6, 4, 1, 0]
+    conf = "spark.sql.session.timeZone"
+    zone = spark.conf.get(conf)
+    spark.conf.set(conf, "America/New_York")
+    try:
+        with pytest.raises(ValueError, match="'ts'.*America/New_York"):
+            t.bucket_expr()
+    finally:
+        spark.conf.set(conf, zone)

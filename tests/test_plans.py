@@ -265,3 +265,40 @@ def test_mor_lookup_pushes_its_key_to_both_scans(spark, tmp_path):
     assert len(scans) == 2
     assert all("EqualTo(k,a)" in ln for ln in scans)
     assert [r["v"] for r in df.collect()] == [2]
+
+
+def test_merge_into_joins_only_when_its_scope_holds_a_file(spark, tmp_path, monkeypatch):
+    """A merge into buckets that hold no file writes the batch without
+    the guarded merge; one whose scope holds a file runs it once. A plan
+    check cannot pin this branch: without it the optimizer plans the
+    join against an empty scope away too, but every backfill run got
+    slower (see the branch's comment in ``merge_into``)."""
+    from pyspark.sql import types as T
+
+    import gear5_spark.lake.merge as M
+    from gear5_spark.lake.table import LakeTable
+
+    calls = []
+    orig = M._guarded_merge
+
+    def spy(*a, **k):
+        calls.append(a)
+        return orig(*a, **k)
+
+    monkeypatch.setattr(M, "_guarded_merge", spy)
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), False),
+            T.StructField("v", T.LongType(), True),
+            T.StructField("_cdc_lsn", T.StringType(), True),
+        ]
+    )
+    t = LakeTable.create(
+        spark, str(tmp_path / "kv"), schema=schema, key_columns=["k"], n_buckets=1
+    )
+    ddl = "k string, v long, _cdc_lsn string, op string"
+    M.merge_into(t, spark.createDataFrame([("a", 1, "1", "insert")], ddl))
+    assert calls == []
+    M.merge_into(t, spark.createDataFrame([("b", 2, "2", "insert")], ddl))
+    assert len(calls) == 1
+    assert sorted(r["k"] for r in t.read().collect()) == ["a", "b"]
